@@ -277,6 +277,7 @@ object Dedup {
       .filter(size(col("_ids")).between(2, maxBucket))
       .select(explode(pairsInBucket).as("_p"))
       .select(col("_p.id_a").as("id_a"), col("_p.id_b").as("id_b"))
+      .filter(col("id_a") =!= col("id_b")) // a duplicated id shares every bucket with itself
       .distinct()
     val verified = pairs
       .join(hashed.select(col("id").as("id_a"), col("_h48").as("sh_a")), Seq("id_a"))

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.planner._
-import graft.table.FileMeta
+import graft.table.{FileMeta, SeqIO, SeqTable}
 
 /** A planned maintenance task: one winning grid region and the live files it claims. */
 final case class PlannedTask(taskId: Int, region: Region, filePaths: Seq[String], score: Double)
@@ -85,71 +85,6 @@ object MaintenancePlanner {
     }
   }
 
-  /** Distributed exact top-k regions over the file-metadata grid. */
-  def topRegions(
-      spark: SparkSession,
-      metas: Seq[FileMeta],
-      cfg: GridConfig,
-      k: Int,
-      targetRecords: Long,
-      overlapAllowed: Boolean = false,
-      pressure: FileMeta => Double = DeletePressure.Zero): Vector[Region] = {
-    import spark.implicits._
-    if (metas.isEmpty) return Vector.empty
-    // metadata is already driver-resident here: small manifests (every steady-state cycle at
-    // bench scale, and most cycles anywhere below ~10^4 files) solve with ZERO Spark jobs —
-    // identical round/merge algebra via the shared local path (guide §2.4, remove the shuffle)
-    if (metas.size <= GridTopK.DriverLocalMaxRows) {
-      val keyed = metas.flatMap(f => fileCells(f, cfg, targetRecords, pressure))
-        .flatMap(c => cfg.nodesForCell(c.x, c.y).map(n => (n, c)))
-      if (keyed.isEmpty) return Vector.empty
-      return GridTopK.solveKeyedLocal(keyed, cfg, k, overlapAllowed)
-    }
-    // file metadata → weighted cell points, then the shared distributed-top-k pipeline
-    val cells: Dataset[Cell] = spark.createDataset(metas)
-      .flatMap(f => fileCells(f, cfg, targetRecords, pressure))
-    GridTopK.solve(spark, cells, cfg, k, overlapAllowed)
-  }
-
-  /** Winning regions → file-disjoint tasks. Files are claimed by centroid cell, and winning
-    * regions are pairwise non-overlapping (the planner's distinct mode), so no file is ever
-    * claimed twice — the file-level analog of the reference's safe/unsafe disjointness protocol
-    * (`/root/reference/src/main/scala/SDL/DependencyGraph.scala:36-142`).
-    */
-  def claimTasks(
-      winners: Seq[Region],
-      metas: Seq[FileMeta],
-      cfg: GridConfig,
-      targetRecords: Long,
-      pressure: FileMeta => Double = DeletePressure.Zero): Seq[PlannedTask] = {
-    val withCentroid = metas.map(f => (f, centroidCell(f, cfg)))
-    val claimed = scala.collection.mutable.HashSet.empty[String]
-    winners.zipWithIndex.flatMap { case (r, i) =>
-      val fs = withCentroid.collect {
-        case (f, (x, y)) if x >= r.x && x <= r.x + r.w - 1 && y >= r.y && y <= r.y + r.w - 1 &&
-          !claimed.contains(f.path) => f
-      }
-      // usefulness gate (termination): execute only when the rewrite can actually improve layout —
-      // fewer output files than inputs (merge win), or a spanning file big enough to split into ≥2
-      // tighter files. Without this the planner re-flags converged-but-small files forever.
-      val total = fs.map(_.records).sum
-      val outFiles = math.max(1L, (total + targetRecords - 1) / targetRecords)
-      // files the engine itself wrote curve-sorted are as tight as their size allows — only a
-      // file-count win can improve them; external (unclustered) spanning files also justify a
-      // splitting re-cluster when there is enough data for ≥2 output files
-      // delete-laden files are useful to rewrite regardless of layout win: the rewrite applies
-      // their pending MoR deletes (terminating — rewritten files outlive every delete sequence,
-      // so their pressure is 0 next cycle)
-      val useful = outFiles < fs.size ||
-        (fs.exists(f => !f.clustered && cellsOf(f, cfg).size > 1) && total >= 2 * targetRecords) ||
-        fs.exists(f => pressure(f) > 0)
-      if (useful) {
-        fs.foreach(f => claimed += f.path)
-        Some(PlannedTask(i, r, fs.map(_.path), r.score))
-      } else None
-    }
-  }
-
   def planCompaction(
       spark: SparkSession,
       metas: Seq[FileMeta],
@@ -157,86 +92,12 @@ object MaintenancePlanner {
       k: Int,
       threshold: Double,
       targetRecords: Long,
-      pressure: FileMeta => Double = DeletePressure.Zero): Seq[PlannedTask] = {
-    val winners = topRegions(spark, metas, cfg, k, targetRecords, overlapAllowed = false, pressure)
-      .filter(_.score >= threshold)
-    claimTasks(winners, metas, cfg, targetRecords, pressure)
-  }
-
-  /** Incremental plan (reference algo 6, partial recompute): per-node kernel results are cached in
-    * [[PlannerState]]; only nodes whose cells changed since the cached base version are re-run
-    * (exact manifest diff between the two snapshots). Exactly equivalent to a full replan — clean
-    * nodes' inputs are unchanged and the kernel is deterministic.
-    */
-  def planIncremental(
-      spark: SparkSession,
-      table: graft.table.SeqTable,
-      cfg: GridConfig,
-      k: Int,
-      threshold: Double,
-      targetRecords: Long,
-      prev: Option[PlannerState],
-      onRun: (Set[Int], Int) => Unit = (_, _) => (),
-      pressure: FileMeta => Double = DeletePressure.Zero,
-      preMergeMinRows: Long = GridTopK.PreMergeMinRows): (Seq[PlannedTask], PlannerState) = {
-    import spark.implicits._
-    val version = table.currentVersion()
-    val metas = table.liveFiles()
-
-    def nodesOf(fs: Seq[FileMeta]): Set[Int] =
-      fs.flatMap(f => fileCells(f, cfg, targetRecords, pressure))
-        .flatMap(c => cfg.nodesForCell(c.x, c.y)).toSet
-
-    val allNodes = nodesOf(metas)
-    // dirty = nodes touched by files added OR removed since the cached base (exact manifest diff;
-    // falls back to all-dirty when the base snapshot has been expired), PLUS — when the pending
-    // MoR delete set changed — nodes of files whose delete pressure changed with it (their cached
-    // scores were computed under the OLD pressure; file membership alone can't see this)
-    val dirty: Set[Int] = prev match {
-      case Some(st) if table.snapshotVersions().contains(st.baseVersion) =>
-        val baseSnap = table.snapshot(st.baseVersion)
-        val prevLive = table.liveFiles(baseSnap)
-        val nowPaths = metas.map(_.path).toSet
-        val prevPaths = prevLive.map(_.path).toSet
-        val delDirty: Set[Int] =
-          if (baseSnap.deleteManifests == table.currentSnapshot().deleteManifests) Set.empty
-          else {
-            val basePressure = DeletePressure.of(spark, table, baseSnap)
-            nodesOf(metas.filter(f => pressure(f) > 0 || basePressure(f) > 0))
-          }
-        nodesOf(metas.filterNot(f => prevPaths.contains(f.path))) ++
-          nodesOf(prevLive.filterNot(f => nowPaths.contains(f.path))) ++ delDirty
-      case _ => allNodes
-    }
-
-    // replicated-cell total for the runNodes driver-funnel gate: each file is one centroid cell
-    // replicated to ≤4 nodes — O(F) driver arithmetic, no job (this variant holds metas anyway)
-    val totalReplicated: Long = metas.iterator.map(f =>
-      fileCells(f, cfg, targetRecords, pressure).iterator
-        .map(c => cfg.nodesForCell(c.x, c.y).size.toLong).sum).sum
-
-    val cells = spark.createDataset(metas)
-      .flatMap(f => fileCells(f, cfg, targetRecords, pressure)).persist()
-    try {
-      def runNodes(nodes: Set[Int], kPrime: Int): Map[Int, NodeResult] =
-        if (nodes.isEmpty) Map.empty
-        else {
-          onRun(nodes, kPrime) // observability hook: which nodes actually recompute (specs/q35)
-          runNodesOn(spark, cells, cfg, nodes, kPrime, k,
-            totalReplicated, allNodes.size, preMergeMinRows)
-        }
-
-      val (winners, newState) = IncrementalTopK.solve(
-        runNodes, allNodes, dirty, prev, version, k, overlapAllowed = false)
-      (claimTasks(winners.filter(_.score >= threshold), metas, cfg, targetRecords, pressure),
-        newState)
-    } finally { cells.unpersist(); () }
-  }
+      pressure: FileMeta => Double = DeletePressure.Zero): Seq[PlannedTask] =
+    plan(spark, None, Left(metas), cfg, k, threshold, targetRecords, pressure = pressure)._1
 
   /** Fully-distributed plan over a manifest Dataset — the 10^12-scale path: cell scoring, region
-    * search AND file claiming all run on executors; only the winning regions (k rows) and their
-    * claimed file lists (task-sized) ever reach the driver. Winners are non-overlapping and each
-    * file has ONE centroid cell, so claims are disjoint without driver-side dedup.
+    * search AND file claiming all run on executors; only per-node counts, the winning regions
+    * (k rows) and their claimed file lists (task-sized) ever reach the driver.
     */
   def planCompactionDistributed(
       spark: SparkSession,
@@ -245,56 +106,17 @@ object MaintenancePlanner {
       k: Int,
       threshold: Double,
       targetRecords: Long,
-      pressure: FileMeta => Double = DeletePressure.Zero): Seq[PlannedTask] = {
-    import spark.implicits._
-    val cells = metas.flatMap(f => fileCells(f, cfg, targetRecords, pressure))
-    val winners = GridTopK.solve(spark, cells, cfg, k, overlapAllowed = false)
-      .filter(_.score >= threshold)
-    claimTasksDistributed(spark, metas, winners, cfg, targetRecords, pressure)
-  }
+      pressure: FileMeta => Double = DeletePressure.Zero): Seq[PlannedTask] =
+    plan(spark, None, Right(metas), cfg, k, threshold, targetRecords, pressure = pressure)._1
 
-  /** Distributed file claiming for a winner set: each file maps to at most one winner (centroid
-    * cells are unique and winners non-overlapping), so only the claimed files — task-sized —
-    * reach the driver, where the usefulness gate runs per task.
+  /** Incremental plan (reference algo 6, partial recompute): per-node kernel results are cached in
+    * [[PlannerState]]; only nodes whose cells changed since the cached base version are re-run
+    * (exact manifest diff between the two snapshots). Exactly equivalent to a full replan — clean
+    * nodes' inputs are unchanged and the kernel is deterministic.
     */
-  def claimTasksDistributed(
+  def planIncremental(
       spark: SparkSession,
-      metas: Dataset[FileMeta],
-      winners: Seq[Region],
-      cfg: GridConfig,
-      targetRecords: Long,
-      pressure: FileMeta => Double = DeletePressure.Zero): Seq[PlannedTask] = {
-    import spark.implicits._
-    if (winners.isEmpty) return Nil
-    val wb = spark.sparkContext.broadcast(winners.zipWithIndex.toIndexedSeq)
-    val claims = metas.flatMap { f =>
-      val (x, y) = centroidCell(f, cfg)
-      wb.value.collectFirst {
-        case (r, i) if x >= r.x && x <= r.x + r.w - 1 && y >= r.y && y <= r.y + r.w - 1 =>
-          (i, f)
-      }
-    }.collect()
-    val byTask = claims.groupBy(_._1)
-    winners.zipWithIndex.flatMap { case (r, i) =>
-      val fs = byTask.getOrElse(i, Array.empty).map(_._2).toSeq.sortBy(_.path)
-      val total = fs.map(_.records).sum
-      val outFiles = math.max(1L, (total + targetRecords - 1) / targetRecords)
-      val useful = outFiles < fs.size ||
-        (fs.exists(f => !f.clustered && cellsOf(f, cfg).size > 1) && total >= 2 * targetRecords) ||
-        fs.exists(f => pressure(f) > 0)
-      if (useful) Some(PlannedTask(i, r, fs.map(_.path), r.score)) else None
-    }
-  }
-
-  /** [[planIncremental]] with the manifest staying on executors end-to-end: the current and
-    * cached-base manifests meet in path anti-joins to find dirtied nodes, kernels run over the
-    * distributed cell Dataset, and claims come back task-sized via [[claimTasksDistributed]].
-    * Only node-id sets (bounded by planner-grid geometry, not file count) and winning tasks
-    * ever reach the driver — the 10^7-file incremental path.
-    */
-  def planIncrementalDistributed(
-      spark: SparkSession,
-      table: graft.table.SeqTable,
+      table: SeqTable,
       cfg: GridConfig,
       k: Int,
       threshold: Double,
@@ -302,97 +124,116 @@ object MaintenancePlanner {
       prev: Option[PlannerState],
       onRun: (Set[Int], Int) => Unit = (_, _) => (),
       pressure: FileMeta => Double = DeletePressure.Zero,
+      preMergeMinRows: Long = GridTopK.PreMergeMinRows): (Seq[PlannedTask], PlannerState) =
+    plan(spark, Some(table), Left(table.liveFiles()), cfg, k, threshold, targetRecords,
+      prev, onRun, pressure, preMergeMinRows)
+
+  /** [[planIncremental]] with the manifest staying on executors end-to-end: the current and
+    * cached-base manifests meet in path anti-joins to find dirtied nodes, and kernels and claims
+    * run over the manifest Dataset. Only node ids and counts (bounded by planner-grid geometry,
+    * not file count) and winning tasks ever reach the driver — the 10^7-file incremental path.
+    */
+  def planIncrementalDistributed(
+      spark: SparkSession,
+      table: SeqTable,
+      cfg: GridConfig,
+      k: Int,
+      threshold: Double,
+      targetRecords: Long,
+      prev: Option[PlannerState],
+      onRun: (Set[Int], Int) => Unit = (_, _) => (),
+      pressure: FileMeta => Double = DeletePressure.Zero,
+      preMergeMinRows: Long = GridTopK.PreMergeMinRows): (Seq[PlannedTask], PlannerState) =
+    plan(spark, Some(table), Right(SeqIO.fileMetaDS(spark, table, narrow = true)), cfg, k,
+      threshold, targetRecords, prev, onRun, pressure, preMergeMinRows)
+
+  /** The one plan: a full plan is an incremental plan with an empty node cache. A driver-resident
+    * (`Left`) and a Dataset (`Right`) manifest differ only in where three inputs come from: the
+    * replicated cells with per-node counts ([[GridTopK.withNodes]]), the dirty-node diff against
+    * the cached base snapshot, and the (winner, file) claim candidates.
+    * @param manifest read after the table version, so a cached state never claims a version
+    *                 newer than the files it was computed from
+    */
+  private[ops] def plan(
+      spark: SparkSession,
+      table: Option[SeqTable],
+      manifest: => Either[Seq[FileMeta], Dataset[FileMeta]],
+      cfg: GridConfig,
+      k: Int,
+      threshold: Double,
+      targetRecords: Long,
+      prev: Option[PlannerState] = None,
+      onRun: (Set[Int], Int) => Unit = (_, _) => (),
+      pressure: FileMeta => Double = DeletePressure.Zero,
       preMergeMinRows: Long = GridTopK.PreMergeMinRows): (Seq[PlannedTask], PlannerState) = {
     import spark.implicits._
-    val version = table.currentVersion()
-    val metas = graft.table.SeqIO.fileMetaDS(spark, table, narrow = true)
-
-    def nodesOfDS(fs: Dataset[FileMeta]): Set[Int] =
-      fs.flatMap(f => fileCells(f, cfg, targetRecords, pressure)
-        .flatMap(c => cfg.nodesForCell(c.x, c.y)))
-        .distinct().collect().toSet
-
-    val cells = metas.flatMap(f => fileCells(f, cfg, targetRecords, pressure)).persist()
-    try {
-      // one aggregation yields allNodes AND the replicated-cell total (the runNodes gate input);
-      // driver payload = #nodes rows, bounded by planner-grid geometry, never file count
-      val nodeCounts = cells.flatMap(c => cfg.nodesForCell(c.x, c.y))
-        .groupByKey(identity).count().collect()
-      val allNodes = nodeCounts.iterator.map(_._1).toSet
-      val totalReplicated = nodeCounts.iterator.map(_._2).sum
-      val dirty: Set[Int] = prev match {
-        case Some(st) if table.snapshotVersions().contains(st.baseVersion) =>
-          val baseSnap = table.snapshot(st.baseVersion)
-          val prevDS = graft.table.SeqIO.fileMetaDSOf(spark, table, baseSnap, narrow = true)
-          val added = metas.join(prevDS.select("path"), Seq("path"), "left_anti").as[FileMeta]
-          val removed = prevDS.join(metas.select("path"), Seq("path"), "left_anti").as[FileMeta]
-          // pressure-dirty mirrors the driver variant: cached node scores under the OLD delete
-          // set are stale wherever either side's pressure is nonzero
-          val delDirty: Set[Int] =
-            if (baseSnap.deleteManifests == table.currentSnapshot().deleteManifests) Set.empty
-            else {
-              val basePressure = DeletePressure.of(spark, table, baseSnap)
-              nodesOfDS(metas.filter(f => pressure(f) > 0 || basePressure(f) > 0))
-            }
-          nodesOfDS(added) ++ nodesOfDS(removed) ++ delDirty
+    val version = table.fold(0L)(_.currentVersion())
+    val metas = manifest
+    val score = (f: FileMeta) => fileCells(f, cfg, targetRecords, pressure)
+    val nodesOf = (f: FileMeta) => score(f).flatMap(c => cfg.nodesForCell(c.x, c.y))
+    val cells = metas.left.map(_.flatMap(score)).map(_.flatMap(score))
+    GridTopK.withNodes(spark, cells, cfg, preMergeMinRows) { (allNodes, runNodes) =>
+      // dirty = nodes touched by files added OR removed since the cached base (exact manifest
+      // diff; falls back to all-dirty when the base snapshot has been expired), PLUS — when the
+      // pending MoR delete set changed — nodes of files whose delete pressure changed with it
+      // (their cached scores were computed under the OLD pressure; membership can't see this)
+      val dirty: Set[Int] = (table, prev) match {
+        case (Some(t), Some(st)) if t.snapshotVersions().contains(st.baseVersion) =>
+          val base = t.snapshot(st.baseVersion)
+          val repressured = Option.when(base.deleteManifests != t.currentSnapshot().deleteManifests) {
+            val basePressure = DeletePressure.of(spark, t, base)
+            (f: FileMeta) => pressure(f) > 0 || basePressure(f) > 0
+          }
+          metas match {
+            case Left(ms) =>
+              val was = t.liveFiles(base)
+              val (wasPaths, nowPaths) = (was.map(_.path).toSet, ms.map(_.path).toSet)
+              (ms.filterNot(f => wasPaths(f.path)) ++ was.filterNot(f => nowPaths(f.path)) ++
+                repressured.fold(Seq.empty[FileMeta])(ms.filter)).flatMap(nodesOf).toSet
+            case Right(ds) => // path anti-joins: only node ids reach the driver
+              val was = SeqIO.fileMetaDSOf(spark, t, base, narrow = true)
+              val changed = Seq(ds.join(was.select("path"), Seq("path"), "left_anti"),
+                was.join(ds.select("path"), Seq("path"), "left_anti")).map(_.as[FileMeta]) ++
+                repressured.map(ds.filter(_))
+              changed.map(_.flatMap(nodesOf)).reduce(_ union _).distinct().collect().toSet
+          }
         case _ => allNodes
       }
-
-      def runNodes(nodes: Set[Int], kPrime: Int): Map[Int, NodeResult] =
-        if (nodes.isEmpty) Map.empty
-        else {
-          onRun(nodes, kPrime)
-          runNodesOn(spark, cells, cfg, nodes, kPrime, k,
-            totalReplicated, allNodes.size, preMergeMinRows)
-        }
-
-      val (winners, newState) = IncrementalTopK.solve(
-        runNodes, allNodes, dirty, prev, version, k, overlapAllowed = false)
-      (claimTasksDistributed(spark, metas, winners.filter(_.score >= threshold), cfg,
-        targetRecords, pressure), newState)
-    } finally { cells.unpersist(); () }
-  }
-
-  /** Shared per-node kernel runner of both incremental variants, with the SAME driver-funnel
-    * insurance as [[GridTopK.solve]]: when the estimated driver payload of this call — the
-    * requested nodes' replicated-cell share, capped by #nodes × K′ candidates — exceeds
-    * `preMergeMinRows`, per-node results are folded into one partial per Spark partition on
-    * EXECUTORS ([[RegionKernel.preMerge]]) and returned under synthetic NEGATIVE ids, bounding
-    * the collect at #partitions × K′ instead of #dirtyNodes × K′ (a churn-heavy commit, or a
-    * planner-state reset where dirty == allNodes, at a 10^8-cell grid). Partials are valid
-    * NodeResults in the merge algebra but are never cached ([[IncrementalTopK.solve]] treats
-    * ids ∉ allNodes as transient) — steady-state small-dirty cycles stay below the gate and
-    * keep exact per-node caching.
-    */
-  private def runNodesOn(
-      spark: SparkSession,
-      cells: Dataset[Cell],
-      cfg: GridConfig,
-      nodes: Set[Int],
-      kPrime: Int,
-      k: Int,
-      totalReplicated: Long,
-      nAllNodes: Int,
-      preMergeMinRows: Long): Map[Int, NodeResult] = {
-    import spark.implicits._
-    val perNode = cells
-      .flatMap(c => cfg.nodesForCell(c.x, c.y).filter(nodes.contains).map(n => (n, c)))
-      .groupByKey(_._1)
-      .mapGroups { (node, it) =>
-        val (ax0, ax1, ay0, ay1) = cfg.anchorBounds(node)
-        node -> RegionKernel.localTopK(it.map(_._2).toSeq, ax0, ax1, ay0, ay1, cfg.regionW, kPrime)
+      val (winners, state) = IncrementalTopK.solve(
+        (nodes, kPrime) => { onRun(nodes, kPrime); runNodes(nodes, kPrime) },
+        allNodes, dirty, prev, version, k, overlapAllowed = false)
+      val won = winners.filter(_.score >= threshold)
+      // Winning regions → file-disjoint tasks. Files are claimed by centroid cell, and winners
+      // are pairwise non-overlapping (the planner's distinct mode), so each file maps to at most
+      // one winner and no file is ever claimed twice — the file-level analog of the reference's
+      // safe/unsafe disjointness protocol (`SDL/DependencyGraph.scala:36-142`). On a Dataset
+      // manifest only claimed files — task-sized — reach the driver.
+      val claimOf = (f: FileMeta) => {
+        val (x, y) = centroidCell(f, cfg)
+        val i = won.indexWhere(r => x >= r.x && x < r.x + r.w && y >= r.y && y < r.y + r.w)
+        Option.when(i >= 0)((i, f))
       }
-    val replicatedShare =
-      if (nAllNodes == 0) 0L else totalReplicated * nodes.size / nAllNodes
-    val payloadBound =
-      math.min(replicatedShare, nodes.size.toLong * math.min(kPrime.toLong, 1L << 20))
-    if (payloadBound > preMergeMinRows) {
-      val m = math.min(math.max(kPrime, k), 1 << 20) // the GridTopK bound: keep what a node keeps
-      perNode.mapPartitions { rs =>
-        if (rs.isEmpty) Iterator.empty
-        else Iterator.single((-(org.apache.spark.TaskContext.getPartitionId() + 1),
-          RegionKernel.preMerge(rs.map(_._2), m)))
-      }.collect().toMap
-    } else perNode.collect().toMap
+      val claims = metas.fold(_.flatMap(claimOf),
+        ds => if (won.isEmpty) Nil else ds.flatMap(claimOf).collect().toSeq).groupMap(_._1)(_._2)
+      (won.zipWithIndex.flatMap { case (r, i) =>
+        val fs = claims.getOrElse(i, Nil).sortBy(_.path)
+        // usefulness gate (termination): execute only when the rewrite can actually improve
+        // layout — fewer output files than inputs (merge win), or a spanning file big enough to
+        // split into ≥2 tighter files. Without this the planner re-flags converged-but-small
+        // files forever.
+        val total = fs.map(_.records).sum
+        val outFiles = math.max(1L, (total + targetRecords - 1) / targetRecords)
+        // files the engine itself wrote curve-sorted are as tight as their size allows — only a
+        // file-count win can improve them; external (unclustered) spanning files also justify a
+        // splitting re-cluster when there is enough data for ≥2 output files
+        // delete-laden files are useful to rewrite regardless of layout win: the rewrite applies
+        // their pending MoR deletes (terminating — rewritten files outlive every delete sequence,
+        // so their pressure is 0 next cycle)
+        val useful = outFiles < fs.size ||
+          (fs.exists(f => !f.clustered && cellsOf(f, cfg).size > 1) && total >= 2 * targetRecords) ||
+          fs.exists(f => pressure(f) > 0)
+        Option.when(useful)(PlannedTask(i, r, fs.map(_.path), r.score))
+      }, state)
+    }
   }
 }

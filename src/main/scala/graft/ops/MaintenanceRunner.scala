@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.SparkSession
 import graft.planner.{GridConfig, Region}
 import graft.state.{Checkpoint, StateEvent}
+import graft.Timing.timed
 import graft.table.{FileMeta, SeqIO, SeqTable}
 
 final case class MaintenanceOptions(
@@ -15,9 +16,11 @@ final case class MaintenanceOptions(
     batchTasks: Boolean = true, // true: all tasks of a cycle in ONE job + commit (throughput);
                                 // false: one commit per task (finer isolation/lineage)
     incremental: Boolean = false, // cache per-node planner results; re-run only dirtied nodes
-    // above this many live files, planning runs fully distributed (manifest Dataset on executors,
-    // only winning tasks reach the driver) and new manifests are written as parquet so the
-    // executor-side manifest scan column-prunes the bloom payload. 0 = always distributed.
+    // above this many live files the manifest stays on executors: the planner reads it as a
+    // Dataset (only per-node counts and winning tasks reach the driver) and new manifests are
+    // written as parquet so the executor-side manifest scan column-prunes the bloom payload.
+    // Where the planner's kernels run is GridTopK's replicated-cell gate, not this option.
+    // 0 = always distributed.
     distributedPlanFiles: Int = 100000)
 
 final case class CycleReport(
@@ -47,13 +50,6 @@ object MaintenanceRunner {
       onPlannerRun: (Set[Int], Int) => Unit = (_, _) => ()): CycleReport = {
 
     val now = () => System.currentTimeMillis()
-    val debugTiming = sys.env.contains("GRAFT_TIMING")
-    def timed[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (debugTiming) println(f"[timing] $tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
     // live-file COUNT without parsing manifests: every commit records it in the snapshot summary
     val headSnap = table.currentSnapshot()
     val liveCount = headSnap.summary.get("total-files").flatMap(_.toIntOption)
@@ -88,23 +84,12 @@ object MaintenanceRunner {
         // clustered pass ([[Rewrite.compactFiles]] reads delete-aware) — no separate full
         // MaterializeDeletes sweep
         val pressure = timed("delete-pressure")(DeletePressure.of(spark, table, headSnap))
-        val planned = timed("plan")(
-          if (opts.incremental) {
-            val (tasks, st) =
-              if (useDistributed) MaintenancePlanner.planIncrementalDistributed(spark, table, cfg,
-                opts.k, opts.threshold, opts.targetRecordsPerFile, checkpoint.loadPlannerState(),
-                onPlannerRun, pressure)
-              else MaintenancePlanner.planIncremental(spark, table, cfg,
-                opts.k, opts.threshold, opts.targetRecordsPerFile, checkpoint.loadPlannerState(),
-                onPlannerRun, pressure)
-            checkpoint.savePlannerState(st)
-            tasks
-          } else if (useDistributed) MaintenancePlanner.planCompactionDistributed(
-            spark, SeqIO.fileMetaDS(spark, table, narrow = true), cfg,
-            opts.k, opts.threshold, opts.targetRecordsPerFile, pressure)
-          else MaintenancePlanner.planCompaction(
-            spark, metasByPath.values.toSeq, cfg, opts.k, opts.threshold,
-            opts.targetRecordsPerFile, pressure))
+        val (planned, plannerState) = timed("plan")(MaintenancePlanner.plan(spark, Some(table),
+          if (useDistributed) Right(SeqIO.fileMetaDS(spark, table, narrow = true))
+          else Left(table.liveFiles()),
+          cfg, opts.k, opts.threshold, opts.targetRecordsPerFile,
+          if (opts.incremental) checkpoint.loadPlannerState() else None, onPlannerRun, pressure))
+        if (opts.incremental) checkpoint.savePlannerState(plannerState)
         checkpoint.append(StateEvent("CYCLE_START", cycle, -1, base, -1, Nil, Nil,
           Map("live-files" -> liveCount.toString), now()))
         planned.foreach { t =>

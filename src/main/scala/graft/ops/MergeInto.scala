@@ -124,13 +124,7 @@ object MergeInto {
         "merge: upsert rows must carry tokens and n_tok (delete-only change sets may omit them)")
     def upsertRows = ch.filter(col("_op") =!= "D")
       .select(tableSchema.fieldNames.toSeq.map(n => col(s"c_$n").as(n)): _*)
-    val debugTiming = sys.env.contains("GRAFT_TIMING")
-    def timed[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (debugTiming) println(f"[timing] merge/$tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
+    def timed[T](tag: String)(f: => T): T = graft.Timing.timed(s"merge/$tag")(f)
     // keys is persisted for the whole merge (reused by the prune, anti-join and delete-manifest
     // write of every attempt) and MUST be unpersisted on exit: a long-running maintenance driver
     // runs thousands of merges, and each leaked cache entry pins executor storage + a driver

@@ -67,11 +67,8 @@ object Rewrite {
         byteBalanced(spark, withCurveKey(df, cfgEff, hilbertEff), nFiles)
           .sortWithinPartitions(col("_ck"), col("doc_id"))
           .drop("_ck")
-    val t0 = System.nanoTime()
-    val out = SeqIO.writeFiles(spark, table, clustered, clustered = true)
-    if (sys.env.contains("GRAFT_TIMING"))
-      println(f"[timing] clusteredWrite/writeFiles ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    out
+    graft.Timing.timed("clusteredWrite/writeFiles")(
+      SeqIO.writeFiles(spark, table, clustered, clustered = true))
   }
 
   /** BYTE-balanced curve partitioning with hot-key salting.

@@ -66,7 +66,7 @@ final case class GridConfig(
 /** Multi-round exact distributed top-k over per-node kernels — the driver loop of the reference's
   * NstepAlgo (`/root/reference/src/main/scala/SDL/distrib/NstepAlgo.scala:23-57`), with the K′-growth
   * retry replacing its feedback rounds. Pure Scala over an abstract "run the kernels" function so the
-  * same loop is unit-testable without Spark and Spark-backed in [[graft.ops.MaintenancePlanner]].
+  * same loop is unit-testable without Spark and Spark-backed via [[IncrementalTopK]].
   */
 object DistributedTopK {
 

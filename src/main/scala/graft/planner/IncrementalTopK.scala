@@ -11,7 +11,8 @@ final case class PlannerState(kPrime: Int, baseVersion: Long, nodes: Map[Int, No
   * `/root/reference/src/main/scala/SDL/distrib/OnestepAlgoReduceHybridOpt.scala:22-90`): per-node
   * results are cached across cycles; only nodes whose cells changed (files added/removed) are
   * re-run, the rest reuse cached candidates (the reference's `filter ∪ union` on untouched
-  * partitions, F5/P8).
+  * partitions, F5/P8). A full solve is the same call with no cache (`prev = None`, every node
+  * dirty); the K′ rounds and the completeness-checked fallback are [[DistributedTopK.solve]]'s.
   */
 object IncrementalTopK {
 
@@ -35,46 +36,26 @@ object IncrementalTopK {
       overlapAllowed: Boolean,
       sigma: Option[Double] = None,
       maxRounds: Int = 8): (Vector[Region], PlannerState) = {
-
-    val prevNodes = prev.map(_.nodes).getOrElse(Map.empty)
-    var kPrime = math.max(math.max(k, 4), prev.map(_.kPrime).getOrElse(0))
-    // reusable cached results: clean nodes that still exist, computed at a K′ we won't exceed in
-    // round 1 — truncated (non-exhausted) caches are only valid if their kPrime matches ours
-    def reusable(kp: Int): Map[Int, NodeResult] =
-      prevNodes.filter { case (n, r) =>
-        allNodes.contains(n) && !dirty.contains(n) && (r.exhausted || prev.exists(_.kPrime >= kp))
-      }
-
-    var cache = reusable(kPrime)
-    var toRun = allNodes.diff(cache.keySet)
+    val prevK = prev.fold(0)(_.kPrime)
+    val clean = prev.fold(Map.empty[Int, NodeResult])(_.nodes)
+      .filter { case (n, _) => allNodes.contains(n) && !dirty.contains(n) }
     var state = Map.empty[Int, NodeResult]
-    var round = 0
-    var answer = Vector.empty[Region]
-    var done = false
-    while (!done && round < maxRounds) {
-      val fresh = if (toRun.nonEmpty) runNodes(toRun, kPrime) else Map.empty[Int, NodeResult]
-      state = cache ++ fresh
-      val (acc, complete) = RegionKernel.mergeTopK(state.values.toSeq, k, overlapAllowed, sigma)
-      answer = acc
-      done = complete
-      if (!done) {
-        kPrime *= 4
-        // higher K′ invalidates every truncated result, cached or fresh; pre-merged partials
-        // (synthetic ids ∉ allNodes) are transient — carrying one into the next round while
-        // re-running its source nodes would double-count their candidates
-        cache = state.filter { case (n, r) => r.exhausted && allNodes.contains(n) }
-        toRun = allNodes.diff(cache.keySet)
-        round += 1
-      }
+    var lastK = 0
+    def round(kPrime: Int): Seq[NodeResult] = {
+      // reusable: clean cached nodes (truncated ones only up to the K′ they were computed at) plus
+      // this call's exhausted results; pre-merged partials (synthetic ids ∉ allNodes) are transient
+      // — carrying one into the next round while re-running its sources would double-count them
+      val cache = clean.filter { case (_, r) => r.exhausted || prevK >= kPrime } ++
+        state.filter { case (n, r) => r.exhausted && allNodes.contains(n) }
+      val toRun = allNodes.diff(cache.keySet)
+      state = cache ++ (if (toRun.nonEmpty) runNodes(toRun, kPrime) else Map.empty)
+      lastK = kPrime
+      state.values.toSeq
     }
-    if (!done) {
-      val fresh = runNodes(allNodes.diff(cache.keySet), Int.MaxValue)
-      state = cache ++ fresh
-      answer = RegionKernel.mergeTopK(state.values.toSeq, k, overlapAllowed, sigma)._1
-      kPrime = Int.MaxValue
-    }
+    val answer = DistributedTopK.solve(round, k, overlapAllowed,
+      kPrime0 = math.max(math.max(k, 4), prevK), maxRounds = maxRounds, sigma = sigma)
     // synthetic (pre-merged) entries are not per-node facts — persisting them would let a later
     // cycle treat a fold of many nodes as one node's cache; those nodes simply recompute next time
-    (answer, PlannerState(kPrime, baseVersion, state.filter(e => allNodes.contains(e._1))))
+    (answer, PlannerState(lastK, baseVersion, state.filter(e => allNodes.contains(e._1))))
   }
 }

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Timing.timed
 
 object SeqSchema {
   val schema: StructType = StructType(Seq(
@@ -102,13 +103,6 @@ object SeqIO {
     */
   def writeFiles(spark: SparkSession, table: SeqTable, df: DataFrame,
       clustered: Boolean = false): Seq[FileMeta] = {
-    val debugTiming = sys.env.contains("GRAFT_TIMING")
-    def timed[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (debugTiming) println(f"[timing] writeFiles/$tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
     // FULL UUID: data-file basenames must be globally unique by construction — DV manifests
     // target files BY BASENAME, and after an expired file's physical deletion a later batch
     // reusing a truncated-entropy name would let a carried dead-target bitmap silently hide
@@ -132,7 +126,7 @@ object SeqIO {
     // the same bytes (writebench: snappy-dict ≥3.5 s vs zstd-dict ~1.6-2.2 s per 200k-row
     // write, dictionary-encoded size identical). Every maintenance row funnels through this
     // write, so the codec is pinned here rather than left to the session default.
-    timed("write")(checked.select(table.currentSchema().fields.toSeq.map(f =>
+    timed("writeFiles/write")(checked.select(table.currentSchema().fields.toSeq.map(f =>
         col(f.name).as(SeqSchema.physicalName(f))): _*)
       .write.mode("overwrite").option("compression", "zstd").parquet(tmp.toString))
 
@@ -150,7 +144,8 @@ object SeqIO {
 
     // stats need only the 3 narrow columns — prunes the tokens payload (~95% of bytes) off the scan
     val statSchema = StructType(SeqSchema.schema.filterNot(_.name == "tokens"))
-    val stats = timed("stats")(spark.read.schema(statSchema).parquet(moved.map(_.toString): _*)
+    val stats = timed("writeFiles/stats")(spark.read.schema(statSchema)
+      .parquet(moved.map(_.toString): _*)
       .groupBy(input_file_name().as("file"))
       .agg(
         count(lit(1)).as("records"),

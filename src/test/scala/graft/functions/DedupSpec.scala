@@ -80,6 +80,15 @@ class DedupSpec extends AnyFunSuite {
     assert(twinPairs.length === 10) // every constructed twin found
   }
 
+  test("minhashLshPairs never pairs an id with itself when input ids repeat") {
+    val text = "a document that appears twice under one id with shared boilerplate tokens"
+    val df = Seq((7L, text), (7L, text), (8L, text)).toDF("id", "text")
+    val pairs = Dedup.minhashLshPairs(df, k = 32, bands = 8, shingleN = 3, minJaccardX1e4 = 5000L)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.forall { case (a, b) => a != b }, pairs.mkString(", "))
+    assert(pairs.toSet === Set((7L, 8L)))
+  }
+
   test("dupClusters: connected components with min-id representatives, incl. chains") {
     import spark.implicits._
     // components: {1,2,3} (triangle), {10,11,12,13} (a CHAIN — needs multi-round propagation),
