@@ -186,7 +186,6 @@ object BenchExtra {
         locally {
           val s0 = session(cpus)
           val t = graft.table.SeqTable.create(template)
-          t.manifestFormat = "parquet"
           val fake = (0 until nf).iterator.map { i =>
             val lo = 16 + (i * 37) % 2000
             graft.table.FileMeta(s"data/f$i.parquet", 20000L, 2000000L, lo, lo + 400,
@@ -229,7 +228,6 @@ object BenchExtra {
               val root = s"$shm/t-$n-$tag"
               clone(root)
               val t = graft.table.SeqTable.load(root)
-              t.manifestFormat = "parquet"
               val (mr, sec) = time(graft.ops.MergeInto.merge(
                 s, t, changes, cfg, 2000, distributedMetaFiles = 0L))
               require(t.manifestFileReads.get() == 0L && t.manifestNarrowFileReads.get() == 0L,

@@ -307,7 +307,6 @@ object EngineQueries {
     val reps = PortableSeq.repsFor(dir)
     val port = PortableSeq.df(s, dir, reps).persist()
     val table = SeqTable.create(fresh("rwmanifest"))
-    table.manifestFormat = "parquet"
     val bounds = (0 to 4).map(i => i * reps / 4)
     bounds.sliding(2).foreach { case Seq(lo, hi) =>
       val batch = port.filter(pmod(col("docnum"), lit(reps)) >= lo &&
@@ -322,7 +321,6 @@ object EngineQueries {
     val manifestsBefore = table.currentSnapshot().manifests.size
     require(manifestsBefore >= 4, s"multi-append premise void: $manifestsBefore manifests")
     val cold = SeqTable.load(table.root)
-    cold.manifestFormat = "parquet"
     val snap = SeqIO.rewriteManifestsDistributed(s, cold, targetEntriesPerManifest = 6)
     require(cold.manifestFileReads.get() == 0L,
       s"distributed rewrite parsed ${cold.manifestFileReads.get()} manifests on the driver")

@@ -38,7 +38,7 @@ object Maintain {
     spark.sparkContext.setLogLevel("WARN")
     val cfg = GridConfig()
     // SPARK_GRAFT_DIST_PLAN_FILES overrides the distributed-planning threshold (0 = always plan
-    // from the executor-side manifest Dataset with parquet manifests — lets the CLI drive the
+    // from the executor-side manifest Dataset — lets the CLI drive the
     // 10^7-file path at demo scale)
     val distFiles = sys.env.get("SPARK_GRAFT_DIST_PLAN_FILES").map(_.toInt)
     val opts = MaintenanceOptions(distributedPlanFiles = distFiles.getOrElse(100000))
@@ -224,7 +224,6 @@ object Maintain {
         // distributed by default: the merged manifest is built by a Spark job (parts become
         // manifests), the driver parses zero manifest entries
         val table = SeqTable.load(dir)
-        table.manifestFormat = "parquet"
         val snap = SeqIO.rewriteManifestsDistributed(spark, table)
         println(s"[rewrite-manifests] manifests=${snap.manifests.size} " +
           s"files=${snap.summary.getOrElse("total-files", "?")} → v${snap.version}")

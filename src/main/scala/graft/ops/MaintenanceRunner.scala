@@ -17,8 +17,7 @@ final case class MaintenanceOptions(
                                 // false: one commit per task (finer isolation/lineage)
     incremental: Boolean = false, // cache per-node planner results; re-run only dirtied nodes
     // above this many live files the manifest stays on executors: the planner reads it as a
-    // Dataset (only per-node counts and winning tasks reach the driver) and new manifests are
-    // written as parquet so the executor-side manifest scan column-prunes the bloom payload.
+    // Dataset (only per-node counts and winning tasks reach the driver).
     // Where the planner's kernels run is GridTopK's replicated-cell gate, not this option.
     // 0 = always distributed.
     distributedPlanFiles: Int = 100000)
@@ -57,7 +56,6 @@ object MaintenanceRunner {
     val useDistributed = liveCount > opts.distributedPlanFiles
     // distributed path: the full manifest NEVER materializes on the driver — planning runs on
     // the manifest Dataset, and metas are fetched per-claimed-path afterwards (task-sized)
-    if (useDistributed) table.manifestFormat = "parquet"
     val metasByPath: Map[String, FileMeta] =
       if (useDistributed) Map.empty
       else timed("liveFiles")(table.liveFiles().map(f => f.path -> f).toMap)

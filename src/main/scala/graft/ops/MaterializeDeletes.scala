@@ -31,7 +31,6 @@ object MaterializeDeletes {
       val useDistributed = distributedMetaFiles == 0L ||
         snap.summary.get("total-files").flatMap(_.toLongOption).getOrElse(0L) >
           distributedMetaFiles
-      if (useDistributed) table.manifestFormat = "parquet"
 
       val candidates = candidateFiles(spark, table, snap, useDistributed)
       val candidatePaths = candidates.map(_.path).toSet

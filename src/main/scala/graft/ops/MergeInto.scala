@@ -164,7 +164,6 @@ object MergeInto {
         val useDistributed = distributedMetaFiles == 0L ||
           snap.summary.get("total-files").flatMap(_.toLongOption).getOrElse(0L) >
             distributedMetaFiles
-        if (useDistributed) table.manifestFormat = "parquet" // new manifests column-prunable
 
         // 1. manifest pruning: files whose doc_id range may contain a change key (also drives the
         //    auto COW-vs-MoR routing, so it runs before the branch; pure metadata × keys).
@@ -295,9 +294,15 @@ object MergeInto {
             import scala.concurrent.{Await, Future}
             import scala.concurrent.duration.Duration
             implicit val ec = MergeInto.writePool
+            // both sides' jobs carry one tag, so a failed side can cancel its peer's jobs
+            val tag = s"graft-merge-${java.util.UUID.randomUUID()}"
+            def tagged[T](body: => T): Future[T] = Future {
+              spark.sparkContext.addJobTag(tag)
+              try body finally spark.sparkContext.removeJobTag(tag)
+            }
             val survivorsF: Future[Seq[FileMeta]] =
               if (affected.isEmpty) Future.successful(Nil)
-              else Future {
+              else tagged {
                 val target = SeqIO.readWithDeletes(spark, table, snapDeletes, affected)
                 val keySide = if (broadcastChanges) broadcast(keys) else keys
                 val survivors = target
@@ -305,17 +310,21 @@ object MergeInto {
                 timed("survivor-rewrite")(SeqIO.writeFiles(spark, table, survivors,
                   clustered = affected.forall(_.clustered)))
               }
-            val upsertsF: Future[Seq[FileMeta]] = Future {
+            val upsertsF: Future[Seq[FileMeta]] = tagged {
               timed("upsert-write")(Rewrite.clusteredWrite(
                 spark, table, upsertRows, cfg, targetRecordsPerFile, nKeys))
             }
-            try (Await.result(survivorsF, Duration.Inf), Await.result(upsertsF, Duration.Inf))
+            // zip fails as soon as either side fails, without waiting for the other
+            try Await.result(survivorsF.zip(upsertsF), Duration.Inf)
             catch {
               case e: Throwable =>
-                // one side failed: drain the other and reclaim any files it already landed —
-                // the commit-conflict cleanup below never sees them otherwise
+                // one side failed: cancel the peer's jobs, wait for it (two minutes at most: a
+                // peer stuck outside a Spark job must not hang the merge) and reclaim any files
+                // it already landed — the commit-conflict cleanup below never sees them
+                // otherwise. A peer still running at the deadline leaves removeOrphans candidates.
+                spark.sparkContext.cancelJobsWithTag(tag)
                 Seq(survivorsF, upsertsF).foreach { f =>
-                  try Await.result(f, Duration.Inf).foreach(m => java.nio.file.Files
+                  try Await.result(f, Duration(2, "min")).foreach(m => java.nio.file.Files
                     .deleteIfExists(java.nio.file.Paths.get(table.absolutePath(m))))
                   catch { case _: Throwable => () }
                 }

@@ -18,12 +18,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * actually contain its keys, plus the false-positive tail.
   *
   * Sizing: fixed parameters (mergeable across partitions) for ~1% fpp at 8k keys (~10 KB, ~13 KB
-  * base64 in the JSON manifest). For much larger files the filter saturates and prunes nothing —
+  * base64 in the manifest). For much larger files the filter saturates and prunes nothing —
   * but under uniform key density such files genuinely contain changed keys, so nothing is lost;
   * the test is only ever an over-approximation (Bloom has no false negatives), so correctness
-  * never depends on it. At 10^7-file scale the blooms belong in parquet manifests read
-  * distributed (the engine's distributed-planner path) rather than driver-side JSON — same
-  * encoding, different carrier.
+  * never depends on it. Manifests are parquet, so a narrow read (driver or executor) never
+  * decodes the bloom column at all.
   */
 object DocBloom {
   val ExpectedItems: Long = 8192L

@@ -14,19 +14,8 @@ object SeqSchema {
     StructField("n_tok", IntegerType),
     StructField("source", StringType)))
 
-  /** Manifest-entry schema (mirrors [[FileMeta]]) for reading manifests as a Dataset. */
-  val fileMetaSchema: StructType = StructType(Seq(
-    StructField("path", StringType),
-    StructField("records", LongType),
-    StructField("bytes", LongType),
-    StructField("minNtok", IntegerType),
-    StructField("maxNtok", IntegerType),
-    StructField("minDocId", StringType),
-    StructField("maxDocId", StringType),
-    StructField("sources", ArrayType(StringType)),
-    StructField("addedAt", LongType),
-    StructField("clustered", BooleanType),
-    StructField("docBloom", StringType))) // nullable → Option[String] on the case class
+  /** Manifest-entry schema (derived from [[FileMeta]]) for reading manifests as a Dataset. */
+  val fileMetaSchema: StructType = org.apache.spark.sql.Encoders.product[FileMeta].schema
 
   /** Field-metadata key carrying a renamed column's FORMER physical names, most recent first.
     * RENAME COLUMN is metadata-only: writers always use current names, so a table's data files
@@ -144,7 +133,8 @@ object SeqIO {
 
     // stats need only the 3 narrow columns — prunes the tokens payload (~95% of bytes) off the scan
     val statSchema = StructType(SeqSchema.schema.filterNot(_.name == "tokens"))
-    val stats = timed("writeFiles/stats")(spark.read.schema(statSchema)
+    // a failed (or cancelled) stats job leaves no moved file behind: nothing returns their stats
+    val stats = try timed("writeFiles/stats")(spark.read.schema(statSchema)
       .parquet(moved.map(_.toString): _*)
       .groupBy(input_file_name().as("file"))
       .agg(
@@ -154,6 +144,7 @@ object SeqIO {
         slice(sort_array(collect_set("source")), 1, MaxSourcesTracked + 1).as("sources"),
         DocBloom.udaf(col("doc_id")).as("doc_bloom"))
       .collect())
+    catch { case e: Throwable => moved.foreach(Files.deleteIfExists(_)); throw e }
 
     require(stats.forall(_.getString(0).nonEmpty),
       "input_file_name() evaluated empty during stats collection — plan rearranged off the scan")
@@ -494,11 +485,10 @@ object SeqIO {
 
   /** The live manifest as a distributed Dataset — the planner's input at 10^12-sequence scale
     * (~10^7 manifest rows): metadata is scanned by executors, never materialized on the driver.
-    * Handles mixed jsonl/parquet manifest carriers (see [[SeqTable.manifestFormat]]).
     *
     * @param narrow drop the docBloom payload (the dominant manifest bytes, ~13 KB/file) — on
-    *               parquet manifests the column is never read at all (columnar pruning); the
-    *               planner needs only layout stats, so this is the planning-path default
+    *               the column is never read at all (columnar pruning); the planner needs
+    *               only layout stats, so this is the planning-path default
     */
   def fileMetaDS(spark: SparkSession, table: SeqTable,
       narrow: Boolean = false): org.apache.spark.sql.Dataset[FileMeta] =
@@ -518,27 +508,45 @@ object SeqIO {
   private[graft] def manifestMetaDS(spark: SparkSession, table: SeqTable, names: Seq[String],
       narrow: Boolean = false): org.apache.spark.sql.Dataset[FileMeta] = {
     import spark.implicits._
-    def abs(m: String) = java.nio.file.Paths.get(table.root, "metadata", m).toString
-    val (pq, jl) = names.partition(_.endsWith(".parquet"))
-    val schema =
-      if (narrow) org.apache.spark.sql.types.StructType(
-        SeqSchema.fileMetaSchema.filterNot(_.name == "docBloom"))
-      else SeqSchema.fileMetaSchema
-    def widen(df: DataFrame): DataFrame =
-      if (narrow) df.withColumn("docBloom", lit(null).cast("string")) else df
-    val parts = Seq(
-      if (jl.nonEmpty) Some(widen(spark.read.schema(schema).json(jl.map(abs): _*))) else None,
-      if (pq.nonEmpty) Some(widen(spark.read.schema(schema).parquet(pq.map(abs): _*))) else None
-    ).flatten
-    if (parts.isEmpty) spark.emptyDataset[FileMeta]
-    else parts.reduce(_ unionByName _).as[FileMeta]
+    if (!narrow) scanManifests(spark, table, names, SeqSchema.fileMetaSchema).as[FileMeta]
+    else scanManifests(spark, table, names,
+      StructType(SeqSchema.fileMetaSchema.filterNot(_.name == "docBloom")))
+      .withColumn("docBloom", lit(null).cast("string")).as[FileMeta]
+  }
+
+  /** Executor-side scan of a set of manifests, column-pruned to `schema` — by default just the
+    * `path` column, all the expiry diff and the membership checks need. */
+  private def scanManifests(spark: SparkSession, table: SeqTable, names: Seq[String],
+      schema: StructType = StructType(Seq(StructField("path", StringType)))): DataFrame = {
+    names.foreach(ManifestCodec.requireParquet)
+    spark.read.schema(schema).parquet(names.map(table.metaDirPath.resolve(_).toString): _*)
+  }
+
+  /** Writes `df` as parquet part files and moves each into metadata/ as one manifest (the one
+    * encoding: [[ManifestCodec]] reads them back on the driver). */
+  private def writeManifestParts(table: SeqTable, df: DataFrame): Seq[String] = {
+    val tmp = Files.createTempDirectory(table.metaDirPath, ".tmp-manifest")
+    try {
+      df.write.mode("overwrite").parquet(tmp.toString)
+      SeqTable.listDir(tmp)
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .sortBy(_.getFileName.toString)
+        .map { p =>
+          val n = s"manifest-${java.util.UUID.randomUUID()}.parquet"
+          Files.move(p, table.metaDirPath.resolve(n))
+          n
+        }
+    } finally {
+      SeqTable.listDir(tmp).foreach(Files.deleteIfExists(_))
+      Files.deleteIfExists(tmp); ()
+    }
   }
 
   /** Distributed manifest rewrite — the 10^7-file replacement for the driver-side
     * [[SeqTable.rewriteManifests]], which materializes and sorts the ENTIRE live manifest on the
     * driver (the exact funnel the distributed planner path exists to avoid; at 10^7 files with
     * ~13 KB docBloom payloads that is ~130 GB of driver heap). Here the merged manifest is built
-    * by a Spark job: the live-manifest Dataset (executor-side scan of the jsonl/parquet carriers)
+    * by a Spark job: the live-manifest Dataset (executor-side scan of the manifests)
     * is `repartitionByRange`-partitioned and sorted on (first source, minNtok, path) — so each
     * output part covers a contiguous key range, preserving the scan-locality contract of the
     * driver path — and each parquet part file BECOMES one manifest. The driver only moves part
@@ -552,10 +560,8 @@ object SeqIO {
     *   proportional to their edits)
     */
   def rewriteManifestsDistributed(spark: SparkSession, table: SeqTable,
-      targetEntriesPerManifest: Long = 100000L, maxRetries: Int = 5): Snapshot = {
-    var attempt = 0
-    while (true) {
-      val base = table.currentSnapshot()
+      targetEntriesPerManifest: Long = 100000L, maxRetries: Int = 5): Snapshot =
+    table.commitManifestRewrite("rewriteManifestsDistributed", maxRetries) { base =>
       val ds = fileMetaDSOf(spark, table, base) // full width: the new manifests must keep docBloom
       // live-file count from the snapshot summary (every commit records it — the same field the
       // runner trusts for its reports); the count() job over all manifest carriers is only the
@@ -566,58 +572,16 @@ object SeqIO {
         else {
           val nParts = math.min(total, (total + targetEntriesPerManifest - 1) /
             targetEntriesPerManifest).toInt
-          val tmp = Files.createTempDirectory(table.metaDirPath, ".tmp-manifest-rw")
-          try {
-            ds.toDF()
-              // get() not element_at(): overflow files have EMPTY sources, and ANSI mode (the
-              // Spark 4 default) makes element_at throw on the out-of-bounds index
-              .withColumn("_src0", coalesce(get(col("sources"), lit(0)), lit("")))
-              .repartitionByRange(nParts, col("_src0"), col("minNtok"), col("path"))
-              .sortWithinPartitions(col("_src0"), col("minNtok"), col("path"))
-              .drop("_src0")
-              .write.mode("overwrite").parquet(tmp.toString)
-            SeqTable.listDir(tmp)
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .sortBy(_.getFileName.toString)
-              .map { p =>
-                val n = s"manifest-${java.util.UUID.randomUUID()}.parquet"
-                Files.move(p, table.metaDirPath.resolve(n))
-                n
-              }
-          } finally {
-            SeqTable.listDir(tmp).foreach(Files.deleteIfExists(_))
-            Files.deleteIfExists(tmp); ()
-          }
+          writeManifestParts(table, ds.toDF()
+            // get() not element_at(): overflow files have EMPTY sources, and ANSI mode (the
+            // Spark 4 default) makes element_at throw on the out-of-bounds index
+            .withColumn("_src0", coalesce(get(col("sources"), lit(0)), lit("")))
+            .repartitionByRange(nParts, col("_src0"), col("minNtok"), col("path"))
+            .sortWithinPartitions(col("_src0"), col("minNtok"), col("path"))
+            .drop("_src0"))
         }
-      table.tryCommitManifestRewrite(base, names, total) match {
-        case Some(next) => return next
-        case None =>
-          names.foreach(table.uncacheManifestFile)
-          attempt += 1
-          if (attempt > maxRetries)
-            throw new table.CommitConflictException(
-              s"rewriteManifestsDistributed: lost the version race $maxRetries times")
-      }
+      (names, total)
     }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Just the `path` column of a set of manifest carriers, scanned by executors (jsonl reads
-    * only that field; parquet column-prunes to it) — the expiry diff needs nothing else.
-    */
-  private def manifestPathsDF(spark: SparkSession, table: SeqTable,
-      names: Seq[String]): DataFrame = {
-    def abs(m: String) = java.nio.file.Paths.get(table.root, "metadata", m).toString
-    val schema = StructType(Seq(StructField("path", StringType)))
-    val (pq, jl) = names.partition(_.endsWith(".parquet"))
-    val parts = Seq(
-      if (jl.nonEmpty) Some(spark.read.schema(schema).json(jl.map(abs): _*)) else None,
-      if (pq.nonEmpty) Some(spark.read.schema(schema).parquet(pq.map(abs): _*)) else None
-    ).flatten
-    if (parts.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else parts.reduce(_ unionByName _)
-  }
 
   /** EXECUTOR-SIDE membership check for [[SeqTable.commit]]'s `requireLivePaths` fence (the
     * 10^7-file path): one broadcast semi-join of the required paths against the path-only
@@ -627,30 +591,9 @@ object SeqIO {
       : (Snapshot, Set[String]) => Set[String] = { (base, paths) =>
     import spark.implicits._
     val req = broadcast(spark.createDataset(paths.toSeq).toDF("path"))
-    val found = manifestPathsDF(spark, table, base.manifests)
+    val found = scanManifests(spark, table, base.manifests)
       .join(req, Seq("path"), "left_semi").distinct().as[String].collect().toSet
     paths.diff(found)
-  }
-
-  /** (path, carrier-manifest basename) of a set of manifest carriers, scanned by executors —
-    * the distributed manifest edit needs to know WHICH manifest holds each removed path.
-    */
-  private def manifestPathCarrierDF(spark: SparkSession, table: SeqTable,
-      names: Seq[String]): DataFrame = {
-    def abs(m: String) = java.nio.file.Paths.get(table.root, "metadata", m).toString
-    val schema = StructType(Seq(StructField("path", StringType)))
-    def withCarrier(df: DataFrame): DataFrame =
-      df.select(col("path"),
-        element_at(split(col("_metadata.file_path"), "/"), -1).as("_carrier"))
-    val (pq, jl) = names.partition(_.endsWith(".parquet"))
-    val parts = Seq(
-      if (jl.nonEmpty) Some(withCarrier(spark.read.schema(schema).json(jl.map(abs): _*))) else None,
-      if (pq.nonEmpty) Some(withCarrier(spark.read.schema(schema).parquet(pq.map(abs): _*))) else None
-    ).flatten
-    if (parts.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(schema.fields :+ StructField("_carrier", StringType)))
-    else parts.reduce(_ unionByName _)
   }
 
   /** EXECUTOR-SIDE manifest edit for [[SeqTable.commit]]'s `editPlanner` — the 10^7-file path
@@ -666,7 +609,9 @@ object SeqIO {
       : (Snapshot, Set[String]) => SeqTable.ManifestEdit = { (base, removedPaths) =>
     import spark.implicits._
     val removed = broadcast(spark.createDataset(removedPaths.toSeq).toDF("path"))
-    val hits = manifestPathCarrierDF(spark, table, base.manifests)
+    // (path, carrier-manifest basename): the edit needs WHICH manifest holds each removed path
+    val hits = scanManifests(spark, table, base.manifests)
+      .select(col("path"), element_at(split(col("_metadata.file_path"), "/"), -1))
       .join(removed, Seq("path")).collect() // ≤ |removedPaths| rows: change-proportional
     val found = hits.map(_.getString(0)).toSet
     val missing = removedPaths.diff(found)
@@ -676,26 +621,9 @@ object SeqIO {
       val kept = base.manifests.filterNot(touched)
       val rewritten =
         if (touched.isEmpty) Nil
-        else {
-          val tmp = Files.createTempDirectory(table.metaDirPath, ".tmp-manifest-edit")
-          try {
-            manifestMetaDS(spark, table, touched.toSeq).toDF()
-              .join(removed, Seq("path"), "left_anti")
-              .coalesce(touched.size) // survivors ⊆ touched: never more parts than inputs
-              .write.mode("overwrite").parquet(tmp.toString)
-            SeqTable.listDir(tmp)
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .sortBy(_.getFileName.toString)
-              .map { p =>
-                val n = s"manifest-${java.util.UUID.randomUUID()}.parquet"
-                Files.move(p, table.metaDirPath.resolve(n))
-                n
-              }
-          } finally {
-            SeqTable.listDir(tmp).foreach(Files.deleteIfExists(_))
-            Files.deleteIfExists(tmp); ()
-          }
-        }
+        else writeManifestParts(table, manifestMetaDS(spark, table, touched.toSeq).toDF()
+          .join(removed, Seq("path"), "left_anti")
+          .coalesce(touched.size)) // survivors ⊆ touched: never more parts than inputs
       SeqTable.ManifestEdit(kept, rewritten, Set.empty)
     }
   }
@@ -733,8 +661,8 @@ object SeqIO {
     // collect the (to-be-deleted, driver-sized) survivors
     val deadFiles: Seq[String] =
       if (deadDataManifests.isEmpty) Nil
-      else manifestPathsDF(spark, table, deadDataManifests)
-        .join(manifestPathsDF(spark, table, liveManifests.toSeq), Seq("path"), "left_anti")
+      else scanManifests(spark, table, deadDataManifests)
+        .join(scanManifests(spark, table, liveManifests.toSeq), Seq("path"), "left_anti")
         .distinct().collect().map(_.getString(0)).toSeq
 
     deadFiles.foreach(p => Files.deleteIfExists(java.nio.file.Paths.get(table.root).resolve(p)))
@@ -821,7 +749,7 @@ object SeqIO {
           val own = s.manifests.filterNot(sharedManifests)
           if (own.isEmpty) Nil
           else manifestMetaDS(spark, table, own, narrow = true)
-            .join(manifestPathsDF(spark, table, other.manifests), Seq("path"), "left_anti")
+            .join(scanManifests(spark, table, other.manifests), Seq("path"), "left_anti")
             .as[FileMeta].collect().toSeq
         }
         (sideOnly(sTo, sFrom), sideOnly(sFrom, sTo))
@@ -863,7 +791,7 @@ object SeqIO {
         liveFrom.filter(f => pTo(f.path))
       }
       def carriedDS(): DataFrame = fileMetaDSOf(spark, table, sFrom, narrow = true).toDF()
-        .join(manifestPathsDF(spark, table, sTo.manifests), Seq("path"), "left_semi")
+        .join(scanManifests(spark, table, sTo.manifests), Seq("path"), "left_semi")
       // two-level file prune for the key family (the MergeInto discipline, same
       // DocBloom.PruneMaxKeys collect ceiling and probe budget): doc_id range, then per-file
       // Bloom. Empty delta-key sets (delete manifests present but zero keys) short-circuit:

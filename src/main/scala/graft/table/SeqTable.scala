@@ -1,6 +1,7 @@
 package graft.table
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, FileAlreadyExistsException}
+import scala.collection.parallel.CollectionConverters._
 import scala.jdk.CollectionConverters._
 import org.json4s._
 import org.json4s.jackson.Serialization
@@ -30,7 +31,7 @@ final case class FileMeta(
     docBloom: Option[String] = None
 )
 
-/** An immutable table version. `manifests` are metadata-relative paths of JSON-lines FileMeta
+/** An immutable table version. `manifests` are metadata-relative paths of parquet FileMeta
   * manifests. The version chain (`parent`) is the lineage the state/expiry machinery walks.
   */
 final case class Snapshot(
@@ -103,6 +104,41 @@ object SeqTable {
   def load(root: String): SeqTable = new SeqTable(root)
 }
 
+/** Parsed manifests by name, bounded by approximate BYTES (the docBloom payload dominates a
+  * FileMeta — an entry-count bound would let one mega-manifest pin gigabytes); on overflow the
+  * whole cache drops (correct — pure reads).
+  */
+private final class ManifestCache(maxBytes: Long) {
+  private val byName = new java.util.concurrent.ConcurrentHashMap[String, Seq[FileMeta]]()
+  private var bytes = 0L
+  val misses = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  private def approxBytes(metas: Seq[FileMeta]): Long =
+    metas.iterator.map(m => 200L + m.path.length + m.docBloom.map(_.length).getOrElse(0)).sum
+
+  def get(name: String): Option[Seq[FileMeta]] = Option(byName.get(name))
+
+  def getOrRead(name: String)(read: => Seq[FileMeta]): Seq[FileMeta] =
+    get(name).getOrElse { misses.incrementAndGet(); val metas = read; put(name, metas); metas }
+
+  // synchronized: the add/clear/set sequence is not atomic and racing commit threads would
+  // otherwise lose bytes from the counter (silently unbounding the cache) or double-count
+  def put(name: String, metas: Seq[FileMeta]): Unit = synchronized {
+    val b = approxBytes(metas)
+    bytes += b
+    if (bytes > maxBytes) { byName.clear(); bytes = b }
+    byName.put(name, metas); ()
+  }
+
+  // removal must hold the SAME lock as put: a bare remove+subtract interleaved between its
+  // clear() and reset double-subtracts, driving the counter negative and silently loosening
+  // the byte bound
+  def remove(name: String): Unit = synchronized {
+    val old = byName.remove(name)
+    if (old != null) bytes -= approxBytes(old)
+  }
+}
+
 /** Filesystem-backed snapshot table with optimistic-concurrency commits.
   *
   * Commit protocol (Iceberg-HadoopTableOperations style, public design): a snapshot file
@@ -117,50 +153,30 @@ final class SeqTable(val root: String) {
   private def metaDir: Path = Paths.get(root, "metadata")
   def dataDir: Path = Paths.get(root, "data")
 
-  /** Manifest carrier format for NEW manifests: `"jsonl"` (default; driver-parseable with no
-    * Spark job) or `"parquet"` (the 10^7-file distributed-planner path: the planner's manifest
-    * scan runs on executors with column pruning, so the ~13 KB/file docBloom payload is never
-    * read during planning — see [[DocBloom]]). Both formats stay readable forever; the format
-    * only governs what the next commit writes.
-    */
-  @volatile var manifestFormat: String = "jsonl"
+  /** Parquet is the only manifest encoding: kept so callers that still set it compile. */
+  @deprecated("parquet is the only manifest encoding", "0.1.0")
+  def manifestFormat: String = "parquet"
+  @deprecated("parquet is the only manifest encoding", "0.1.0")
+  def manifestFormat_=(format: String): Unit =
+    require(format == "parquet", s"manifestFormat '$format': parquet is the only manifest encoding")
 
   // Manifests are IMMUTABLE once written (UUID names, never rewritten in place), so their parsed
   // content is cached: a maintenance cycle calls liveFiles() 2–3× and commit() re-reads every
   // base manifest on rebase — at 10^7 files that re-parse was the driver bottleneck. The cache is
-  // populated on write too, so a cycle never re-reads its own output. Bounded by approximate
-  // BYTES (the docBloom payload dominates a FileMeta — an entry-count bound would let one
-  // mega-manifest pin gigabytes); on overflow the whole cache drops (correct — pure reads).
-  private val manifestCache = new java.util.concurrent.ConcurrentHashMap[String, Seq[FileMeta]]()
-  private val MaxCachedManifestBytes = 256L << 20
-  private val cachedBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+  // populated on write too, so a cycle never re-reads its own output.
+  private val fullCache = new ManifestCache(256L << 20)
   /** actual manifest-file parses (cache misses) — observability for specs and the planner bench */
-  private[graft] val manifestFileReads = new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] val manifestFileReads = fullCache.misses
 
-  private def approxBytes(metas: Seq[FileMeta]): Long =
-    metas.iterator.map(m => 200L + m.path.length + m.docBloom.map(_.length).getOrElse(0)).sum
-
-  // synchronized: the add/clear/set sequence is not atomic and racing commit threads would
-  // otherwise lose bytes from the counter (silently unbounding the cache) or double-count
-  private def cacheManifest(name: String, metas: Seq[FileMeta]): Unit = synchronized {
-    val b = approxBytes(metas)
-    if (cachedBytes.addAndGet(b) > MaxCachedManifestBytes) {
-      manifestCache.clear()
-      cachedBytes.set(b)
-    }
-    manifestCache.put(name, metas); ()
-  }
-
-  // removal must hold the SAME lock as cacheManifest: a bare remove+addAndGet interleaved
-  // between its clear() and set(b) double-subtracts, driving the counter negative and silently
-  // loosening the byte bound
-  private def uncacheManifest(name: String): Unit = {
-    synchronized {
-      val old = manifestCache.remove(name)
-      if (old != null) { cachedBytes.addAndGet(-approxBytes(old)); () }
-    }
-    uncacheNarrow(name)
-  }
+  // The docBloom payload dominates a FileMeta (~13 KB/file vs ~200 B of stats): at the
+  // 10^7-file design point a FULL manifest materialization is ~130 GB of driver heap, while the
+  // narrow projection is ~2 GB of paths+stats — and the plain read paths, the commit membership
+  // check and the pruned scan only ever need (path, stats, addedAt). Narrow entries carry
+  // docBloom = None, which every consumer treats as "unknown" (conservatively prunable-by-range
+  // only) — sound by [[FileMeta.docBloom]]'s own contract.
+  private val narrowCache = new ManifestCache(64L << 20)
+  /** narrow manifest-file parses (cache misses) — observability for the scale specs */
+  private[graft] val manifestNarrowFileReads = narrowCache.misses
 
   // ---------- snapshot access ----------
 
@@ -186,27 +202,8 @@ final class SeqTable(val root: String) {
 
   // ---------- manifests ----------
 
-  def readManifest(rel: String): Seq[FileMeta] = {
-    val cached = manifestCache.get(rel)
-    if (cached != null) cached
-    else {
-      manifestFileReads.incrementAndGet()
-      val metas =
-        if (rel.endsWith(".parquet")) {
-          // parquet manifests are written/read through Spark (always active in engine use);
-          // driver-side reads of one manifest are rare thanks to the cache — the hot consumer is
-          // the executor-side fileMetaDS scan
-          val spark = org.apache.spark.sql.SparkSession.active
-          import spark.implicits._
-          spark.read.schema(SeqSchema.fileMetaSchema)
-            .parquet(metaDir.resolve(rel).toString).as[FileMeta].collect().toSeq
-        } else
-          Files.readAllLines(metaDir.resolve(rel)).asScala.iterator
-            .filter(_.nonEmpty).map(parseLine(_, keepBloom = true)).toSeq
-      cacheManifest(rel, metas)
-      metas
-    }
-  }
+  def readManifest(rel: String): Seq[FileMeta] =
+    fullCache.getOrRead(rel)(ManifestCodec.read(metaDir.resolve(rel), narrow = false))
 
   /** Equality-delete manifest: one doc_id per line; the sequence number (commit version the
     * deletes belong to) is encoded in the filename — a delete applies to rows of data files with
@@ -225,167 +222,32 @@ final class SeqTable(val root: String) {
   def deleteManifestPath(name: String): String = metaDir.resolve(name).toString
 
   def writeManifest(metas: Seq[FileMeta]): String = {
-    val name =
-      if (manifestFormat == "parquet") {
-        val n = s"manifest-${java.util.UUID.randomUUID()}.parquet"
-        val spark = org.apache.spark.sql.SparkSession.active
-        import spark.implicits._
-        val tmp = Files.createTempDirectory(metaDir, ".tmp-manifest")
-        try {
-          spark.createDataset(metas).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = SeqTable.listDir(tmp)
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(sys.error("parquet manifest write produced no part file"))
-          Files.move(part, metaDir.resolve(n))
-        } finally {
-          SeqTable.listDir(tmp).foreach(Files.deleteIfExists)
-          Files.deleteIfExists(tmp); ()
-        }
-        n
-      } else {
-        val n = s"manifest-${java.util.UUID.randomUUID()}.jsonl"
-        // streaming Jackson emit — json4s' reflective Serialization.write was the driver-side
-        // serial term of every commit that rewrites manifests (the merge scaling leg's adjacent
-        // inefficiency): at 2k survivors × ~13 KB bloom payload it serialized ~26 MB through
-        // reflection, single-threaded, per commit
-        val w = Files.newBufferedWriter(metaDir.resolve(n))
-        try {
-          val g = jsonFactory.createGenerator(w)
-          g.setRootValueSeparator(new com.fasterxml.jackson.core.io.SerializedString("\n"))
-          metas.foreach { m =>
-            g.writeStartObject()
-            g.writeStringField("path", m.path)
-            g.writeNumberField("records", m.records)
-            g.writeNumberField("bytes", m.bytes)
-            g.writeNumberField("minNtok", m.minNtok)
-            g.writeNumberField("maxNtok", m.maxNtok)
-            g.writeStringField("minDocId", m.minDocId)
-            g.writeStringField("maxDocId", m.maxDocId)
-            g.writeArrayFieldStart("sources")
-            m.sources.foreach(g.writeString)
-            g.writeEndArray()
-            g.writeNumberField("addedAt", m.addedAt)
-            g.writeBooleanField("clustered", m.clustered)
-            m.docBloom.foreach(b => g.writeStringField("docBloom", b))
-            g.writeEndObject()
-          }
-          g.flush()
-          w.write('\n')
-        } finally w.close()
-        n
-      }
-    cacheManifest(name, metas)
+    val name = s"manifest-${java.util.UUID.randomUUID()}.parquet"
+    ManifestCodec.write(metaDir.resolve(name), metas)
+    fullCache.put(name, metas)
     name
   }
 
-  // ---------- narrow (bloom-free) manifest reads ----------
-
-  // The docBloom payload dominates a FileMeta (~13 KB/file vs ~200 B of stats): at the
-  // 10^7-file design point a FULL manifest materialization is ~130 GB of driver heap, while the
-  // narrow projection is ~2 GB of paths+stats — and the plain read paths, the commit membership
-  // check and the pruned scan only ever need (path, stats, addedAt). Narrow entries carry
-  // docBloom = None, which every consumer treats as "unknown" (conservatively prunable-by-range
-  // only) — sound by [[FileMeta.docBloom]]'s own contract.
-  private val narrowCache = new java.util.concurrent.ConcurrentHashMap[String, Seq[FileMeta]]()
-  private val MaxCachedNarrowBytes = 64L << 20
-  private val narrowBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-  /** narrow manifest-file parses (cache misses) — observability for the scale specs */
-  private[graft] val manifestNarrowFileReads = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def cacheNarrow(name: String, metas: Seq[FileMeta]): Unit = synchronized {
-    val b = approxBytes(metas)
-    if (narrowBytes.addAndGet(b) > MaxCachedNarrowBytes) {
-      narrowCache.clear()
-      narrowBytes.set(b)
-    }
-    narrowCache.put(name, metas); ()
-  }
-
-  private def uncacheNarrow(name: String): Unit = synchronized {
-    val old = narrowCache.remove(name)
-    if (old != null) { narrowBytes.addAndGet(-approxBytes(old)); () }
-  }
-
-  private val jsonFactory = new com.fasterxml.jackson.core.JsonFactory()
-
-  /** Streaming jsonl parse (shared by the narrow AND full driver reads — json4s' reflective
-    * read was ~10× slower per entry). keepBloom = false: the docBloom value is TOKENIZED but
-    * never decoded (Jackson's lazy string token — skipping it never allocates the ~13 KB
-    * base64 String), so the narrow read's retained AND transient heap is stats-sized.
+  /** [[readManifest]] without the docBloom payload (docBloom = None on every entry): the
+    * column is pruned off the read entirely. Separately cached and counted.
     */
-  private def parseLine(line: String, keepBloom: Boolean): FileMeta = {
-    import com.fasterxml.jackson.core.JsonToken
-    val p = jsonFactory.createParser(line)
-    var path = ""; var records = 0L; var bytes = 0L
-    var minNtok = 0; var maxNtok = 0; var minDocId = ""; var maxDocId = ""
-    var sources: Seq[String] = Nil; var addedAt = 0L; var clustered = false
-    var docBloom: Option[String] = None
-    try {
-      require(p.nextToken() == JsonToken.START_OBJECT, s"manifest line is not an object: $line")
-      while (p.nextToken() != JsonToken.END_OBJECT) {
-        val name = p.currentName()
-        p.nextToken()
-        name match {
-          case "path" => path = p.getText
-          case "records" => records = p.getLongValue
-          case "bytes" => bytes = p.getLongValue
-          case "minNtok" => minNtok = p.getIntValue
-          case "maxNtok" => maxNtok = p.getIntValue
-          case "minDocId" => minDocId = p.getText
-          case "maxDocId" => maxDocId = p.getText
-          case "addedAt" => addedAt = p.getLongValue
-          case "clustered" => clustered = p.getBooleanValue
-          case "sources" =>
-            val b = Seq.newBuilder[String]
-            while (p.nextToken() != JsonToken.END_ARRAY) b += p.getText
-            sources = b.result()
-          case "docBloom" if keepBloom =>
-            docBloom = if (p.currentToken() == JsonToken.VALUE_NULL) None else Option(p.getText)
-          case _ => p.skipChildren() // docBloom et al: token skipped, string never decoded
-        }
-      }
-    } finally p.close()
-    FileMeta(path, records, bytes, minNtok, maxNtok, minDocId, maxDocId, sources,
-      addedAt, clustered, docBloom)
-  }
+  def readManifestNarrow(rel: String): Seq[FileMeta] =
+    fullCache.get(rel).map(_.map(_.copy(docBloom = None))) // already in memory: just project
+      .getOrElse(narrowCache.getOrRead(rel)(
+        ManifestCodec.read(metaDir.resolve(rel), narrow = true)))
 
-  private def parseNarrowLine(line: String): FileMeta = parseLine(line, keepBloom = false)
+  def liveFiles(s: Snapshot): Seq[FileMeta] = readEach(s.manifests)(readManifest)
 
-  /** [[readManifest]] without the docBloom payload (docBloom = None on every entry). Parquet
-    * manifests column-prune it off the scan entirely; jsonl manifests skip the field inside the
-    * token stream ([[parseNarrowLine]]). Separately cached and counted.
-    */
-  def readManifestNarrow(rel: String): Seq[FileMeta] = {
-    val full = manifestCache.get(rel)
-    if (full != null) return full.map(_.copy(docBloom = None)) // already in memory: just project
-    val cached = narrowCache.get(rel)
-    if (cached != null) return cached
-    manifestNarrowFileReads.incrementAndGet()
-    val metas =
-      if (rel.endsWith(".parquet")) {
-        val spark = org.apache.spark.sql.SparkSession.active
-        import spark.implicits._
-        import org.apache.spark.sql.functions.lit
-        val sch = org.apache.spark.sql.types.StructType(
-          SeqSchema.fileMetaSchema.filterNot(_.name == "docBloom"))
-        spark.read.schema(sch).parquet(metaDir.resolve(rel).toString)
-          .withColumn("docBloom", lit(null).cast("string"))
-          .as[FileMeta].collect().toSeq
-      } else
-        Files.readAllLines(metaDir.resolve(rel)).asScala.iterator
-          .filter(_.nonEmpty).map(parseNarrowLine).toSeq
-    cacheNarrow(rel, metas)
-    metas
-  }
-
-  def liveFiles(s: Snapshot): Seq[FileMeta] = s.manifests.flatMap(readManifest)
+  // one parquet-mr read is single-threaded: a multi-manifest live set reads its manifests at once
+  private def readEach(ms: Seq[String])(read: String => Seq[FileMeta]): Seq[FileMeta] =
+    if (ms.size < 2) ms.flatMap(read) else ms.par.flatMap(read).seq
 
   def liveFiles(): Seq[FileMeta] = liveFiles(currentSnapshot())
 
   /** The live set WITHOUT bloom payloads — what every plain read path and the pruned scan
     * actually need (see [[readManifestNarrow]]).
     */
-  def liveFilesNarrow(s: Snapshot): Seq[FileMeta] = s.manifests.flatMap(readManifestNarrow)
+  def liveFilesNarrow(s: Snapshot): Seq[FileMeta] = readEach(s.manifests)(readManifestNarrow)
 
   def absolutePath(meta: FileMeta): String = Paths.get(root).resolve(meta.path).toString
 
@@ -1080,10 +942,7 @@ final class SeqTable(val root: String) {
       s.deleteManifests.foreach { d => if (!liveDeleteManifests.contains(d)) deadManifests += d }
     }
     deadFiles.foreach(p => Files.deleteIfExists(Paths.get(root).resolve(p)))
-    deadManifests.foreach { m =>
-      Files.deleteIfExists(metaDir.resolve(m))
-      uncacheManifest(m)
-    }
+    deadManifests.foreach(uncacheManifestFile)
     expired.foreach(v => Files.deleteIfExists(metaDir.resolve(s"v$v.json")))
     (expired, deadFiles.toSeq)
   }
@@ -1129,7 +988,7 @@ final class SeqTable(val root: String) {
       .filterNot(refManifests)
       .filter(n => now - Files.getLastModifiedTime(metaDir.resolve(n)).toMillis >= olderThanMs)
       .toSeq
-    deadManifests.foreach { n => Files.deleteIfExists(metaDir.resolve(n)); uncacheManifest(n) }
+    deadManifests.foreach(uncacheManifestFile)
     dead.map(_._1) ++ deadManifests.map(n => s"metadata/$n")
   }
 
@@ -1141,25 +1000,11 @@ final class SeqTable(val root: String) {
     * writeSnapshotFile would surface the race as FileAlreadyExistsException — or worse, clobber a
     * commit's file edits with a stale manifest union).
     */
-  def rewriteManifests(maxRetries: Int = 20): Snapshot = {
-    var attempt = 0
-    while (true) {
-      val base = currentSnapshot()
+  def rewriteManifests(maxRetries: Int = 20): Snapshot =
+    commitManifestRewrite("rewriteManifests", maxRetries) { base =>
       val entries = liveFiles(base).sortBy(f => (f.sources.headOption.getOrElse(""), f.minNtok, f.path))
-      val m = writeManifest(entries)
-      tryCommitManifestRewrite(base, Seq(m), entries.size) match {
-        case Some(next) => return next
-        case None =>
-          Files.deleteIfExists(metaDir.resolve(m))
-          uncacheManifest(m)
-          attempt += 1
-          if (attempt > maxRetries)
-            throw new CommitConflictException(
-              s"rewriteManifests: lost the version race $maxRetries times")
-      }
+      (Seq(writeManifest(entries)), entries.size.toLong)
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** ROLLBACK: make the table's content as-of snapshot `version` the new HEAD, as a NEW commit
     * (Iceberg's rollback model, public design) — history is preserved, the undone snapshots stay
@@ -1201,32 +1046,45 @@ final class SeqTable(val root: String) {
     throw new IllegalStateException("unreachable")
   }
 
-  /** One CAS attempt of a manifest-rewrite commit on top of `base`: the new snapshot references
-    * exactly `manifests` (pre-written by the caller — driver-side [[rewriteManifests]] or the
-    * distributed [[graft.table.SeqIO.rewriteManifestsDistributed]]) and — like every commit —
-    * CARRIES FORWARD `base.deleteManifests` and `base.properties` (the table-properties contract
-    * at [[Snapshot.properties]]: dropping them here silently erased streaming-ingest high-water
-    * marks, breaking exactly-once after manifest rewrite + snapshot expiry). Returns None when
-    * the version race is lost; the caller deletes its orphaned manifests and retries from the
-    * new head.
+  /** The CAS loop of a manifest-rewrite commit: `write` writes the replacement manifests for a
+    * base (driver-side [[rewriteManifests]] or the distributed
+    * [[graft.table.SeqIO.rewriteManifestsDistributed]]) and returns them with the live-file
+    * count. The new snapshot references exactly those and — like every commit — CARRIES FORWARD
+    * `base.deleteManifests` and `base.properties` (the table-properties contract at
+    * [[Snapshot.properties]]: dropping them here silently erased streaming-ingest high-water
+    * marks, breaking exactly-once after manifest rewrite + snapshot expiry). A lost version race
+    * deletes the orphaned manifests and rebuilds from the new head.
     */
-  private[table] def tryCommitManifestRewrite(
-      base: Snapshot, manifests: Seq[String], totalFiles: Long): Option[Snapshot] = {
-    val next = Snapshot(base.version + 1, base.version, "rewrite-manifests", manifests,
-      Map("manifests-before" -> base.manifests.size.toString,
-        "manifests-after" -> manifests.size.toString,
-        "total-files" -> totalFiles.toString),
-      System.currentTimeMillis(), base.deleteManifests, base.properties)
-    try {
-      writeSnapshotFile(next)
-      writeVersionHint(next.version)
-      Some(next)
-    } catch { case _: FileAlreadyExistsException => None }
+  private[table] def commitManifestRewrite(op: String, maxRetries: Int)(
+      write: Snapshot => (Seq[String], Long)): Snapshot = {
+    var attempt = 0
+    while (true) {
+      val base = currentSnapshot()
+      val (manifests, totalFiles) = write(base)
+      val next = Snapshot(base.version + 1, base.version, "rewrite-manifests", manifests,
+        Map("manifests-before" -> base.manifests.size.toString,
+          "manifests-after" -> manifests.size.toString,
+          "total-files" -> totalFiles.toString),
+        System.currentTimeMillis(), base.deleteManifests, base.properties)
+      try {
+        writeSnapshotFile(next)
+        writeVersionHint(next.version)
+        return next
+      } catch {
+        case _: FileAlreadyExistsException =>
+          manifests.foreach(uncacheManifestFile)
+          attempt += 1
+          if (attempt > maxRetries)
+            throw new CommitConflictException(s"$op: lost the version race $maxRetries times")
+      }
+    }
+    throw new IllegalStateException("unreachable")
   }
 
+  /** Deletes a manifest file and drops it from both caches. */
   private[table] def uncacheManifestFile(name: String): Unit = {
     Files.deleteIfExists(metaDir.resolve(name))
-    uncacheManifest(name)
+    fullCache.remove(name); narrowCache.remove(name)
   }
 
   private[table] def metaDirPath: Path = metaDir

@@ -1,6 +1,7 @@
 package graft.ops
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
@@ -86,5 +87,25 @@ class MergeIntoSpec extends AnyFunSuite {
     val conflicted = results.toArray(Array.empty[MergeResult]).map(_.attempts).max
     assert(conflicted >= 1)
     c1.unpersist(); c2.unpersist()
+  }
+
+  test("a failed upsert write cancels the survivor write: error raised, no commit, no new file") {
+    val (table, _) = SeqGen.fragmentedTable(spark, fresh(), 2000, 10)
+    def dataFiles(): Set[String] = {
+      val s = Files.list(table.dataDir)
+      try s.iterator().asScala.map(_.getFileName.toString).filterNot(_.startsWith(".")).toSet
+      finally s.close()
+    }
+    val (version, files) = (table.currentVersion(), dataFiles())
+    // null n_tok fails only the upsert side (its byte-balanced curve partitioning), after the
+    // change set is materialized, while the survivor rewrite of the affected files runs
+    val changes = SeqGen.changeSet(spark, 2000, changes = 200, deletes = 20)
+      .withColumn("n_tok", when(col("_op") =!= "D", lit(null).cast("int")).otherwise(col("n_tok")))
+    val e = intercept[RuntimeException](
+      MergeInto.merge(spark, table, changes, cfg, 1000))
+    assert(e.getStackTrace.exists(_.getMethodName == "byteBalanced"),
+      s"the merge must raise the upsert side's error, got: $e")
+    assert(table.currentVersion() === version, "a failed merge must not commit")
+    assert(dataFiles() === files, "the failed merge left data files behind")
   }
 }

