@@ -229,13 +229,7 @@ object MaintenancePlanner {
         // delete-laden files are useful to rewrite regardless of layout win: the rewrite applies
         // their pending MoR deletes (terminating — rewritten files outlive every delete sequence,
         // so their pressure is 0 next cycle)
-        // the writer balances BYTES and may write more files than `outFiles`: all the files one
-        // commit's clustered write added are already its partition of those rows, so rewriting
-        // them reproduces them — a file-count win that never comes, approved every cycle
-        val writersOwn = fs.forall(_.clustered) && fs.map(_.addedAt).distinct.size == 1 &&
-          table.flatMap(t => scala.util.Try(t.snapshot(fs.head.addedAt)).toOption)
-            .exists(_.summary.get("added-files").contains(fs.size.toString))
-        val useful = (outFiles < fs.size && !writersOwn) ||
+        val useful = outFiles < fs.size ||
           (fs.exists(f => !f.clustered && cellsOf(f, cfg).size > 1) && total >= 2 * targetRecords) ||
           fs.exists(f => pressure(f) > 0)
         Option.when(useful)(PlannedTask(i, r, fs.map(_.path), r.score))

@@ -294,15 +294,16 @@ object MergeInto {
             import scala.concurrent.{Await, Future}
             import scala.concurrent.duration.Duration
             implicit val ec = MergeInto.writePool
-            // both sides' jobs carry one tag, so a failed side can cancel its peer's jobs
-            val tag = s"graft-merge-${java.util.UUID.randomUUID()}"
-            def tagged[T](body: => T): Future[T] = Future {
-              spark.sparkContext.addJobTag(tag)
-              try body finally spark.sparkContext.removeJobTag(tag)
+            // both sides' jobs run in one job group, so a failed side can cancel its peer's
+            // running jobs and every job it submits later (a side runs several in sequence)
+            val group = s"graft-merge-${java.util.UUID.randomUUID()}"
+            def grouped[T](body: => T): Future[T] = Future {
+              spark.sparkContext.setJobGroup(group, "graft merge write")
+              try body finally spark.sparkContext.clearJobGroup()
             }
             val survivorsF: Future[Seq[FileMeta]] =
               if (affected.isEmpty) Future.successful(Nil)
-              else tagged {
+              else grouped {
                 val target = SeqIO.readWithDeletes(spark, table, snapDeletes, affected)
                 val keySide = if (broadcastChanges) broadcast(keys) else keys
                 val survivors = target
@@ -310,7 +311,7 @@ object MergeInto {
                 timed("survivor-rewrite")(SeqIO.writeFiles(spark, table, survivors,
                   clustered = affected.forall(_.clustered)))
               }
-            val upsertsF: Future[Seq[FileMeta]] = tagged {
+            val upsertsF: Future[Seq[FileMeta]] = grouped {
               timed("upsert-write")(Rewrite.clusteredWrite(
                 spark, table, upsertRows, cfg, targetRecordsPerFile, nKeys))
             }
@@ -322,7 +323,7 @@ object MergeInto {
                 // peer stuck outside a Spark job must not hang the merge) and reclaim any files
                 // it already landed — the commit-conflict cleanup below never sees them
                 // otherwise. A peer still running at the deadline leaves removeOrphans candidates.
-                spark.sparkContext.cancelJobsWithTag(tag)
+                spark.sparkContext.cancelJobGroupAndFutureJobs(group)
                 Seq(survivorsF, upsertsF).foreach { f =>
                   try Await.result(f, Duration(2, "min")).foreach(m => java.nio.file.Files
                     .deleteIfExists(java.nio.file.Paths.get(table.absolutePath(m))))

@@ -94,25 +94,32 @@ object Rewrite {
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     if (hist.isEmpty) return keyed.repartition(1)
     val totalW = hist.map(_._2).sum
-    val perPart = math.max(1L, totalW / nParts)
 
-    val keyBase = scala.collection.mutable.Map.empty[Long, Int] // curve key → first partition id
-    val keySplits = scala.collection.mutable.Map.empty[Long, Int] // curve key → #sub-partitions
-    var pid = 0
-    var acc = 0L
-    hist.foreach { case (k, w) =>
-      if (w > perPart * 3 / 2) { // hot key: dedicated partitions, doc_id-salted
-        if (acc > 0) { pid += 1; acc = 0L }
-        val splits = ((w + perPart - 1) / perPart).toInt
-        keyBase(k) = pid; keySplits(k) = splits
-        pid += splits
-      } else {
-        keyBase(k) = pid; keySplits(k) = 1
-        acc += w
-        if (acc >= perPart) { pid += 1; acc = 0L }
+    // greedy pack → (curve key → (first partition id, #sub-partitions), #partitions)
+    def pack(perPart: Long): (Map[Long, (Int, Int)], Int) = {
+      val placed = Map.newBuilder[Long, (Int, Int)]
+      var pid = 0
+      var acc = 0L
+      hist.foreach { case (k, w) =>
+        if (w > perPart * 3 / 2) { // hot key: dedicated partitions, doc_id-salted
+          if (acc > 0) { pid += 1; acc = 0L }
+          val splits = ((w + perPart - 1) / perPart).toInt
+          placed += k -> (pid, splits)
+          pid += splits
+        } else {
+          placed += k -> (pid, 1)
+          acc += w
+          if (acc >= perPart) { pid += 1; acc = 0L }
+        }
       }
+      (placed.result(), if (acc > 0) pid + 1 else math.max(1, pid))
     }
-    val nOut = if (acc > 0) pid + 1 else math.max(1, pid)
+    // one file per partition, and callers promise ceil(rows / target) files — the maintenance
+    // gate's file-count win counts on it, else a drain rewrites the same files forever. Packing
+    // at totalW / nParts can open more (a part-filled partition closes before each hot key, and
+    // splits round up), so widen the partitions until it fits (one partition at perPart ≥ totalW)
+    val (placed, nOut) = Iterator.iterate(math.max(1L, totalW / nParts))(p => p + p / 32 + 1)
+      .map(pack).find(_._2 <= nParts).get
 
     // perfect-hash slots: slot(i) is an int whose Murmur3(seed 42) mod nOut == i, so
     // repartition(nOut, slotCol) places partition i's rows exactly in task i
@@ -128,9 +135,9 @@ object Rewrite {
 
     val ks = hist.map(_._1)
     val baseMap = map_from_arrays(
-      array(ks.map(k => lit(k)): _*), array(ks.map(k => lit(keyBase(k))): _*))
+      array(ks.map(k => lit(k)): _*), array(ks.map(k => lit(placed(k)._1)): _*))
     val splitMap = map_from_arrays(
-      array(ks.map(k => lit(k)): _*), array(ks.map(k => lit(keySplits(k))): _*))
+      array(ks.map(k => lit(k)): _*), array(ks.map(k => lit(placed(k)._2)): _*))
     val pidCol = element_at(baseMap, col("_ck")) +
       when(element_at(splitMap, col("_ck")) > 1,
         pmod(xxhash64(col("doc_id")), element_at(splitMap, col("_ck")).cast("long")).cast("int"))

@@ -9,7 +9,8 @@ import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY
 import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.io.api._
-import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 
 /** The one [[FileMeta]] manifest encoding: parquet, read and written on the driver with
   * parquet-mr (no Spark job, no SparkSession). The schema is the one Spark writes for a
@@ -19,14 +20,9 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
   * decoded — the columnar skip a row encoding cannot make.
   */
 private[table] object ManifestCodec {
-  private val Schema: MessageType = MessageTypeParser.parseMessageType(
-    """message spark_schema {
-      |  optional binary path (STRING); required int64 records; required int64 bytes;
-      |  required int32 minNtok; required int32 maxNtok;
-      |  optional binary minDocId (STRING); optional binary maxDocId (STRING);
-      |  optional group sources (LIST) { repeated group list { optional binary element (STRING); } }
-      |  required int64 addedAt; required boolean clustered; optional binary docBloom (STRING);
-      |}""".stripMargin)
+  // the MessageType Spark itself writes for a Dataset[FileMeta]: one derivation, no drift
+  private val Schema: MessageType =
+    new SparkToParquetSchemaConverter().convert(SeqSchema.fileMetaSchema)
 
   /** Older builds also wrote JSON-lines manifests. No decoder is kept: naming one fails loudly. */
   def requireParquet(name: String): Unit = require(name.endsWith(".parquet"),
@@ -117,31 +113,35 @@ private[table] object ManifestCodec {
     override def init(c: ParquetConfiguration): WriteSupport.WriteContext = context
     def prepareForWrite(r: RecordConsumer): Unit = rc = r
 
-    private def field(i: Int, name: String)(body: => Unit): Unit = {
+    private def field(name: String, i: Int)(body: => Unit): Unit = {
       rc.startField(name, i); body; rc.endField(name, i)
     }
-    private def str(i: Int, name: String, s: String): Unit =
-      if (s != null) field(i, name)(rc.addBinary(Binary.fromString(s)))
+    // top-level fields are placed by the derived schema; only the LIST nesting is spelled out
+    private def top(name: String)(body: => Unit): Unit = field(name, Schema.getFieldIndex(name))(body)
+    private def str(name: String, s: String): Unit =
+      if (s != null) top(name)(rc.addBinary(Binary.fromString(s)))
 
     def write(m: FileMeta): Unit = {
       rc.startMessage()
-      str(0, "path", m.path)
-      field(1, "records")(rc.addLong(m.records))
-      field(2, "bytes")(rc.addLong(m.bytes))
-      field(3, "minNtok")(rc.addInteger(m.minNtok))
-      field(4, "maxNtok")(rc.addInteger(m.maxNtok))
-      str(5, "minDocId", m.minDocId)
-      str(6, "maxDocId", m.maxDocId)
-      field(7, "sources") {
+      str("path", m.path)
+      top("records")(rc.addLong(m.records))
+      top("bytes")(rc.addLong(m.bytes))
+      top("minNtok")(rc.addInteger(m.minNtok))
+      top("maxNtok")(rc.addInteger(m.maxNtok))
+      str("minDocId", m.minDocId)
+      str("maxDocId", m.maxDocId)
+      top("sources") {
         rc.startGroup()
-        if (m.sources.nonEmpty) field(0, "list")(m.sources.foreach { s =>
-          rc.startGroup(); str(0, "element", s); rc.endGroup()
+        if (m.sources.nonEmpty) field("list", 0)(m.sources.foreach { s =>
+          rc.startGroup()
+          if (s != null) field("element", 0)(rc.addBinary(Binary.fromString(s)))
+          rc.endGroup()
         })
         rc.endGroup()
       }
-      field(8, "addedAt")(rc.addLong(m.addedAt))
-      field(9, "clustered")(rc.addBoolean(m.clustered))
-      m.docBloom.foreach(str(10, "docBloom", _))
+      top("addedAt")(rc.addLong(m.addedAt))
+      top("clustered")(rc.addBoolean(m.clustered))
+      m.docBloom.foreach(str("docBloom", _))
       rc.endMessage()
     }
   }

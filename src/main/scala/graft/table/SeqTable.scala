@@ -1,7 +1,6 @@
 package graft.table
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, FileAlreadyExistsException}
-import scala.collection.parallel.CollectionConverters._
 import scala.jdk.CollectionConverters._
 import org.json4s._
 import org.json4s.jackson.Serialization
@@ -236,18 +235,14 @@ final class SeqTable(val root: String) {
       .getOrElse(narrowCache.getOrRead(rel)(
         ManifestCodec.read(metaDir.resolve(rel), narrow = true)))
 
-  def liveFiles(s: Snapshot): Seq[FileMeta] = readEach(s.manifests)(readManifest)
-
-  // one parquet-mr read is single-threaded: a multi-manifest live set reads its manifests at once
-  private def readEach(ms: Seq[String])(read: String => Seq[FileMeta]): Seq[FileMeta] =
-    if (ms.size < 2) ms.flatMap(read) else ms.par.flatMap(read).seq
+  def liveFiles(s: Snapshot): Seq[FileMeta] = s.manifests.flatMap(readManifest)
 
   def liveFiles(): Seq[FileMeta] = liveFiles(currentSnapshot())
 
   /** The live set WITHOUT bloom payloads — what every plain read path and the pruned scan
     * actually need (see [[readManifestNarrow]]).
     */
-  def liveFilesNarrow(s: Snapshot): Seq[FileMeta] = readEach(s.manifests)(readManifestNarrow)
+  def liveFilesNarrow(s: Snapshot): Seq[FileMeta] = s.manifests.flatMap(readManifestNarrow)
 
   def absolutePath(meta: FileMeta): String = Paths.get(root).resolve(meta.path).toString
 
