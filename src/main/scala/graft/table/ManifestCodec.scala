@@ -117,7 +117,8 @@ private[table] object ManifestCodec {
       rc.startField(name, i); body; rc.endField(name, i)
     }
     // top-level fields are placed by the derived schema; only the LIST nesting is spelled out
-    private def top(name: String)(body: => Unit): Unit = field(name, Schema.getFieldIndex(name))(body)
+    private def top(name: String)(body: => Unit): Unit =
+      field(name, Schema.getFieldIndex(name))(body)
     private def str(name: String, s: String): Unit =
       if (s != null) top(name)(rc.addBinary(Binary.fromString(s)))
 

@@ -150,8 +150,8 @@ class IncrementalCycleSpec extends AnyFunSuite {
       val target = rows / 40
       val base = staged("base", renamed(SeqGen.table(spark, rows, nSources, 4))
         .withColumn("doc_id", permuted(substring(col("doc_id"), 5, 10).cast("long"))))
-      val (cow, mor) =
-        (staged("cow", changeSet(1)), staged("mor", changeSet(2).withColumn("source", lit(names(1)))))
+      val cow = staged("cow", changeSet(1))
+      val mor = staged("mor", changeSet(2).withColumn("source", lit(names(1))))
       // also with the manifest rewrite and an expiry that drops the snapshot which wrote the
       // files a task claims, so no termination argument may lean on snapshot history
       val plain = MaintenanceOptions(k = 64, targetRecordsPerFile = target)
