@@ -279,11 +279,11 @@ object MergeInto {
         //       the curve-clustered write, landing where its new (source, n_tok) says it belongs.
         // The two writes are INDEPENDENT (both derive from the pinned snapshot + the already-
         // materialized ch cache), so they run as concurrent driver-thread jobs (guide §2.6:
-        // back-fill the cluster through each other's stragglers/stat-pass tails) — the merge leg
-        // of the executor-count scaling harness measured a ~7 s/merge serial term that was mostly
+        // back-fill the cluster through each other's straggler tails) — the merge leg of the
+        // executor-count scaling harness measured a ~7 s/merge serial term that was mostly
         // these two job chains queuing end to end. The openCost pin is set around BOTH (session
         // conf): it only affects file-scan packing, and the upsert side reads the ch CACHE, so
-        // its sole file scan (the post-write stats pass) merely packs into fewer tasks.
+        // it scans no file at all.
         val conf = spark.conf
         val prevOpenCost = conf.get("spark.sql.files.openCostInBytes", "4194304")
         if (affected.nonEmpty)

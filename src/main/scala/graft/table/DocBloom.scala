@@ -1,10 +1,8 @@
 package graft.table
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.ByteArrayInputStream
 import java.util.Base64
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Per-data-file doc_id Bloom filter, embedded in the manifest entry ([[FileMeta.docBloom]]).
@@ -17,9 +15,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * sparse change/delete set (the GDPR-delete / point-upsert shape) touches only the files that
   * actually contain its keys, plus the false-positive tail.
   *
-  * Sizing: fixed parameters (mergeable across partitions) for ~1% fpp at 8k keys (~10 KB, ~13 KB
-  * base64 in the manifest). For much larger files the filter saturates and prunes nothing —
-  * but under uniform key density such files genuinely contain changed keys, so nothing is lost;
+  * Built per file inside the write task ([[FileStatsTracker]]).
+  *
+  * Sizing: fixed parameters for ~1% fpp at 8k keys (~10 KB, ~13 KB base64 in the manifest).
+  * For much larger files the filter saturates and prunes nothing — but under uniform key
+  * density such files genuinely contain changed keys, so nothing is lost;
   * the test is only ever an over-approximation (Bloom has no false negatives), so correctness
   * never depends on it. Manifests are parquet, so a narrow read (driver or executor) never
   * decodes the bloom column at all.
@@ -31,24 +31,6 @@ object DocBloom {
     * candidate bloom stops paying for itself (and such dense change sets route to MoR anyway).
     */
   val PruneMaxKeys: Long = 1L << 16
-
-  private val agg: Aggregator[String, BloomFilter, Array[Byte]] =
-    new Aggregator[String, BloomFilter, Array[Byte]] {
-      def zero: BloomFilter = BloomFilter.create(ExpectedItems, Fpp)
-      def reduce(b: BloomFilter, key: String): BloomFilter = { b.putString(key); b }
-      def merge(a: BloomFilter, b: BloomFilter): BloomFilter = { a.mergeInPlace(b); a }
-      def finish(b: BloomFilter): Array[Byte] = {
-        val out = new ByteArrayOutputStream()
-        b.writeTo(out)
-        out.toByteArray
-      }
-      def bufferEncoder: Encoder[BloomFilter] = Encoders.javaSerialization[BloomFilter]
-      def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    }
-
-  /** Untyped aggregate function: `groupBy(file).agg(DocBloom.udaf(col("doc_id")))` → bytes. */
-  val udaf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udaf(agg)
 
   def encode(bytes: Array[Byte]): String = Base64.getEncoder.encodeToString(bytes)
 

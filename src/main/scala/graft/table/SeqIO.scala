@@ -2,7 +2,7 @@ package graft.table
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Timing.timed
@@ -76,10 +76,10 @@ object SeqSchema {
 
 /** Spark-side write/read for [[SeqTable]].
   *
-  * The writer computes per-file min/max stats with ONE distributed pass over the just-written files
-  * (`groupBy(input_file_name())`) — the Iceberg-manifest analog of the reference's bounding-box
-  * pre-pass (`/root/reference/src/main/scala/SDL/main/Run.scala:96-99`, which spends 4 full scans;
-  * ours is a single partial-aggregated job).
+  * The writer collects each file's manifest stats (records, min/max, sources, doc_id Bloom) inside
+  * the write tasks, as the rows stream to the parquet writer ([[FileStatsTracker]]) — one Spark
+  * job per write, no second scan of the files it just wrote (Delta's `DeltaJobStatisticsTracker`
+  * and Iceberg's `SparkWrite` commit messages work the same way).
   */
 object SeqIO {
 
@@ -107,66 +107,50 @@ object SeqIO {
       if (cs.isEmpty) df else graft.ops.Constraints.enforced(df, cs)
     }
     // the table's CURRENT schema decides the physical column set: evolved columns ride along
-    // through every rewrite; the stats pass below reads only the core narrow columns regardless.
+    // through every rewrite, so the stats tracker finds the core columns by their ordinals here.
     // Logical→PHYSICAL name mapping happens here, the single write boundary: a re-added column
     // lands under its generation-unique physical name (see [[SeqSchema.PhysicalNameKey]])
-    // zstd, explicitly (guide §6): smaller than snappy at similar read speed — and on this
-    // engine's token-array payloads the snappy writer path measured 2-4× SLOWER than zstd for
-    // the same bytes (writebench: snappy-dict ≥3.5 s vs zstd-dict ~1.6-2.2 s per 200k-row
-    // write, dictionary-encoded size identical). Every maintenance row funnels through this
-    // write, so the codec is pinned here rather than left to the session default.
-    timed("writeFiles/write")(checked.select(table.currentSchema().fields.toSeq.map(f =>
-        col(f.name).as(SeqSchema.physicalName(f))): _*)
-      .write.mode("overwrite").option("compression", "zstd").parquet(tmp.toString))
-
-    val parts = SeqTable.listDir(tmp)
-      .filter(p => p.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
-    val moved: Seq[Path] = parts.zipWithIndex.map { case (p, i) =>
-      val dst = table.dataDir.resolve(f"$batch-$i%05d.parquet")
-      Files.move(p, dst)
-      dst
-    }
-    // clean tmp dir remnants (_SUCCESS etc.)
-    SeqTable.listDir(tmp).foreach(Files.deleteIfExists(_))
-    Files.deleteIfExists(tmp)
-    if (moved.isEmpty) return Nil
-
-    // stats need only the 3 narrow columns — prunes the tokens payload (~95% of bytes) off the scan
-    val statSchema = StructType(SeqSchema.schema.filterNot(_.name == "tokens"))
-    // a failed (or cancelled) stats job leaves no moved file behind: nothing returns their stats
-    val stats = try timed("writeFiles/stats")(spark.read.schema(statSchema)
-      .parquet(moved.map(_.toString): _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(
-        count(lit(1)).as("records"),
-        min("n_tok").as("min_ntok"), max("n_tok").as("max_ntok"),
-        min("doc_id").as("min_doc"), max("doc_id").as("max_doc"),
-        slice(sort_array(collect_set("source")), 1, MaxSourcesTracked + 1).as("sources"),
-        DocBloom.udaf(col("doc_id")).as("doc_bloom"))
-      .collect())
-    catch { case e: Throwable => moved.foreach(Files.deleteIfExists(_)); throw e }
-
-    require(stats.forall(_.getString(0).nonEmpty),
-      "input_file_name() evaluated empty during stats collection — plan rearranged off the scan")
+    val fields = table.currentSchema().fields.toSeq
+    val tracker = new FileStatsTracker(fields.indexWhere(_.name == "doc_id"),
+      fields.indexWhere(_.name == "n_tok"), fields.indexWhere(_.name == "source"))
     val rootP = Paths.get(table.root).toAbsolutePath.normalize
-    // drop physically-empty part files (no stats row → no manifest entry → would be orphans)
-    val statPaths = stats.map(r => Paths.get(java.net.URI.create(r.getString(0)).getPath).toAbsolutePath.normalize).toSet
-    moved.filterNot(p => statPaths.contains(p.toAbsolutePath.normalize)).foreach(Files.deleteIfExists(_))
-    stats.toSeq.map { r =>
-      val uri = r.getString(0)
-      val abs = Paths.get(java.net.URI.create(uri).getPath).toAbsolutePath.normalize
-      val rel = rootP.relativize(abs).toString
-      val srcs = r.getSeq[String](6)
-      FileMeta(
-        path = rel,
-        records = r.getLong(1),
-        bytes = Files.size(abs),
-        minNtok = r.getInt(2), maxNtok = r.getInt(3),
-        minDocId = r.getString(4), maxDocId = r.getString(5),
-        sources = if (srcs.size > MaxSourcesTracked) Nil else srcs, // Nil = unknown/overflow
-        addedAt = -1L,
-        clustered = clustered,
-        docBloom = Option(r.getAs[Array[Byte]](7)).map(DocBloom.encode))
+    var moved = List.empty[Path]
+    // a failed write (or move) leaves nothing behind: no tmp directory, no moved file
+    try {
+      // zstd, explicitly (guide §6): smaller than snappy at similar read speed — and on this
+      // engine's token-array payloads the snappy writer path measured 2-4× SLOWER than zstd for
+      // the same bytes (writebench: snappy-dict ≥3.5 s vs zstd-dict ~1.6-2.2 s per 200k-row
+      // write, dictionary-encoded size identical). Every maintenance row funnels through this
+      // write, so the codec is pinned here rather than left to the session default.
+      timed("writeFiles/write")(GraftSqlBridge.writeParquet(
+        checked.select(fields.map(f => col(f.name).as(SeqSchema.physicalName(f))): _*),
+        tmp.toString, Map("compression" -> "zstd"), Seq(tracker)))
+      val written = SeqTable.listDir(tmp)
+        .filter(p => p.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
+        .map(p => p -> tracker.files(p.getFileName.toString))
+      // physically-empty part files (an all-empty input still writes one) get no manifest entry
+      written.filter(_._2.records == 0).foreach(w => Files.delete(w._1))
+      written.filter(_._2.records > 0).zipWithIndex.map { case ((p, s), i) =>
+        val dst = table.dataDir.resolve(f"$batch-$i%05d.parquet")
+        Files.move(p, dst)
+        moved ::= dst
+        require(s.minNtok <= s.maxNtok, s"data file $dst has no non-null n_tok")
+        FileMeta(
+          path = rootP.relativize(dst.toAbsolutePath.normalize).toString,
+          records = s.records,
+          bytes = Files.size(dst),
+          minNtok = s.minNtok, maxNtok = s.maxNtok,
+          minDocId = s.minDocId, maxDocId = s.maxDocId,
+          sources = if (s.sources.size > MaxSourcesTracked) Nil else s.sources, // Nil = unknown
+          addedAt = -1L,
+          clustered = clustered,
+          docBloom = Some(DocBloom.encode(s.docBloom)))
+      }
+    } catch { case e: Throwable => moved.foreach(Files.deleteIfExists(_)); throw e }
+    finally if (Files.exists(tmp)) { // _SUCCESS, checksums, an aborted job's remnants
+      val walk = Files.walk(tmp)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      finally walk.close()
     }
   }
 

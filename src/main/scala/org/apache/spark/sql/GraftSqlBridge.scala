@@ -40,6 +40,30 @@ object GraftSqlBridge {
     }
   }
 
+  /** Write `df` as parquet files under `path` in ONE Spark job, with `trackers` seeing every row
+    * the tasks hand the writer. This is what `df.write.options(options).parquet(path)` runs
+    * underneath — `FileFormatWriter.write` inside a new SQL execution, with the session's file
+    * commit protocol — minus the write command around it, so the caller's stats trackers ride
+    * along. `sessionState` is `private[sql]`.
+    */
+  def writeParquet(df: Dataset[Row], path: String, options: Map[String, String],
+      trackers: Seq[execution.datasources.WriteJobStatsTracker]): Unit = {
+    import execution.datasources.FileFormatWriter
+    val c = df.asInstanceOf[classic.Dataset[Row]]
+    val session = c.sparkSession
+    val qe = c.queryExecution
+    val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+      session.sessionState.conf.fileCommitProtocolClass,
+      jobId = java.util.UUID.randomUUID().toString, outputPath = path)
+    execution.SQLExecution.withNewExecutionId(qe, Some("parquet")) {
+      val plan = qe.executedPlan
+      FileFormatWriter.write(session, plan,
+        new execution.datasources.parquet.ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
+        session.sessionState.newHadoopConfWithOptions(options), Nil, None, trackers, options)
+    }
+  }
+
   /** One recognized comparison conjunct of a predicate: `attr <op> literal`, attribute-first
     * (literal-first inputs arrive flipped). `op` ∈ {=, >, >=, <, <=}.
     */

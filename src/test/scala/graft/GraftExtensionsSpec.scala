@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.functions.ZOrder
 
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends AnyFunSuite with TempDirs {
 
   test("zorder_key / hilbert_key are callable from SQL via SparkSessionExtensions") {
     // an isolated session so the extension injection is actually exercised (getOrCreate would
@@ -79,7 +79,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       {
         import graft.table.{SeqIO, SeqTable}
         import graft.fixtures.SeqGen
-        val root = java.nio.file.Files.createTempDirectory("ext-tvf-").toString + "/t"
+        val root = tempDir("ext-tvf-").toString + "/t"
         val t = SeqTable.create(root)
         t.commit("append", SeqIO.writeFiles(spark, t, SeqGen.table(spark, 120, parts = 2)), Set.empty)
         val v1 = t.currentVersion()

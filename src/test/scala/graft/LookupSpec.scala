@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.fixtures.SeqGen
@@ -8,13 +7,13 @@ import graft.planner.GridConfig
 import graft.table.SeqIO
 
 /** Point-lookup fast path: range+Bloom candidate pruning, delete-awareness, guards. */
-class LookupSpec extends AnyFunSuite {
+class LookupSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   test("lookupKeys returns exactly the requested live rows; misses prune to ~zero files") {
     import spark.implicits._
-    val root = Files.createTempDirectory("lookup-").toString + "/t"
+    val root = tempDir("lookup-").toString + "/t"
     val (table, _) = SeqGen.fragmentedTable(spark, root, 3000, 30)
     val keys = SeqIO.read(spark, table).select("doc_id").as[String]
       .collect().sorted.grouped(300).map(_.head).toSeq // 10 scattered keys

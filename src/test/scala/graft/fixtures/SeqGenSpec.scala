@@ -1,9 +1,9 @@
 package graft.fixtures
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.table.SeqIO
 
 /** The shuffle-free fragmented fixture rests on `slot -> (a*slot + b) mod n` being a bijection
@@ -13,12 +13,12 @@ import graft.table.SeqIO
   * tiny n, powers of two (even n kills naive odd-stepping), primes, and a Fibonacci number
   * (golden-ratio multiplier near-degenerate case).
   */
-class SeqGenSpec extends AnyFunSuite {
+class SeqGenSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   test("fragmentedTable covers exactly ids 0..n-1, no dupes, for adversarial n") {
     for (n <- Seq(1L, 2L, 3L, 64L, 97L, 610L)) {
-      val root = Files.createTempDirectory(s"seqgen-$n-").toString + "/t"
+      val root = tempDir(s"seqgen-$n-").toString + "/t"
       val (table, metas) = SeqGen.fragmentedTable(spark, root, n, nFiles = math.min(n, 8L).toInt)
       val ids = SeqIO.read(spark, table).select("doc_id").collect().map(_.getString(0)).sorted
       val expected = (0L until n).map(i => f"doc-$i%010d").sorted
@@ -29,7 +29,7 @@ class SeqGenSpec extends AnyFunSuite {
 
   test("fragmentedTable content equals the plain generator's content (payload is id-pure)") {
     val n = 500L
-    val root = Files.createTempDirectory("seqgen-parity-").toString + "/t"
+    val root = tempDir("seqgen-parity-").toString + "/t"
     val (table, _) = SeqGen.fragmentedTable(spark, root, n, nFiles = 10)
     val frag = SeqIO.read(spark, table).select("doc_id", "tokens", "n_tok", "source")
     val plain = SeqGen.table(spark, n).select("doc_id", "tokens", "n_tok", "source")
@@ -38,7 +38,7 @@ class SeqGenSpec extends AnyFunSuite {
   }
 
   test("every fragmented file spans (nearly) the whole key space — the planner's worst case") {
-    val root = Files.createTempDirectory("seqgen-span-").toString + "/t"
+    val root = tempDir("seqgen-span-").toString + "/t"
     val n = 4000L
     val (_, metas) = SeqGen.fragmentedTable(spark, root, n, nFiles = 20)
     // full-span fragmentation is the fixture's POINT: each file's [min, max] doc range must

@@ -1,20 +1,20 @@
 package graft.ops
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.state.Checkpoint
 import graft.table.SeqIO
 
-class CompactionSpec extends AnyFunSuite {
+class CompactionSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(tag: String): String =
-    Files.createTempDirectory(s"$tag-").toString + "/t"
+    tempDir(s"$tag-").toString + "/t"
 
   private def mismatches(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Long =
     a.select("doc_id", "tokens").join(b.select("doc_id", "tokens"),

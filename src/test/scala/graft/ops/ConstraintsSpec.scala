@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.table.{SeqIO, SeqTable}
@@ -11,12 +11,12 @@ import graft.table.{SeqIO, SeqTable}
 /** CHECK constraints: add-time validation, write-time loud enforcement at the single write
   * boundary (appends, merge upserts, staged batches), ANSI NULL-passes semantics, drop.
   */
-class ConstraintsSpec extends AnyFunSuite {
+class ConstraintsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(tag: String): SeqTable = {
-    val root = Files.createTempDirectory(s"chk-$tag-").toString + "/t"
+    val root = tempDir(s"chk-$tag-").toString + "/t"
     SeqGen.fragmentedTable(spark, root, 1000, 5)._1
   }
 

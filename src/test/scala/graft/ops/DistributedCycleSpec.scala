@@ -3,6 +3,7 @@ package graft.ops
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.state.Checkpoint
@@ -12,7 +13,7 @@ import graft.table.SeqIO
   * parquet manifests, claimed-only meta fetch) must produce the same plans and the same table
   * content as the driver path on an identical fixture — the 10^7-file path is semantics-identical.
   */
-class DistributedCycleSpec extends AnyFunSuite {
+class DistributedCycleSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
@@ -30,8 +31,8 @@ class DistributedCycleSpec extends AnyFunSuite {
   }
 
   test("distributed cycle path == driver cycle path: same plans, same content, parquet manifests") {
-    val rootA = Files.createTempDirectory("dcyc-driver-").toString + "/t"
-    val rootB = Files.createTempDirectory("dcyc-dist-").toString + "/t"
+    val rootA = tempDir("dcyc-driver-").toString + "/t"
+    val rootB = tempDir("dcyc-dist-").toString + "/t"
     // ONE deterministic fixture, cloned byte-for-byte: unclustered files scatter on the planner
     // grid by path hash, so the two paths must see identical physical paths to plan identically
     val (ta, _) = SeqGen.fragmentedTable(spark, rootA, 5000, 40)
@@ -80,7 +81,7 @@ class DistributedCycleSpec extends AnyFunSuite {
   }
 
   test("distributed incremental plan == driver incremental plan across dirty phases") {
-    val root = Files.createTempDirectory("dcyc-incr-").toString + "/t"
+    val root = tempDir("dcyc-incr-").toString + "/t"
     val (t, _) = SeqGen.fragmentedTable(spark, root, 4000, 30)
     val opts = (8, 1.0, 500L) // (k, threshold, targetRecords)
 
@@ -111,7 +112,7 @@ class DistributedCycleSpec extends AnyFunSuite {
   }
 
   test("narrow manifest scan nulls docBloom but keeps every layout stat") {
-    val root = Files.createTempDirectory("dcyc-narrow-").toString + "/t"
+    val root = tempDir("dcyc-narrow-").toString + "/t"
     val (t, _) = SeqGen.fragmentedTable(spark, root, 1000, 8)
     t.manifestFormat = "parquet"
     Rewrite.compactFiles(spark, t, t.liveFiles(), cfg, 400)

@@ -1,19 +1,19 @@
 package graft.ops
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.table.{SeqIO, SeqTable}
 
-class DmlSpec extends AnyFunSuite {
+class DmlSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(tag: String): (SeqTable, Long) = {
-    val root = Files.createTempDirectory(s"dml-$tag-").toString + "/t"
+    val root = tempDir(s"dml-$tag-").toString + "/t"
     val (t, _) = SeqGen.fragmentedTable(spark, root, 2000, 10)
     (t, 2000L)
   }
@@ -62,7 +62,7 @@ class DmlSpec extends AnyFunSuite {
   }
 
   test("victim scan opens only the manifest-pruned subset on a clustered table") {
-    val root = Files.createTempDirectory("dml-prune-").toString + "/t"
+    val root = tempDir("dml-prune-").toString + "/t"
     val (table, _) = SeqGen.fragmentedTable(spark, root, 4000, 20)
     // cluster the layout so (source, n_tok) manifest stats actually partition the key space
     Rewrite.compactFiles(spark, table, table.liveFiles(), cfg, 400)

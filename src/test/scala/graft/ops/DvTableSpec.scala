@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.table.{SeqIO, SeqTable}
@@ -12,12 +13,12 @@ import graft.table.{SeqIO, SeqTable}
   * travel, multi-DV union on one file, the fallback anti-join path, the lost-update commit
   * fence, and materialization through the ordinary delete-aware rewrite.
   */
-class DvTableSpec extends AnyFunSuite {
+class DvTableSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(tag: String, n: Long = 2000, files: Int = 10): SeqTable = {
-    val root = Files.createTempDirectory(s"dv-$tag-").toString + "/t"
+    val root = tempDir(s"dv-$tag-").toString + "/t"
     SeqGen.fragmentedTable(spark, root, n, files)._1
   }
 

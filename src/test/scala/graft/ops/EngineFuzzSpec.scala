@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.state.Checkpoint
@@ -22,7 +22,7 @@ import graft.table.{SeqIO, SeqTable}
   * stay pinned, retained and byte-identical to their history; and an outstanding branch must
   * stay intact, fork-pinned and invisible until its own publish (or loud stale refusal).
   */
-class EngineFuzzSpec extends AnyFunSuite {
+class EngineFuzzSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
@@ -52,7 +52,7 @@ class EngineFuzzSpec extends AnyFunSuite {
   test("random op sequences: physical content == model after every operation") {
     for (seed <- fuzzSeeds) {
       val rnd = new scala.util.Random(seed)
-      val root = Files.createTempDirectory(s"fuzz$seed-").toString + "/t"
+      val root = tempDir(s"fuzz$seed-").toString + "/t"
       val rows = 1500L
       val (table, _) = SeqGen.fragmentedTable(spark, root, rows, 20)
       val ckpt = new Checkpoint(s"$root/state")
@@ -61,7 +61,7 @@ class EngineFuzzSpec extends AnyFunSuite {
       assert(contentOf(table) === model.toMap, "fixture must seed the model")
 
       val opts = MaintenanceOptions(k = 8, targetRecordsPerFile = 400)
-      val srcDir = Files.createTempDirectory(s"fuzz$seed-stream-").toString
+      val srcDir = tempDir(s"fuzz$seed-stream-").toString
       var streamHwm = Long.MinValue
       // model content per table version — rollback targets are validated against these
       val history = scala.collection.mutable.Map.empty[Long, Map[String, (Long, Int, String)]]

@@ -1,21 +1,21 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.Column
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.sources.Ingest
 import graft.state.Checkpoint
 import graft.table.{SeqIO, SeqTable}
 
-class IncrementalCycleSpec extends AnyFunSuite {
+class IncrementalCycleSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   test("incremental cycles plan the same work as full replanning and converge") {
-    val root = Files.createTempDirectory("inc-cycle-").toString + "/t"
+    val root = tempDir("inc-cycle-").toString + "/t"
     val (table, _) = SeqGen.fragmentedTable(spark, root, 5000, 40)
     val opts = MaintenanceOptions(k = 12, targetRecordsPerFile = 500, incremental = true)
     val ckpt = new Checkpoint(s"$root/state")
@@ -58,7 +58,7 @@ class IncrementalCycleSpec extends AnyFunSuite {
       "laden files and housekeeping retires the obsolete manifests (no caller-invoked " +
       "MaterializeDeletes)") {
     import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("inc-mor-").toString + "/t"
+    val root = tempDir("inc-mor-").toString + "/t"
     val (table, _) = SeqGen.fragmentedTable(spark, root, 3000, 12)
     val opts = MaintenanceOptions(k = 12, targetRecordsPerFile = 500, incremental = true)
     val ckpt = new Checkpoint(s"$root/state")
@@ -141,46 +141,39 @@ class IncrementalCycleSpec extends AnyFunSuite {
         .orderBy(col("_op"), xxhash64(col("tokens")), col("n_tok"), col("source"))
       all.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
     }
-    val root = Files.createTempDirectory("drain-").toString
-    // ~100 MB of fixture: removed so repeated runs do not fill the temp disk
-    try {
-      def staged(name: String, df: DataFrame) = {
-        df.write.parquet(s"$root/$name"); spark.read.parquet(s"$root/$name")
-      }
-      val target = rows / 40
-      val base = staged("base", renamed(SeqGen.table(spark, rows, nSources, 4))
-        .withColumn("doc_id", permuted(substring(col("doc_id"), 5, 10).cast("long"))))
-      val cow = staged("cow", changeSet(1))
-      val mor = staged("mor", changeSet(2).withColumn("source", lit(names(1))))
-      // also with the manifest rewrite and an expiry that drops the snapshot which wrote the
-      // files a task claims, so no termination argument may lean on snapshot history
-      val plain = MaintenanceOptions(k = 64, targetRecordsPerFile = target)
-      for ((opts, i) <- Seq(plain, plain.copy(rewriteManifests = true, expireKeepLast = 1))
-          .zipWithIndex) {
-        val table = SeqTable.create(s"$root/t$i")
-        table.commit("append", Rewrite.clusteredWrite(spark, table, base, cfg, target, rows),
-          Set.empty)
-        MergeInto.merge(spark, table, cow, cfg, target)
-        MergeInto.merge(spark, table, mor, cfg, target, mor = true)
+    val root = tempDir("drain-").toString
+    def staged(name: String, df: DataFrame) = {
+      df.write.parquet(s"$root/$name"); spark.read.parquet(s"$root/$name")
+    }
+    val target = rows / 40
+    val base = staged("base", renamed(SeqGen.table(spark, rows, nSources, 4))
+      .withColumn("doc_id", permuted(substring(col("doc_id"), 5, 10).cast("long"))))
+    val cow = staged("cow", changeSet(1))
+    val mor = staged("mor", changeSet(2).withColumn("source", lit(names(1))))
+    // also with the manifest rewrite and an expiry that drops the snapshot which wrote the
+    // files a task claims, so no termination argument may lean on snapshot history
+    val plain = MaintenanceOptions(k = 64, targetRecordsPerFile = target)
+    for ((opts, i) <- Seq(plain, plain.copy(rewriteManifests = true, expireKeepLast = 1))
+        .zipWithIndex) {
+      val table = SeqTable.create(s"$root/t$i")
+      table.commit("append", Rewrite.clusteredWrite(spark, table, base, cfg, target, rows),
+        Set.empty)
+      MergeInto.merge(spark, table, cow, cfg, target)
+      MergeInto.merge(spark, table, mor, cfg, target, mor = true)
 
-        def contentHash(): (Long, String) = {
-          val h = SeqIO.read(spark, table)
-            .select(xxhash64(col("doc_id"), col("tokens"), col("n_tok"), col("source")).as("h"))
-            .agg(count(lit(1)), sum(col("h").cast("decimal(38,0)")).cast("string")).head()
-          (h.getLong(0), h.getString(1))
-        }
-        val before = contentHash()
-        val ckpt = new Checkpoint(s"$root/state$i")
-        var executed = Vector.empty[Int]
-        while (executed.size < 12 && !executed.lastOption.contains(0))
-          executed :+= MaintenanceRunner.runCycle(spark, table, cfg, opts, ckpt).tasksExecuted
-        assert(executed.contains(0), s"the drain never reached a cycle without tasks: $executed")
-        assert(contentHash() === before, "the drain changed the table content")
+      def contentHash(): (Long, String) = {
+        val h = SeqIO.read(spark, table)
+          .select(xxhash64(col("doc_id"), col("tokens"), col("n_tok"), col("source")).as("h"))
+          .agg(count(lit(1)), sum(col("h").cast("decimal(38,0)")).cast("string")).head()
+        (h.getLong(0), h.getString(1))
       }
-    } finally {
-      val walk = Files.walk(Paths.get(root))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-      finally walk.close()
+      val before = contentHash()
+      val ckpt = new Checkpoint(s"$root/state$i")
+      var executed = Vector.empty[Int]
+      while (executed.size < 12 && !executed.lastOption.contains(0))
+        executed :+= MaintenanceRunner.runCycle(spark, table, cfg, opts, ckpt).tasksExecuted
+      assert(executed.contains(0), s"the drain never reached a cycle without tasks: $executed")
+      assert(contentHash() === before, "the drain changed the table content")
     }
   }
 }

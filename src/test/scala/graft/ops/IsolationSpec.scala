@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.table.{SeqIO, SeqTable}
@@ -15,12 +16,12 @@ import graft.table.{SeqIO, SeqTable}
   *  - delete application falls back to a shuffle join when the key set exceeds the broadcast cap
   *  - manifest rewrite retries through version races instead of surfacing raw filesystem errors
   */
-class IsolationSpec extends AnyFunSuite {
+class IsolationSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(rows: Long, files: Int): SeqTable = {
-    val root = Files.createTempDirectory("iso-").toString + "/t"
+    val root = tempDir("iso-").toString + "/t"
     SeqGen.fragmentedTable(spark, root, rows, files)._1
   }
 
@@ -54,7 +55,7 @@ class IsolationSpec extends AnyFunSuite {
 
   test("exact dedup keeps distinct payloads that collide on the candidate hash") {
     import spark.implicits._
-    val root = Files.createTempDirectory("iso-dedup-").toString + "/t"
+    val root = tempDir("iso-dedup-").toString + "/t"
     val table = SeqTable.create(root)
     // 200 DISTINCT payloads + exact duplicates of 20 of them; hashBits=2 → 4 buckets, collisions
     // between distinct payloads are guaranteed

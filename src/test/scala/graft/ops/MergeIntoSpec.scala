@@ -5,15 +5,16 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.table.{SeqIO, SeqTable}
 
-class MergeIntoSpec extends AnyFunSuite {
+class MergeIntoSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
-  private def fresh(): String = Files.createTempDirectory("merge-spec-").toString + "/t"
+  private def fresh(): String = tempDir("merge-spec-").toString + "/t"
 
   test("upsert + insert + delete semantics match the full-outer-join oracle") {
     val root = fresh()

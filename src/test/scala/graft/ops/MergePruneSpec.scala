@@ -4,18 +4,19 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.table.{SeqIO, SeqTable}
 
 /** COW-merge pruning + auto strategy routing. */
-class MergePruneSpec extends AnyFunSuite {
+class MergePruneSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   /** doc-major table: 2000 rows across ~100 files with TIGHT doc_id ranges. */
   private def docMajorTable(): SeqTable = {
-    val root = Files.createTempDirectory("prune-").toString + "/t"
+    val root = tempDir("prune-").toString + "/t"
     val t = SeqTable.create(root)
     val metas = Rewrite.clusteredWrite(spark, t, SeqGen.table(spark, 2000, parts = 8),
       cfg, targetRecordsPerFile = 20, totalRecords = 2000, docMajor = true)
@@ -50,7 +51,7 @@ class MergePruneSpec extends AnyFunSuite {
     * [min,max] range pruning is blind here; only the per-file doc_id blooms can prune.
     */
   private def curveTable(): SeqTable = {
-    val root = Files.createTempDirectory("prune-curve-").toString + "/t"
+    val root = tempDir("prune-curve-").toString + "/t"
     val t = SeqTable.create(root)
     val metas = Rewrite.clusteredWrite(spark, t, SeqGen.table(spark, 2000, parts = 8),
       cfg, targetRecordsPerFile = 20, totalRecords = 2000)

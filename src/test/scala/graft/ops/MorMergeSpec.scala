@@ -1,20 +1,20 @@
 package graft.ops
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.table.{SeqIO, SeqTable}
 
-class MorMergeSpec extends AnyFunSuite {
+class MorMergeSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def freshPair(rows: Long, files: Int): (SeqTable, SeqTable) = {
-    val a = Files.createTempDirectory("mor-a-").toString + "/t"
-    val b = Files.createTempDirectory("mor-b-").toString + "/t"
+    val a = tempDir("mor-a-").toString + "/t"
+    val b = tempDir("mor-b-").toString + "/t"
     (SeqGen.fragmentedTable(spark, a, rows, files)._1, SeqGen.fragmentedTable(spark, b, rows, files)._1)
   }
 
@@ -37,7 +37,7 @@ class MorMergeSpec extends AnyFunSuite {
   }
 
   test("pruned scans honor MoR deletes; updated keys show only the new payload") {
-    val root = Files.createTempDirectory("mor-scan-").toString + "/t"
+    val root = tempDir("mor-scan-").toString + "/t"
     val (table, _) = SeqGen.fragmentedTable(spark, root, 2000, 10)
     val before = SeqIO.read(spark, table).persist()
     val changes = SeqGen.changeSet(spark, 2000, changes = 300, deletes = 100).persist()
@@ -56,7 +56,7 @@ class MorMergeSpec extends AnyFunSuite {
   }
 
   test("sequential MoR merges: later delete sequences supersede earlier upserts") {
-    val root = Files.createTempDirectory("mor-seq-").toString + "/t"
+    val root = tempDir("mor-seq-").toString + "/t"
     val (table, _) = SeqGen.fragmentedTable(spark, root, 1000, 5)
     import spark.implicits._
     val key = SeqIO.read(spark, table).select("doc_id").orderBy("doc_id").as[String].head()
@@ -70,7 +70,7 @@ class MorMergeSpec extends AnyFunSuite {
   }
 
   test("materialize-deletes restores the no-delete fast path with identical content") {
-    val root = Files.createTempDirectory("mor-mat-").toString + "/t"
+    val root = tempDir("mor-mat-").toString + "/t"
     val (table, _) = SeqGen.fragmentedTable(spark, root, 2000, 10)
     val changes = SeqGen.changeSet(spark, 2000, changes = 300, deletes = 100).persist()
     MergeInto.merge(spark, table, changes, cfg, 1000, mor = true)
@@ -89,7 +89,7 @@ class MorMergeSpec extends AnyFunSuite {
   }
 
   test("concurrent MoR merges both land via version-race retry") {
-    val root = Files.createTempDirectory("mor-conc-").toString + "/t"
+    val root = tempDir("mor-conc-").toString + "/t"
     val (table, _) = SeqGen.fragmentedTable(spark, root, 2000, 8)
     val t1 = SeqTable.load(root)
     val t2 = SeqTable.load(root)

@@ -1,20 +1,20 @@
 package graft.ops
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.planner.GridConfig
 import graft.table.{SeqIO, SeqTable}
 
 /** Table-level NEAR-dedup: token-stream MinHash pairs → clusters → transactional keep-min delete. */
-class NearDedupSpec extends AnyFunSuite {
+class NearDedupSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   test("near-dedup removes token-stream near-copies, keeps representatives and distinct docs") {
     import spark.implicits._
-    val root = Files.createTempDirectory("neardedup-").toString + "/t"
+    val root = tempDir("neardedup-").toString + "/t"
     val t = SeqTable.create(root)
     val base = (1 to 30).toArray
     val b = (200 to 230).toArray

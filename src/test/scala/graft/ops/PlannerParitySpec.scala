@@ -2,6 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.table.SeqIO
@@ -9,11 +10,11 @@ import graft.table.SeqIO
 /** The fully-distributed manifest-Dataset planner must plan exactly what the driver-side planner
   * plans (same tasks, same files) — the 10^12-scale path is semantics-identical.
   */
-class PlannerParitySpec extends AnyFunSuite {
+class PlannerParitySpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   test("planCompactionDistributed == planCompaction") {
-    val root = java.nio.file.Files.createTempDirectory("parity-").toString + "/t"
+    val root = tempDir("parity-").toString + "/t"
     val (table, metas) = SeqGen.fragmentedTable(spark, root, 6000, 50)
     val cfg = GridConfig()
     val a = MaintenancePlanner.planCompaction(spark, metas, cfg, 8, 1.0, 600)
@@ -44,7 +45,7 @@ class PlannerParitySpec extends AnyFunSuite {
   test("DeletePressure.of estimates per-file deleted fraction from manifests + metadata only, " +
       "and pressure-weighted plans claim laden files (distributed parity holds)") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("presh-").toString + "/t"
+    val root = tempDir("presh-").toString + "/t"
     val cfg = GridConfig()
     val (table, _) = SeqGen.fragmentedTable(spark, root, 3000, 12)
     // converge layout first: right-sized clustered files, no plannable work left
@@ -79,7 +80,7 @@ class PlannerParitySpec extends AnyFunSuite {
 
   test("incremental planner with executor pre-merge FORCED (threshold 0) plans identical tasks " +
       "and keeps resumability (partials are never cached as node results)") {
-    val root = java.nio.file.Files.createTempDirectory("premerge-").toString + "/t"
+    val root = tempDir("premerge-").toString + "/t"
     val cfg = GridConfig()
     val (table, _) = SeqGen.fragmentedTable(spark, root, 6000, 50)
     // cold plan, both gates: direct collect vs pre-merge forced on — identical tasks

@@ -1,11 +1,9 @@
 package graft.ops
 
-import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.SparkTestSession.{inGroup, jobGroups}
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.{GridConfig, IncrementalTopK, NodeResult, Region}
 import graft.table.{SeqIO, SeqTable}
@@ -14,43 +12,12 @@ import graft.table.{SeqIO, SeqTable}
   * (driver or Spark), what the 10^7-file path keeps off the driver, and how an incomplete top-k
   * fails.
   */
-class PlannerPathSpec extends AnyFunSuite {
+class PlannerPathSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
-  /** Job groups of every Spark job started while `body` runs. A sentinel job in its own group
-    * runs last: the listener sees job starts in order, so once it has seen the sentinel it has
-    * seen every job `body` started.
-    */
-  private def jobGroups(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    val sentinel = s"sentinel-${java.util.UUID.randomUUID()}"
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(sentinel, "listener barrier")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(sentinel), "listener never saw the sentinel job")
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq.filterNot(_ == sentinel)
-  }
-
-  private def inGroup[T](group: String)(body: => T): T = {
-    spark.sparkContext.setJobGroup(group, "planner path")
-    try body finally spark.sparkContext.clearJobGroup()
-  }
-
   test("small driver plans launch no Spark jobs: full, cold incremental, warm incremental") {
-    val root = Files.createTempDirectory("ppath-jobs-").toString + "/t"
+    val root = tempDir("ppath-jobs-").toString + "/t"
     val (table, metas) = SeqGen.fragmentedTable(spark, root, 6000, 50)
     val group = s"planner-${java.util.UUID.randomUUID()}"
     var full = Seq.empty[PlannedTask]
@@ -70,7 +37,7 @@ class PlannerPathSpec extends AnyFunSuite {
   }
 
   test("the distributed path parses no manifest on the driver, cold and warm") {
-    val root = Files.createTempDirectory("ppath-parses-").toString + "/t"
+    val root = tempDir("ppath-parses-").toString + "/t"
     val writer = SeqTable.create(root)
     writer.manifestFormat = "parquet"
     def append(n: Long, files: Int): Unit = {

@@ -3,6 +3,7 @@ package graft.ops
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.state.Checkpoint
@@ -11,7 +12,7 @@ import graft.table.SeqIO
 /** SURVEY.md §5.5: kill between phases, restart from checkpoint, identical final state, no
   * double-applied task.
   */
-class ResumeSpec extends AnyFunSuite {
+class ResumeSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
@@ -25,7 +26,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   private def freshTable(rows: Long = 5000, files: Int = 40): String = {
-    val root = Files.createTempDirectory("resume-spec-").toString + "/t"
+    val root = tempDir("resume-spec-").toString + "/t"
     SeqGen.fragmentedTable(spark, root, rows, files)
     root
   }

@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.ops.MergeInto
 import graft.planner.GridConfig
@@ -13,12 +13,12 @@ import graft.table.{SeqIO, SeqTable}
   * every consumption step, offsets advance atomically with the applied batch (crash replay can
   * never double-apply or skip), and concurrent/duplicate consumption is benign.
   */
-class ChangeFeedSpec extends AnyFunSuite {
+class ChangeFeedSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(tag: String): String =
-    Files.createTempDirectory(s"feed-$tag-").toString + "/t"
+    tempDir(s"feed-$tag-").toString + "/t"
 
   private def contentHash(t: SeqTable): (Long, Long) = {
     val df = SeqIO.read(spark, t)

@@ -4,14 +4,15 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
 import graft.table.{SeqIO, SeqTable}
 
-class IngestSpec extends AnyFunSuite {
+class IngestSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
-  private def fresh(): String = Files.createTempDirectory("ingest-spec-").toString
+  private def fresh(): String = tempDir("ingest-spec-").toString
 
   test("csv ingest with ;-delimited token arrays") {
     val dir = fresh()

@@ -1,11 +1,11 @@
 package graft.sources
 
-import java.nio.file.Files
 import scala.collection.mutable
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.ops.MergeInto
 import graft.planner.GridConfig
@@ -15,12 +15,12 @@ import graft.table.{SeqIO, SeqTable}
   * is delivered exactly once across micro-batches AND across query restarts (Spark's offset log
   * + deterministic version-ranged reads), and cdc mode surfaces net D/I rows a mirror can apply.
   */
-class TableStreamSpec extends AnyFunSuite {
+class TableStreamSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(tag: String): String =
-    Files.createTempDirectory(s"stream-$tag-").toString
+    tempDir(s"stream-$tag-").toString
 
   /** An append-family commit (what appends mode delivers — merges are rewrite commits). */
   private def append(table: SeqTable, df: DataFrame): Unit = {

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.SparkTestSession
+import graft.TempDirs
 
 final case class Click(user_id: Long, ts: java.sql.Timestamp, value: Double)
 final case class SessionAgg(user_id: Long, clicks: Long, total: Double)
@@ -13,12 +13,12 @@ final case class SessionAgg(user_id: Long, clicks: Long, total: Double)
   * file-source micro-batch stream (the KeyValueGroupedDataset state-store path the engine exposes
   * for streaming pipelines).
   */
-class StatefulStreamingSpec extends AnyFunSuite {
+class StatefulStreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   test("flatMapGroupsWithState per-user aggregation over a micro-batched stream") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("stateful-").toString
+    val dir = tempDir("stateful-").toString
     // stage events testdata as the stream input
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select(col("user_id"), col("ts"), col("value"))

@@ -1,9 +1,9 @@
 package graft.table
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.ops.MergeInto
 import graft.planner.GridConfig
@@ -14,12 +14,12 @@ import graft.sources.Ingest
   * loudly if main advanced past the fork), the fork-point version is retention-pinned like a
   * tag, and branch data files are orphan-protected until the branch is dropped.
   */
-class BranchSpec extends AnyFunSuite {
+class BranchSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(tag: String): String =
-    Files.createTempDirectory(s"branch-$tag-").toString + "/t"
+    tempDir(s"branch-$tag-").toString + "/t"
 
   private def hashOf(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
     val h = df.agg(count(lit(1)),

@@ -1,10 +1,10 @@
 package graft.table
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.ops.{MergeInto, Rewrite}
 import graft.planner.GridConfig
@@ -13,12 +13,12 @@ import graft.planner.GridConfig
   * content diff of the two endpoint reads (`exceptAll` both ways over EVERYTHING). The operator
   * must produce the identical multiset while reading only changed files + delta-key rows.
   */
-class DiffSpec extends AnyFunSuite {
+class DiffSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(tag: String): String =
-    Files.createTempDirectory(s"diff-$tag-").toString + "/t"
+    tempDir(s"diff-$tag-").toString + "/t"
 
   private val cols = Seq("doc_id", "tokens", "n_tok", "source")
 

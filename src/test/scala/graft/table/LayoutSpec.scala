@@ -1,9 +1,9 @@
 package graft.table
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.ops.Rewrite
 import graft.planner.GridConfig
@@ -12,12 +12,12 @@ import graft.planner.GridConfig
   * is versioned with the snapshots, wins over caller defaults at every write, and data migrates
   * only when rewrites touch it (the Iceberg sort-order-evolution contract).
   */
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(tag: String): String =
-    Files.createTempDirectory(s"layout-$tag-").toString + "/t"
+    tempDir(s"layout-$tag-").toString + "/t"
 
   test("declare/read roundtrip; carried forward; versioned per snapshot; survives rollback") {
     val root = fresh("meta")

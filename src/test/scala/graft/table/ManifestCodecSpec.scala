@@ -1,19 +1,18 @@
 package graft.table
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.json4s.jackson.Serialization
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.SparkTestSession.jobGroups
+import graft.TempDirs
 
 /** The one manifest encoding: parquet written and read on the driver by [[ManifestCodec]],
   * scanned on executors by Spark, with no Spark job behind any driver manifest read or write.
   */
-class ManifestCodecSpec extends AnyFunSuite {
+class ManifestCodecSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
-  private def fresh(): String = Files.createTempDirectory("mcodec-").toString + "/t"
+  private def fresh(): String = tempDir("mcodec-").toString + "/t"
 
   private val bigBloom = {
     val bytes = new Array[Byte](10 * 1024) // base64: ~13.6 KB, the per-file Bloom payload size
@@ -102,30 +101,5 @@ class ManifestCodecSpec extends AnyFunSuite {
     loud("narrow driver read")(cold.liveFilesNarrow(cold.currentSnapshot()))
     loud("executor scan")(SeqIO.fileMetaDS(spark, cold, narrow = true))
     loud("table read")(SeqIO.read(spark, cold))
-  }
-
-  /** Job groups of every Spark job started while `body` runs (a sentinel job in its own group
-    * runs last, so once the listener has seen it, it has seen every job `body` started).
-    */
-  private def jobGroups(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    val sentinel = s"sentinel-${java.util.UUID.randomUUID()}"
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(sentinel, "listener barrier")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(sentinel), "listener never saw the sentinel job")
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq.filterNot(_ == sentinel)
   }
 }

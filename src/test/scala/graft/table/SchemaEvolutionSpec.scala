@@ -1,10 +1,10 @@
 package graft.table
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.ops.{Dml, MergeInto, Rewrite}
 import graft.planner.GridConfig
@@ -16,12 +16,12 @@ import graft.sources.Ingest
   * schema that was current THEN, and every lifecycle op (append, compaction, merge, DML,
   * changelog) rides the evolved schema.
   */
-class SchemaEvolutionSpec extends AnyFunSuite {
+class SchemaEvolutionSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(tag: String): String =
-    Files.createTempDirectory(s"evolve-$tag-").toString + "/t"
+    tempDir(s"evolve-$tag-").toString + "/t"
 
   private val baseCols = Seq("doc_id", "tokens", "n_tok", "source")
 

@@ -3,12 +3,13 @@ package graft.table
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 
-class SeqTableSpec extends AnyFunSuite {
+class SeqTableSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
-  private def fresh(): String = Files.createTempDirectory("seqtable-spec-").toString + "/t"
+  private def fresh(): String = tempDir("seqtable-spec-").toString + "/t"
 
   test("create → append → read roundtrip with per-file stats") {
     val t = SeqTable.create(fresh())

@@ -1,9 +1,9 @@
 package graft.table
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.ops.MergeInto
 import graft.planner.GridConfig
@@ -12,12 +12,12 @@ import graft.planner.GridConfig
   * it references) survives snapshot expiry on BOTH expiry paths until the tag is dropped; tags
   * ride table properties, so they are CAS-consistent and survive rollback.
   */
-class TagSpec extends AnyFunSuite {
+class TagSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   private val cfg = GridConfig()
 
   private def fresh(tag: String): String =
-    Files.createTempDirectory(s"tag-$tag-").toString + "/t"
+    tempDir(s"tag-$tag-").toString + "/t"
 
   private def hashAt(t: SeqTable, v: Long): (Long, Long) = {
     val h = SeqIO.readAt(spark, t, v).agg(

@@ -4,17 +4,18 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.sources.Ingest
 
 /** Write-audit-publish staged commits: invisibility before publish, exactly-once publish (incl.
   * the crash-between-commit-and-cleanup replay), discard reclamation, orphan-sweep shielding.
   */
-class WapSpec extends AnyFunSuite {
+class WapSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   private def fresh(tag: String): String =
-    Files.createTempDirectory(s"wap-$tag-").toString + "/t"
+    tempDir(s"wap-$tag-").toString + "/t"
 
   private def batch(n: Long, prefix: String) =
     SeqGen.table(spark, n, parts = 2).withColumn("doc_id", concat(lit(prefix), col("doc_id")))
