@@ -117,12 +117,7 @@ object EngineQueries {
     val out = content.localCheckpoint(true)
     roots.foreach { r =>
       val top = java.nio.file.Paths.get(r).getParent
-      if (top != null && top.getFileName.toString.startsWith("graft-") && Files.exists(top)) {
-        import scala.jdk.CollectionConverters._
-        val walk = Files.walk(top)
-        try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        finally walk.close()
-      }
+      if (top != null && top.getFileName.toString.startsWith("graft-")) SeqIO.deleteTree(top)
     }
     out
   }

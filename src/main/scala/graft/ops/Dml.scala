@@ -108,9 +108,7 @@ object Dml {
     while (true) {
       attempt += 1
       val snap = table.currentSnapshot()
-      val useDistributed = distributedMetaFiles == 0L ||
-        snap.summary.get("total-files").flatMap(_.toLongOption).getOrElse(0L) >
-          distributedMetaFiles
+      val useDistributed = SeqIO.routesDistributed(snap, distributedMetaFiles)
       val selected = SeqIO.pruneMetas(table.liveFilesNarrow(snap), src, lo, hi)
       val victims = SeqIO.readWithDeletes(spark, table, snap, selected, keepPos = true)
         .filter(cond)
@@ -138,8 +136,7 @@ object Dml {
         return MergeResult(s, 0, attempt)
       } catch {
         case e: table.CommitConflictException =>
-          dvNames.foreach(n => java.nio.file.Files.deleteIfExists(
-            java.nio.file.Paths.get(table.deleteManifestPath(n))))
+          table.dropUncommitted(Nil, dvNames)
           if (attempt >= maxAttempts) throw e
       }
     }
@@ -194,9 +191,7 @@ object Dml {
     while (true) {
       attempt += 1
       val snap = table.currentSnapshot()
-      val useDistributed = distributedMetaFiles == 0L ||
-        snap.summary.get("total-files").flatMap(_.toLongOption).getOrElse(0L) >
-          distributedMetaFiles
+      val useDistributed = SeqIO.routesDistributed(snap, distributedMetaFiles)
       val selected = SeqIO.pruneMetas(table.liveFilesNarrow(snap), src, lo, hi)
       // one pinned scan feeds BOTH faces of the update (persisted: new rows + positions)
       val matched = SeqIO.readWithDeletes(spark, table, snap, selected, keepPos = true)
@@ -234,10 +229,7 @@ object Dml {
           return MergeResult(s, 0, attempt, added.map(_.records).sum)
         } catch {
           case e: table.CommitConflictException =>
-            added.foreach(f => java.nio.file.Files.deleteIfExists(
-              java.nio.file.Paths.get(table.absolutePath(f))))
-            dvNames.foreach(n => java.nio.file.Files.deleteIfExists(
-              java.nio.file.Paths.get(table.deleteManifestPath(n))))
+            table.dropUncommitted(added, dvNames)
             if (attempt >= maxAttempts) throw e
         }
       } finally { matched.unpersist(); () }

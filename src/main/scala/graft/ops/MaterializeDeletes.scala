@@ -28,20 +28,17 @@ object MaterializeDeletes {
       val snap = table.currentSnapshot()
       if (snap.deleteManifests.isEmpty) return None
       import spark.implicits._
-      val useDistributed = distributedMetaFiles == 0L ||
-        snap.summary.get("total-files").flatMap(_.toLongOption).getOrElse(0L) >
-          distributedMetaFiles
+      val useDistributed = SeqIO.routesDistributed(snap, distributedMetaFiles)
 
       val candidates = candidateFiles(spark, table, snap, useDistributed)
       val candidatePaths = candidates.map(_.path).toSet
 
       val added =
         if (candidates.isEmpty) Nil
-        else Rewrite.withSmallFileScanParallelism(spark, candidates) {
-          val df = SeqIO.readWithDeletes(spark, table, snap, candidates)
-          Rewrite.clusteredWrite(spark, table, df, cfg, targetRecordsPerFile,
-            candidates.map(_.records).sum)
-        }
+        else Rewrite.clusteredWrite(spark, table,
+          SeqIO.readWithDeletes(spark, table, snap, candidates,
+            shape = SeqIO.ScanShape.SmallFiles),
+          cfg, targetRecordsPerFile, candidates.map(_.records).sum)
       try {
         // the planned-manifest validation conflicts if a concurrent MoR merge added deletes since
         // our plan (our rewritten files would escape them; dropping only OUR planned manifests
@@ -54,8 +51,7 @@ object MaterializeDeletes {
             if (useDistributed) Some(SeqIO.distributedManifestEdit(spark, table)) else None))
       } catch {
         case e: table.CommitConflictException =>
-          added.foreach(f => java.nio.file.Files.deleteIfExists(
-            java.nio.file.Paths.get(table.absolutePath(f))))
+          table.dropUncommitted(added)
           if (attempt >= maxAttempts) throw e
       }
     }
@@ -152,16 +148,7 @@ object MaterializeDeletes {
       val probeBudgetOk = keyArr.length <= maxK &&
         keyArr.length.toLong * cand.size <= 200_000_000L
       if (!probeBudgetOk || cand.isEmpty) cand
-      else {
-        val candPaths = spark.createDataset(cand.map(_.path)).toDF("path")
-        val ka = spark.sparkContext.broadcast(keyArr)
-        SeqIO.fileMetaDSOf(spark, table, snap)
-          .join(broadcast(candPaths), Seq("path"), "left_semi")
-          .as[graft.table.FileMeta]
-          .filter(f => graft.table.DocBloom.mayContainAny(f, ka.value))
-          .map(_.copy(docBloom = None))
-          .collect().toSeq
-      }
+      else SeqIO.bloomCandidates(spark, table, snap, cand, keyArr)
     }
   }
 
@@ -182,8 +169,7 @@ object MaterializeDeletes {
       distributedMetaFiles: Long = SeqIO.DistributedDiffMetaFiles): Option[Snapshot] = {
     val snap = table.currentSnapshot()
     if (snap.deleteManifests.isEmpty) return None
-    val useDistributed = distributedMetaFiles == 0L ||
-      snap.summary.get("total-files").flatMap(_.toLongOption).getOrElse(0L) > distributedMetaFiles
+    val useDistributed = SeqIO.routesDistributed(snap, distributedMetaFiles)
     val drop: Set[String] =
       if (candidateFiles(spark, table, snap, useDistributed).isEmpty)
         snap.deleteManifests.toSet // nothing left to materialize — the whole set retires

@@ -161,9 +161,7 @@ object MergeInto {
         val snap = table.currentSnapshot()
         // distributed routing mirrors tableDiff/the planner: above the threshold (or at 0,
         // forcing it) the live manifest stays on executors end-to-end
-        val useDistributed = distributedMetaFiles == 0L ||
-          snap.summary.get("total-files").flatMap(_.toLongOption).getOrElse(0L) >
-            distributedMetaFiles
+        val useDistributed = SeqIO.routesDistributed(snap, distributedMetaFiles)
 
         // 1. manifest pruning: files whose doc_id range may contain a change key (also drives the
         //    auto COW-vs-MoR routing, so it runs before the branch; pure metadata × keys).
@@ -218,16 +216,7 @@ object MergeInto {
               bloomKeys.nonEmpty && bloomKeys.length.toLong * cand.size <= 200_000_000L
             val a = timed("bloom-prune")(
               if (!probeBudgetOk || cand.isEmpty) cand
-              else {
-                val candPaths = spark.createDataset(cand.map(_.path)).toDF("path")
-                val bk = spark.sparkContext.broadcast(bloomKeys)
-                SeqIO.fileMetaDSOf(spark, table, snap)
-                  .join(broadcast(candPaths), Seq("path"), "left_semi")
-                  .as[FileMeta]
-                  .filter(f => graft.table.DocBloom.mayContainAny(f, bk.value))
-                  .map(_.copy(docBloom = None))
-                  .collect().toSeq
-              })
+              else SeqIO.bloomCandidates(spark, table, snap, cand, bloomKeys))
             (a, liveRecords)
           }
         val affectedPaths = affected.map(_.path).toSet
@@ -259,10 +248,7 @@ object MergeInto {
             return MergeResult(s, 0, attempt, added.map(_.records).sum)
           } catch {
             case e: table.CommitConflictException =>
-              added.foreach(f => java.nio.file.Files.deleteIfExists(
-                java.nio.file.Paths.get(table.absolutePath(f))))
-              dms.foreach(dm => java.nio.file.Files.deleteIfExists(
-                java.nio.file.Paths.get(table.deleteManifestPath(dm))))
+              table.dropUncommitted(added, dms)
               if (attempt >= maxAttempts) throw e
           }
         } else {
@@ -271,69 +257,59 @@ object MergeInto {
 
         // 2. COW split. The merged state is exactly (target \ changedKeys) ∪ upserts:
         //    a) SURVIVOR path — target rows whose key is untouched, rewritten map-only with one
-        //       partition per file (openCost = split size prevents file packing): a broadcast
-        //       anti-join, ZERO payload shuffle, and each output is a SUBSET of its source file,
-        //       so the file's min/max stats stay tight. Rewriting updated rows in place instead
-        //       would poison per-file stats (an update may move the row anywhere in key space).
+        //       file per scan task (ScanShape.FilePerTask): a broadcast anti-join, ZERO payload
+        //       shuffle, and each output is a SUBSET of its source file, so the file's min/max
+        //       stats stay tight. Rewriting updated rows in place instead would poison per-file
+        //       stats (an update may move the row anywhere in key space).
         //    b) UPSERT path — every non-delete change row (update or insert alike) goes through
         //       the curve-clustered write, landing where its new (source, n_tok) says it belongs.
         // The two writes are INDEPENDENT (both derive from the pinned snapshot + the already-
         // materialized ch cache), so they run as concurrent driver-thread jobs (guide §2.6:
         // back-fill the cluster through each other's straggler tails) — the merge leg of the
         // executor-count scaling harness measured a ~7 s/merge serial term that was mostly
-        // these two job chains queuing end to end. The openCost pin is set around BOTH (session
-        // conf): it only affects file-scan packing, and the upsert side reads the ch CACHE, so
-        // it scans no file at all.
-        val conf = spark.conf
-        val prevOpenCost = conf.get("spark.sql.files.openCostInBytes", "4194304")
-        if (affected.nonEmpty)
-          conf.set("spark.sql.files.openCostInBytes",
-            conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-        val (rewritten: Seq[FileMeta], insertedFiles: Seq[FileMeta]) =
-          try {
-            import scala.concurrent.{Await, Future}
-            import scala.concurrent.duration.Duration
-            implicit val ec = MergeInto.writePool
-            // both sides' jobs run in one job group, so a failed side can cancel its peer's
-            // running jobs and every job it submits later (a side runs several in sequence)
-            val group = s"graft-merge-${java.util.UUID.randomUUID()}"
-            def grouped[T](body: => T): Future[T] = Future {
-              spark.sparkContext.setJobGroup(group, "graft merge write")
-              try body finally spark.sparkContext.clearJobGroup()
-            }
-            val survivorsF: Future[Seq[FileMeta]] =
-              if (affected.isEmpty) Future.successful(Nil)
-              else grouped {
-                val target = SeqIO.readWithDeletes(spark, table, snapDeletes, affected)
-                val keySide = if (broadcastChanges) broadcast(keys) else keys
-                val survivors = target
-                  .join(keySide, col("doc_id") === col("c_doc_id"), "left_anti")
-                timed("survivor-rewrite")(SeqIO.writeFiles(spark, table, survivors,
-                  clustered = affected.forall(_.clustered)))
-              }
-            val upsertsF: Future[Seq[FileMeta]] = grouped {
-              timed("upsert-write")(Rewrite.clusteredWrite(
-                spark, table, upsertRows, cfg, targetRecordsPerFile, nKeys))
-            }
-            // zip fails as soon as either side fails, without waiting for the other
-            try Await.result(survivorsF.zip(upsertsF), Duration.Inf)
-            catch {
-              case e: Throwable =>
-                // one side failed: cancel the peer's jobs, wait for it (two minutes at most: a
-                // peer stuck outside a Spark job must not hang the merge) and reclaim any files
-                // it already landed — the commit-conflict cleanup below never sees them
-                // otherwise. A peer still running at the deadline leaves removeOrphans candidates.
-                spark.sparkContext.cancelJobGroupAndFutureJobs(group)
-                Seq(survivorsF, upsertsF).foreach { f =>
-                  try Await.result(f, Duration(2, "min")).foreach(m => java.nio.file.Files
-                    .deleteIfExists(java.nio.file.Paths.get(table.absolutePath(m))))
-                  catch { case _: Throwable => () }
-                }
-                throw e
-            }
-          } finally {
-            if (affected.nonEmpty) conf.set("spark.sql.files.openCostInBytes", prevOpenCost)
+        // these two job chains queuing end to end.
+        val (rewritten: Seq[FileMeta], insertedFiles: Seq[FileMeta]) = {
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.duration.Duration
+          implicit val ec = MergeInto.writePool
+          // both sides' jobs run in one job group, so a failed side can cancel its peer's
+          // running jobs and every job it submits later (a side runs several in sequence)
+          val group = s"graft-merge-${java.util.UUID.randomUUID()}"
+          def grouped[T](body: => T): Future[T] = Future {
+            spark.sparkContext.setJobGroup(group, "graft merge write")
+            try body finally spark.sparkContext.clearJobGroup()
           }
+          val survivorsF: Future[Seq[FileMeta]] =
+            if (affected.isEmpty) Future.successful(Nil)
+            else grouped {
+              val target = SeqIO.readWithDeletes(spark, table, snapDeletes, affected,
+                shape = SeqIO.ScanShape.FilePerTask)
+              val keySide = if (broadcastChanges) broadcast(keys) else keys
+              val survivors = target
+                .join(keySide, col("doc_id") === col("c_doc_id"), "left_anti")
+              timed("survivor-rewrite")(SeqIO.writeFiles(spark, table, survivors,
+                clustered = affected.forall(_.clustered)))
+            }
+          val upsertsF: Future[Seq[FileMeta]] = grouped {
+            timed("upsert-write")(Rewrite.clusteredWrite(
+              spark, table, upsertRows, cfg, targetRecordsPerFile, nKeys))
+          }
+          // zip fails as soon as either side fails, without waiting for the other
+          try Await.result(survivorsF.zip(upsertsF), Duration.Inf)
+          catch {
+            case e: Throwable =>
+              // one side failed: cancel the peer's jobs, wait for it (two minutes at most: a
+              // peer stuck outside a Spark job must not hang the merge) and reclaim any files
+              // it already landed — the commit-conflict cleanup below never sees them
+              // otherwise. A peer still running at the deadline leaves removeOrphans candidates.
+              spark.sparkContext.cancelJobGroupAndFutureJobs(group)
+              Seq(survivorsF, upsertsF).foreach { f =>
+                try table.dropUncommitted(Await.result(f, Duration(2, "min")))
+                catch { case _: Throwable => () }
+              }
+              throw e
+          }
+        }
 
         // 4. atomic swap; on conflict (incl. a delete manifest added by a concurrent MoR merge
         //    since our plan — our rewritten files would escape its deletes), drop our orphan
@@ -350,8 +326,7 @@ object MergeInto {
             (rewritten ++ insertedFiles).map(_.records).sum)
         } catch {
           case e: table.CommitConflictException =>
-            (rewritten ++ insertedFiles).foreach(f =>
-              java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(table.absolutePath(f))))
+            table.dropUncommitted(rewritten ++ insertedFiles)
             if (attempt >= maxAttempts) throw e
         }
         } // end cow branch

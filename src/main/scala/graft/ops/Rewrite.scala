@@ -146,28 +146,6 @@ object Rewrite {
     keyed.repartition(nOut, slotCol)
   }
 
-  /** Run `body` with the scan split size lowered so this file set yields ~3 tasks per core —
-    * compaction inputs are MANY SMALL files (that is why they were claimed), and the default
-    * 128 MB split + 4 MB openCost packs ~25 of them per task: the bench backlog scanned with
-    * ~17 tasks on 32 cores, idling half the machine through the read + shuffle-write map stage
-    * (guide §2.2/§6: scan tasks ≫ cores; derived from input size + defaultParallelism, never a
-    * hard-coded constant). Only ever LOWERS the split; the session value is restored after.
-    */
-  private[ops] def withSmallFileScanParallelism[T](
-      spark: SparkSession, files: Seq[FileMeta])(body: => T): T = {
-    val conf = spark.conf
-    val prev = conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    val openCost = conf.get("spark.sql.files.openCostInBytes", "4194304").toLong
-    val effective = files.map(_.bytes).sum + files.size.toLong * openCost
-    val targetTasks = 3L * math.max(1, spark.sparkContext.defaultParallelism)
-    val split = math.max(16L << 20, effective / targetTasks)
-    if (split >= prev.toLong) body
-    else {
-      conf.set("spark.sql.files.maxPartitionBytes", split.toString)
-      try body finally conf.set("spark.sql.files.maxPartitionBytes", prev)
-    }
-  }
-
   /** Compact+re-cluster an explicit file set into right-sized curve-sorted files and commit.
     * Copy-on-write: the input rows are rewritten byte-identically (same doc_id→tokens mapping),
     * only layout changes.
@@ -193,10 +171,9 @@ object Rewrite {
       // flavor) — on conflict we re-read and re-apply the newer deletes.
       val snap = table.currentSnapshot()
       val total = files.map(_.records).sum
-      val added = withSmallFileScanParallelism(spark, files) {
-        val df = SeqIO.readWithDeletes(spark, table, snap, files)
-        clusteredWrite(spark, table, df, cfg, targetRecordsPerFile, total, hilbert)
-      }
+      // compaction inputs are many small files (that is why they were claimed): spread them
+      val df = SeqIO.readWithDeletes(spark, table, snap, files, shape = SeqIO.ScanShape.SmallFiles)
+      val added = clusteredWrite(spark, table, df, cfg, targetRecordsPerFile, total, hilbert)
       try {
         return table.commit("compact", added, files.map(_.path).toSet,
           summary ++ Map("records" -> total.toString),
@@ -205,8 +182,7 @@ object Rewrite {
             if (distributedCommit) Some(SeqIO.distributedManifestEdit(spark, table)) else None)
       } catch {
         case e: table.CommitConflictException =>
-          added.foreach(f => java.nio.file.Files.deleteIfExists(
-            java.nio.file.Paths.get(table.absolutePath(f))))
+          table.dropUncommitted(added)
           if (attempt >= maxAttempts) throw e
       }
     }

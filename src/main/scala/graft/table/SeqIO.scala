@@ -2,6 +2,7 @@ package graft.table
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -147,11 +148,7 @@ object SeqIO {
           docBloom = Some(DocBloom.encode(s.docBloom)))
       }
     } catch { case e: Throwable => moved.foreach(Files.deleteIfExists(_)); throw e }
-    finally if (Files.exists(tmp)) { // _SUCCESS, checksums, an aborted job's remnants
-      val walk = Files.walk(tmp)
-      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
+    finally deleteTree(tmp) // _SUCCESS, checksums, an aborted job's remnants
   }
 
   /** Read an explicit set of data files under `schema` (default: the base schema). Files
@@ -162,29 +159,64 @@ object SeqIO {
     * null-fill, and the first physically-present one wins per file. The per-file winner is
     * decided by which twin column the file carries, so a legitimately-NULL value in a new-name
     * file cannot fall through to an old-name value: the old name isn't IN that file.
+    * Nothing is listed or stat'ed ([[scanParquet]]: `FileMeta.bytes` is the size recorded at
+    * write time); a data file missing on disk fails the query when it runs, naming the file.
     */
   def readFiles(spark: SparkSession, table: SeqTable, metas: Seq[FileMeta],
-      schema: StructType = SeqSchema.schema): DataFrame = {
+      schema: StructType = SeqSchema.schema, shape: ScanShape = ScanShape.Default): DataFrame = {
     if (metas.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     // logical == physical and no rename history → plain pruned scan, no projection layer
     val mapped = schema.fields.exists(f =>
       SeqSchema.formerNames(f).nonEmpty || SeqSchema.physicalName(f) != f.name)
-    if (!mapped) spark.read.schema(schema).parquet(metas.map(table.absolutePath): _*)
-    else {
-      // request each field under its PHYSICAL name plus every former physical name; a re-added
-      // column's dead-generation twin (the plain old name in pre-drop files) is never in this
-      // set, so its stale values are unreachable by construction
-      val physical = StructType(schema.fields.flatMap { f =>
-        StructField(SeqSchema.physicalName(f), f.dataType, nullable = true) +:
-          SeqSchema.formerNames(f).map(n => StructField(n, f.dataType, nullable = true))
-      })
-      spark.read.schema(physical).parquet(metas.map(table.absolutePath): _*)
-        .select(schema.fields.map { f =>
-          val chain = (SeqSchema.physicalName(f) +: SeqSchema.formerNames(f)).map(col)
-          (if (chain.size > 1) coalesce(chain: _*) else chain.head).as(f.name)
-        }.toSeq: _*)
+    // request each field under its PHYSICAL name plus every former physical name; a re-added
+    // column's dead-generation twin (the plain old name in pre-drop files) is never in this
+    // set, so its stale values are unreachable by construction
+    val physical = if (!mapped) schema else StructType(schema.fields.flatMap { f =>
+      StructField(SeqSchema.physicalName(f), f.dataType, nullable = true) +:
+        SeqSchema.formerNames(f).map(n => StructField(n, f.dataType, nullable = true))
+    })
+    val scan = scanParquet(spark, metas.map(m => table.absolutePath(m) -> m.bytes), physical, shape)
+    if (!mapped) scan
+    else scan.select(schema.fields.map { f =>
+      val chain = (SeqSchema.physicalName(f) +: SeqSchema.formerNames(f)).map(col)
+      (if (chain.size > 1) coalesce(chain: _*) else chain.head).as(f.name)
+    }.toSeq: _*)
+  }
+
+  /** How a scan splits its file set into tasks ([[scanParquet]] decides the split). */
+  private[graft] sealed trait ScanShape
+  private[graft] object ScanShape {
+    /** The session's split: query reads. */
+    case object Default extends ScanShape
+    /** ~3 tasks per core over a backlog of small files (compaction, delete materialization):
+      * the default 128 MB split + 4 MB open cost packs ~25 of them per task — the bench backlog
+      * scanned with ~17 tasks on 32 cores, idling half the machine through the map stage. */
+    case object SmallFiles extends ScanShape
+    /** One file per task: MERGE's COW survivors, so each output file is a subset of one input
+      * file and its min/max stats stay tight. A file larger than the split still splits. */
+    case object FilePerTask extends ScanShape
+  }
+
+  /** The one scan of graft's own parquet files, data files and manifests alike, from known
+    * (absolute path, bytes) pairs ([[GraftSqlBridge.knownFilesParquet]]), and the one place that
+    * decides how a file set splits into tasks. The session conf is never written. */
+  private def scanParquet(spark: SparkSession, files: Seq[(String, Long)], schema: StructType,
+      shape: ScanShape): DataFrame = {
+    def bytes(key: String) = JavaUtils.byteStringAsBytes(spark.conf.get(s"spark.sql.files.$key"))
+    val (maxSplit, openCost) = (bytes("maxPartitionBytes"), bytes("openCostInBytes"))
+    val splitConf: Map[String, String] = shape match {
+      case ScanShape.Default => Map.empty
+      case ScanShape.SmallFiles =>
+        // derived from the input, never a constant, and it only ever lowers the split
+        val effective = files.map(_._2).sum + files.size.toLong * openCost
+        val targetTasks = 3L * math.max(1, spark.sparkContext.defaultParallelism)
+        val split = math.max(16L << 20, effective / targetTasks)
+        if (split >= maxSplit) Map.empty
+        else Map("spark.sql.files.maxPartitionBytes" -> split.toString)
+      case ScanShape.FilePerTask => Map("spark.sql.files.openCostInBytes" -> maxSplit.toString)
     }
+    GraftSqlBridge.knownFilesParquet(spark, files, schema, splitConf)
   }
 
   /** Broadcast ceiling for the delete-key side of the MoR anti-join; larger delete sets fall back
@@ -236,11 +268,13 @@ object SeqIO {
     * no deletes.
     *
     * `keepPos` retains the scan position columns `_fn` (file basename) and `_pos`
-    * (`_metadata.row_index`) in the output — the DV writers' victim scans need them.
+    * (`_metadata.row_index`) in the output — the DV writers' victim scans need them. `shape`
+    * splits the data-file scan ([[ScanShape]]).
     */
   def readWithDeletes(spark: SparkSession, table: SeqTable, snap: Snapshot,
       metas: Seq[FileMeta], maxBroadcastBytes: Long = DeleteBroadcastMaxBytes,
-      schema: StructType = null, keepPos: Boolean = false): DataFrame = {
+      schema: StructType = null, keepPos: Boolean = false,
+      shape: ScanShape = ScanShape.Default): DataFrame = {
     val sch = Option(schema).getOrElse(table.schemaOf(snap)) // default: the snapshot's schema
     if (metas.isEmpty) { // a fully-pruned scan still owes keepPos callers the position columns
       val base = readFiles(spark, table, Nil, sch)
@@ -249,27 +283,35 @@ object SeqIO {
           .withColumn("_pos", lit(null).cast("long"))
     }
     if (snap.deleteManifests.isEmpty && !keepPos)
-      return readFiles(spark, table, metas, sch)
+      return readFiles(spark, table, metas, sch, shape)
     import spark.implicits._
     val outCols =
       (sch.fieldNames.toSeq ++ (if (keepPos) Seq("_fn", "_pos") else Nil)).map(col)
-    var df = readFiles(spark, table, metas, sch)
+    var df = readFiles(spark, table, metas, sch, shape)
       .withColumn("_fn", element_at(split(col("_metadata.file_path"), "/"), -1))
       .withColumn("_pos", col("_metadata.row_index"))
+    if (keyManifestsOf(snap).nonEmpty) df = df.join(broadcast(
+      spark.createDataset(metas.map(m => (fileBasename(m.path), m.addedAt))).toDF("_fn", "_added")),
+      Seq("_fn"))
+    applyDeletes(spark, table, snap, df, maxBroadcastBytes).select(outCols: _*)
+  }
+
+  /** Hide the rows of `df` that `snap` deletes: its deletion vectors (`df` carries `_fn` and
+    * `_pos`), then an anti-join against its equality-delete keys whose sequence is above the
+    * row's file age (`df` carries `_added` when `snap` has any). */
+  private def applyDeletes(spark: SparkSession, table: SeqTable, snap: Snapshot, df: DataFrame,
+      maxBroadcastBytes: Long): DataFrame = {
     val dvMs = dvManifestsOf(snap)
-    if (dvMs.nonEmpty) df = applyDvFilter(spark, table, dvMs, df, maxBroadcastBytes)
+    val visible = if (dvMs.isEmpty) df else applyDvFilter(spark, table, dvMs, df, maxBroadcastBytes)
     val keyMs = keyManifestsOf(snap)
-    if (keyMs.nonEmpty) {
+    if (keyMs.isEmpty) visible
+    else {
       val dels0 = deletesDF(spark, table, snap)
       val delBytes = keyMs.map(m => Files.size(Paths.get(table.deleteManifestPath(m)))).sum
       val dels = if (delBytes <= maxBroadcastBytes) broadcast(dels0) else dels0
-      val ages = broadcast(
-        spark.createDataset(metas.map(m => (fileBasename(m.path), m.addedAt))).toDF("_fn", "_added"))
-      df = df.join(ages, Seq("_fn"))
-        .join(dels, col("doc_id") === col("_del_key") && col("_del_seq") > col("_added"),
-          "left_anti")
+      visible.join(dels,
+        col("doc_id") === col("_del_key") && col("_del_seq") > col("_added"), "left_anti")
     }
-    df.select(outCols: _*)
   }
 
   /** Apply the deletion vectors in `dvManifests` to `df` (which must carry `_fn` and `_pos`).
@@ -328,23 +370,12 @@ object SeqIO {
     */
   def writeDeleteManifests(spark: SparkSession, table: SeqTable, keys: DataFrame,
       seq: Long, nKeys: Long = -1L): Seq[String] = {
-    val metaDir = Paths.get(table.root, "metadata")
-    val tmp = metaDir.resolve(s".tmp-del-${java.util.UUID.randomUUID().toString.take(8)}")
     val parts0 =
       if (nKeys < 0) 1
       else math.max(1L, (nKeys + DeleteManifestKeysPerFile - 1) / DeleteManifestKeysPerFile).toInt
-    keys.toDF("value").coalesce(parts0).write.mode("overwrite").text(tmp.toString)
-    val parts = SeqTable.listDir(tmp)
-      .filter(p => p.getFileName.toString.startsWith("part-") && Files.size(p) > 0)
-      .sortBy(_.getFileName.toString)
-    val names = parts.zipWithIndex.map { case (p, i) =>
-      val name = s"delete-$seq-${java.util.UUID.randomUUID().toString.take(8)}$i.keys"
-      Files.move(p, metaDir.resolve(name))
-      name
-    }
-    SeqTable.listDir(tmp).foreach(Files.deleteIfExists(_))
-    Files.deleteIfExists(tmp)
-    names
+    publishParts(table,
+      keys.toDF("value").coalesce(parts0).write.mode("overwrite").text(_))(i =>
+      s"delete-$seq-${java.util.UUID.randomUUID().toString.take(8)}$i.keys")
   }
 
   /** Distributed deletion-vector manifest write: `victims` is (file basename, row ordinal) —
@@ -367,21 +398,10 @@ object SeqIO {
     try {
       val nLines = lines.count()
       if (nLines == 0) return Nil
-      val metaDir = Paths.get(table.root, "metadata")
-      val tmp = metaDir.resolve(s".tmp-dv-${java.util.UUID.randomUUID().toString.take(8)}")
       val parts0 = math.max(1L, nLines / 100000L).toInt // ~100k files' bitmaps per manifest
-      lines.coalesce(parts0).write.mode("overwrite").text(tmp.toString)
-      val parts = SeqTable.listDir(tmp)
-        .filter(p => p.getFileName.toString.startsWith("part-") && Files.size(p) > 0)
-        .sortBy(_.getFileName.toString)
-      val names = parts.zipWithIndex.map { case (p, i) =>
-        val name = s"delete-$seq-${java.util.UUID.randomUUID().toString.take(8)}$i.dv"
-        Files.move(p, metaDir.resolve(name))
-        name
-      }
-      SeqTable.listDir(tmp).foreach(Files.deleteIfExists(_))
-      Files.deleteIfExists(tmp)
-      names
+      publishParts(table,
+        lines.coalesce(parts0).write.mode("overwrite").text(_))(i =>
+        s"delete-$seq-${java.util.UUID.randomUUID().toString.take(8)}$i.dv")
     } finally { lines.unpersist(); () }
   }
 
@@ -390,16 +410,15 @@ object SeqIO {
     * construct the relation (~1 GB at 10^7 files — fine), the ~13 KB/file docBloom payloads
     * must not (~130 GB — the funnel every distributed metadata path exists to avoid).
     */
-  def read(spark: SparkSession, table: SeqTable): DataFrame = {
-    val snap = table.currentSnapshot()
+  def read(spark: SparkSession, table: SeqTable): DataFrame =
+    readSnapshot(spark, table, table.currentSnapshot())
+
+  private def readSnapshot(spark: SparkSession, table: SeqTable, snap: Snapshot): DataFrame =
     readWithDeletes(spark, table, snap, table.liveFilesNarrow(snap))
-  }
 
   /** Full read at a branch head — the audit view of the whole unpublished chain. */
-  def readBranch(spark: SparkSession, table: SeqTable, name: String): DataFrame = {
-    val snap = table.branchHead(name)
-    readWithDeletes(spark, table, snap, table.liveFilesNarrow(snap))
-  }
+  def readBranch(spark: SparkSession, table: SeqTable, name: String): DataFrame =
+    readSnapshot(spark, table, table.branchHead(name))
 
   /** AUDIT read of a staged (write-audit-publish) commit: the staged batch's rows in isolation —
     * quality gates / dedup checks run here BEFORE the batch becomes visible to anyone.
@@ -412,10 +431,8 @@ object SeqIO {
     * delete-manifest set — a later MoR delete does not leak backwards). Readers of expired
     * versions fail on the missing snapshot file, same as Iceberg.
     */
-  def readAt(spark: SparkSession, table: SeqTable, version: Long): DataFrame = {
-    val snap = table.snapshot(version)
-    readWithDeletes(spark, table, snap, table.liveFilesNarrow(snap))
-  }
+  def readAt(spark: SparkSession, table: SeqTable, version: Long): DataFrame =
+    readSnapshot(spark, table, table.snapshot(version))
 
   /** Snapshot operations whose added files are NEW rows (never rewrites of existing rows) —
     * the only commits an incremental append scan surfaces. Compaction/merge/rollback commits
@@ -498,32 +515,64 @@ object SeqIO {
       .withColumn("docBloom", lit(null).cast("string")).as[FileMeta]
   }
 
+  /** The `candidates` whose doc_id Bloom may hold one of `keys`, probed ON EXECUTORS against
+    * their full-width entries in `snap` — no docBloom byte reaches the driver, and the result
+    * comes back Bloom-stripped (the 10^7-file refinement of MERGE, lookups, delete
+    * materialization and the changelog). */
+  private[graft] def bloomCandidates(spark: SparkSession, table: SeqTable, snap: Snapshot,
+      candidates: Seq[FileMeta], keys: Array[String]): Seq[FileMeta] = {
+    import spark.implicits._
+    val paths = spark.createDataset(candidates.map(_.path)).toDF("path")
+    val ka = spark.sparkContext.broadcast(keys)
+    fileMetaDSOf(spark, table, snap).join(broadcast(paths), Seq("path"), "left_semi")
+      .as[FileMeta].filter(f => DocBloom.mayContainAny(f, ka.value))
+      .map(_.copy(docBloom = None)).collect().toSeq
+  }
+
   /** Executor-side scan of a set of manifests, column-pruned to `schema` — by default just the
-    * `path` column, all the expiry diff and the membership checks need. */
+    * `path` column, all the expiry diff and the membership checks need. One `Files.size` per
+    * manifest, no listing; a missing manifest fails here, naming it. */
   private def scanManifests(spark: SparkSession, table: SeqTable, names: Seq[String],
       schema: StructType = StructType(Seq(StructField("path", StringType)))): DataFrame = {
     names.foreach(ManifestCodec.requireParquet)
-    spark.read.schema(schema).parquet(names.map(table.metaDirPath.resolve(_).toString): _*)
+    val files = names.map { n =>
+      val p = table.metaDirPath.resolve(n)
+      p.toString -> Files.size(p)
+    }
+    scanParquet(spark, files, schema, ScanShape.Default)
   }
 
   /** Writes `df` as parquet part files and moves each into metadata/ as one manifest (the one
     * encoding: [[ManifestCodec]] reads them back on the driver). */
-  private def writeManifestParts(table: SeqTable, df: DataFrame): Seq[String] = {
-    val tmp = Files.createTempDirectory(table.metaDirPath, ".tmp-manifest")
+  private def writeManifestParts(table: SeqTable, df: DataFrame): Seq[String] =
+    publishParts(table, df.write.mode("overwrite").parquet(_))(_ =>
+      s"manifest-${java.util.UUID.randomUUID()}.parquet")
+
+  /** The one way part files reach metadata/: `write` fills a fresh tmp directory there, each
+    * non-empty part moves into metadata/ as `name(i)`, and the tmp directory is always deleted —
+    * a failed or cancelled write (MERGE's peer cancel) leaves no `.tmp-*` that `removeOrphans`
+    * would never reclaim. */
+  private def publishParts(table: SeqTable, write: String => Unit)(
+      name: Int => String): Seq[String] = {
+    val tmp = Files.createTempDirectory(table.metaDirPath, ".tmp-parts-")
     try {
-      df.write.mode("overwrite").parquet(tmp.toString)
+      write(tmp.toString)
       SeqTable.listDir(tmp)
-        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .filter(p => p.getFileName.toString.startsWith("part-") && Files.size(p) > 0)
         .sortBy(_.getFileName.toString)
-        .map { p =>
-          val n = s"manifest-${java.util.UUID.randomUUID()}.parquet"
+        .zipWithIndex.map { case (p, i) =>
+          val n = name(i)
           Files.move(p, table.metaDirPath.resolve(n))
           n
         }
-    } finally {
-      SeqTable.listDir(tmp).foreach(Files.deleteIfExists(_))
-      Files.deleteIfExists(tmp); ()
-    }
+    } finally deleteTree(tmp)
+  }
+
+  /** Delete `dir` and everything under it, if it exists. */
+  private[graft] def deleteTree(dir: Path): Unit = if (Files.exists(dir)) {
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    finally walk.close()
   }
 
   /** Distributed manifest rewrite — the 10^7-file replacement for the driver-side
@@ -713,9 +762,7 @@ object SeqIO {
     // anti-joins restricted to the manifests each snapshot does NOT share with the other (the
     // expireSnapshotsDistributed pattern: a small commit diffs two delta manifests against a
     // path-only columnar probe scan, with the driver parsing ZERO manifest entries).
-    val useDistributed = distributedMetaFiles == 0L ||
-      Seq(sFrom, sTo).exists(
-        _.summary.get("total-files").flatMap(_.toLongOption).getOrElse(0L) > distributedMetaFiles)
+    val useDistributed = Seq(sFrom, sTo).exists(routesDistributed(_, distributedMetaFiles))
     val sharedManifests = sFrom.manifests.toSet intersect sTo.manifests.toSet
     import spark.implicits._
     val (addedFiles: Seq[FileMeta], removedFiles: Seq[FileMeta]) =
@@ -806,14 +853,9 @@ object SeqIO {
           // candidates' full-width manifest entries with one executor-side scan — the docBloom
           // payloads of non-candidates never reach the driver
           if (cand.nonEmpty && nKeys <= DocBloom.PruneMaxKeys &&
-              nKeys * cand.size <= 200_000_000L) {
-            val keys = deltaKeys0.as[String].collect()
-            val candPaths = spark.createDataset(cand.map(_.path)).toDF("path")
-            fileMetaDSOf(spark, table, sFrom, narrow = false).toDF()
-              .join(broadcast(candPaths), Seq("path"), "left_semi")
-              .as[FileMeta].collect().toSeq
-              .filter(f => DocBloom.mayContainAny(f, keys))
-          } else cand
+              nKeys * cand.size <= 200_000_000L)
+            bloomCandidates(spark, table, sFrom, cand, deltaKeys0.as[String].collect())
+          else cand
         }
       // dv candidates: carried files a delta DV targets, by exact basename
       val dvCarried: Seq[FileMeta] =
@@ -847,20 +889,8 @@ object SeqIO {
           .join(deltaKeys, col("doc_id") === col("_delta_key"), "left")
           .join(dvBnFlag, Seq("_fn"), "left")
           .filter(col("_delta_key").isNotNull || col("_dvh").isNotNull)
-        def visibleAt(snap: Snapshot): DataFrame = {
-          var v = cand
-          val dvMs = dvManifestsOf(snap)
-          if (dvMs.nonEmpty) v = applyDvFilter(spark, table, dvMs, v, maxBroadcastBytes)
-          val keyMs = keyManifestsOf(snap)
-          if (keyMs.nonEmpty) {
-            val delBytes = keyMs.map(m => Files.size(Paths.get(table.deleteManifestPath(m)))).sum
-            val dels0 = deletesDF(spark, table, snap)
-            val dels = if (delBytes <= maxBroadcastBytes) broadcast(dels0) else dels0
-            v = v.join(dels,
-              col("doc_id") === col("_del_key") && col("_del_seq") > col("_added"), "left_anti")
-          }
-          v.select(cols.map(col): _*)
-        }
+        def visibleAt(snap: Snapshot): DataFrame =
+          applyDeletes(spark, table, snap, cand, maxBroadcastBytes).select(cols.map(col): _*)
         fromSide = fromSide.unionByName(visibleAt(sFrom))
         toSide = toSide.unionByName(visibleAt(sTo))
       }
@@ -937,6 +967,12 @@ object SeqIO {
     */
   val DistributedDiffMetaFiles: Long = 100000L
 
+  /** Does `snap` hold more than `threshold` live files (or is `threshold` 0, forcing it)? Then
+    * metadata work runs on executors rather than over the driver's cached manifests. */
+  private[graft] def routesDistributed(snap: Snapshot, threshold: Long): Boolean =
+    threshold == 0L ||
+      snap.summary.get("total-files").flatMap(_.toLongOption).getOrElse(0L) > threshold
+
   final case class ScanStats(filesScanned: Int, totalFiles: Int, recordsScanned: Long)
 
   /** Stats-only file skipping on (source equality, n_tok range) — sound, never exact. */
@@ -998,26 +1034,14 @@ object SeqIO {
     val live = table.liveFilesNarrow(snap)
     val rangeCand = live.filter(f =>
       graft.ops.MergeInto.rangeMayHit(sorted, f.minDocId, f.maxDocId))
-    val useDistributed = distributedMetaFiles == 0L ||
-      snap.summary.get("total-files").flatMap(_.toLongOption).getOrElse(0L) >
-        distributedMetaFiles
+    val useDistributed = routesDistributed(snap, distributedMetaFiles)
     val selected: Seq[FileMeta] =
       if (rangeCand.isEmpty) Nil
       else if (!useDistributed)
         table.liveFiles(snap).filter(f =>
           graft.ops.MergeInto.rangeMayHit(sorted, f.minDocId, f.maxDocId) &&
             DocBloom.mayContainAny(f, sorted)).map(_.copy(docBloom = None))
-      else {
-        import spark.implicits._
-        val candPaths = spark.createDataset(rangeCand.map(_.path)).toDF("path")
-        val ka = spark.sparkContext.broadcast(sorted)
-        fileMetaDSOf(spark, table, snap)
-          .join(broadcast(candPaths), Seq("path"), "left_semi")
-          .as[FileMeta]
-          .filter(f => DocBloom.mayContainAny(f, ka.value))
-          .map(_.copy(docBloom = None))
-          .collect().toSeq
-      }
+      else bloomCandidates(spark, table, snap, rangeCand, sorted)
     val df = readWithDeletes(spark, table, snap, selected)
       .filter(col("doc_id").isInCollection(sorted))
     (df, ScanStats(selected.size, live.size, selected.map(_.records).sum))

@@ -216,8 +216,6 @@ final class SeqTable(val root: String) {
     name
   }
 
-  def deleteManifestSeq(name: String): Long = name.split("-")(1).toLong
-
   def deleteManifestPath(name: String): String = metaDir.resolve(name).toString
 
   def writeManifest(metas: Seq[FileMeta]): String = {
@@ -245,6 +243,13 @@ final class SeqTable(val root: String) {
   def liveFilesNarrow(s: Snapshot): Seq[FileMeta] = s.manifests.flatMap(readManifestNarrow)
 
   def absolutePath(meta: FileMeta): String = Paths.get(root).resolve(meta.path).toString
+
+  /** Delete what a writer landed but never committed (a lost commit race, a failed peer): data
+    * files by manifest entry, delete manifests by name. */
+  def dropUncommitted(files: Seq[FileMeta], deleteManifests: Seq[String] = Nil): Unit = {
+    files.foreach(f => Files.deleteIfExists(Paths.get(absolutePath(f))))
+    deleteManifests.foreach(n => Files.deleteIfExists(metaDir.resolve(n)))
+  }
 
   // ---------- schema evolution ----------
 

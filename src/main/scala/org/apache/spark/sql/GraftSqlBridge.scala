@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Minimal accessor for `private[sql]` Column↔Expression plumbing (Spark 4 moved Column onto
   * ColumnNode; `classic.ExpressionUtils` is the sanctioned internal bridge). Lives in the
@@ -62,6 +64,48 @@ object GraftSqlBridge {
         FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
         session.sessionState.newHadoopConfWithOptions(options), Nil, None, trackers, options)
     }
+  }
+
+  /** A parquet scan of files whose absolute paths and byte sizes the caller already knows: the
+    * relation `spark.read.schema(schema).parquet(paths)` builds (same nullable schema,
+    * `sizeInBytes` and qualified `_metadata.file_path`) minus its `InMemoryFileIndex`, which
+    * lists and stats every path again — a Spark job above 32 paths. `FilePartition` splits a
+    * scan by the conf of the relation's session only, so a non-empty `splitConf` builds the
+    * relation on a clone of `spark` that only this scan reads: the caller's conf is never
+    * written, and the query still runs on `spark`. `cloneSession` is `private[sql]`.
+    */
+  def knownFilesParquet(spark: SparkSession, files: Seq[(String, Long)], schema: StructType,
+      splitConf: Map[String, String]): DataFrame = {
+    val relationSession =
+      if (splitConf.isEmpty) spark
+      else {
+        val clone = spark.asInstanceOf[classic.SparkSession].cloneSession()
+        splitConf.foreach { case (k, v) => clone.sessionState.conf.setConfString(k, v) }
+        clone
+      }
+    val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val known = KnownFiles(files.map { case (p, bytes) =>
+      new Path(p).makeQualified(local.getUri, local.getWorkingDirectory) -> bytes })
+    spark.baseRelationToDataFrame(execution.datasources.HadoopFsRelation(known, StructType(Nil),
+      schema.asNullable, None, new execution.datasources.parquet.ParquetFileFormat,
+      Map.empty)(relationSession))
+  }
+
+  /** A `FileIndex` over fixed (qualified path, bytes) pairs: no listing, no stat (so the
+    * modification time reads 0). */
+  private final case class KnownFiles(files: Seq[(Path, Long)])
+      extends execution.datasources.FileIndex {
+    import execution.datasources.{FileStatusWithMetadata, PartitionDirectory}
+    private lazy val statuses = files.map { case (p, bytes) =>
+      FileStatusWithMetadata(new org.apache.hadoop.fs.FileStatus(bytes, false, 1, 0L, 0L, p)) }
+    def rootPaths: Seq[Path] = files.map(_._1)
+    def listFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression])
+        : Seq[PartitionDirectory] = Seq(PartitionDirectory(catalyst.InternalRow.empty, statuses))
+    def inputFiles: Array[String] = files.map(_._1.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_._2).sum
+    def partitionSchema: StructType = StructType(Nil)
+    override def toString: String = s"KnownFiles(${files.size} files)"
   }
 
   /** One recognized comparison conjunct of a predicate: `attr <op> literal`, attribute-first

@@ -21,31 +21,47 @@ object SparkTestSession {
     .config("spark.driver.host", "localhost")
     .getOrCreate()
 
-  /** Job groups of every Spark job started while `body` runs. A sentinel job in its own group
-    * runs last: the listener sees job starts in order, so once it has seen the sentinel it has
-    * seen every job `body` started.
+  /** Run `body` with `listener` registered and return once the listener has seen every event
+    * of the jobs `body` started. A sentinel job in its own group (`sentinel-…`) runs last; the
+    * bus delivers events to its listeners in order, so once a barrier listener added after
+    * `listener` has seen the sentinel start, `listener` has seen everything before it. The
+    * listener sees the sentinel job too.
     */
-  def jobGroups(body: => Unit): Seq[String] = {
+  def withListener[T](listener: SparkListener)(body: => T): T = {
     val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
     val sentinel = s"sentinel-${java.util.UUID.randomUUID()}"
+    val reached = new java.util.concurrent.CountDownLatch(1)
+    val barrier = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == sentinel))
+          reached.countDown()
+    }
     sc.addSparkListener(listener)
+    sc.addSparkListener(barrier)
     try {
-      body
+      val out = body
       sc.setJobGroup(sentinel, "listener barrier")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(20)
-      org.scalatest.Assertions.assert(seen.contains(sentinel), "listener never saw the sentinel job")
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq.filterNot(_ == sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      org.scalatest.Assertions.assert(reached.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the sentinel job")
+      out
+    } finally { sc.removeSparkListener(barrier); sc.removeSparkListener(listener) }
   }
+
+  /** A property of every Spark job started while `body` runs (the sentinel job excluded). */
+  def jobProperty(key: String)(body: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[(String, String)]
+    withListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        seen.add(prop("spark.jobGroup.id").getOrElse("") -> prop(key).getOrElse(""))
+      }
+    })(body)
+    seen.asScala.toSeq.filterNot(_._1.startsWith("sentinel-")).map(_._2)
+  }
+
+  /** Job groups of every Spark job started while `body` runs. */
+  def jobGroups(body: => Unit): Seq[String] = jobProperty("spark.jobGroup.id")(body)
 
   /** Run `body` with its Spark jobs in job group `group`. */
   def inGroup[T](group: String)(body: => T): T = {
