@@ -87,6 +87,14 @@ object SeqIO {
   /** Max distinct sources tracked per file before stats degrade to "unknown" (no source pruning). */
   val MaxSourcesTracked = 12
 
+  /** Options every graft write passes to its own Hadoop conf: `file:` paths go through
+    * [[ForkFreeLocalFileSystem]], which forks no `chmod` process and writes no `.crc` sidecar.
+    * With the cache off, the JVM-wide `FileSystem` cache never hands that class to a reader, and
+    * since the options reach only the write's own conf, no session conf is written. */
+  private val WriteFsOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   /** Write `df` (seq schema) as new data files of the table and return their manifest entries.
     * The caller controls file layout (partitioning/sort) on `df` BEFORE calling; this function only
     * materializes + collects stats. Nothing is committed here.
@@ -123,9 +131,12 @@ object SeqIO {
       // the same bytes (writebench: snappy-dict ≥3.5 s vs zstd-dict ~1.6-2.2 s per 200k-row
       // write, dictionary-encoded size identical). Every maintenance row funnels through this
       // write, so the codec is pinned here rather than left to the session default.
+      // The write's own local FS (WriteFsOptions) sets file modes with a system call, where the
+      // stock one forks three `chmod`s per data file without Hadoop's native library, and writes
+      // no `.crc` sidecar for the tmp-tree delete below to throw away.
       timed("writeFiles/write")(GraftSqlBridge.writeParquet(
         checked.select(fields.map(f => col(f.name).as(SeqSchema.physicalName(f))): _*),
-        tmp.toString, Map("compression" -> "zstd"), Seq(tracker)))
+        tmp.toString, WriteFsOptions + ("compression" -> "zstd"), Seq(tracker)))
       val written = SeqTable.listDir(tmp)
         .filter(p => p.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
         .map(p => p -> tracker.files(p.getFileName.toString))
@@ -148,7 +159,7 @@ object SeqIO {
           docBloom = Some(DocBloom.encode(s.docBloom)))
       }
     } catch { case e: Throwable => moved.foreach(Files.deleteIfExists(_)); throw e }
-    finally deleteTree(tmp) // _SUCCESS, checksums, an aborted job's remnants
+    finally deleteTree(tmp) // _SUCCESS, an aborted job's remnants
   }
 
   /** Read an explicit set of data files under `schema` (default: the base schema). Files
@@ -373,8 +384,7 @@ object SeqIO {
     val parts0 =
       if (nKeys < 0) 1
       else math.max(1L, (nKeys + DeleteManifestKeysPerFile - 1) / DeleteManifestKeysPerFile).toInt
-    publishParts(table,
-      keys.toDF("value").coalesce(parts0).write.mode("overwrite").text(_))(i =>
+    publishParts(table, keys.toDF("value").coalesce(parts0), "text")(i =>
       s"delete-$seq-${java.util.UUID.randomUUID().toString.take(8)}$i.keys")
   }
 
@@ -399,8 +409,7 @@ object SeqIO {
       val nLines = lines.count()
       if (nLines == 0) return Nil
       val parts0 = math.max(1L, nLines / 100000L).toInt // ~100k files' bitmaps per manifest
-      publishParts(table,
-        lines.coalesce(parts0).write.mode("overwrite").text(_))(i =>
+      publishParts(table, lines.toDF().coalesce(parts0), "text")(i =>
         s"delete-$seq-${java.util.UUID.randomUUID().toString.take(8)}$i.dv")
     } finally { lines.unpersist(); () }
   }
@@ -545,18 +554,19 @@ object SeqIO {
   /** Writes `df` as parquet part files and moves each into metadata/ as one manifest (the one
     * encoding: [[ManifestCodec]] reads them back on the driver). */
   private def writeManifestParts(table: SeqTable, df: DataFrame): Seq[String] =
-    publishParts(table, df.write.mode("overwrite").parquet(_))(_ =>
+    publishParts(table, df, "parquet")(_ =>
       s"manifest-${java.util.UUID.randomUUID()}.parquet")
 
-  /** The one way part files reach metadata/: `write` fills a fresh tmp directory there, each
-    * non-empty part moves into metadata/ as `name(i)`, and the tmp directory is always deleted —
-    * a failed or cancelled write (MERGE's peer cancel) leaves no `.tmp-*` that `removeOrphans`
-    * would never reclaim. */
-  private def publishParts(table: SeqTable, write: String => Unit)(
+  /** The one way part files reach metadata/: `df` is written as `format` parts into a fresh tmp
+    * directory there (through the write-only local FS of [[WriteFsOptions]]), each non-empty
+    * part moves into metadata/ as `name(i)`, and the tmp directory is always deleted — a failed
+    * or cancelled write (MERGE's peer cancel) leaves no `.tmp-*` that `removeOrphans` would
+    * never reclaim. */
+  private def publishParts(table: SeqTable, df: DataFrame, format: String)(
       name: Int => String): Seq[String] = {
     val tmp = Files.createTempDirectory(table.metaDirPath, ".tmp-parts-")
     try {
-      write(tmp.toString)
+      df.write.options(WriteFsOptions).mode("overwrite").format(format).save(tmp.toString)
       SeqTable.listDir(tmp)
         .filter(p => p.getFileName.toString.startsWith("part-") && Files.size(p) > 0)
         .sortBy(_.getFileName.toString)

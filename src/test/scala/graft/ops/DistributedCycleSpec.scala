@@ -114,7 +114,6 @@ class DistributedCycleSpec extends AnyFunSuite with TempDirs {
   test("narrow manifest scan nulls docBloom but keeps every layout stat") {
     val root = tempDir("dcyc-narrow-").toString + "/t"
     val (t, _) = SeqGen.fragmentedTable(spark, root, 1000, 8)
-    t.manifestFormat = "parquet"
     Rewrite.compactFiles(spark, t, t.liveFiles(), cfg, 400)
     val full = SeqIO.fileMetaDS(spark, t).collect().sortBy(_.path)
     val narrow = SeqIO.fileMetaDS(spark, t, narrow = true).collect().sortBy(_.path)

@@ -39,7 +39,6 @@ class PlannerPathSpec extends AnyFunSuite with TempDirs {
   test("the distributed path parses no manifest on the driver, cold and warm") {
     val root = tempDir("ppath-parses-").toString + "/t"
     val writer = SeqTable.create(root)
-    writer.manifestFormat = "parquet"
     def append(n: Long, files: Int): Unit = {
       val metas = SeqIO.writeFiles(spark, writer,
         SeqGen.table(spark, n, parts = files).repartition(files))
@@ -48,7 +47,6 @@ class PlannerPathSpec extends AnyFunSuite with TempDirs {
     }
     append(3000, 20)
     val cold = SeqTable.load(root)
-    cold.manifestFormat = "parquet"
     val full = MaintenancePlanner.planCompactionDistributed(
       spark, SeqIO.fileMetaDS(spark, cold, narrow = true), cfg, 8, 1.0, 600)
     val (inc, st) = MaintenancePlanner.planIncrementalDistributed(

@@ -79,7 +79,6 @@ class SeqTableSpec extends AnyFunSuite with TempDirs {
 
   test("commit hammer with PARQUET manifests: contention-safe, content roundtrips") {
     val t = SeqTable.create(fresh())
-    t.manifestFormat = "parquet"
     // manifest writes route through the shared SparkSession from racing commit threads
     val baseMetas = SeqIO.writeFiles(spark, t, SeqGen.table(spark, 200, parts = 2))
     t.commit("append", baseMetas, Set.empty)
@@ -155,7 +154,6 @@ class SeqTableSpec extends AnyFunSuite with TempDirs {
   test("distributed manifest rewrite: parity with live set, range-ordered parts, zero driver parses") {
     val root = fresh()
     val t = SeqTable.create(root)
-    t.manifestFormat = "parquet"
     // several appends with distinct sources / n_tok ranges → several manifests to merge
     (1 to 4).foreach { i =>
       val m = SeqIO.writeFiles(spark, t, SeqGen.table(spark, 150, parts = 2)
@@ -170,7 +168,6 @@ class SeqTableSpec extends AnyFunSuite with TempDirs {
 
     // run the rewrite on a COLD handle: the driver must parse zero manifest entries
     val t2 = SeqTable.load(root)
-    t2.manifestFormat = "parquet"
     val snap = SeqIO.rewriteManifestsDistributed(spark, t2, targetEntriesPerManifest = 3)
     assert(t2.manifestFileReads.get() === 0L,
       "distributed manifest rewrite must not parse any manifest on the driver")
@@ -248,30 +245,27 @@ class SeqTableSpec extends AnyFunSuite with TempDirs {
   }
 
   test("plain reads are bloom-free on the driver: narrow manifest projection, both carriers") {
-    Seq("parquet").foreach { fmt =>
-      val root = fresh()
-      val t = SeqTable.create(root)
-      t.manifestFormat = fmt
-      val metas = SeqIO.writeFiles(spark, t, SeqGen.table(spark, 400, parts = 2))
-      t.commit("append", metas, Set.empty)
+    val root = fresh()
+    val t = SeqTable.create(root)
+    val metas = SeqIO.writeFiles(spark, t, SeqGen.table(spark, 400, parts = 2))
+    t.commit("append", metas, Set.empty)
 
-      val cold = SeqTable.load(root)
-      assert(SeqIO.read(spark, cold).count() === 400)
-      assert(cold.manifestFileReads.get() === 0L,
-        s"[$fmt] a plain read materialized a FULL (bloom-laden) manifest on the driver")
-      assert(cold.manifestNarrowFileReads.get() ===
-        cold.currentSnapshot().manifests.size.toLong,
-        s"[$fmt] the scan list must come from narrow manifest reads")
-      // narrow projection: no bloom payloads, every stat intact (vs the full read)
-      val narrow = cold.liveFilesNarrow(cold.currentSnapshot())
-      assert(narrow.forall(_.docBloom.isEmpty))
-      assert(narrow.toSet === cold.liveFiles().map(_.copy(docBloom = None)).toSet,
-        s"[$fmt] narrow entries must carry identical stats to the full read")
-      // cache: a second read parses nothing more
-      val after = cold.manifestNarrowFileReads.get()
-      assert(SeqIO.read(spark, cold).count() === 400)
-      assert(cold.manifestNarrowFileReads.get() === after, s"[$fmt] narrow reads must cache")
-    }
+    val cold = SeqTable.load(root)
+    assert(SeqIO.read(spark, cold).count() === 400)
+    assert(cold.manifestFileReads.get() === 0L,
+      "a plain read materialized a FULL (bloom-laden) manifest on the driver")
+    assert(cold.manifestNarrowFileReads.get() ===
+      cold.currentSnapshot().manifests.size.toLong,
+      "the scan list must come from narrow manifest reads")
+    // narrow projection: no bloom payloads, every stat intact (vs the full read)
+    val narrow = cold.liveFilesNarrow(cold.currentSnapshot())
+    assert(narrow.forall(_.docBloom.isEmpty))
+    assert(narrow.toSet === cold.liveFiles().map(_.copy(docBloom = None)).toSet,
+      "narrow entries must carry identical stats to the full read")
+    // cache: a second read parses nothing more
+    val after = cold.manifestNarrowFileReads.get()
+    assert(SeqIO.read(spark, cold).count() === 400)
+    assert(cold.manifestNarrowFileReads.get() === after, "narrow reads must cache")
   }
 
   test("commit full-parses ONLY the manifests that lost files (narrow membership scan)") {

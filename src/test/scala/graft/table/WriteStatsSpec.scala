@@ -1,6 +1,13 @@
 package graft.table
 
+import java.net.URI
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{Encoder, Encoders, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -11,7 +18,7 @@ import graft.SparkTestSession
 import graft.SparkTestSession.{inGroup, jobGroups}
 import graft.TempDirs
 import graft.fixtures.SeqGen
-import graft.ops.{Constraints, Rewrite}
+import graft.ops.{Constraints, MergeInto, Rewrite}
 import graft.planner.GridConfig
 
 /** `SeqIO.writeFiles` collects each file's manifest stats inside the write tasks: one Spark job
@@ -131,6 +138,95 @@ class WriteStatsSpec extends AnyFunSuite with TempDirs {
     }
     assert(metas.size === 4)
     assert(groups.count(_ == group) === 1, s"jobs: $groups")
+  }
+
+  /** Data files through `writeFiles` (a T-frag build and a clustered rewrite), a MoR merge's
+    * delete manifest and the distributed manifest rewrite's parts, both through `publishParts`.
+    * Returns the two tables. */
+  private def fourWrites(): Seq[SeqTable] = {
+    val (frag, _) =
+      SeqGen.fragmentedTable(spark, tempDir("wstats-fork-").toString + "/t", 6000, 24)
+    val t = fresh("fork-clustered")
+    t.commit("append", Rewrite.clusteredWrite(spark, t, SeqGen.table(spark, 6000, parts = 8),
+      GridConfig(), 1000, 6000), Set.empty)
+    MergeInto.merge(spark, frag, SeqGen.changeSet(spark, 6000, changes = 200, deletes = 100),
+      GridConfig(), 1000, mor = true)
+    assert(frag.currentSnapshot().deleteManifests.nonEmpty)
+    SeqIO.rewriteManifestsDistributed(spark, frag)
+    Seq(frag, t)
+  }
+
+  /** The command line of every process this JVM starts while `body` runs (JFR's
+    * `jdk.ProcessStart`). */
+  private def processStarts(body: => Unit): Seq[String] = {
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      val dump = tempDir("wstats-jfr-").resolve("writes.jfr")
+      rec.dump(dump)
+      RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+    } finally rec.close()
+  }
+
+  test("graft writes fork no chmod process") {
+    // the stock local FS without Hadoop's native library forks `chmod` for every file and
+    // directory it creates: three per data file
+    val commands = processStarts(fourWrites())
+    val chmods = commands.filter(_.startsWith("chmod"))
+    assert(chmods.isEmpty, s"${chmods.size} chmod processes, first: ${chmods.take(2)}")
+  }
+
+  test("the write-only local FS stays inside each write") {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val fileModes = 0x1b6 & ~FsPermission.getUMask(hadoopConf).toShort // 0666 & ~umask
+    def mode(p: Path): Int = Files.getPosixFilePermissions(p).asScala
+      .map(perm => 0x100 >> perm.ordinal).sum
+    val implBefore = hadoopConf.get("fs.file.impl")
+    assert(implBefore != classOf[ForkFreeLocalFileSystem].getName)
+    def assertUntouched(): Unit = {
+      assert(hadoopConf.get("fs.file.impl") === implBefore)
+      assert(!spark.conf.getAll.keys.exists(_.startsWith("fs.file.impl")))
+      assert(FileSystem.get(new URI("file:///"), hadoopConf).isInstanceOf[LocalFileSystem])
+    }
+    def assertClean(t: SeqTable): Unit = {
+      val walk = Files.walk(Paths.get(t.root))
+      val names = try walk.iterator().asScala.map(_.getFileName.toString).toSeq
+        finally walk.close()
+      assert(!names.exists(n => n.endsWith(".crc") || n == "_SUCCESS" || n == "_temporary"),
+        names.filter(n => n.endsWith(".crc") || n.startsWith("_")).take(5).mkString(", "))
+    }
+    def assertModes(paths: Seq[Path]): Unit = {
+      assert(paths.nonEmpty)
+      paths.foreach(p => assert(mode(p) === fileModes, f"$p mode ${mode(p)}%o"))
+    }
+
+    val Seq(frag, clustered) = fourWrites()
+    assertUntouched()
+    for (t <- Seq(frag, clustered)) {
+      assertModes(t.liveFiles().map(m => Paths.get(t.absolutePath(m))))
+      assertClean(t)
+    }
+    // every manifest of `frag` is a part file now: the delete manifest and the rewrite's parts
+    val snap = frag.currentSnapshot()
+    assertModes((snap.manifests ++ snap.deleteManifests).map(frag.metaDirPath.resolve))
+
+    // two writes on two threads of one session, as MERGE's two copy-on-write sides run
+    val t = fresh("fork-threads")
+    val written = new ConcurrentLinkedQueue[FileMeta]
+    val errs = new ConcurrentLinkedQueue[Throwable]
+    val threads = (0 until 2).map(i => new Thread(() =>
+      try written.addAll(SeqIO.writeFiles(spark, t, SeqGen.table(spark, 2000, parts = 4)
+        .withColumn("doc_id", concat(col("doc_id"), lit(s"-$i")))).asJava)
+      catch { case e: Throwable => errs.add(e) }))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errs.isEmpty, s"concurrent writes failed: ${errs.peek()}")
+    assert(written.size === 8)
+    assertUntouched()
+    assertModes(written.asScala.toSeq.map(m => Paths.get(t.absolutePath(m))))
+    assertClean(t)
   }
 
   test("a failed write leaves no tmp directory, no data file and no commit") {
