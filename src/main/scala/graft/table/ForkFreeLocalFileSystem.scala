@@ -5,7 +5,7 @@ import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** The local file system graft's own writes go through ([[SeqIO.WriteFsOptions]]).
+/** The local file system graft's own writes go through (`GraftSqlBridge.WriteFsOptions`).
   *
   * Hadoop's stock `file:` system is a `ChecksumFileSystem`: each file it creates gets a `.crc`
   * sidecar that graft deletes unread with its tmp directory. Under it, without Hadoop's native

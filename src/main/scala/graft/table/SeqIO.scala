@@ -87,13 +87,16 @@ object SeqIO {
   /** Max distinct sources tracked per file before stats degrade to "unknown" (no source pruning). */
   val MaxSourcesTracked = 12
 
-  /** Options every graft write passes to its own Hadoop conf: `file:` paths go through
-    * [[ForkFreeLocalFileSystem]], which forks no `chmod` process and writes no `.crc` sidecar.
-    * With the cache off, the JVM-wide `FileSystem` cache never hands that class to a reader, and
-    * since the options reach only the write's own conf, no session conf is written. */
-  private val WriteFsOptions: Map[String, String] = Map(
-    "fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
-    "fs.file.impl.disable.cache" -> "true")
+  /** Write options of the data files of a table whose current schema has `fields`: zstd, and
+    * no parquet dictionary for `doc_id`, keyed by its physical column path so that a column
+    * under a field-ID name is covered. Document ids are unique, so parquet would build that
+    * dictionary in every file only to find it no smaller than the data and write the pages
+    * PLAIN. Every other column keeps parquet's default: the `tokens` element's dictionary does
+    * pay off on files of a few hundred rows and more (PLAIN measured 10-21% more bytes from
+    * 500 to 40 000 SeqGen rows per file). */
+  private[graft] def dataFileOptions(fields: Seq[StructField]): Map[String, String] =
+    Map("compression" -> "zstd") ++ fields.find(_.name == "doc_id").map(f =>
+      s"parquet.enable.dictionary#${SeqSchema.physicalName(f)}" -> "false")
 
   /** Write `df` (seq schema) as new data files of the table and return their manifest entries.
     * The caller controls file layout (partitioning/sort) on `df` BEFORE calling; this function only
@@ -130,13 +133,14 @@ object SeqIO {
       // engine's token-array payloads the snappy writer path measured 2-4× SLOWER than zstd for
       // the same bytes (writebench: snappy-dict ≥3.5 s vs zstd-dict ~1.6-2.2 s per 200k-row
       // write, dictionary-encoded size identical). Every maintenance row funnels through this
-      // write, so the codec is pinned here rather than left to the session default.
-      // The write's own local FS (WriteFsOptions) sets file modes with a system call, where the
-      // stock one forks three `chmod`s per data file without Hadoop's native library, and writes
-      // no `.crc` sidecar for the tmp-tree delete below to throw away.
-      timed("writeFiles/write")(GraftSqlBridge.writeParquet(
+      // write, so the codec and the dictionary choice (dataFileOptions) are pinned here rather
+      // than left to the session default.
+      // The write's own local FS (GraftSqlBridge.WriteFsOptions) sets file modes with a system
+      // call, where the stock one forks three `chmod`s per data file without Hadoop's native
+      // library, and writes no `.crc` sidecar for the tmp-tree delete below to throw away.
+      timed("writeFiles/write")(GraftSqlBridge.write(
         checked.select(fields.map(f => col(f.name).as(SeqSchema.physicalName(f))): _*),
-        tmp.toString, WriteFsOptions + ("compression" -> "zstd"), Seq(tracker)))
+        tmp.toString, "parquet", dataFileOptions(fields), Seq(tracker)))
       val written = SeqTable.listDir(tmp)
         .filter(p => p.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
         .map(p => p -> tracker.files(p.getFileName.toString))
@@ -558,15 +562,15 @@ object SeqIO {
       s"manifest-${java.util.UUID.randomUUID()}.parquet")
 
   /** The one way part files reach metadata/: `df` is written as `format` parts into a fresh tmp
-    * directory there (through the write-only local FS of [[WriteFsOptions]]), each non-empty
-    * part moves into metadata/ as `name(i)`, and the tmp directory is always deleted — a failed
-    * or cancelled write (MERGE's peer cancel) leaves no `.tmp-*` that `removeOrphans` would
-    * never reclaim. */
+    * directory there (the data files' writer, [[GraftSqlBridge.write]], with its write-only
+    * local FS), each non-empty part moves into metadata/ as `name(i)`, and the tmp directory
+    * is always deleted — a failed or cancelled write (MERGE's peer cancel) leaves no `.tmp-*`
+    * behind for `removeOrphans` to reclaim. */
   private def publishParts(table: SeqTable, df: DataFrame, format: String)(
       name: Int => String): Seq[String] = {
     val tmp = Files.createTempDirectory(table.metaDirPath, ".tmp-parts-")
     try {
-      df.write.options(WriteFsOptions).mode("overwrite").format(format).save(tmp.toString)
+      GraftSqlBridge.write(df, tmp.toString, format, Map.empty, Nil)
       SeqTable.listDir(tmp)
         .filter(p => p.getFileName.toString.startsWith("part-") && Files.size(p) > 0)
         .sortBy(_.getFileName.toString)

@@ -950,8 +950,10 @@ final class SeqTable(val root: String) {
   /** Delete data files in `data/` referenced by NO retained snapshot and older than
     * `olderThanMs` — crash leftovers: a writer that died between materializing files and its
     * commit (or lost a conflict before its cleanup ran) strands files forever; expiry can't see
-    * them because no manifest ever did. The age guard keeps in-flight writers' fresh files safe
-    * (Iceberg's RemoveOrphanFiles contract, public design). Returns deleted relative paths.
+    * them because no manifest ever did. Unreferenced manifests and the `.tmp-*` staging of a
+    * writer that died mid-write go the same way. The age guard keeps in-flight writers' fresh
+    * files safe (Iceberg's RemoveOrphanFiles contract, public design). Returns deleted relative
+    * paths (a staging directory counts as one).
     *
     * The default retention is 3 DAYS (Iceberg's default): it must exceed the longest possible
     * write-before-commit duration, or a legitimately slow writer (a 100-TB merge can materialize
@@ -969,7 +971,7 @@ final class SeqTable(val root: String) {
     val referenced = snaps.flatMap(liveFiles).map(_.path).toSet
     val dead = SeqTable.listDir(dataDir).iterator
       .filter(p => Files.isRegularFile(p))
-      .filter(p => !p.getFileName.toString.startsWith(".")) // tmp staging dirs/files excluded
+      .filter(p => !p.getFileName.toString.startsWith(".")) // tmp staging: debris below
       .map(p => Paths.get(root).relativize(p).toString -> p)
       .filter { case (rel, p) =>
         !referenced.contains(rel) &&
@@ -989,8 +991,30 @@ final class SeqTable(val root: String) {
       .filter(n => now - Files.getLastModifiedTime(metaDir.resolve(n)).toMillis >= olderThanMs)
       .toSeq
     deadManifests.foreach(uncacheManifestFile)
-    dead.map(_._1) ++ deadManifests.map(n => s"metadata/$n")
+    // crash debris: the `.tmp-*` staging of a writer that died mid-write — a data write's
+    // `data/.tmp-<batch>/`, a part write's `metadata/.tmp-parts-*/`, and the snapshot, version
+    // hint and staged-commit temp files. Same age guard, taken from the newest mtime under the
+    // entry: a live writer keeps creating files deep inside its staging directory, so it
+    // survives however old the directory itself is.
+    val debris = Seq("data" -> dataDir, "metadata" -> metaDir).flatMap { case (rel, dir) =>
+      SeqTable.listDir(dir).map(_.getFileName.toString).filter(_.startsWith(".tmp-"))
+        .filter(n => now - newestMtime(dir.resolve(n)) >= olderThanMs)
+        .map(n => s"$rel/$n")
+    }
+    debris.foreach(d => SeqIO.deleteTree(Paths.get(root).resolve(d)))
+    dead.map(_._1) ++ deadManifests.map(n => s"metadata/$n") ++ debris
   }
+
+  /** The newest modification time of `p` and everything under it; an entry that vanishes while
+    * it is walked (its writer finished) counts as new. */
+  private def newestMtime(p: Path): Long =
+    try {
+      val walk = Files.walk(p)
+      try walk.iterator().asScala.map(Files.getLastModifiedTime(_).toMillis).max
+      finally walk.close()
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => Long.MaxValue
+    }
 
   /** Merge all live manifests into one, entries sorted by (first source, minNtok) so range scans
     * touch contiguous manifest regions — the manifest-rewrite maintenance op.

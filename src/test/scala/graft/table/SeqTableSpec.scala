@@ -1,6 +1,7 @@
 package graft.table
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.TempDirs
@@ -244,6 +245,61 @@ class SeqTableSpec extends AnyFunSuite with TempDirs {
     assert(SeqIO.read(spark, t).count() === 100)
   }
 
+  test("removeOrphans reclaims aged .tmp-* debris; fresh debris and a live write's staging stay") {
+    import java.nio.file.Path
+    import java.nio.file.attribute.FileTime
+    import java.util.concurrent.TimeUnit.MINUTES
+    import org.apache.spark.sql.functions.{col, udf}
+    import SeqTableSpec.{release, started}
+    val t = SeqTable.create(fresh())
+    t.commit("append", SeqIO.writeFiles(spark, t, SeqGen.table(spark, 200, parts = 2)), Set.empty)
+    val (data, meta) = (t.dataDir, t.metaDirPath)
+    val hoursAgo = FileTime.fromMillis(System.currentTimeMillis() - 2 * 3600 * 1000L)
+    /** A staging directory as a writer leaves it, or a temp file. */
+    def debris(dir: Path, name: String, isDir: Boolean): Path = {
+      val p = dir.resolve(name)
+      if (!isDir) Files.writeString(p, "{}")
+      else Files.writeString(Files.createDirectories(p.resolve("_temporary/0/_temporary"))
+        .resolve("part-00000.parquet"), "PAR1")
+      p
+    }
+    def age(p: Path): Unit = {
+      val walk = Files.walk(p)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.setLastModifiedTime(_, hoursAgo))
+      finally walk.close()
+    }
+    val aged = Seq(debris(data, ".tmp-dead-batch", isDir = true),
+      debris(meta, ".tmp-parts-42", isDir = true), debris(meta, ".tmp-snap42.json", isDir = false),
+      debris(meta, ".tmp-hint42.txt", isDir = false),
+      debris(meta, ".tmp-staged42.json", isDir = false))
+    aged.foreach(age)
+    val young = Seq(debris(data, ".tmp-young-batch", isDir = true),
+      debris(meta, ".tmp-parts-43", isDir = true), debris(meta, ".tmp-snap43.json", isDir = false))
+
+    // a writeFiles held inside its write task, its staging directory on disk
+    val slow = udf { (n: Int) => started.countDown(); release.await(2, MINUTES); n }
+    val written = scala.concurrent.Future(SeqIO.writeFiles(spark, t,
+      SeqGen.table(spark, 100, parts = 1).withColumn("n_tok", slow(col("n_tok")))))(
+      scala.concurrent.ExecutionContext.global)
+    val removed = try {
+      assert(started.await(2, MINUTES), "the write task never started")
+      val live = SeqTable.listDir(data).filter(p => p.getFileName.toString.startsWith(".tmp-") &&
+        !(aged ++ young).contains(p))
+      assert(live.size === 1)
+      // the live staging directory itself has not changed for hours; what is inside is new
+      Files.setLastModifiedTime(live.head, hoursAgo)
+      t.removeOrphans(olderThanMs = 3600L * 1000)
+    } finally release.countDown()
+    val metas = scala.concurrent.Await.result(written, scala.concurrent.duration.Duration(2, MINUTES))
+
+    val root = java.nio.file.Paths.get(t.root)
+    assert(removed.toSet === aged.map(p => root.relativize(p).toString).toSet)
+    aged.foreach(p => assert(!Files.exists(p), p))
+    young.foreach(p => assert(Files.exists(p), p))
+    t.commit("append", metas, Set.empty)
+    assert(SeqIO.read(spark, t).count() === 300)
+  }
+
   test("plain reads are bloom-free on the driver: narrow manifest projection, both carriers") {
     val root = fresh()
     val t = SeqTable.create(root)
@@ -420,4 +476,11 @@ class SeqTableSpec extends AnyFunSuite with TempDirs {
     t.rollbackTo(v1)
     assert(contentHash(SeqIO.readAppendedBetween(spark, t, head, t.currentVersion())).isEmpty)
   }
+}
+
+object SeqTableSpec {
+  /** Hold and release a write task of the orphan-debris test (static: a task's closure is a
+    * deserialized copy, so a latch it captured would be another object). */
+  val started = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
 }

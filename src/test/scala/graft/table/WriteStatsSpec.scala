@@ -116,8 +116,8 @@ class WriteStatsSpec extends AnyFunSuite with TempDirs {
     // the tracker straight under the writer, with doc_id, n_tok and source at other ordinals
     val dir = tempDir("wstats-perm-").resolve("out")
     val tracker = new FileStatsTracker(docOrd = 4, ntokOrd = 2, srcOrd = 0)
-    GraftSqlBridge.writeParquet(df.select("source", "lang", "n_tok", "tokens", "doc_id"),
-      dir.toString, Map.empty, Seq(tracker))
+    GraftSqlBridge.write(df.select("source", "lang", "n_tok", "tokens", "doc_id"),
+      dir.toString, "parquet", Map.empty, Seq(tracker))
     val parts = SeqTable.listDir(dir).filter(_.getFileName.toString.endsWith(".parquet"))
     val actual = parts.map { p =>
       val s = tracker.files(p.getFileName.toString)
@@ -186,9 +186,13 @@ class WriteStatsSpec extends AnyFunSuite with TempDirs {
       .map(perm => 0x100 >> perm.ordinal).sum
     val implBefore = hadoopConf.get("fs.file.impl")
     assert(implBefore != classOf[ForkFreeLocalFileSystem].getName)
+    def hadoopEntries = hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    val (hadoopBefore, sqlBefore) = (hadoopEntries, spark.conf.getAll)
     def assertUntouched(): Unit = {
       assert(hadoopConf.get("fs.file.impl") === implBefore)
       assert(!spark.conf.getAll.keys.exists(_.startsWith("fs.file.impl")))
+      assert(hadoopEntries === hadoopBefore)
+      assert(spark.conf.getAll === sqlBefore)
       assert(FileSystem.get(new URI("file:///"), hadoopConf).isInstanceOf[LocalFileSystem])
     }
     def assertClean(t: SeqTable): Unit = {
