@@ -487,7 +487,7 @@ object SparkEntry {
     s"((gx >> $i) & 1) * ${1L << (2 * i)}",
     s"((gy >> $i) & 1) * ${1L << (2 * i + 1)}")).mkString(" + ")
 
-  /** Unrolled greedy top-k over a (ax, ay, score) region set — mirrors RegionKernel.greedySelect
+  /** Unrolled greedy top-k over a (ax, ay, score) region set — mirrors TopK.greedySelect
     * exactly: rank by (score desc, ax, ay); accept a region unless it overlaps an earlier pick
     * (2×2 windows overlap iff |Δax| < 2 ∧ |Δay| < 2); σ-mode accepts an overlapping region whose
     * score ≥ σ × every overlapping pick. k is small, so k chained CTEs beat a recursive CTE.

@@ -2,6 +2,7 @@ package graft.brs
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.planner.TopK
 
 /** Node geometry for continuous BRS: eps-sized cells, nodeSide×nodeSide cells per planner node.
   * Long-packed node ids; border replication to the ≤4 nodes whose anchors can cover a point —
@@ -35,11 +36,8 @@ final case class GeoGrid(minX: Double, minY: Double, eps: Double, nodeSide: Int)
   */
 object BRS {
 
-  /** Heap ceiling for per-task candidate heaps: K′ growth stops here — with fixed-winner
-    * exclusions pruning hot clusters each round, a larger heap is never needed for progress, and
-    * this is what bounds peak task memory (no more unbounded `kPrime = Int.MaxValue` round).
-    */
-  val KPrimeCap: Int = 1 << 20
+  /** Kernel rounds run by [[bestRegions]] in this JVM (one per call of its round runner). */
+  private[brs] val roundsRun = new java.util.concurrent.atomic.AtomicLong
 
   /** Quantile grid resolution for hot-node strip boundaries; also caps strips per node (an
     * ultra-hot node keeps its memory bound regardless — the kernel is O(eps-strip) resident).
@@ -94,8 +92,7 @@ object BRS {
           }.distinct.sorted.toArray // duplicate quantiles collapse (massive x-ties): fewer strips
         n -> bounds
       }
-      // key count from the REALIZED split plan (dedup can collapse strips): an overcount would
-      // keep runRound's fully-cached short-circuit from ever firing
+      // key count from the REALIZED split plan (dedup can collapse strips)
       (splits, occupiedNodes + splits.values.map(_.length.toLong).sum)
     } finally { counts.unpersist(); () }
   }
@@ -115,16 +112,17 @@ object BRS {
     * @param hotNodeBudget  nodes holding more points than this are split into x-sub-strips, each
     *                       its own task: a dense node is no longer ONE sequential task
     * @param premergeKeys   above this many (node, strip) keys, per-partition pre-merge bounds the
-    *                       driver collect at (#partitions × m) candidates (reference P7 log-tree)
+    *                       driver collect at (#partitions × K′) candidates (reference P7 log-tree)
     * @param sigma          σ-approximate mode (reference algo 8, `NstepAlgoApp.scala:25-83`): in
     *                       distinct mode, an overlapping winner is still accepted when its score
     *                       ≥ σ × every accepted region it overlaps. Fixed-winner kernel
     *                       exclusions are disabled under σ (an overlapping candidate may still be
     *                       admissible); rounds progress via K′ growth alone.
+    * @param maxRounds      ignored: the round loop ends by construction ([[TopK.solve]])
     * @return rank, center_lon, center_lat, score — the reference's output shape (S4)
-    * @note throws IllegalStateException instead of silently degrading when no greedy progress is
-    *       possible at the K′ cap (adversarial score-tie pathology) or when maxRounds is
-    *       exhausted — a loud failure, by design, not an unbounded-memory exact fallback
+    * @note throws IllegalArgumentException instead of silently degrading when no greedy progress
+    *       is possible at the K′ cap (adversarial score-tie pathology) — a loud failure, by
+    *       design, not an unbounded-memory exact fallback
     */
   def bestRegions(
       df: DataFrame,
@@ -184,19 +182,32 @@ object BRS {
       // STREAMING per-(node, strip) kernel: repartition by key + secondary sort on x, then one
       // pass with an eps-strip window — per-task memory is O(eps-strip) resident points plus a
       // K′-bounded heap, never the whole node (r01 materialized whole nodes: the reference's
-      // documented hot-node OOM). Keys whose previous round was EXHAUSTED already emitted every
-      // candidate — their results are valid at any K′ and are not re-run.
-      def runRound(kPrime: Int, m: Int, exclusions: Vector[GeoRegion],
-          cached: Map[(Long, Int), GeoNodeResult]): (Seq[GeoNodeResult], Map[(Long, Int), GeoNodeResult]) = {
-        if (cached.size >= nKeys) return (cached.values.toSeq, cached) // nothing dirty: no job
+      // documented hot-node OOM). Per-key results are DETERMINISTIC functions of (points, K′,
+      // exclusions), so a round re-runs only the keys whose inputs changed: K′ growth drops the
+      // truncated results (exhausted ones hold every candidate), and a newly fixed winner drops
+      // only keys whose squares (anchors in the node box, extending +eps) can overlap it.
+      var cache = Map.empty[(Long, Int), GeoNodeResult]
+      var lastK = 0
+      var lastExcluded = 0
+      def runRound(kPrime: Int, exclusions: Vector[GeoRegion]): Seq[GeoNodeResult] = {
+        roundsRun.incrementAndGet()
+        val won = exclusions.drop(lastExcluded)
+        if (kPrime != lastK) cache = cache.filter(_._2.exhausted)
+        if (won.nonEmpty) cache = cache.filter { case ((node, _), _) =>
+          val (ax0, ax1, ay0, ay1) = grid.anchorBox(node)
+          !won.exists(w => w.x + w.eps >= ax0 - eps && w.x <= ax1 + eps &&
+            w.y + w.eps >= ay0 - eps && w.y <= ay1 + eps)
+        }
+        lastK = kPrime
+        lastExcluded = exclusions.size
         val excl = spark.sparkContext.broadcast(exclusions)
         // skip-filter as a broadcast ANTI-JOIN on (node, strip): stays in whole-stage codegen —
         // a typed filter against the cached-key set deserialized all 8M+ replicated points per
         // round, which dwarfed the actual (few-key) recompute once rounds became incremental
         val base =
-          if (cached.isEmpty) keyed
+          if (cache.isEmpty) keyed
           else keyed.join(
-            broadcast(cached.keySet.toSeq.toDF("node", "strip")), Seq("node", "strip"),
+            broadcast(cache.keySet.toSeq.toDF("node", "strip")), Seq("node", "strip"),
             "left_anti")
         val perKey = base
           .repartition(col("node"), col("strip"))
@@ -227,83 +238,22 @@ object BRS {
           }
         if (usePremerge) {
           // reference P7 log-tree: fold per-key results into one partial per Spark partition
-          // before collecting — driver payload ≤ #partitions × m candidates, not #keys × K′.
+          // before collecting — driver payload ≤ #partitions × K′ candidates, not #keys × K′.
           // No per-key cache in this mode (per-key results never reach the driver); with many
           // small keys, recomputing a round costs less than collecting 10^6 results ever would.
-          val partials = perKey.mapPartitions(rs =>
-            Iterator.single(GeoBrsKernel.preMerge(rs.map(_._3), m)))
+          perKey.mapPartitions(rs => Iterator.single(TopK.preMerge(rs.map(_._3), kPrime)))
             .collect().toSeq
-          (partials, Map.empty)
         } else {
-          val fresh = perKey.collect().map { case (n, s, r) => (n, s) -> r }.toMap
-          val all = cached ++ fresh
-          (all.values.toSeq, all)
+          cache ++= perKey.collect().map { case (n, s, r) => (n, s) -> r }
+          cache.values.toSeq
         }
       }
 
-      // Multi-round protocol (reference NstepAlgo): each round either COMPLETES, proves a greedy
-      // PREFIX (fixed winners become kernel exclusions — hot clusters stop refilling the heap),
-      // or GROWS K′/m geometrically up to KPrimeCap. Progress argument: the next true winner is
-      // its node's best non-excluded candidate, so with the threshold test it is accepted unless
-      // a tie at the threshold hides it — and then growth makes strict progress instead.
-      // start 4× deeper than k: the merge threshold is the max truncated per-key K′th-best, so
-      // deeper emission proves MORE of the greedy prefix per round — at 2M points this cut the
-      // fixed-winner rounds (each re-sweeping the hottest node) from 7 to ~2 for the cost of a
-      // slightly larger (still tiny) per-task heap
-      var kPrime = math.max(4 * k, 16)
-      var m = math.max(kPrime, 4 * k)
-      var fixed = Vector.empty[GeoRegion]
-      var cache = Map.empty[(Long, Int), GeoNodeResult]
-      var done = false
-      var round = 0
-      // budget: every round either completes, fixes ≥1 winner (≤ k such rounds), or grows K′
-      // (≤ log4(cap) such rounds before the cap) — so this bound is unreachable except in the
-      // cap-no-progress tie pathology, and the throw below cannot fire on a merely-deep query
-      val growthRounds =
-        (math.log(KPrimeCap.toDouble / math.max(k, 4)) / math.log(4)).ceil.toInt + 1
-      val maxTotalRounds = maxRounds + k + growthRounds
-      while (!done && round < maxTotalRounds) {
-        round += 1
-        val t0 = System.nanoTime()
-        val (results, newCache) =
-          runRound(kPrime, m, if (distinct && sigma.isEmpty) fixed else Vector.empty, cache)
-        val (acc, complete) = GeoBrsKernel.mergeTopK(
-          results, k - fixed.size, overlapAllowed = !distinct, seed = fixed, sigma = sigma)
-        if (sys.env.contains("GRAFT_BRS_DEBUG"))
-          println(f"[brs-round] round=$round kPrime=$kPrime accepted=${acc.size} " +
-            f"fixed=${fixed.size + acc.size} complete=$complete premerge=$usePremerge " +
-            f"keys=$nKeys cached=${cache.size} sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-        fixed = fixed ++ acc
-        done = complete || fixed.size >= k
-        // Per-key results are DETERMINISTIC functions of (points, K′, exclusion set), so a round
-        // invalidates only what it changed — the fixed-winner rounds stop being full recomputes:
-        //  - K′ growth invalidates truncated results (exhausted ones emitted everything, valid
-        //    at any K′);
-        //  - a newly fixed winner invalidates only keys whose candidate squares can overlap it
-        //    (anchors live in the node box; squares extend +eps) — every other key's kernel
-        //    would produce byte-identical output under the grown exclusion list.
-        if (!usePremerge) {
-          cache = newCache
-          if (!done) {
-            if (acc.isEmpty) cache = cache.filter(_._2.exhausted)
-            else if (distinct && sigma.isEmpty) cache = cache.filter { case ((node, _), _) =>
-              val (ax0, ax1, ay0, ay1) = grid.anchorBox(node)
-              !acc.exists(w => w.x + w.eps >= ax0 - eps && w.x <= ax1 + eps &&
-                w.y + w.eps >= ay0 - eps && w.y <= ay1 + eps)
-            }
-          }
-        }
-        if (!done && acc.isEmpty) {
-          if (kPrime >= KPrimeCap)
-            throw new IllegalStateException(
-              s"BRS: no progress at K'=$kPrime (cap $KPrimeCap), ${fixed.size}/$k winners after $round rounds")
-          kPrime = math.min(kPrime * 4, KPrimeCap)
-          m = math.min(m * 4, KPrimeCap)
-        }
-      }
-      if (!done)
-        throw new IllegalStateException(
-          s"BRS: ${fixed.size}/$k winners after $maxTotalRounds rounds (raise maxRounds)")
+      // strict distinct mode hands fixed winners to the kernels as exclusions — hot clusters stop
+      // refilling the heap. Start 4× deeper than k: deeper emission proves MORE of the greedy
+      // prefix per round — at 2M points this cut the fixed-winner rounds from 7 to ~2.
+      val fixed = TopK.solve[GeoRegion](k, overlapAllowed = !distinct, sigma,
+        kPrime0 = math.max(4 * k, 16), excludeFixed = distinct && sigma.isEmpty)(runRound)
 
       fixed.zipWithIndex.map { case (r, i) =>
         (i + 1, r.centerX, r.centerY, r.score)

@@ -1,5 +1,7 @@
 package graft.brs
 
+import graft.planner.{TopK, TopKRegion}
+
 /** Continuous-coordinate Best Region Search — the reference's user-facing query: the k best
   * eps × eps axis-aligned squares maximizing the (monotone, additive) total weight of covered
   * points, optionally pairwise non-overlapping
@@ -14,27 +16,19 @@ package graft.brs
 final case class Pt(x: Double, y: Double, w: Double)
 
 /** An eps×eps candidate anchored (lower-left) at (x, y). */
-final case class GeoRegion(x: Double, y: Double, eps: Double, score: Double) {
+final case class GeoRegion(x: Double, y: Double, eps: Double, score: Double)
+    extends TopKRegion[GeoRegion] {
   def overlaps(o: GeoRegion): Boolean =
     x < o.x + o.eps && o.x < x + eps && y < o.y + o.eps && o.y < y + eps
+  def compareAnchor(o: GeoRegion): Int = {
+    val c = java.lang.Double.compare(x, o.x)
+    if (c != 0) c else java.lang.Double.compare(y, o.y)
+  }
   def centerX: Double = x + eps / 2
   def centerY: Double = y + eps / 2
 }
 
-final case class GeoNodeResult(
-    candidates: Vector[GeoRegion], exhausted: Boolean, minEmitted: Double,
-    peakWindow: Int = 0) // max points resident in the streaming kernel's eps-strip window
-
-object GeoRegionOrdering extends Ordering[GeoRegion] {
-  def compare(a: GeoRegion, b: GeoRegion): Int = {
-    val c = java.lang.Double.compare(b.score, a.score)
-    if (c != 0) c
-    else {
-      val cx = java.lang.Double.compare(a.x, b.x)
-      if (cx != 0) cx else java.lang.Double.compare(a.y, b.y)
-    }
-  }
-}
+object GeoRegionOrdering extends TopK.Order[GeoRegion]
 
 object GeoBrsKernel {
 
@@ -44,7 +38,6 @@ object GeoBrsKernel {
   def localTopK(
       pts: Seq[Pt], eps: Double, kPrime: Int,
       ax0: Double, ax1: Double, ay0: Double, ay1: Double): GeoNodeResult = {
-    if (pts.isEmpty) return GeoNodeResult(Vector.empty, exhausted = true, Double.PositiveInfinity)
     val byX = pts.sortBy(_.x).toArray
     val out = scala.collection.mutable.ArrayBuffer.empty[GeoRegion]
     var i = 0
@@ -82,12 +75,8 @@ object GeoBrsKernel {
       }
       i += 1
     }
-    val sorted = out.sorted(GeoRegionOrdering)
     // candidates can repeat (same anchor from duplicate coords) — dedupe exact duplicates
-    val dedup = sorted.distinct
-    val emitted = dedup.take(kPrime).toVector
-    GeoNodeResult(emitted, dedup.size <= kPrime,
-      if (emitted.isEmpty) Double.PositiveInfinity else emitted.last.score)
+    TopK.emit(out.sorted(GeoRegionOrdering).distinct, kPrime)
   }
 
   /** Memory-bounded exact kernel over an x-SORTED point stream: resident state is only the
@@ -121,7 +110,7 @@ object GeoBrsKernel {
     var dropped = false
     def offer(r: GeoRegion): Unit =
       if (exclusions.nonEmpty && exclusions.exists(_.overlaps(r))) () // provably unacceptable
-      else if (kPrime == Int.MaxValue || heap.size < kPrime) heap.enqueue(r)
+      else if (heap.size < kPrime) heap.enqueue(r)
       else if (GeoRegionOrdering.compare(r, heap.head) < 0) { heap.dequeue(); heap.enqueue(r); dropped = true }
       else dropped = true
 
@@ -129,7 +118,6 @@ object GeoBrsKernel {
     val window = new scala.collection.mutable.ArrayDeque[Pt]() // x ∈ [ax, ax+eps], arrival order
     var peak = 0
     var lastAx = Double.NaN
-    var any = false
     // running POSITIVE-PART strip weight (Kahan-compensated): an upper bound on ANY candidate
     // anchored at ax even with mixed-sign weights (a candidate covers a subset of the strip, and
     // dropping its negative members only raises the sum) — the reference's border upper-bound
@@ -190,11 +178,9 @@ object GeoBrsKernel {
         val p = it.next(); window.append(p); stripAdd(posPart(p.w)); insertSorted(p)
       }
       peak = math.max(peak, window.size)
-      any = true
-      val heapFull = kPrime != Int.MaxValue && heap.size >= kPrime
       val bound = stripSum * (1 + 1e-9) + 1e-9 + stripChurn * 4e-16
       if (ownsAnchorX(ax) && (lastAx.isNaN || ax != lastAx) &&
-          heapFull && bound < heap.head.score) {
+          heap.size >= kPrime && bound < heap.head.score) {
         if (stripSum > 0) dropped = true // a positive-score candidate may exist here; we skipped it
       } else if (ownsAnchorX(ax) && (lastAx.isNaN || ax != lastAx)) {
         // edge-defining ys for the canonical-anchor check: ys of window points with x == ax
@@ -228,85 +214,18 @@ object GeoBrsKernel {
         val p = window.removeHead(); stripAdd(-posPart(p.w)); removeSorted(p)
       }
     }
-    if (!any) return GeoNodeResult(Vector.empty, exhausted = true, Double.PositiveInfinity)
     val emitted = heap.dequeueAll.reverse.toVector // worst-first queue → best-first list
     GeoNodeResult(emitted, exhausted = !dropped,
       if (emitted.isEmpty) Double.PositiveInfinity else emitted.last.score, peak)
   }
 
-  /** Greedy winner selection. `seed` = already-fixed winners from earlier rounds: they block
-    * overlapping candidates (distinct mode) and re-emitted duplicates of themselves, but are not
-    * re-emitted; up to `k` NEW winners are returned.
-    *
-    * Duplicate suppression matches on the ANCHOR (x, y), not the whole region: anchors are
-    * copied point coordinates and bit-exact across rounds, while a recomputed SCORE can drift in
-    * the last ulp (floating-point sums accumulate in shuffle order) — full-equality matching
-    * would let a fixed winner re-enter in overlap-allowed mode.
-    */
-  /** @param sigma σ-approximate mode (reference algo 8 on raw points, `NstepAlgoApp.scala:25-83`
-    *              dispatched at `Run.scala:127-138`): an overlapping candidate is still accepted
-    *              when its score ≥ σ × EVERY accepted region it overlaps — the continuous twin of
-    *              [[graft.planner.RegionKernel.greedySelect]]'s sigma. None = strict non-overlap.
-    */
-  def greedySelect(sortedDesc: Iterator[GeoRegion], k: Int, overlapAllowed: Boolean,
-      seed: Seq[GeoRegion] = Nil, sigma: Option[Double] = None): Vector[GeoRegion] = {
-    val accepted = scala.collection.mutable.ArrayBuffer.empty[GeoRegion]
-    val res = Vector.newBuilder[GeoRegion]
-    var n = 0
-    while (n < k && sortedDesc.hasNext) {
-      val r = sortedDesc.next()
-      // anchor-identity duplicate suppression vs fixed winners is ABSOLUTE (σ must not readmit a
-      // winner's own re-emission: it trivially satisfies its own σ condition)
-      val dup = seed.exists(s => s.x == r.x && s.y == r.y)
-      val ok = !dup && (overlapAllowed || {
-        val overlapping = (seed.iterator ++ accepted.iterator).filter(_.overlaps(r)).toSeq
-        overlapping.isEmpty || sigma.exists(sg => overlapping.forall(a => r.score >= sg * a.score))
-      })
-      if (ok) { res += r; accepted += r; n += 1 }
-    }
-    res.result()
-  }
-
-  /** maxMin-thresholded merge — same argument as the discrete planner's. */
+  /** [[TopK.mergeTopK]] over continuous node results. */
   def mergeTopK(perNode: Seq[GeoNodeResult], k: Int, overlapAllowed: Boolean,
-      seed: Vector[GeoRegion] = Vector.empty,
-      sigma: Option[Double] = None): (Vector[GeoRegion], Boolean) = {
-    val truncatedAt = perNode.iterator.filter(n => !n.exhausted).map(_.minEmitted).toSeq
-    val union = perNode.flatMap(_.candidates).sorted(GeoRegionOrdering).distinct
-    val safe =
-      if (truncatedAt.isEmpty) union
-      else union.takeWhile(_.score > truncatedAt.max)
-    val accepted = greedySelect(safe.iterator, k, overlapAllowed, seed, sigma)
-    (accepted, accepted.size >= k || truncatedAt.isEmpty)
-  }
+      sigma: Option[Double] = None): (Vector[GeoRegion], Boolean) =
+    TopK.mergeTopK(perNode, k, overlapAllowed, sigma = sigma)
 
-  /** Executor-side partial merge (the reference's log-tree reduce, P7 — `NstepAlgo.scala:31-40`):
-    * fold many per-node results into ONE, keeping only the top-`m` candidates. The partial stays
-    * inside the [[mergeTopK]] threshold algebra by presenting itself as a single node result:
-    * dropping a candidate is indistinguishable from a node truncating at that score, so
-    * `minEmitted = max(children's truncation thresholds, best dropped score)` and the driver's
-    * completeness test is unchanged — if the prune was too aggressive, the merge reports
-    * incomplete and the round loop grows `m`. Bounds the driver collect at
-    * (#partitions × m) candidates instead of (#nodes × K′).
-    */
-  def preMerge(results: Iterator[GeoNodeResult], m: Int): GeoNodeResult = {
-    val all = scala.collection.mutable.ArrayBuffer.empty[GeoRegion]
-    var exhaustedAll = true
-    var childThreshold = Double.NegativeInfinity
-    var peak = 0
-    results.foreach { r =>
-      all ++= r.candidates
-      peak = math.max(peak, r.peakWindow)
-      if (!r.exhausted) { exhaustedAll = false; childThreshold = math.max(childThreshold, r.minEmitted) }
-    }
-    val sorted = all.sorted(GeoRegionOrdering).distinct
-    val kept = sorted.take(m).toVector
-    val droppedBest = if (sorted.size > m) sorted(m).score else Double.NegativeInfinity
-    val truncated = !exhaustedAll || sorted.size > m
-    GeoNodeResult(kept, exhausted = !truncated,
-      minEmitted = if (truncated) math.max(childThreshold, droppedBest) else Double.PositiveInfinity,
-      peakWindow = peak)
-  }
+  /** [[TopK.preMerge]] over continuous node results. */
+  def preMerge(results: Iterator[GeoNodeResult], m: Int): GeoNodeResult = TopK.preMerge(results, m)
 
   /** Test oracle: enumerate the canonical anchor set and greedy-select.
     *
@@ -327,7 +246,7 @@ object GeoBrsKernel {
       s = covered.map(_.w).sum
       if s > 0
     } yield GeoRegion(xi, yj, eps, s)
-    greedySelect(regions.sorted(GeoRegionOrdering).distinct.iterator, k, overlapAllowed,
+    TopK.greedySelect(regions.sorted(GeoRegionOrdering).distinct.iterator, k, overlapAllowed,
       sigma = sigma)
   }
 }

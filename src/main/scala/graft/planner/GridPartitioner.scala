@@ -63,40 +63,12 @@ final case class GridConfig(
   }
 }
 
-/** Multi-round exact distributed top-k over per-node kernels — the driver loop of the reference's
-  * NstepAlgo (`/root/reference/src/main/scala/SDL/distrib/NstepAlgo.scala:23-57`), with the K′-growth
-  * retry replacing its feedback rounds. Pure Scala over an abstract "run the kernels" function so the
-  * same loop is unit-testable without Spark and Spark-backed via [[IncrementalTopK]].
+/** [[TopK.solve]] for runners that take only K′ (the discrete kernels apply no exclusions), so
+  * every incomplete round grows K′.
   */
 object DistributedTopK {
-
-  /** @param runRound  given K′, returns per-node kernel results (Spark job or local stub) */
-  def solve(
-      runRound: Int => Seq[NodeResult],
-      k: Int,
-      overlapAllowed: Boolean,
-      kPrime0: Int = 0,
-      maxRounds: Int = 8,
-      sigma: Option[Double] = None): Vector[Region] = {
-    var kPrime = if (kPrime0 > 0) kPrime0 else math.max(k, 4)
-    var round = 0
-    while (round < maxRounds) {
-      val perNode = runRound(kPrime)
-      val (accepted, complete) = RegionKernel.mergeTopK(perNode, k, overlapAllowed, sigma)
-      if (complete) return accepted
-      kPrime *= 4
-      round += 1
-    }
-    // Fallback: final round with effectively-unbounded K′ (node grids are small by construction).
-    // With executor pre-merge active, per-partition partials are still CAPPED (GridTopK bounds
-    // the fallback buffer at 2^20) — so completeness must be CHECKED, not assumed: a truncated
-    // partial marks itself inexhausted and mergeTopK's safe prefix stops at its threshold; a
-    // silently short result here would under-plan maintenance with no signal.
-    val perNode = runRound(Int.MaxValue)
-    val (accepted, complete) = RegionKernel.mergeTopK(perNode, k, overlapAllowed, sigma)
-    require(complete,
-      s"top-k merge incomplete even at unbounded K' (got ${accepted.size}/$k provable) — " +
-        "executor pre-merge truncated past the provable prefix; raise the pre-merge cap")
-    accepted
-  }
+  def solve(runRound: Int => Seq[NodeResult], k: Int, overlapAllowed: Boolean,
+      sigma: Option[Double] = None): Vector[Region] =
+    TopK.solve[Region](k, overlapAllowed, sigma, math.max(k, 4), excludeFixed = false)(
+      (kPrime, _) => runRound(kPrime))
 }

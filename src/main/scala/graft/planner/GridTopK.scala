@@ -10,7 +10,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 object GridTopK {
 
   /** Replicated-cell count above which per-node results are folded into one partial per Spark
-    * partition on EXECUTORS before the collect ([[RegionKernel.preMerge]], reference P7) — node
+    * partition on EXECUTORS before the collect ([[TopK.preMerge]], reference P7) — node
     * count grows with `ntokBins × sourceBuckets / nodeSide²` and a 10^8-cell planner grid must
     * not funnel #nodes × K′ candidates through the driver. Row count is a sound proxy: driver
     * payload ≤ replicated rows.
@@ -79,13 +79,9 @@ object GridTopK {
           val perNode = rows.get.where($"_1".isin(nodes.toSeq: _*)).mapPartitions(_.toSeq
             .groupMap(_._1)(_._2).iterator.map(e => e._1 -> kernel(cfg, e._1, e._2, kPrime)))
           if (n <= preMergeMinRows) perNode.collect().toMap
-          else {
-            // keep what one node keeps (K′ ≥ k), capped so the Int.MaxValue round sizes no buffer
-            val m = math.min(kPrime, 1 << 20)
-            perNode.mapPartitions(rs => Iterator.single((
-              -(org.apache.spark.TaskContext.getPartitionId() + 1),
-              RegionKernel.preMerge(rs.map(_._2), m)))).collect().toMap
-          }
+          else perNode.mapPartitions(rs => Iterator.single(( // keep what one node keeps (K′ ≥ k)
+            -(org.apache.spark.TaskContext.getPartitionId() + 1),
+            TopK.preMerge(rs.map(_._2), kPrime)))).collect().toMap
         }
       }
       f(counts.keySet, runNodes)

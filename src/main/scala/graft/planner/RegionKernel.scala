@@ -11,36 +11,16 @@ final case class Cell(x: Int, y: Int, score: Double)
   * Mirrors the reference's eps×eps SpatialObject
   * (`/root/reference/src/main/scala/SDL/SpatialObject.java:12-91`).
   */
-final case class Region(x: Int, y: Int, w: Int, score: Double) {
+final case class Region(x: Int, y: Int, w: Int, score: Double) extends TopKRegion[Region] {
   def overlaps(o: Region): Boolean =
-    x <= o.x + o.w - 1 && o.x <= x + w - 1 && y <= o.y + o.h - 1 && o.y <= y + h - 1
-  @inline def h: Int = w
-}
-
-/** Per-planner-partition ("node") result crossing the shuffle — the analog of the reference's
-  * OneStepResult (`/root/reference/src/main/scala/SDL/OneStepResult.java:9-23`).
-  *
-  * @param candidates  this node's top-K′ anchors by score (overlap among them allowed — global
-  *                    greedy resolves overlap), descending
-  * @param exhausted   true iff every positive-score anchor owned by the node was emitted
-  * @param minEmitted  score of the weakest emitted candidate (completeness threshold input);
-  *                    +∞ when nothing was emitted from an exhausted node
-  */
-final case class NodeResult(candidates: Vector[Region], exhausted: Boolean, minEmitted: Double)
-
-/** Deterministic total order on candidate regions: score desc, then anchor asc. Ties are broken
-  * identically in the kernel, the merge, and the brute-force oracle, so exact equality is testable.
-  */
-object RegionOrdering extends Ordering[Region] {
-  def compare(a: Region, b: Region): Int = {
-    val c = java.lang.Double.compare(b.score, a.score)
-    if (c != 0) c
-    else {
-      val cx = Integer.compare(a.x, b.x)
-      if (cx != 0) cx else Integer.compare(a.y, b.y)
-    }
+    x <= o.x + o.w - 1 && o.x <= x + w - 1 && y <= o.y + o.w - 1 && o.y <= y + w - 1
+  def compareAnchor(o: Region): Int = {
+    val c = Integer.compare(x, o.x)
+    if (c != 0) c else Integer.compare(y, o.y)
   }
 }
+
+object RegionOrdering extends TopK.Order[Region]
 
 /** The local top-k region kernel — the Spark-first re-derivation of the reference's single-node BCA
   * branch-and-bound (`/root/reference/src/main/scala/SDL/ca/BCAIndexProgressive.java:35-177`).
@@ -65,8 +45,6 @@ object RegionKernel {
       anchorMinY: Int, anchorMaxY: Int,
       w: Int,
       kPrime: Int): NodeResult = {
-    if (cells.isEmpty) return NodeResult(Vector.empty, exhausted = true, Double.PositiveInfinity)
-
     // Dense local frame: anchor range extended by w-1 on the + side to cover the halo cells.
     var minX = anchorMinX; var minY = anchorMinY
     var maxX = anchorMaxX + w - 1; var maxY = anchorMaxY + w - 1
@@ -74,15 +52,10 @@ object RegionKernel {
     val width = maxX - minX + 1
     val height = maxY - minY + 1
     val grid = Array.ofDim[Double](width + 1, height + 1) // 1-based prefix-sum table
-    var any = false
     cells.foreach { c =>
-      if (c.x >= minX && c.x <= maxX && c.y >= minY && c.y <= maxY) {
+      if (c.x >= minX && c.x <= maxX && c.y >= minY && c.y <= maxY)
         grid(c.x - minX + 1)(c.y - minY + 1) += c.score
-        any = true
-      }
     }
-    if (!any) return NodeResult(Vector.empty, exhausted = true, Double.PositiveInfinity)
-
     // 2-D prefix sums: grid(i)(j) = sum of scores in [minX..minX+i-1] × [minY..minY+j-1]
     var i = 1
     while (i <= width) {
@@ -110,90 +83,11 @@ object RegionKernel {
       }
       ax += 1
     }
-    val sorted = all.sorted(RegionOrdering)
-    val emitted = sorted.take(kPrime).toVector
-    val exhausted = sorted.size <= kPrime
-    val minEmitted =
-      if (emitted.isEmpty) Double.PositiveInfinity else emitted.last.score
-    NodeResult(emitted, exhausted, minEmitted)
+    TopK.emit(all.sorted(RegionOrdering), kPrime)
   }
 
-  /** Greedy selection over a descending candidate stream — the semantics of the reference's
-    * distinct-mode merge (`/root/reference/src/main/scala/SDL/distrib/NstepAlgo.scala:91-119`).
-    *
-    * @param sigma approximate mode (reference algo 8, `NstepAlgoApp.scala:25-83`): an overlapping
-    *              candidate is still accepted when its score ≥ σ × the best accepted region it
-    *              overlaps. None = strict non-overlap.
-    */
-  def greedySelect(sortedDesc: Iterator[Region], k: Int, overlapAllowed: Boolean,
-      sigma: Option[Double] = None): Vector[Region] = {
-    val acc = Vector.newBuilder[Region]
-    var n = 0
-    val accepted = scala.collection.mutable.ArrayBuffer.empty[Region]
-    while (n < k && sortedDesc.hasNext) {
-      val r = sortedDesc.next()
-      val ok = overlapAllowed || {
-        val overlapping = accepted.filter(_.overlaps(r))
-        overlapping.isEmpty || sigma.exists(s => overlapping.forall(a => r.score >= s * a.score))
-      }
-      if (ok) { acc += r; accepted += r; n += 1 }
-    }
-    acc.result()
-  }
-
-  /** Merge per-node candidate lists into the exact global greedy top-k, with the completeness
-    * threshold argument of the reference's merge
-    * (`/root/reference/src/main/scala/SDL/distrib/OnestepAlgoReduceHybrid.scala:84,120-122`):
-    * every region NOT present in the union has score < min over unexhausted nodes of their weakest
-    * emitted score, so the greedy prefix at or above that threshold is exact.
-    *
-    * @return (accepted, complete) — complete=false means K′ must grow and the round repeat.
-    */
-  def mergeTopK(perNode: Seq[NodeResult], k: Int, overlapAllowed: Boolean,
-      sigma: Option[Double] = None): (Vector[Region], Boolean) = {
-    val truncatedAt = perNode.iterator.filter(n => !n.exhausted).map(_.minEmitted).toSeq
-    val union = perNode.flatMap(_.candidates).sorted(RegionOrdering)
-    // node X guarantees the union holds ALL its regions scoring above X's own truncation point, so
-    // the globally-complete prefix ends at the MAX truncation point over unexhausted nodes — the
-    // reference's maxMin bound (`OnestepAlgoReduceHybrid.scala:84,120-122`). Strict: an equal-score
-    // region may be unseen.
-    val safe =
-      if (truncatedAt.isEmpty) union // every node emitted everything → union is the full region set
-      else union.takeWhile(_.score > truncatedAt.max)
-    val accepted = greedySelect(safe.iterator, k, overlapAllowed, sigma)
-    val complete = accepted.size >= k || truncatedAt.isEmpty
-    (accepted, complete)
-  }
-
-  /** Executor-side partial merge for the DISCRETE kernel (the continuous path's
-    * [[graft.brs.GeoBrsKernel.preMerge]], reference P7 log-tree — `NstepAlgo.scala:31-40`): fold
-    * many per-node results into ONE, keeping only the top-`m` candidates. The partial stays
-    * inside the [[mergeTopK]] threshold algebra by presenting itself as a single node result:
-    * dropping a candidate is indistinguishable from a node truncating at that score, so
-    * `minEmitted = max(children's truncation thresholds, best dropped score)` and the driver's
-    * completeness test is unchanged — an over-aggressive prune reports incomplete and the round
-    * loop grows K′. Bounds the driver collect at (#partitions × m) candidates instead of
-    * (#nodes × K′) — the 10^8-cell planner-grid insurance.
-    */
-  def preMerge(results: Iterator[NodeResult], m: Int): NodeResult = {
-    val all = scala.collection.mutable.ArrayBuffer.empty[Region]
-    var exhaustedAll = true
-    var childThreshold = Double.NegativeInfinity
-    results.foreach { r =>
-      all ++= r.candidates
-      if (!r.exhausted) {
-        exhaustedAll = false
-        childThreshold = math.max(childThreshold, r.minEmitted)
-      }
-    }
-    val sorted = all.sorted(RegionOrdering)
-    val kept = sorted.take(m).toVector
-    val droppedBest = if (sorted.size > m) sorted(m).score else Double.NegativeInfinity
-    val truncated = !exhaustedAll || sorted.size > m
-    NodeResult(kept, exhausted = !truncated,
-      minEmitted = if (truncated) math.max(childThreshold, droppedBest)
-        else Double.PositiveInfinity)
-  }
+  /** [[TopK.preMerge]] for the discrete kernel's node results. */
+  def preMerge(results: Iterator[NodeResult], m: Int): NodeResult = TopK.preMerge(results, m)
 
   /** Single-partition brute-force oracle (test-only semantics anchor): enumerate every anchor whose
     * window is non-empty, sort, greedy-select. Mirrors the role of the reference's golden outputs
@@ -219,6 +113,6 @@ object RegionKernel {
       .filter(_._2 > 0)
       .map { case ((ax, ay), s) => Region(ax, ay, w, s) }
       .toVector.sorted(RegionOrdering)
-    greedySelect(sorted.iterator, k, overlapAllowed, sigma)
+    TopK.greedySelect(sorted.iterator, k, overlapAllowed, sigma = sigma)
   }
 }
