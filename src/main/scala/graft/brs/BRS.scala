@@ -118,7 +118,6 @@ object BRS {
     *                       ≥ σ × every accepted region it overlaps. Fixed-winner kernel
     *                       exclusions are disabled under σ (an overlapping candidate may still be
     *                       admissible); rounds progress via K′ growth alone.
-    * @param maxRounds      ignored: the round loop ends by construction ([[TopK.solve]])
     * @return rank, center_lon, center_lat, score — the reference's output shape (S4)
     * @note throws IllegalArgumentException instead of silently degrading when no greedy progress
     *       is possible at the K′ cap (adversarial score-tie pathology) — a loud failure, by
@@ -134,7 +133,6 @@ object BRS {
       keywordFilters: Seq[(String, Seq[String])] = Nil,
       distinct: Boolean = true,
       nodeSide: Int = 8,
-      maxRounds: Int = 8,
       hotNodeBudget: Int = 200000,
       premergeKeys: Int = 4096,
       sigma: Option[Double] = None): DataFrame = {

@@ -91,9 +91,11 @@ object SeqIO {
     * no parquet dictionary for `doc_id`, keyed by its physical column path so that a column
     * under a field-ID name is covered. Document ids are unique, so parquet would build that
     * dictionary in every file only to find it no smaller than the data and write the pages
-    * PLAIN. Every other column keeps parquet's default: the `tokens` element's dictionary does
-    * pay off on files of a few hundred rows and more (PLAIN measured 10-21% more bytes from
-    * 500 to 40 000 SeqGen rows per file). */
+    * PLAIN. Every other column keeps parquet's default. The `tokens` element's dictionary pays
+    * off on files of a few hundred rows and more (PLAIN measured 10-21% more bytes from 500 to
+    * 40 000 SeqGen rows per file) but not on a few dozen; `writeFiles` hands the write
+    * [[DataFileFormat]], which decides it per file, before it is built, with parquet's own
+    * rule, wherever the file is one parquet page. */
   private[graft] def dataFileOptions(fields: Seq[StructField]): Map[String, String] =
     Map("compression" -> "zstd") ++ fields.find(_.name == "doc_id").map(f =>
       s"parquet.enable.dictionary#${SeqSchema.physicalName(f)}" -> "false")
@@ -140,7 +142,8 @@ object SeqIO {
       // library, and writes no `.crc` sidecar for the tmp-tree delete below to throw away.
       timed("writeFiles/write")(GraftSqlBridge.write(
         checked.select(fields.map(f => col(f.name).as(SeqSchema.physicalName(f))): _*),
-        tmp.toString, "parquet", dataFileOptions(fields), Seq(tracker)))
+        tmp.toString, "parquet", dataFileOptions(fields), Seq(tracker),
+        tokensColumn = fields.find(_.name == "tokens").map(SeqSchema.physicalName)))
       val written = SeqTable.listDir(tmp)
         .filter(p => p.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
         .map(p => p -> tracker.files(p.getFileName.toString))

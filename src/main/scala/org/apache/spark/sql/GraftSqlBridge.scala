@@ -50,14 +50,19 @@ object GraftSqlBridge {
     * `FileFormatWriter.write` inside a new SQL execution, with the session's file commit
     * protocol — minus the write command around it, so the caller's stats trackers ride along,
     * and with the lean Hadoop conf of [[writeConf]]. Every graft table write, data files and
-    * metadata parts alike, goes through here. `sessionState` is `private[sql]`.
+    * metadata parts alike, goes through here. A parquet write with a `tokensColumn` (data files)
+    * goes through [[graft.table.DataFileFormat]], which decides that column's element encoding
+    * for files of one parquet page before parquet builds its dictionary; the files are the ones
+    * the stock format writes. `sessionState` is `private[sql]`.
     */
   def write(df: Dataset[Row], path: String, format: String, options: Map[String, String],
-      trackers: Seq[execution.datasources.WriteJobStatsTracker]): Unit = {
+      trackers: Seq[execution.datasources.WriteJobStatsTracker],
+      tokensColumn: Option[String] = None): Unit = {
     import execution.datasources.{FileFormat, FileFormatWriter}
-    val fileFormat: FileFormat = format match {
-      case "parquet" => new execution.datasources.parquet.ParquetFileFormat
-      case "text" => new execution.datasources.text.TextFileFormat
+    val fileFormat: FileFormat = (format, tokensColumn) match {
+      case ("parquet", Some(c)) => new graft.table.DataFileFormat(c)
+      case ("parquet", None) => new execution.datasources.parquet.ParquetFileFormat
+      case ("text", None) => new execution.datasources.text.TextFileFormat
     }
     val c = df.asInstanceOf[classic.Dataset[Row]]
     val session = c.sparkSession

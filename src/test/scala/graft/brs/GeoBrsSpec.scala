@@ -165,14 +165,14 @@ class GeoBrsSpec extends AnyFunSuite {
     import spark.implicits._
     val rnd = new scala.util.Random(31)
     // many dense overlapping clusters in one node: small K' truncates, winners must be fixed
-    // round by round via exclusions (maxRounds=1 disables K'-growth retries almost entirely)
+    // round by round via exclusions
     val clusters = (0 until 6).map(i => (3.0 * i, 0.0))
     val pts = clusters.flatMap { case (cx, cy) =>
       (1 to 40).map(_ => (cx + rnd.nextDouble() * 0.4, cy + rnd.nextDouble() * 0.4, 1.0))
     }
     val df = pts.toDF("lon", "lat", "f")
     val got = BRS.bestRegions(df, eps = 0.5, k = 4, scoreCol = Some("f"),
-      distinct = true, nodeSide = 64, maxRounds = 1)
+      distinct = true, nodeSide = 64)
       .collect().map(r => (r.getInt(0), r.getDouble(3)))
     val want = GeoBrsKernel.bruteForce(pts.map(p => Pt(p._1, p._2, p._3)), 0.5, 4, overlapAllowed = false)
     assert(got.map(_._2).toSeq === want.map(_.score))

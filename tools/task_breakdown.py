@@ -14,6 +14,7 @@ the task count, then the sum over the job's tasks (s) and the per-task median (m
 Each job is one line, so `grep` selects jobs by call site.
 """
 import json
+import os
 import pathlib
 import statistics
 import sys
@@ -102,4 +103,10 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    try:
+        main()
+        sys.stdout.flush()
+    except BrokenPipeError:
+        # the reader (`| head`) closed early: exit quietly, and keep the interpreter's own
+        # flush at exit from failing on the closed pipe again
+        os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
