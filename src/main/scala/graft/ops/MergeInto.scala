@@ -20,13 +20,13 @@ final case class MergeResult(
   * Physical plan, scale-first:
   *  1. **prune**: only data files whose manifest [minDocId, maxDocId] range can contain a change
   *     key are touched — a broadcast range-join of change keys against file stats;
-  *  2. **map-only update path**: the pruned target subset joins the broadcast change set and is
-  *     rewritten partition-for-partition — NO shuffle, no range sampling; the curve-sorted layout
-  *     of the affected files carries over to their replacements. (When the change set is too big
-  *     to broadcast, the join falls back to shuffle but the write still avoids re-sampling.)
-  *  3. **insert path**: change rows matching no target row are written as a small separate
-  *     curve-clustered file set;
-  *  4. one atomic commit swaps affected → rewritten ∪ inserts.
+  *  2. **survivor path**: the pruned target subset anti-joins the broadcast change keys and is
+  *     rewritten file-for-file — NO shuffle, no range sampling; each replacement is a subset of
+  *     its source file, so its layout and min/max stats carry over. (When the change set is too
+  *     big to broadcast, the join falls back to shuffle.)
+  *  3. **upsert path**: every non-delete change row, update or insert, is written as a small
+  *     separate curve-clustered file set, by the same write job as the survivors;
+  *  4. one atomic commit swaps affected → survivors ∪ upserts.
   *
   * Isolation: the commit validates that no concurrent commit rewrote our affected files; on
   * conflict the ENTIRE merge replans against the new snapshot (bounded retries). Two merges on
@@ -40,17 +40,6 @@ object MergeInto {
     * larger change sets fall back to the theta-join prune and auto-route MoR regardless.
     */
   val MaxPruneKeys: Long = 1L << 22
-
-  /** Two daemon threads for the COW merge's concurrent survivor/upsert writes (guide §2.6) —
-    * shared across merges; jobs still schedule FIFO inside Spark.
-    */
-  private lazy val writePool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "graft-merge-write")
-        t.setDaemon(true)
-        t
-      }))
 
   /** Does [min, max] (inclusive, per manifest stats) contain ANY of the sorted keys?
     * Two binary searches — the O(log K) per-file range prune. Keys must be sorted with
@@ -75,8 +64,7 @@ object MergeInto {
     *             file contains SOME changed key — no pruning scheme beats that physics), so the
     *             merge routes to MoR and leaves physical cleanup to compaction/materialization;
     *             sparse change sets keep the read-optimal COW path
-    */
-  /** @param propertyUpdates table properties committed ATOMICALLY with the merge — the
+    * @param propertyUpdates table properties committed ATOMICALLY with the merge — the
     *   transactional-sink hook (a CDC consumer records its source offset in the same commit
     *   that applies the batch, so a crash can never separate the two — [[graft.sources
     *   .ChangeFeed]], same pattern as the streaming-ingest high-water mark)
@@ -122,8 +110,6 @@ object MergeInto {
     if (!chColsPresent.contains("tokens") || !chColsPresent.contains("n_tok"))
       require(ch.filter(col("_op") =!= "D").isEmpty,
         "merge: upsert rows must carry tokens and n_tok (delete-only change sets may omit them)")
-    def upsertRows = ch.filter(col("_op") =!= "D")
-      .select(tableSchema.fieldNames.toSeq.map(n => col(s"c_$n").as(n)): _*)
     def timed[T](tag: String)(f: => T): T = graft.Timing.timed(s"merge/$tag")(f)
     // keys is persisted for the whole merge (reused by the prune, anti-join and delete-manifest
     // write of every attempt) and MUST be unpersisted on exit: a long-running maintenance driver
@@ -219,123 +205,77 @@ object MergeInto {
               else SeqIO.bloomCandidates(spark, table, snap, cand, bloomKeys))
             (a, liveRecords)
           }
-        val affectedPaths = affected.map(_.path).toSet
         val editPlanner =
           if (useDistributed) Some(SeqIO.distributedManifestEdit(spark, table)) else None
 
         val useMor = mor || (auto && liveRecords > 0 &&
           affected.map(_.records).sum > autoMorFraction * liveRecords)
 
-        if (useMor) {
-          // merge-on-read: write ONLY the upserts + one equality-delete manifest (seq = the commit
-          // version, hiding every older version of the changed keys); no target file is touched.
-          // Latency ∝ change-set size, not affected-file size. Deletes are applied at read time
-          // (SeqIO.applyDeletes) and physically removed by compaction / MaterializeDeletes.
-          val upserts = upsertRows
-          val added = timed("mor-upsert-write")(
-            Rewrite.clusteredWrite(spark, table, upserts, cfg, targetRecordsPerFile, nKeys))
-          val seq = snap.version + 1
-          // distributed manifest write: executors emit the key files, no driver funnel
-          val dms = timed("mor-delete-manifests")(
-            SeqIO.writeDeleteManifests(spark, table, keys, seq, nKeys))
-          try {
-            val s = table.commit("merge-mor", added, Set.empty,
+        // Both strategies write the upserts — every non-delete change row, update or insert alike
+        // — through the curve-clustered layout, where their new (source, n_tok) says they belong.
+        //  - merge-on-read: ONLY the upserts + one equality-delete manifest (seq = the commit
+        //    version, hiding every older version of the changed keys); no target file is touched.
+        //    Latency ∝ change-set size, not affected-file size. Deletes are applied at read time
+        //    (SeqIO.applyDeletes) and physically removed by compaction / MaterializeDeletes.
+        //  - COW: the merged state is exactly (target \ changedKeys) ∪ upserts. The SURVIVORS —
+        //    target rows whose key is untouched — are rewritten map-only with one file per scan
+        //    task (ScanShape.FilePerTask): a broadcast anti-join, ZERO payload shuffle, and each
+        //    output is a SUBSET of its source file, so the file's min/max stats stay tight.
+        //    Rewriting updated rows in place instead would poison per-file stats (an update may
+        //    move the row anywhere in key space). The snapshot's MoR deletes apply to the
+        //    survivors, so no deleted row resurrects.
+        // ONE write holds both sides: one job whose result stage runs the survivor tasks, then
+        // the upsert tasks; a failure on either side aborts it and leaves no file behind. The
+        // survivor tasks wait for the upserts' byte-histogram job and shuffle-map stage, which
+        // two concurrent writes overlapped (merge_read_mix COW merges ~4–6 % slower, 4 cores).
+        val upserts = Rewrite.clusteredRows(spark, table, ch.filter(col("_op") =!= "D")
+          .select(tableSchema.fieldNames.toSeq.map(n => col(s"c_$n").as(n)): _*),
+          cfg, targetRecordsPerFile, nKeys)
+        val survivors =
+          if (useMor || affected.isEmpty) Nil
+          else {
+            val target = SeqIO.readWithDeletes(spark, table, snap, affected,
+              shape = SeqIO.ScanShape.FilePerTask)
+            val keySide = if (broadcastChanges) broadcast(keys) else keys
+            Seq(target.join(keySide, col("doc_id") === col("c_doc_id"), "left_anti") ->
+              affected.forall(_.clustered))
+          }
+        val written = timed(if (useMor) "mor-upsert-write" else "cow-write")(
+          SeqIO.writeFiles(spark, table, survivors :+ (upserts -> true)))
+        val seq = snap.version + 1
+        // distributed manifest write: executors emit the key files, no driver funnel
+        val dms = if (!useMor) Nil else timed("mor-delete-manifests")(
+          SeqIO.writeDeleteManifests(spark, table, keys, seq, nKeys))
+
+        // atomic swap; on conflict (for COW incl. a delete manifest added by a concurrent MoR
+        // merge since our plan — our rewritten files would escape its deletes), drop our orphan
+        // files and replan from the new head
+        try {
+          val s =
+            if (useMor) table.commit("merge-mor", written, Set.empty,
               Map("merge-attempt" -> attempt.toString, "delete-seq" -> seq.toString),
               maxRetries = 0, addedDeleteManifests = dms,
               expectedBase = Some(snap.version), // seq is baked into the manifest: no silent rebase
               propertyUpdates = propertyUpdates,
               requirePropertyEquals = requirePropertyEquals)
-            return MergeResult(s, 0, attempt, added.map(_.records).sum)
-          } catch {
-            case e: table.CommitConflictException =>
-              table.dropUncommitted(added, dms)
-              if (attempt >= maxAttempts) throw e
-          }
-        } else {
-
-        val snapDeletes = snap // pre-existing MoR deletes must not resurrect via this rewrite
-
-        // 2. COW split. The merged state is exactly (target \ changedKeys) ∪ upserts:
-        //    a) SURVIVOR path — target rows whose key is untouched, rewritten map-only with one
-        //       file per scan task (ScanShape.FilePerTask): a broadcast anti-join, ZERO payload
-        //       shuffle, and each output is a SUBSET of its source file, so the file's min/max
-        //       stats stay tight. Rewriting updated rows in place instead would poison per-file
-        //       stats (an update may move the row anywhere in key space).
-        //    b) UPSERT path — every non-delete change row (update or insert alike) goes through
-        //       the curve-clustered write, landing where its new (source, n_tok) says it belongs.
-        // The two writes are INDEPENDENT (both derive from the pinned snapshot + the already-
-        // materialized ch cache), so they run as concurrent driver-thread jobs (guide §2.6:
-        // back-fill the cluster through each other's straggler tails) — the merge leg of the
-        // executor-count scaling harness measured a ~7 s/merge serial term that was mostly
-        // these two job chains queuing end to end.
-        val (rewritten: Seq[FileMeta], insertedFiles: Seq[FileMeta]) = {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec = MergeInto.writePool
-          // both sides' jobs run in one job group, so a failed side can cancel its peer's
-          // running jobs and every job it submits later (a side runs several in sequence)
-          val group = s"graft-merge-${java.util.UUID.randomUUID()}"
-          def grouped[T](body: => T): Future[T] = Future {
-            spark.sparkContext.setJobGroup(group, "graft merge write")
-            try body finally spark.sparkContext.clearJobGroup()
-          }
-          val survivorsF: Future[Seq[FileMeta]] =
-            if (affected.isEmpty) Future.successful(Nil)
-            else grouped {
-              val target = SeqIO.readWithDeletes(spark, table, snapDeletes, affected,
-                shape = SeqIO.ScanShape.FilePerTask)
-              val keySide = if (broadcastChanges) broadcast(keys) else keys
-              val survivors = target
-                .join(keySide, col("doc_id") === col("c_doc_id"), "left_anti")
-              timed("survivor-rewrite")(SeqIO.writeFiles(spark, table, survivors,
-                clustered = affected.forall(_.clustered)))
-            }
-          val upsertsF: Future[Seq[FileMeta]] = grouped {
-            timed("upsert-write")(Rewrite.clusteredWrite(
-              spark, table, upsertRows, cfg, targetRecordsPerFile, nKeys))
-          }
-          // zip fails as soon as either side fails, without waiting for the other
-          try Await.result(survivorsF.zip(upsertsF), Duration.Inf)
-          catch {
-            case e: Throwable =>
-              // one side failed: cancel the peer's jobs, wait for it (two minutes at most: a
-              // peer stuck outside a Spark job must not hang the merge) and reclaim any files
-              // it already landed — the commit-conflict cleanup below never sees them
-              // otherwise. A peer still running at the deadline leaves removeOrphans candidates.
-              spark.sparkContext.cancelJobGroupAndFutureJobs(group)
-              Seq(survivorsF, upsertsF).foreach { f =>
-                try table.dropUncommitted(Await.result(f, Duration(2, "min")))
-                catch { case _: Throwable => () }
-              }
-              throw e
-          }
-        }
-
-        // 4. atomic swap; on conflict (incl. a delete manifest added by a concurrent MoR merge
-        //    since our plan — our rewritten files would escape its deletes), drop our orphan
-        //    files and replan from the new head
-        try {
-          val s = timed("cow-commit")(table.commit("merge", rewritten ++ insertedFiles,
-            affectedPaths,
-            Map("merge-attempt" -> attempt.toString),
-            plannedDeleteManifests = Some(snap.deleteManifests.toSet),
-            propertyUpdates = propertyUpdates,
-            requirePropertyEquals = requirePropertyEquals,
-            editPlanner = editPlanner))
-          return MergeResult(s, affected.size, attempt,
-            (rewritten ++ insertedFiles).map(_.records).sum)
+            else timed("cow-commit")(table.commit("merge", written, affected.map(_.path).toSet,
+              Map("merge-attempt" -> attempt.toString),
+              plannedDeleteManifests = Some(snap.deleteManifests.toSet),
+              propertyUpdates = propertyUpdates,
+              requirePropertyEquals = requirePropertyEquals,
+              editPlanner = editPlanner))
+          return MergeResult(s, if (useMor) 0 else affected.size, attempt,
+            written.map(_.records).sum)
         } catch {
           case e: table.CommitConflictException =>
-            table.dropUncommitted(rewritten ++ insertedFiles)
+            table.dropUncommitted(written, dms)
             if (attempt >= maxAttempts) throw e
         }
-        } // end cow branch
       }
       throw new IllegalStateException("unreachable")
     } finally {
       ch.unpersist()
       if (keys != null) keys.unpersist()
-      ()
     }
   }
 }

@@ -28,6 +28,25 @@ object Rewrite {
 
   /** Cluster `df` and write it as ~`totalRecords / targetRecordsPerFile` files. Returns the
     * manifest entries (not yet committed).
+    */
+  def clusteredWrite(
+      spark: SparkSession,
+      table: SeqTable,
+      df: DataFrame,
+      cfg: GridConfig,
+      targetRecordsPerFile: Long,
+      totalRecords: Long,
+      hilbert: Boolean = false,
+      docMajor: Boolean = false): Seq[FileMeta] = {
+    val rows = clusteredRows(spark, table, df, cfg, targetRecordsPerFile, totalRecords, hilbert,
+      docMajor)
+    graft.Timing.timed("clusteredWrite/writeFiles")(
+      SeqIO.writeFiles(spark, table, rows, clustered = true))
+  }
+
+  /** `df` laid out as [[clusteredWrite]] writes it: one partition per file of
+    * ~`totalRecords / targetRecordsPerFile`, each sorted. The curve layout's byte histogram runs
+    * here, as one collect job; the shuffle runs with the write.
     *
     * Layouts:
     *  - curve (default): range-partition + sort on (curveKey, doc_id) — tight (source, n_tok)
@@ -39,7 +58,7 @@ object Rewrite {
     *    give up; with ~10^3 rows-per-key-density change sets no per-file structure can prune, so
     *    this is the ONLY layout under which sparse COW merges stay sub-linear).
     */
-  def clusteredWrite(
+  def clusteredRows(
       spark: SparkSession,
       table: SeqTable,
       df: DataFrame,
@@ -47,7 +66,7 @@ object Rewrite {
       targetRecordsPerFile: Long,
       totalRecords: Long,
       hilbert: Boolean = false,
-      docMajor: Boolean = false): Seq[FileMeta] = {
+      docMajor: Boolean = false): DataFrame = {
     // the table's DECLARED layout (TableLayout metadata, when present) wins over the caller's
     // flags/grid — the one consult point every writer (merge upserts, compaction, delete
     // materialization, clustered append) flows through, so a layout change re-routes all future
@@ -60,15 +79,12 @@ object Rewrite {
       case None => (cfg, hilbert, docMajor)
     }
     val nFiles = math.max(1L, (totalRecords + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
-    val clustered =
-      if (docMajorEff)
-        df.repartitionByRange(nFiles, col("doc_id")).sortWithinPartitions(col("doc_id"))
-      else
-        byteBalanced(spark, withCurveKey(df, cfgEff, hilbertEff), nFiles)
-          .sortWithinPartitions(col("_ck"), col("doc_id"))
-          .drop("_ck")
-    graft.Timing.timed("clusteredWrite/writeFiles")(
-      SeqIO.writeFiles(spark, table, clustered, clustered = true))
+    if (docMajorEff)
+      df.repartitionByRange(nFiles, col("doc_id")).sortWithinPartitions(col("doc_id"))
+    else
+      byteBalanced(spark, withCurveKey(df, cfgEff, hilbertEff), nFiles)
+        .sortWithinPartitions(col("_ck"), col("doc_id"))
+        .drop("_ck")
   }
 
   /** BYTE-balanced curve partitioning with hot-key salting.
@@ -133,16 +149,15 @@ object Rewrite {
       v += 1
     }
 
-    val ks = hist.map(_._1)
-    val baseMap = map_from_arrays(
-      array(ks.map(k => lit(k)): _*), array(ks.map(k => lit(placed(k)._1)): _*))
-    val splitMap = map_from_arrays(
-      array(ks.map(k => lit(k)): _*), array(ks.map(k => lit(placed(k)._2)): _*))
+    // three literals, one expression node each: per-key `lit`s built ~4,000 nodes at ~650
+    // curve keys, and analysis walked every one
+    val baseMap = typedLit(placed.map { case (k, (base, _)) => k -> base })
+    val splitMap = typedLit(placed.map { case (k, (_, splits)) => k -> splits })
     val pidCol = element_at(baseMap, col("_ck")) +
       when(element_at(splitMap, col("_ck")) > 1,
         pmod(xxhash64(col("doc_id")), element_at(splitMap, col("_ck")).cast("long")).cast("int"))
         .otherwise(lit(0))
-    val slotCol = element_at(array(slots.map(s => lit(s)): _*), pidCol + 1)
+    val slotCol = element_at(typedLit(slots.toSeq), pidCol + 1)
     keyed.repartition(nOut, slotCol)
   }
 

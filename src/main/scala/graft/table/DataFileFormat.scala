@@ -16,9 +16,10 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   SparkToParquetSchemaConverter}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
 
-/** The parquet format of graft's data files: the stock `ParquetFileFormat`, except that a file
-  * small enough to be one parquet page decides its `tokensColumn` element encoding before
-  * parquet builds a dictionary for it.
+/** The parquet format of graft's table files: the stock `ParquetFileFormat`, except that its
+  * writers open under [[TokenEncoding.opening]], since parquet takes value encodings from a
+  * JVM-wide factory, and that a data file small enough to be one parquet page decides its
+  * `tokensColumn` element encoding before parquet builds a dictionary for it.
   *
   * Parquet dictionary-encodes an INT32 column's first page and, when the page is done, keeps the
   * dictionary only if it came out smaller than PLAIN; otherwise it re-encodes every value PLAIN.
@@ -30,30 +31,39 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
   * rows and streams: parquet decides as always. A file that closes within it is exactly one
   * page, and [[TokenEncoding.keepsDictionary]] applies parquet's own first-page rule to its
   * values; where the dictionary would lose, the stock writer opens on a copy of the task conf
-  * with that one column's dictionary off. Either way the file's bytes are the stock writer's;
-  * the writers open under [[TokenEncoding.opening]], since parquet takes value encodings from a
-  * JVM-wide factory.
+  * with that one column's dictionary off. Either way the file's bytes are the stock writer's.
+  * Without a `tokensColumn` (manifest parts) only the lock applies.
   */
-class DataFileFormat(tokensColumn: String) extends ParquetFileFormat {
+class DataFileFormat(tokensColumn: Option[String]) extends ParquetFileFormat {
   override def prepareWrite(spark: SparkSession, job: Job, options: Map[String, String],
       dataSchema: StructType): OutputWriterFactory = {
     val stock = super.prepareWrite(spark, job, options, dataSchema)
     val conf = job.getConfiguration // what every task of the job reads
-    val ord = dataSchema.fieldNames.indexOf(tokensColumn)
+    val ord = tokensColumn.fold(-1)(dataSchema.fieldNames.indexOf(_))
     val intArray = ord >= 0 && (dataSchema(ord).dataType match {
       case ArrayType(IntegerType, _) => true
       case _ => false
     })
-    if (!intArray) return stock
     // the element's column path as the parquet writer lays the array out (`<c>.list.element`,
     // or the legacy `<c>.bag.array`)
-    val path = new SparkToParquetSchemaConverter(conf)
-      .convert(StructType(Seq(dataSchema(ord)))).getColumns.get(0).getPath.mkString(".")
-    val dictionaryKey = s"${ParquetOutputFormat.ENABLE_DICTIONARY}#$path"
-    if (!conf.getBoolean(dictionaryKey, ParquetOutputFormat.getEnableDictionary(conf))) stock
-    else new DecidingWriterFactory(stock, ord, dictionaryKey,
-      TokenEncoding.rowsBeforeFirstCheck(conf), ParquetOutputFormat.getDictionaryPageSize(conf))
+    lazy val dictionaryKey = ParquetOutputFormat.ENABLE_DICTIONARY + "#" +
+      new SparkToParquetSchemaConverter(conf).convert(StructType(Seq(dataSchema(ord))))
+        .getColumns.get(0).getPath.mkString(".")
+    if (intArray && conf.getBoolean(dictionaryKey, ParquetOutputFormat.getEnableDictionary(conf)))
+      new DecidingWriterFactory(stock, ord, dictionaryKey,
+        TokenEncoding.rowsBeforeFirstCheck(conf), ParquetOutputFormat.getDictionaryPageSize(conf))
+    else new LockedWriterFactory(stock)
   }
+}
+
+/** The stock writers, opened under [[TokenEncoding.opening]]. */
+private final class LockedWriterFactory(stock: OutputWriterFactory) extends OutputWriterFactory {
+  override def getFileExtension(context: TaskAttemptContext): String =
+    stock.getFileExtension(context)
+
+  override def newInstance(file: String, dataSchema: StructType,
+      context: TaskAttemptContext): OutputWriter =
+    TokenEncoding.opening.synchronized(stock.newInstance(file, dataSchema, context))
 }
 
 /** Writers that decide the dictionary of the INT32 elements at `ordinal` for files of at most

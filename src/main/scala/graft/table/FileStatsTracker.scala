@@ -2,6 +2,7 @@ package graft.table
 
 import java.io.ByteArrayOutputStream
 import scala.collection.mutable
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{WriteJobStatsTracker, WriteTaskStats,
   WriteTaskStatsTracker}
@@ -10,10 +11,12 @@ import org.apache.spark.util.sketch.BloomFilter
 
 /** The manifest stats of one written data file, built while its rows streamed to the writer.
   * `sources` holds up to [[SeqIO.MaxSourcesTracked]] + 1 of the smallest distinct sources, so
-  * an overflow stays detectable; `docBloom` is the serialized [[DocBloom]] filter.
+  * an overflow stays detectable; `docBloom` is the serialized [[DocBloom]] filter. `partition`
+  * is the index of the write task that wrote the file.
   */
 final case class WrittenFileStats(records: Long, minNtok: Int, maxNtok: Int,
-    minDocId: String, maxDocId: String, sources: Seq[String], docBloom: Array[Byte])
+    minDocId: String, maxDocId: String, sources: Seq[String], docBloom: Array[Byte],
+    partition: Int)
 
 /** One write task's files, keyed by basename: task attempts write under the committer's
   * `_temporary` directory, and only the basename survives the commit unchanged.
@@ -40,7 +43,7 @@ final class FileStatsTracker(docOrd: Int, ntokOrd: Int, srcOrd: Int)
     def closeFile(filePath: String): Unit = ()
     def newRow(filePath: String, row: InternalRow): Unit = accs(filePath).add(row)
     def getFinalStats(taskCommitTime: Long): WriteTaskStats = TaskFileStats(accs.map {
-      case (p, a) => p.substring(p.lastIndexOf('/') + 1) -> a.result()
+      case (p, a) => p.substring(p.lastIndexOf('/') + 1) -> a.result(TaskContext.getPartitionId())
     }.toMap)
   }
 
@@ -80,12 +83,13 @@ final class FileStatsTracker(docOrd: Int, ntokOrd: Int, srcOrd: Int)
       }
     }
 
-    def result(): WrittenFileStats = {
+    def result(partition: Int): WrittenFileStats = {
       val out = new ByteArrayOutputStream()
       bloom.writeTo(out)
       WrittenFileStats(records, minNtok, maxNtok, Option(minDoc).map(_.toString).orNull,
         Option(maxDoc).map(_.toString).orNull,
-        sources.toArray(Array.empty[UTF8String]).map(_.toString).toSeq, out.toByteArray)
+        sources.toArray(Array.empty[UTF8String]).map(_.toString).toSeq, out.toByteArray,
+        partition)
     }
   }
 }

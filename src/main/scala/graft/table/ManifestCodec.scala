@@ -29,9 +29,12 @@ private[table] object ManifestCodec {
     s"manifest $name is not a parquet manifest, the only FileMeta manifest encoding this reads")
 
   def write(file: Path, metas: Seq[FileMeta]): Unit = {
-    // per-file Bloom bitmaps never repeat: a dictionary for them is wasted work (~40 % of a write)
-    val out = new WriterBuilder(file).withConf(new PlainParquetConfiguration())
-      .withCompressionCodec(SNAPPY).withDictionaryEncoding("docBloom", false).build()
+    // per-file Bloom bitmaps never repeat: a dictionary for them is wasted work (~40 % of a
+    // write). Opened under the data files' lock: the build installs this writer's encodings in
+    // parquet's JVM-wide values-writer factory, and its first row group reads them from there
+    val out = TokenEncoding.opening.synchronized(new WriterBuilder(file)
+      .withConf(new PlainParquetConfiguration()).withCompressionCodec(SNAPPY)
+      .withDictionaryEncoding("docBloom", false).build())
     try metas.foreach(out.write) finally out.close()
   }
 

@@ -105,7 +105,15 @@ object SeqIO {
     * materializes + collects stats. Nothing is committed here.
     */
   def writeFiles(spark: SparkSession, table: SeqTable, df: DataFrame,
-      clustered: Boolean = false): Seq[FileMeta] = {
+      clustered: Boolean = false): Seq[FileMeta] = writeFiles(spark, table, Seq(df -> clustered))
+
+  /** Write several DataFrames as ONE write: one Spark job, one commit protocol, one staging
+    * directory ([[GraftSqlBridge.write]]). Each side is split into tasks and files as it
+    * would be written alone; its files come back after the files of the sides before it, each
+    * flagged with its side's `clustered`. A failure anywhere leaves no file of any side.
+    */
+  def writeFiles(spark: SparkSession, table: SeqTable,
+      sides: Seq[(DataFrame, Boolean)]): Seq[FileMeta] = {
     // FULL UUID: data-file basenames must be globally unique by construction — DV manifests
     // target files BY BASENAME, and after an expired file's physical deletion a later batch
     // reusing a truncated-entropy name would let a carried dead-target bitmap silently hide
@@ -116,10 +124,8 @@ object SeqIO {
     // a violating row fails the write loudly before any file lands. Rewrites of existing rows
     // re-evaluate too — one codegen predicate per row, and the add-time validation already
     // established the invariant for them (cheap insurance, not the primary defense)
-    val checked = {
-      val cs = graft.ops.Constraints.of(table.currentSnapshot())
-      if (cs.isEmpty) df else graft.ops.Constraints.enforced(df, cs)
-    }
+    val cs = graft.ops.Constraints.of(table.currentSnapshot())
+    def checked(df: DataFrame) = if (cs.isEmpty) df else graft.ops.Constraints.enforced(df, cs)
     // the table's CURRENT schema decides the physical column set: evolved columns ride along
     // through every rewrite, so the stats tracker finds the core columns by their ordinals here.
     // Logical→PHYSICAL name mapping happens here, the single write boundary: a re-added column
@@ -140,13 +146,18 @@ object SeqIO {
       // The write's own local FS (GraftSqlBridge.WriteFsOptions) sets file modes with a system
       // call, where the stock one forks three `chmod`s per data file without Hadoop's native
       // library, and writes no `.crc` sidecar for the tmp-tree delete below to throw away.
-      timed("writeFiles/write")(GraftSqlBridge.write(
-        checked.select(fields.map(f => col(f.name).as(SeqSchema.physicalName(f))): _*),
+      val parts = timed("writeFiles/write")(GraftSqlBridge.write(
+        sides.map { case (df, _) =>
+          checked(df).select(fields.map(f => col(f.name).as(SeqSchema.physicalName(f))): _*)
+        },
         tmp.toString, "parquet", dataFileOptions(fields), Seq(tracker),
         tokensColumn = fields.find(_.name == "tokens").map(SeqSchema.physicalName)))
+      // each job partition's side flag: side 0's partitions come first, then side 1's, …
+      val clusteredAt = parts.zip(sides).flatMap { case (n, (_, c)) => Seq.fill(n)(c) }
       val written = SeqTable.listDir(tmp)
-        .filter(p => p.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
+        .filter(p => p.getFileName.toString.endsWith(".parquet"))
         .map(p => p -> tracker.files(p.getFileName.toString))
+        .sortBy { case (p, s) => (s.partition, p.getFileName.toString) }
       // physically-empty part files (an all-empty input still writes one) get no manifest entry
       written.filter(_._2.records == 0).foreach(w => Files.delete(w._1))
       written.filter(_._2.records > 0).zipWithIndex.map { case ((p, s), i) =>
@@ -162,7 +173,7 @@ object SeqIO {
           minDocId = s.minDocId, maxDocId = s.maxDocId,
           sources = if (s.sources.size > MaxSourcesTracked) Nil else s.sources, // Nil = unknown
           addedAt = -1L,
-          clustered = clustered,
+          clustered = clusteredAt(s.partition),
           docBloom = Some(DocBloom.encode(s.docBloom)))
       }
     } catch { case e: Throwable => moved.foreach(Files.deleteIfExists(_)); throw e }
@@ -561,19 +572,20 @@ object SeqIO {
   /** Writes `df` as parquet part files and moves each into metadata/ as one manifest (the one
     * encoding: [[ManifestCodec]] reads them back on the driver). */
   private def writeManifestParts(table: SeqTable, df: DataFrame): Seq[String] =
-    publishParts(table, df, "parquet")(_ =>
+    // no docBloom dictionary, as ManifestCodec.write: parquet would build it only to drop it
+    publishParts(table, df, "parquet", Map("parquet.enable.dictionary#docBloom" -> "false"))(_ =>
       s"manifest-${java.util.UUID.randomUUID()}.parquet")
 
   /** The one way part files reach metadata/: `df` is written as `format` parts into a fresh tmp
     * directory there (the data files' writer, [[GraftSqlBridge.write]], with its write-only
     * local FS), each non-empty part moves into metadata/ as `name(i)`, and the tmp directory
-    * is always deleted — a failed or cancelled write (MERGE's peer cancel) leaves no `.tmp-*`
-    * behind for `removeOrphans` to reclaim. */
-  private def publishParts(table: SeqTable, df: DataFrame, format: String)(
-      name: Int => String): Seq[String] = {
+    * is always deleted — a failed write leaves no `.tmp-*` behind for `removeOrphans` to
+    * reclaim. */
+  private def publishParts(table: SeqTable, df: DataFrame, format: String,
+      options: Map[String, String] = Map.empty)(name: Int => String): Seq[String] = {
     val tmp = Files.createTempDirectory(table.metaDirPath, ".tmp-parts-")
     try {
-      GraftSqlBridge.write(df, tmp.toString, format, Map.empty, Nil)
+      GraftSqlBridge.write(Seq(df), tmp.toString, format, options, Nil)
       SeqTable.listDir(tmp)
         .filter(p => p.getFileName.toString.startsWith("part-") && Files.size(p) > 0)
         .sortBy(_.getFileName.toString)

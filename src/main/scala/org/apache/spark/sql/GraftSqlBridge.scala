@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.rdd.{RDD, UnionRDD}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.StructType
 
@@ -44,38 +45,51 @@ object GraftSqlBridge {
     }
   }
 
-  /** Write `df` as `format` (`parquet` or `text`) files under `path` in ONE Spark job, with
-    * `trackers` seeing every row the tasks hand the writer. This is what
-    * `df.write.options(options).format(format).save(path)` runs underneath —
+  /** Write `sides`, DataFrames of one schema, as `format` (`parquet` or `text`) files under
+    * `path` in ONE Spark job, with `trackers` seeing every row the tasks hand the writer. This is
+    * what `df.write.options(options).format(format).save(path)` runs underneath —
     * `FileFormatWriter.write` inside a new SQL execution, with the session's file commit
     * protocol — minus the write command around it, so the caller's stats trackers ride along,
     * and with the lean Hadoop conf of [[writeConf]]. Every graft table write, data files and
-    * metadata parts alike, goes through here. A parquet write with a `tokensColumn` (data files)
-    * goes through [[graft.table.DataFileFormat]], which decides that column's element encoding
-    * for files of one parquet page before parquet builds its dictionary; the files are the ones
-    * the stock format writes. `sessionState` is `private[sql]`.
+    * metadata parts alike, goes through here. A parquet write goes through
+    * [[graft.table.DataFileFormat]], whose writers open under one JVM-wide lock, and which, given
+    * a `tokensColumn` (data files), decides that column's element encoding for files of one
+    * parquet page before parquet builds its dictionary; the files are the ones the stock format
+    * writes. `sessionState` is `private[sql]`.
+    *
+    * Each side runs the physical plan it runs when written alone, so it splits into the same
+    * tasks and files; the job's tasks are side 0's, then side 1's, and so on (a `UnionRDD`), and
+    * the returned counts say how many each side has. Only the column nullability is shared: the
+    * files' schema is the union's.
     */
-  def write(df: Dataset[Row], path: String, format: String, options: Map[String, String],
-      trackers: Seq[execution.datasources.WriteJobStatsTracker],
-      tokensColumn: Option[String] = None): Unit = {
+  def write(sides: Seq[Dataset[Row]], path: String, format: String,
+      options: Map[String, String], trackers: Seq[execution.datasources.WriteJobStatsTracker],
+      tokensColumn: Option[String] = None): Seq[Int] = {
     import execution.datasources.{FileFormat, FileFormatWriter}
-    val fileFormat: FileFormat = (format, tokensColumn) match {
-      case ("parquet", Some(c)) => new graft.table.DataFileFormat(c)
-      case ("parquet", None) => new execution.datasources.parquet.ParquetFileFormat
-      case ("text", None) => new execution.datasources.text.TextFileFormat
+    val fileFormat: FileFormat = format match {
+      case "parquet" => new graft.table.DataFileFormat(tokensColumn)
+      case "text" if tokensColumn.isEmpty => new execution.datasources.text.TextFileFormat
     }
-    val c = df.asInstanceOf[classic.Dataset[Row]]
-    val session = c.sparkSession
-    val qe = c.queryExecution
+    val union = sides.reduce(_ union _).asInstanceOf[classic.Dataset[Row]]
+    val (session, qe) = (union.sparkSession, union.queryExecution)
     val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
       session.sessionState.conf.fileCommitProtocolClass,
       jobId = java.util.UUID.randomUUID().toString, outputPath = path)
     execution.SQLExecution.withNewExecutionId(qe, Some(format)) {
-      val plan = qe.executedPlan
+      val rdds = sides.map(_.asInstanceOf[classic.Dataset[Row]].queryExecution.executedPlan)
+        .map(_.execute())
+      val plan = RowsExec(qe.executedPlan.output, new UnionRDD(session.sparkContext, rdds))
       FileFormatWriter.write(session, plan, fileFormat, committer,
         FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
         writeConf(session, options), Nil, None, trackers, options)
+      rdds.map(_.getNumPartitions)
     }
+  }
+
+  /** The rows of `rows` as a physical plan with `output`. */
+  private final case class RowsExec(output: Seq[catalyst.expressions.Attribute],
+      rows: RDD[catalyst.InternalRow]) extends execution.LeafExecNode {
+    protected override def doExecute(): RDD[catalyst.InternalRow] = rows
   }
 
   /** Entries every [[write]] adds to its own Hadoop conf: `file:` paths go through

@@ -51,9 +51,9 @@ class DataFileFormatSpec extends AnyFunSuite with TempDirs {
   private def writeBoth(df: DataFrame, opts: Map[String, String] = options,
       tokens: String = "tokens"): (Seq[Path], (Long, Long)) = {
     val (stock, decided) = (tempDir("dff-stock-"), tempDir("dff-decided-"))
-    GraftSqlBridge.write(df, stock.resolve("o").toString, "parquet", opts, Nil)
-    val made = decisions(GraftSqlBridge.write(df, decided.resolve("o").toString, "parquet", opts,
-      Nil, tokensColumn = Some(tokens)))
+    GraftSqlBridge.write(Seq(df), stock.resolve("o").toString, "parquet", opts, Nil)
+    val made = decisions(GraftSqlBridge.write(Seq(df), decided.resolve("o").toString, "parquet",
+      opts, Nil, tokensColumn = Some(tokens)))
     val (s, d) = (parts(stock.resolve("o")), parts(decided.resolve("o")))
     assert(s.nonEmpty && s.size === d.size)
     // part-<partition>-<job uuid>-c<file>: the job uuid differs, the rest pairs the files
@@ -237,7 +237,7 @@ class DataFileFormatSpec extends AnyFunSuite with TempDirs {
     val dir = tempDir("dff-single-")
     val rows = (0 until 10000).map(i => row(i, Array.tabulate(12)(j => (i * 31 + j * 7919) % 50304)))
     val decided = dir.resolve("decided.parquet")
-    val (f, ctx) = writers(new DataFileFormat("tokens"))
+    val (f, ctx) = writers(new DataFileFormat(Some("tokens")))
     val made = decisions {
       val w = f.newInstance(decided.toString, SeqSchema.schema, ctx)
       rows.take(RowLimit).foreach(w.write)
@@ -259,7 +259,7 @@ class DataFileFormatSpec extends AnyFunSuite with TempDirs {
     val opts = options + ("parquet.block.row.count.limit" -> "150")
     val dir = tempDir("dff-rowgroups-")
     val long = (0 until 400).map(i => row(i, Array.tabulate(40)(j => (i + j) % 8)))
-    val (f, ctx) = writers(new DataFileFormat("tokens"), opts)
+    val (f, ctx) = writers(new DataFileFormat(Some("tokens")), opts)
     val streamed = dir.resolve("streamed.parquet")
     val w = f.newInstance(streamed.toString, SeqSchema.schema, ctx)
     long.take(RowLimit + 1).foreach(w.write)

@@ -116,7 +116,7 @@ class WriteStatsSpec extends AnyFunSuite with TempDirs {
     // the tracker straight under the writer, with doc_id, n_tok and source at other ordinals
     val dir = tempDir("wstats-perm-").resolve("out")
     val tracker = new FileStatsTracker(docOrd = 4, ntokOrd = 2, srcOrd = 0)
-    GraftSqlBridge.write(df.select("source", "lang", "n_tok", "tokens", "doc_id"),
+    GraftSqlBridge.write(Seq(df.select("source", "lang", "n_tok", "tokens", "doc_id")),
       dir.toString, "parquet", Map.empty, Seq(tracker))
     val parts = SeqTable.listDir(dir).filter(_.getFileName.toString.endsWith(".parquet"))
     val actual = parts.map { p =>

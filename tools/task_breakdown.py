@@ -28,6 +28,8 @@ METRICS = (
     ("gc", "JVM GC Time", 1.0),
 )
 COLUMNS = ("wall",) + tuple(m[0] for m in METRICS)
+# Spark's event-log codecs (`spark.eventLog.compression.codec`; Spark 4 compresses by default)
+COMPRESSED = (".zstd", ".lz4", ".lzf", ".snappy")
 SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
 
 
@@ -98,6 +100,10 @@ def main():
     logs = [files for files in app_logs(root) if files]
     if not logs:
         raise SystemExit(f"task_breakdown: no event log in {root}")
+    packed = [p for files in logs for p in files if p.suffix in COMPRESSED]
+    if packed:
+        raise SystemExit(f"task_breakdown: {packed[0]} is compressed; write the event log with "
+                         "-Dspark.eventLog.compress=false")
     for files in logs:
         report(files)
 
