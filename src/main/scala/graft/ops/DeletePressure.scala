@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.table.{FileMeta, SeqIO, SeqTable, Snapshot}
+import graft.table.{FileMeta, KeyPrune, SeqIO, SeqTable, Snapshot}
 
 /** Metadata-only estimate of how many of a file's rows are hidden by outstanding merge-on-read
   * deletes — the planner-side signal that routes delete-laden cells into the maintenance
@@ -47,8 +47,8 @@ final class DeletePressure private (
     if (keys.isEmpty) return 0.0
     val seqs = seqsB.value
     // slice of delete keys inside the file's doc_id range (Utf8Order: the stats' byte order)
-    val lo = DeletePressure.lowerBound(keys, f.minDocId)
-    var hi = DeletePressure.lowerBound(keys, f.maxDocId)
+    val lo = KeyPrune.lowerBound(keys, f.minDocId)
+    var hi = KeyPrune.lowerBound(keys, f.maxDocId)
     if (hi < keys.length && keys(hi) == f.maxDocId) hi += 1
     if (hi <= lo) return 0.0
     val n = hi - lo
@@ -113,16 +113,5 @@ object DeletePressure {
       new DeletePressure(spark.sparkContext.broadcast(sorted.map(_._1)),
         spark.sparkContext.broadcast(sorted.map(_._2)), -1L, dvB)
     }
-  }
-
-  /** First index with keys(i) >= key (keys sorted ascending in [[graft.table.Utf8Order]]). */
-  private[ops] def lowerBound(keys: Array[String], key: String): Int = {
-    var lo = 0
-    var hi = keys.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (graft.table.Utf8Order.compare(keys(mid), key) < 0) lo = mid + 1 else hi = mid
-    }
-    lo
   }
 }

@@ -1,10 +1,9 @@
 package graft.ops
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.planner.GridConfig
-import graft.table.{SeqIO, SeqTable}
+import graft.table.{Dv, FileMeta, SeqIO, SeqTable}
 
 /** Predicate DML — `DELETE FROM … WHERE` and `UPDATE … SET … WHERE` as first-class engine ops
   * (the Iceberg/Delta row-level DML surface, public design), routed through the transactional
@@ -115,19 +114,11 @@ object Dml {
         .select(col("_fn"), col("_pos"))
       val dvNames = SeqIO.writeDvManifests(spark, table, victims, snap.version + 1)
       if (dvNames.isEmpty) return MergeResult(snap, 0, attempt) // predicate matched nothing
-      // targeted files + deleted-row count from the manifests' own headers (bitmaps not decoded)
-      val headers = dvNames.flatMap { n =>
-        java.nio.file.Files.readAllLines(
-          java.nio.file.Paths.get(table.deleteManifestPath(n))).asScala.map(
-          graft.table.Dv.parseLineHeader)
-      }
-      val targetBasenames = headers.map(_._1).toSet
-      val targeted = selected.filter(f => targetBasenames(SeqIO.fileBasename(f.path)))
-        .map(_.path).toSet
+      val (targeted, deletedRows) = dvTargets(table, dvNames, selected)
       try {
         val s = table.commit("delete-dv", Nil, Set.empty,
           Map("dv-manifests" -> dvNames.size.toString,
-            "dv-deleted-rows" -> headers.map(_._2).sum.toString,
+            "dv-deleted-rows" -> deletedRows.toString,
             "dv-files-targeted" -> targeted.size.toString),
           addedDeleteManifests = dvNames,
           requireLivePaths = targeted,
@@ -141,6 +132,17 @@ object Dml {
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** The `selected` files the new `.dv` manifests `dvNames` target (their paths) and the rows
+    * they hide, from the manifests' own headers (bitmaps not decoded).
+    */
+  private def dvTargets(table: SeqTable, dvNames: Seq[String],
+      selected: Seq[FileMeta]): (Set[String], Long) = {
+    val headers = Dv.headers(table, dvNames)
+    val basenames = headers.map(_._1).toSet
+    (selected.filter(f => basenames(SeqIO.fileBasename(f.path))).map(_.path).toSet,
+      headers.map(_._2).sum)
   }
 
   /** UPDATE table SET col = expr, … WHERE `cond`. `set` maps column name → new-value expression
@@ -205,18 +207,11 @@ object Dml {
         val dvNames = SeqIO.writeDvManifests(spark, table,
           matched.select(col("_fn"), col("_pos")), snap.version + 1)
         if (dvNames.isEmpty) return MergeResult(snap, 0, attempt) // predicate matched nothing
-        val headers = dvNames.flatMap { n =>
-          java.nio.file.Files.readAllLines(
-            java.nio.file.Paths.get(table.deleteManifestPath(n))).asScala.map(
-            graft.table.Dv.parseLineHeader)
-        }
-        val targetBasenames = headers.map(_._1).toSet
-        val targeted = selected.filter(f => targetBasenames(SeqIO.fileBasename(f.path)))
-          .map(_.path).toSet
+        val (targeted, updatedRows) = dvTargets(table, dvNames, selected)
         try {
           val s = table.commit("update-dv", added, Set.empty,
             Map("dv-manifests" -> dvNames.size.toString,
-              "dv-updated-rows" -> headers.map(_._2).sum.toString,
+              "dv-updated-rows" -> updatedRows.toString,
               "dv-files-targeted" -> targeted.size.toString),
             addedDeleteManifests = dvNames,
             // rewrites existing rows → must fence against delete manifests that appeared since

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.planner.GridConfig
-import graft.table.{FileMeta, SeqIO, SeqTable, Snapshot}
+import graft.table.{KeyPrune, SeqIO, SeqTable, Snapshot}
 
 final case class MergeResult(
     snapshot: Snapshot,
@@ -18,8 +18,8 @@ final case class MergeResult(
   *  - otherwise    → update the target row, or insert when absent
   *
   * Physical plan, scale-first:
-  *  1. **prune**: only data files whose manifest [minDocId, maxDocId] range can contain a change
-  *     key are touched — a broadcast range-join of change keys against file stats;
+  *  1. **prune**: only data files whose manifest [minDocId, maxDocId] range and doc_id Bloom may
+  *     hold a change key are touched ([[graft.table.KeyPrune]]);
   *  2. **survivor path**: the pruned target subset anti-joins the broadcast change keys and is
   *     rewritten file-for-file — NO shuffle, no range sampling; each replacement is a subset of
   *     its source file, so its layout and min/max stats carry over. (When the change set is too
@@ -35,27 +35,6 @@ final case class MergeResult(
   * (`/root/reference/src/main/scala/SDL/main/main.java:169-248`).
   */
 object MergeInto {
-
-  /** Ceiling for the collected sorted-key prune array (~4M keys ≈ tens of MB broadcast);
-    * larger change sets fall back to the theta-join prune and auto-route MoR regardless.
-    */
-  val MaxPruneKeys: Long = 1L << 22
-
-  /** Does [min, max] (inclusive, per manifest stats) contain ANY of the sorted keys?
-    * Two binary searches — the O(log K) per-file range prune. Keys must be sorted with
-    * [[graft.table.Utf8Order]] and all comparisons use it: the per-file min/max stats come from
-    * Spark min/max (UTF-8 byte order), and mixing in Java's UTF-16 order can wrongly prune a
-    * file that holds a key (missed COW rewrite → duplicate keys after MERGE).
-    */
-  private[graft] def rangeMayHit(sorted: Array[String], min: String, max: String): Boolean = {
-    var lo = 0
-    var hi = sorted.length
-    while (lo < hi) { // first index with sorted(i) >= min
-      val mid = (lo + hi) >>> 1
-      if (graft.table.Utf8Order.compare(sorted(mid), min) < 0) lo = mid + 1 else hi = mid
-    }
-    lo < sorted.length && graft.table.Utf8Order.compare(sorted(lo), max) <= 0
-  }
 
   /** @param mor  force merge-on-read (delete manifests, no target rewrite)
     * @param auto pick the physical strategy per attempt from the prune result: when the affected
@@ -118,95 +97,24 @@ object MergeInto {
     var keys: DataFrame = null
     try {
       keys = ch.select(col("c_doc_id")).distinct().persist()
-      // ONE job materializes the key cache AND yields the count + the sorted prune array for
-      // every change set under the cap (the prior count-then-collect shape paid two jobs per
-      // merge — pure scheduling latency in the executor-count scaling legs); only an over-cap
-      // set pays a separate count.
-      // SORTED key array for the range prune, collected ONCE (not per conflict-retry attempt):
-      // per-file candidacy is two binary searches — O(F log K) — where the broadcast theta-join
-      // it replaces was a nested-loop O(F × K): 10^7 files × 10^6 keys is 10^13 comparisons
-      // (hours) vs 2×10^8 (sub-second). Above MaxPruneKeys the array no longer broadcasts
-      // comfortably and the merge is table-wide anyway (auto-routes MoR) — the theta-join
-      // fallback stands. The ≤ PruneMaxKeys prefix doubles as the bloom probe set.
-      val capped: Array[String] = {
-        import spark.implicits._
-        timed("materialize-changes")(
-          keys.limit((MaxPruneKeys + 1).toInt).as[String].collect())
-      }
-      val nKeys: Long =
-        if (capped.length > MaxPruneKeys) keys.count() else capped.length.toLong
-      val sortedKeys: Array[String] =
-        if (nKeys > MaxPruneKeys) null
-        else { java.util.Arrays.sort(capped, graft.table.Utf8Order); capped }
-      val bloomKeys: Array[String] =
-        if (sortedKeys == null || nKeys > graft.table.DocBloom.PruneMaxKeys) Array.empty
-        else sortedKeys
+      // ONE job materializes the key cache AND collects the keys for the prune of every attempt
+      // (the prior count-then-collect shape paid two jobs per merge — pure scheduling latency in
+      // the executor-count scaling legs); only an over-cap set pays a separate count
+      val keySet = timed("materialize-changes")(KeyPrune.KeySet.of(keys))
+      val nKeys = keySet.size
       var attempt = 0
       while (true) {
         attempt += 1
         val snap = table.currentSnapshot()
-        // distributed routing mirrors tableDiff/the planner: above the threshold (or at 0,
-        // forcing it) the live manifest stays on executors end-to-end
-        val useDistributed = SeqIO.routesDistributed(snap, distributedMetaFiles)
-
-        // 1. manifest pruning: files whose doc_id range may contain a change key (also drives the
-        //    auto COW-vs-MoR routing, so it runs before the branch; pure metadata × keys).
-        //    Two levels: the [min,max] range join (free, but blind on curve-clustered layouts
-        //    where every file spans the whole key domain), then per-file doc_id Blooms for sparse
-        //    change sets — key-level pruning that works on ANY layout (DocBloom scaladoc).
-        import spark.implicits._
-        val (affected: Seq[FileMeta], liveRecords: Long) =
-          if (!useDistributed) {
-            // bench-scale fast path: cached driver manifests; with the sorted key array the
-            // range prune is a driver-local binary-search filter — ZERO metadata jobs
-            val live = table.liveFiles(snap)
-            val rangeAffected = timed("prune")(
-              if (sortedKeys != null)
-                live.filter(f => rangeMayHit(sortedKeys, f.minDocId, f.maxDocId))
-              else {
-                val fileRanges = spark.createDataset(
-                  live.map(f => (f.path, f.minDocId, f.maxDocId)))
-                  .toDF("path", "min_doc", "max_doc")
-                val rangePaths = fileRanges
-                  .join(broadcast(keys), col("c_doc_id").between(col("min_doc"), col("max_doc")))
-                  .select("path").distinct().as[String].collect().toSet
-                live.filter(f => rangePaths.contains(f.path))
-              })
-            // probe budget: the driver-side test is keys × candidate-files in the worst case;
-            // above the ceiling the range prune stands alone (dense sets route to MoR regardless)
-            val probeBudgetOk =
-              bloomKeys.nonEmpty && bloomKeys.length.toLong * rangeAffected.size <= 200_000_000L
-            val a = timed("bloom-prune")(
-              if (!probeBudgetOk) rangeAffected
-              else rangeAffected.filter(f => graft.table.DocBloom.mayContainAny(f, bloomKeys)))
-            (a, live.map(_.records).sum)
-          } else {
-            // 10^7-file path: the range join runs on the NARROW manifest Dataset (executors,
-            // bloom column never read), only range-candidate entries reach the driver
-            // (change-proportional); the Bloom refinement probes the candidates' full-width
-            // entries ON EXECUTORS against the broadcast key set, so no docBloom byte ever
-            // lands on the driver — candidates are collected bloom-stripped either way.
-            val metaN = SeqIO.fileMetaDSOf(spark, table, snap, narrow = true)
-            val liveRecords = timed("meta-agg")(
-              metaN.toDF().agg(coalesce(sum("records"), lit(0L))).head.getLong(0))
-            val cand = timed("prune")(
-              if (sortedKeys != null) {
-                val ka = spark.sparkContext.broadcast(sortedKeys)
-                metaN.filter(f => MergeInto.rangeMayHit(ka.value, f.minDocId, f.maxDocId))
-                  .collect().toSeq
-              } else metaN.toDF()
-                .join(broadcast(keys),
-                  col("c_doc_id").between(col("minDocId"), col("maxDocId")), "left_semi")
-                .as[FileMeta].collect().toSeq)
-            val probeBudgetOk =
-              bloomKeys.nonEmpty && bloomKeys.length.toLong * cand.size <= 200_000_000L
-            val a = timed("bloom-prune")(
-              if (!probeBudgetOk || cand.isEmpty) cand
-              else SeqIO.bloomCandidates(spark, table, snap, cand, bloomKeys))
-            (a, liveRecords)
-          }
-        val editPlanner =
-          if (useDistributed) Some(SeqIO.distributedManifestEdit(spark, table)) else None
+        // above distributedMetaFiles (or at 0, forcing it) the live manifest stays on executors
+        // end-to-end, as in tableDiff and the planner
+        val live = KeyPrune.liveFiles(spark, table, snap, distributedMetaFiles)
+        val liveRecords = timed("meta-agg")(live.fold(_.map(_.records).sum,
+          _.toDF().agg(coalesce(sum("records"), lit(0L))).head.getLong(0)))
+        // 1. manifest pruning: files that may hold a change key (also drives the auto COW-vs-MoR
+        //    routing, so it runs before the branch; pure metadata × keys)
+        val affected = timed("prune")(KeyPrune.filesMayHold(spark, table, snap, live, keySet))
+        val editPlanner = live.toOption.map(_ => SeqIO.distributedManifestEdit(spark, table))
 
         val useMor = mor || (auto && liveRecords > 0 &&
           affected.map(_.records).sum > autoMorFraction * liveRecords)

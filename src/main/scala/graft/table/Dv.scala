@@ -1,6 +1,7 @@
 package graft.table
 
 import java.util.Base64
+import scala.jdk.CollectionConverters._
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
@@ -170,6 +171,11 @@ object Dv {
     require(t1 > 0 && t2 > t1, s"Dv: malformed manifest line '${line.take(80)}'")
     (line.substring(0, t1), line.substring(t1 + 1, t2).toLong)
   }
+
+  /** Every line header of `table`'s `.dv` manifests `names`, read on the driver. */
+  def headers(table: SeqTable, names: Seq[String]): Seq[(String, Long)] =
+    names.flatMap(n => java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(table.deleteManifestPath(n))).asScala.map(parseLineHeader))
 }
 
 /** Executor-side DV probe state: the broadcast basename → encoded-bitmap(s) map plus a

@@ -542,20 +542,6 @@ object SeqIO {
       .withColumn("docBloom", lit(null).cast("string")).as[FileMeta]
   }
 
-  /** The `candidates` whose doc_id Bloom may hold one of `keys`, probed ON EXECUTORS against
-    * their full-width entries in `snap` — no docBloom byte reaches the driver, and the result
-    * comes back Bloom-stripped (the 10^7-file refinement of MERGE, lookups, delete
-    * materialization and the changelog). */
-  private[graft] def bloomCandidates(spark: SparkSession, table: SeqTable, snap: Snapshot,
-      candidates: Seq[FileMeta], keys: Array[String]): Seq[FileMeta] = {
-    import spark.implicits._
-    val paths = spark.createDataset(candidates.map(_.path)).toDF("path")
-    val ka = spark.sparkContext.broadcast(keys)
-    fileMetaDSOf(spark, table, snap).join(broadcast(paths), Seq("path"), "left_semi")
-      .as[FileMeta].filter(f => DocBloom.mayContainAny(f, ka.value))
-      .map(_.copy(docBloom = None)).collect().toSeq
-  }
-
   /** Executor-side scan of a set of manifests, column-pruned to `schema` — by default just the
     * `path` column, all the expiry diff and the membership checks need. One `Files.size` per
     * manifest, no listing; a missing manifest fails here, naming it. */
@@ -829,11 +815,7 @@ object SeqIO {
         (sTo.deleteManifests.toSet diff sFrom.deleteManifests.toSet)).toSeq.sorted
     val deltaKeyManifests = deltaManifests.filter(_.endsWith(".keys"))
     val deltaDvManifests = deltaManifests.filter(_.endsWith(".dv"))
-    // dv-delta target basenames: executor-side header parse, change-proportional collect
-    val dvDeltaBasenames: Set[String] =
-      if (deltaDvManifests.isEmpty) Set.empty
-      else spark.read.textFile(deltaDvManifests.map(table.deleteManifestPath): _*)
-        .map(l => Dv.parseLineHeader(l)._1).distinct().collect().toSet
+    val dvDeltaBasenames = Dv.headers(table, deltaDvManifests).map(_._1).toSet
     if (deltaKeyManifests.nonEmpty || dvDeltaBasenames.nonEmpty) {
       val deltaBytes = deltaKeyManifests
         .map(m => Files.size(Paths.get(table.deleteManifestPath(m)))).sum
@@ -843,62 +825,23 @@ object SeqIO {
           .select(col("value").as("_delta_key")).distinct()
       val deltaKeys =
         if (deltaBytes <= maxBroadcastBytes) broadcast(deltaKeys0) else deltaKeys0
-      // executor-side scan of the delta key manifests only
-      val nKeys = if (deltaKeyManifests.isEmpty) 0L else deltaKeys0.count()
-      def carriedDriver(): Seq[FileMeta] = {
-        val liveFrom = table.liveFiles(sFrom)
-        val pTo = table.liveFiles(sTo).map(_.path).toSet
-        liveFrom.filter(f => pTo(f.path))
-      }
-      def carriedDS(): DataFrame = fileMetaDSOf(spark, table, sFrom, narrow = true).toDF()
-        .join(scanManifests(spark, table, sTo.manifests), Seq("path"), "left_semi")
-      // two-level file prune for the key family (the MergeInto discipline, same
-      // DocBloom.PruneMaxKeys collect ceiling and probe budget): doc_id range, then per-file
-      // Bloom. Empty delta-key sets (delete manifests present but zero keys) short-circuit:
-      // no key can flip visibility.
-      val eqCarried: Seq[FileMeta] =
-        if (nKeys == 0) Nil
-        else if (!useDistributed) {
-          val carried = carriedDriver()
-          if (nKeys <= DocBloom.PruneMaxKeys && nKeys * carried.size <= 200_000_000L) {
-            val keys = deltaKeys0.as[String].collect()
-            // Utf8Order, not String >=: the stats are Spark min/max (UTF-8 byte order)
-            carried.filter(f => keys.exists(k => Utf8Order.compare(k, f.minDocId) >= 0 &&
-                Utf8Order.compare(k, f.maxDocId) <= 0) &&
-              DocBloom.mayContainAny(f, keys))
-          } else carried
-        } else {
-          // the carried set stays on executors: doc_id-range theta-join against the delta keys
-          // selects the candidate files, and only THOSE (delta-proportional) are collected
-          // (a delta too big to broadcast can't range-prune cheaply — a shuffle theta-join is a
-          // cross product: every carried file is a candidate, collected NARROW)
-          val cand =
-            if (deltaBytes > maxBroadcastBytes) carriedDS().as[FileMeta].collect().toSeq
-            else carriedDS()
-              .join(broadcast(deltaKeys0),
-                col("_delta_key").between(col("minDocId"), col("maxDocId")), "left_semi")
-              .as[FileMeta].collect().toSeq
-          // Bloom refinement (the range prune is blind on curve-clustered layouts): fetch the
-          // candidates' full-width manifest entries with one executor-side scan — the docBloom
-          // payloads of non-candidates never reach the driver
-          if (cand.nonEmpty && nKeys <= DocBloom.PruneMaxKeys &&
-              nKeys * cand.size <= 200_000_000L)
-            bloomCandidates(spark, table, sFrom, cand, deltaKeys0.as[String].collect())
-          else cand
-        }
-      // dv candidates: carried files a delta DV targets, by exact basename
-      val dvCarried: Seq[FileMeta] =
+      // the carried files, on the driver or (the 10^7-file route) on executors
+      val carried: KeyPrune.Manifest =
+        if (!useDistributed) {
+          val pTo = table.liveFiles(sTo).map(_.path).toSet
+          Left(table.liveFiles(sFrom).filter(f => pTo(f.path)))
+        } else Right(fileMetaDSOf(spark, table, sFrom, narrow = true)
+          .join(scanManifests(spark, table, sTo.manifests), Seq("path"), "left_semi")
+          .as[FileMeta])
+      // the key family: the carried files that may hold a delta key (doc_id range, then
+      // per-file Bloom); an empty delta-key set (delete manifests, zero keys) selects none
+      val eqCarried =
+        if (deltaKeyManifests.isEmpty) Nil
+        else KeyPrune.filesMayHold(spark, table, sFrom, carried, KeyPrune.KeySet.of(deltaKeys0))
+      // the dv family: carried files a delta DV targets, by exact basename
+      val dvCarried =
         if (dvDeltaBasenames.isEmpty) Nil
-        else if (!useDistributed)
-          carriedDriver().filter(f => dvDeltaBasenames(fileBasename(f.path)))
-            .map(_.copy(docBloom = None))
-        else {
-          val bnDF = broadcast(spark.createDataset(dvDeltaBasenames.toSeq).toDF("_bn"))
-          carriedDS()
-            .withColumn("_bn", element_at(split(col("path"), "/"), -1))
-            .join(bnDF, Seq("_bn"), "left_semi")
-            .drop("_bn").as[FileMeta].collect().toSeq
-        }
+        else KeyPrune.collectWhere(carried, f => dvDeltaBasenames(fileBasename(f.path)))
       val eqPaths = eqCarried.map(_.path).toSet
       val prunedCarried = eqCarried ++ dvCarried.filterNot(f => eqPaths(f.path))
       if (prunedCarried.nonEmpty) {
@@ -1039,15 +982,11 @@ object SeqIO {
   }
 
   /** POINT LOOKUP — the needle query: fetch the rows of an explicit `doc_id` key set by opening
-    * only the files that can hold one. Two-level prune, all metadata: the [minDocId, maxDocId]
-    * range test over the NARROW manifest entries, then per-file doc_id Blooms over just the
-    * range candidates (the level that works on curve-clustered layouts, where every file spans
-    * the whole key domain) — the same discipline as MERGE, at read time. Above
-    * `distributedMetaFiles` the Bloom refinement fetches candidates' full-width entries with an
-    * executor-side semi-join (no docBloom byte reaches the driver for non-candidates); below,
-    * the cached driver manifests win. The final scan pushes `doc_id IN (…)` into parquet
-    * (row-group skipping on clustered files) and applies the snapshot's deletes — a key
-    * deleted by equality or a deletion vector does NOT return.
+    * only the files that can hold one — the [[KeyPrune]] MERGE uses (doc_id range, then per-file
+    * Bloom, the level that works on curve-clustered layouts), at read time, over the driver's
+    * cached manifests or, above `distributedMetaFiles`, on executors. The final scan pushes
+    * `doc_id IN (…)` into parquet (row-group skipping on clustered files) and applies the
+    * snapshot's deletes — a key deleted by equality or a deletion vector does NOT return.
     *
     * At the 10^7-file design point a clustered table resolves a single key to O(1) files via
     * range alone; a curve-clustered one to the Bloom's false-positive share of range hits.
@@ -1059,20 +998,13 @@ object SeqIO {
       s"lookupKeys: ${keys.size} keys — a point lookup above ${DocBloom.PruneMaxKeys} keys " +
         "is a scan; use read() with an isin filter")
     val snap = table.currentSnapshot()
-    val sorted = keys.distinct.sorted(Utf8Order).toArray
-    val live = table.liveFilesNarrow(snap)
-    val rangeCand = live.filter(f =>
-      graft.ops.MergeInto.rangeMayHit(sorted, f.minDocId, f.maxDocId))
-    val useDistributed = routesDistributed(snap, distributedMetaFiles)
-    val selected: Seq[FileMeta] =
-      if (rangeCand.isEmpty) Nil
-      else if (!useDistributed)
-        table.liveFiles(snap).filter(f =>
-          graft.ops.MergeInto.rangeMayHit(sorted, f.minDocId, f.maxDocId) &&
-            DocBloom.mayContainAny(f, sorted)).map(_.copy(docBloom = None))
-      else bloomCandidates(spark, table, snap, rangeCand, sorted)
+    val live = KeyPrune.liveFiles(spark, table, snap, distributedMetaFiles)
+    val selected = KeyPrune.filesMayHold(spark, table, snap, live, KeyPrune.KeySet.of(spark, keys))
+    // the live count of the executor route from the snapshot summary, which every commit writes
+    val totalFiles = live.fold(_.size, ds =>
+      snap.summary.get("total-files").flatMap(_.toIntOption).getOrElse(ds.count().toInt))
     val df = readWithDeletes(spark, table, snap, selected)
-      .filter(col("doc_id").isInCollection(sorted))
-    (df, ScanStats(selected.size, live.size, selected.map(_.records).sum))
+      .filter(col("doc_id").isInCollection(keys.distinct))
+    (df, ScanStats(selected.size, totalFiles, selected.map(_.records).sum))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.scalatest.{BeforeAndAfterAll, Suite}
@@ -15,6 +15,20 @@ trait TempDirs extends BeforeAndAfterAll { this: Suite =>
     val d = Files.createTempDirectory(prefix)
     dirs.add(d)
     d
+  }
+
+  /** A byte-identical copy of the table tree at `root`, as the sibling `<root>-clone`: the same
+    * data and manifest file names, so the copy plans and prunes exactly as the original does.
+    * It is deleted with the suite's temp directories.
+    */
+  def cloneTable(root: String): String = {
+    val from = Paths.get(root)
+    val to = Paths.get(root + "-clone")
+    dirs.add(to)
+    val walk = Files.walk(from)
+    try walk.iterator().asScala.foreach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+    finally walk.close()
+    to.toString
   }
 
   override def afterAll(): Unit =

@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.TempDirs
@@ -32,16 +31,10 @@ class DistributedCycleSpec extends AnyFunSuite with TempDirs {
 
   test("distributed cycle path == driver cycle path: same plans, same content, parquet manifests") {
     val rootA = tempDir("dcyc-driver-").toString + "/t"
-    val rootB = tempDir("dcyc-dist-").toString + "/t"
     // ONE deterministic fixture, cloned byte-for-byte: unclustered files scatter on the planner
     // grid by path hash, so the two paths must see identical physical paths to plan identically
     val (ta, _) = SeqGen.fragmentedTable(spark, rootA, 5000, 40)
-    import scala.jdk.CollectionConverters._
-    Files.walk(java.nio.file.Paths.get(rootA)).iterator().asScala.toSeq.foreach { p =>
-      val dst = java.nio.file.Paths.get(rootB).resolve(java.nio.file.Paths.get(rootA).relativize(p))
-      if (Files.isDirectory(p)) Files.createDirectories(dst)
-      else { Files.createDirectories(dst.getParent); Files.copy(p, dst) }
-    }
+    val rootB = cloneTable(rootA)
     val tb = graft.table.SeqTable.load(rootB)
     val base = MaintenanceOptions(k = 8, targetRecordsPerFile = 600)
 

@@ -277,6 +277,26 @@ class DvTableSpec extends AnyFunSuite with TempDirs {
       .filter(col("n_tok") < 400 || col("n_tok") > 1600).count() == 0)
   }
 
+  test("housekeeping on the executor route retires the same DEAD dv manifest, parsing none") {
+    val table = fresh("retire-dist")
+    Dml.deleteWhere(spark, table, col("n_tok") < 400, cfg, 1000, dv = true)
+    val dv1 = SeqIO.dvManifestsOf(table.currentSnapshot())
+    val dv1Targets = graft.table.Dv.headers(table, dv1).map(_._1).toSet
+    Rewrite.compactFiles(spark, table,
+      table.liveFiles().filter(f => dv1Targets(SeqIO.fileBasename(f.path))), cfg, 1000)
+    Dml.deleteWhere(spark, table, col("n_tok") > 1600, cfg, 1000, dv = true)
+    val before = table.currentSnapshot().deleteManifests.toSet
+    val cold = SeqTable.load(cloneTable(table.root))
+    assert(MaterializeDeletes.dropObsolete(spark, table).isDefined)
+    assert(MaterializeDeletes.dropObsolete(spark, cold, distributedMetaFiles = 0L).isDefined)
+    assert(cold.manifestNarrowFileReads.get() === 0L, "parsed a narrow manifest on the driver")
+    assert(cold.manifestFileReads.get() === 0L, "parsed a full manifest on the driver")
+    val dropped = before -- table.currentSnapshot().deleteManifests
+    assert(dropped === dv1.toSet)
+    assert(before -- cold.currentSnapshot().deleteManifests === dropped)
+    assert(SeqIO.read(spark, cold).count() === SeqIO.read(spark, table).count())
+  }
+
   test("compaction materializes DVs (delete-aware rewrite) and reads stay correct") {
     val table = fresh("mat", n = 3000, files = 30)
     Dml.deleteWhere(spark, table, col("n_tok") < 700, cfg, 1000, dv = true)

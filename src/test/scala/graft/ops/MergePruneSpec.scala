@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
@@ -106,24 +105,12 @@ class MergePruneSpec extends AnyFunSuite with TempDirs {
     before.unpersist(); dels.unpersist(); delKeys.unpersist()
   }
 
-  /** Byte-for-byte clone (UUID file names must match for exact parity). */
-  private def clone(rootA: String): String = {
-    val rootB = rootA + "-clone"
-    import scala.jdk.CollectionConverters._
-    Files.walk(java.nio.file.Paths.get(rootA)).iterator().asScala.toSeq.foreach { p =>
-      val dst = java.nio.file.Paths.get(rootB).resolve(java.nio.file.Paths.get(rootA).relativize(p))
-      if (Files.isDirectory(p)) Files.createDirectories(dst)
-      else { Files.createDirectories(dst.getParent); java.nio.file.Files.copy(p, dst) }
-    }
-    rootB
-  }
-
   private def contentOf(t: SeqTable) = SeqIO.read(spark, t)
     .select("doc_id", "tokens", "n_tok", "source")
 
   test("DISTRIBUTED merge: parity with the driver path, ZERO driver manifest parses") {
     val tA = curveTable()
-    val rootB = clone(tA.root)
+    val rootB = cloneTable(tA.root)
     val changes = SeqGen.changeSet(spark, 2000, changes = 40, deletes = 10).persist()
     val mrA = MergeInto.merge(spark, tA, changes, cfg, targetRecordsPerFile = 20)
 
@@ -151,7 +138,7 @@ class MergePruneSpec extends AnyFunSuite with TempDirs {
     val tA = curveTable()
     val dels = SeqGen.changeSet(spark, 2000, changes = 0, deletes = 15).persist()
     MergeInto.merge(spark, tA, dels, cfg, targetRecordsPerFile = 20, mor = true)
-    val rootB = clone(tA.root) // clone AFTER the MoR merge: identical delete manifests
+    val rootB = cloneTable(tA.root) // clone AFTER the MoR merge: identical delete manifests
     val snapA = MaterializeDeletes.run(spark, tA, cfg, targetRecordsPerFile = 20)
 
     val tB = SeqTable.load(rootB)

@@ -1,8 +1,6 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
@@ -32,18 +30,11 @@ class MergeWriteSpec extends AnyFunSuite with TempDirs {
   private val cfg = GridConfig()
   private val target = 500L
 
-  private def copyTree(from: Path, to: Path): Unit = {
-    val walk = Files.walk(from)
-    try walk.iterator().asScala.foreach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
-    finally walk.close()
-  }
-
   /** Merges a staged change set into `table` on a session of its own and checks the write count
     * and the committed files against the two-write reference, computed on a copy of the table.
     */
   private def checkOneWrite(table: SeqTable, n: Long): Unit = {
-    val copy = tempDir("merge-write-copy-").resolve("t")
-    copyTree(Paths.get(table.root), copy)
+    val copy = cloneTable(table.root)
     // staged through parquet, as a change feed delivers it: nullable columns, like the survivors
     val staged = tempDir("merge-write-changes-").resolve("c").toString
     SeqGen.changeSet(spark, n, changes = 300, deletes = 60).write.parquet(staged)
@@ -75,7 +66,7 @@ class MergeWriteSpec extends AnyFunSuite with TempDirs {
     // the merge's written files, in written order: one batch, numbered in write order
     val committed = live.filterNot(f => before(f.path)).sortBy(_.path)
 
-    val ref = SeqTable.load(copy.toString)
+    val ref = SeqTable.load(copy)
     val changes = spark.read.parquet(staged)
     val affected = ref.liveFiles().filter(f => removed(f.path))
     assert(affected.nonEmpty && affected.size === removed.size)

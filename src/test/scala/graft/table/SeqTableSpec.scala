@@ -208,13 +208,7 @@ class SeqTableSpec extends AnyFunSuite with TempDirs {
     val liveBefore = t.liveFiles().map(_.path).toSet
     val newMetas = SeqIO.writeFiles(spark, t, SeqIO.readFiles(spark, t, t.liveFiles()))
     t.commit("compact", newMetas, liveBefore)
-    val rootB = rootA + "-clone"
-    import scala.jdk.CollectionConverters._
-    Files.walk(java.nio.file.Paths.get(rootA)).iterator().asScala.toSeq.foreach { p =>
-      val dst = java.nio.file.Paths.get(rootB).resolve(java.nio.file.Paths.get(rootA).relativize(p))
-      if (Files.isDirectory(p)) Files.createDirectories(dst)
-      else { Files.createDirectories(dst.getParent); Files.copy(p, dst) }
-    }
+    val rootB = cloneTable(rootA)
     val (expA, delA) = t.expireSnapshots(keepLast = 1)
     val cold = SeqTable.load(rootB)
     val (expB, delB) = SeqIO.expireSnapshotsDistributed(spark, cold, keepLast = 1)
