@@ -11,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   *    maintenance operators' key DataFrames) to `<outdir>/<name>_<suffix>.txt`
   *  - `noop <queryName> [reps]` : time a query with the noop sink (guide §1.4) — computes every
   *    column, no sink cost, prints per-rep seconds
+  *  - `prune <tableDir> <source|-> <lo|-> <hi|->` : audit one pruned scan (`-` = no bound): the
+  *    live files, the files [[graft.table.SeqIO.scanPruned]] opens (and would open without the
+  *    source zones), and the files whose rows match — the floor of any per-file prune; a
+  *    matching file it does not open prints as MISSED
   */
 object BenchExtra {
 
@@ -313,6 +317,35 @@ object BenchExtra {
           println(f"[genbench] round $round generate=$g%6.2fs stagedRead=$r%6.2fs")
         }
         cleanup()
+        spark.stop()
+
+      case "prune" =>
+        import org.apache.spark.sql.functions._
+        import graft.table.SeqIO
+        val Seq(dir, s, lo, hi) = args.toSeq.slice(1, 5).padTo(4, "-")
+        def opt(a: String) = Some(a).filter(_ != "-")
+        val (source, ntokMin, ntokMax) = (opt(s), opt(lo).map(_.toInt), opt(hi).map(_.toInt))
+        val spark = session(cpus)
+        val table = graft.table.SeqTable.load(dir)
+        val snap = table.currentSnapshot()
+        val live = table.liveFilesNarrow(snap)
+        val selected = SeqIO.pruneMetas(live, source, ntokMin, ntokMax).map(_.path).toSet
+        val withoutZones =
+          SeqIO.pruneMetas(live.map(_.copy(sourceZones = None)), source, ntokMin, ntokMax).size
+        // the files whose own rows match, deletes not applied: a prune reads stats, not deletes
+        val byName = live.map(f => SeqIO.fileBasename(f.path) -> f.path).toMap
+        val holding = SeqIO.readFiles(spark, table, live, table.schemaOf(snap))
+          .filter(Seq(source.map(col("source") === _), ntokMin.map(col("n_tok") >= _),
+            ntokMax.map(col("n_tok") <= _)).flatten.foldLeft(lit(true))(_ && _))
+          .select(element_at(split(col("_metadata.file_path"), "/"), -1)).distinct()
+          .collect().map(r => byName(r.getString(0))).toSet
+        println(s"[prune] source=$s n_tok=[$lo, $hi]: live=${live.size} " +
+          s"selected=${selected.size} holding=${holding.size} " +
+          s"selected_without_zones=$withoutZones missed=${(holding -- selected).size}")
+        live.map(_.path).filter(p => selected(p) || holding(p)).sorted.foreach { p =>
+          println(s"[prune] ${if (selected(p)) "selected" else "MISSED"} " +
+            s"${if (holding(p)) "holding" else "no-match"} $p")
+        }
         spark.stop()
 
       case other => sys.error(s"unknown BenchExtra mode: $other")

@@ -80,10 +80,13 @@ object DeletePressure {
 
   /** Build the pressure function for `snap`'s outstanding delete manifests (Zero when none).
     * A key deleted at several sequence numbers applies iff addedAt < max(seq) — exactly the
-    * per-key max aggregated here. DV counts for the same target file SUM across manifests (an
-    * upper bound on the union cardinality — a score, not a read filter, so sound).
+    * per-key max of [[KeyPrune.KeySet.deletedIn]], which `deleteKeys` is when the caller already
+    * holds it for `snap` (else it is collected here). DV counts for the same target file SUM
+    * across manifests (an upper bound on the union cardinality — a score, not a read filter, so
+    * sound).
     */
-  def of(spark: SparkSession, table: SeqTable, snap: Snapshot): FileMeta => Double = {
+  def of(spark: SparkSession, table: SeqTable, snap: Snapshot,
+      deleteKeys: Option[KeyPrune.KeySet] = None): FileMeta => Double = {
     if (snap.deleteManifests.isEmpty) return Zero
     import spark.implicits._
 
@@ -101,17 +104,17 @@ object DeletePressure {
     val emptySeqs = spark.sparkContext.broadcast(Array.empty[Long])
     if (SeqIO.keyManifestsOf(snap).isEmpty)
       return new DeletePressure(empty, emptySeqs, -1L, dvB)
-    val rows = SeqIO.deletesDF(spark, table, snap)
-      .groupBy("_del_key").agg(max("_del_seq").as("seq"))
-      .limit(MaxKeys + 1).as[(String, Long)].collect()
-    if (rows.length > MaxKeys) {
-      val maxSeq = SeqIO.deletesDF(spark, table, snap)
-        .agg(max("_del_seq")).as[Long].head()
-      new DeletePressure(empty, emptySeqs, maxSeq, dvB)
-    } else {
-      val sorted = rows.sortBy(_._1)(graft.table.Utf8Order) // match the stats' UTF-8 order
-      new DeletePressure(spark.sparkContext.broadcast(sorted.map(_._1)),
-        spark.sparkContext.broadcast(sorted.map(_._2)), -1L, dvB)
+    val keys = deleteKeys.getOrElse(KeyPrune.KeySet.deletedIn(spark, table, snap))
+    keys.groups match {
+      case Some(g) if keys.size <= MaxKeys =>
+        val sorted = g.seqs.indices.flatMap(i => g.keys(i).map(_ -> g.seqs(i))).toArray
+          .sortBy(_._1)(graft.table.Utf8Order) // match the stats' UTF-8 order
+        new DeletePressure(spark.sparkContext.broadcast(sorted.map(_._1)),
+          spark.sparkContext.broadcast(sorted.map(_._2)), -1L, dvB)
+      // too many keys to probe: every file older than the newest delete is fully pressured
+      case Some(g) => new DeletePressure(empty, emptySeqs, g.seqs.head, dvB) // seqs descend
+      case None =>
+        new DeletePressure(empty, emptySeqs, keys.df.agg(max("_seq")).as[Long].head(), dvB)
     }
   }
 }

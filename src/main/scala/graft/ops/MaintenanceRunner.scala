@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import graft.planner.{GridConfig, Region}
 import graft.state.{Checkpoint, StateEvent}
 import graft.Timing.timed
-import graft.table.{FileMeta, SeqIO, SeqTable}
+import graft.table.{FileMeta, KeyPrune, SeqIO, SeqTable}
 
 final case class MaintenanceOptions(
     k: Int = 8, // max tasks per cycle
@@ -61,7 +61,7 @@ object MaintenanceRunner {
       else timed("liveFiles")(table.liveFiles().map(f => f.path -> f).toMap)
 
     // ---- resume or plan ----
-    val (cycle, baseVersion, tasks, alreadyDone) = checkpoint.openCycle() match {
+    val (cycle, baseVersion, tasks, alreadyDone, deleteKeys) = checkpoint.openCycle() match {
       case Some(ev) =>
         val start = ev.find(_.event == "CYCLE_START").get
         val planned = ev.filter(_.event == "TASK_PLANNED").map { e =>
@@ -73,15 +73,19 @@ object MaintenanceRunner {
           .flatMap(s => s.summary.get("maintenance-task")
             .filter(_.startsWith(s"${start.cycle}/")).map(_.split('/')(1).toInt))
           .toSet
-        (start.cycle, start.baseVersion, planned, loggedDone ++ snapDone)
+        (start.cycle, start.baseVersion, planned, loggedDone ++ snapDone, None)
       case None =>
         val cycle = checkpoint.lastCycle() + 1
         val base = table.currentVersion()
         // pending MoR deletes weight the planner's file scores (SURVEY §7.1 delete-ratio): laden
         // cells rise into the top-k and their task rewrites materialize the deletes in the same
         // clustered pass ([[Rewrite.compactFiles]] reads delete-aware) — no separate full
-        // MaterializeDeletes sweep
-        val pressure = timed("delete-pressure")(DeletePressure.of(spark, table, headSnap))
+        // MaterializeDeletes sweep. The pending equality-delete keys are collected once: the
+        // closing dropObsolete reuses them while no MoR merge has changed the `.keys` manifests
+        val keys =
+          if (SeqIO.keyManifestsOf(headSnap).isEmpty) None
+          else Some(timed("delete-keys")(KeyPrune.KeySet.deletedIn(spark, table, headSnap)))
+        val pressure = timed("delete-pressure")(DeletePressure.of(spark, table, headSnap, keys))
         val (planned, plannerState) = timed("plan")(MaintenancePlanner.plan(spark, Some(table),
           if (useDistributed) Right(SeqIO.fileMetaDS(spark, table, narrow = true))
           else Left(table.liveFiles()),
@@ -95,7 +99,7 @@ object MaintenanceRunner {
             Seq(t.region.x, t.region.y, t.region.w), t.filePaths,
             Map("score" -> t.score.toString), now()))
         }
-        (cycle, base, planned, Set.empty[Int])
+        (cycle, base, planned, Set.empty[Int], keys.map(headSnap -> _))
     }
     failpoint("planned")
 
@@ -160,7 +164,7 @@ object MaintenanceRunner {
     // delete-aware) until a future cycle's pressure-weighted planner claims them
     if (headSnap.deleteManifests.nonEmpty) {
       timed("drop-obsolete-deletes")(MaterializeDeletes.dropObsolete(spark, table,
-        if (useDistributed) 0L else SeqIO.DistributedDiffMetaFiles))
+        if (useDistributed) 0L else SeqIO.DistributedDiffMetaFiles, deleteKeys))
       ()
     }
     // above the distributed-planning threshold the manifest must not materialize on the driver

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.planner.GridConfig
 import graft.table.{Dv, FileMeta, KeyPrune, SeqIO, SeqTable, Snapshot}
 
@@ -61,17 +60,19 @@ object MaterializeDeletes {
     * deleted key), plus every live file a deletion vector targets. The `.dv` manifests name their
     * targets outright (header parse, no bitmap decode), so that half is an exact basename match;
     * a dead basename (file already rewritten) matches nothing. The delete-aware rewrite then
-    * materializes BOTH delete families in one pass.
+    * materializes BOTH delete families in one pass. `deleteKeys` is `snap`'s
+    * [[KeyPrune.KeySet.deletedIn]] when the caller holds it (else it is collected here).
     */
   private[ops] def candidateFiles(
       spark: SparkSession,
       table: SeqTable,
       snap: Snapshot,
-      live: KeyPrune.Manifest): Seq[FileMeta] = {
+      live: KeyPrune.Manifest,
+      deleteKeys: Option[KeyPrune.KeySet] = None): Seq[FileMeta] = {
     val eq =
       if (SeqIO.keyManifestsOf(snap).isEmpty) Nil
-      else KeyPrune.filesMayHold(spark, table, snap, live, KeyPrune.KeySet.sequenced(
-        SeqIO.deletesDF(spark, table, snap).groupBy("_del_key").agg(max("_del_seq"))))
+      else KeyPrune.filesMayHold(spark, table, snap, live,
+        deleteKeys.getOrElse(KeyPrune.KeySet.deletedIn(spark, table, snap)))
     val dvTargets = Dv.headers(table, SeqIO.dvManifestsOf(snap)).map(_._1).toSet
     val dv =
       if (dvTargets.isEmpty) Nil
@@ -90,15 +91,23 @@ object MaterializeDeletes {
     * snapshot, and a concurrent ROLLBACK can restore a state where the files live again (their
     * rows hidden by exactly these manifests) — a rebase would silently resurrect them. Returns
     * None when nothing can drop or a concurrent commit raced us (the next cycle retries).
+    *
+    * `planned` is a snapshot and its [[KeyPrune.KeySet.deletedIn]] collected earlier (the
+    * maintenance cycle's planner pressure): the key set serves again while the head's `.keys`
+    * manifests are the same, and is collected afresh once a MoR merge has changed them.
     */
   def dropObsolete(
       spark: SparkSession,
       table: SeqTable,
-      distributedMetaFiles: Long = SeqIO.DistributedDiffMetaFiles): Option[Snapshot] = {
+      distributedMetaFiles: Long = SeqIO.DistributedDiffMetaFiles,
+      planned: Option[(Snapshot, KeyPrune.KeySet)] = None): Option[Snapshot] = {
     val snap = table.currentSnapshot()
     if (snap.deleteManifests.isEmpty) return None
     val live = KeyPrune.liveFiles(spark, table, snap, distributedMetaFiles)
-    val candidates = candidateFiles(spark, table, snap, live)
+    val keyManifests = SeqIO.keyManifestsOf(snap).toSet
+    val candidates = candidateFiles(spark, table, snap, live, planned.collect {
+      case (s, keys) if SeqIO.keyManifestsOf(s).toSet == keyManifests => keys
+    })
     val drop: Set[String] =
       if (candidates.isEmpty)
         snap.deleteManifests.toSet // nothing left to materialize — the whole set retires

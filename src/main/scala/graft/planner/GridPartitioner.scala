@@ -30,7 +30,7 @@ final case class GridConfig(
     * codegen'd `pmod(xxhash64($"source"), B)` rewrite key agree exactly — no UDF on the hot path.
     */
   def sourceBucket(source: String): Int =
-    math.floorMod(XxHash64Function.hash(UTF8String.fromString(source), StringType, 42L), sourceBuckets.toLong).toInt
+    math.floorMod(GridConfig.sourceHash(UTF8String.fromString(source)), sourceBuckets.toLong).toInt
 
   def ntokBin(nTok: Int): Int = math.max(0, nTok) / ntokBinWidth
 
@@ -61,6 +61,12 @@ final case class GridConfig(
     val ys = Seq(math.max(0, y - w + 1), y).distinct
     (for { ax <- xs; ay <- ys } yield nodeOf(ax, ay)).distinct
   }
+}
+
+object GridConfig {
+  /** Spark's `xxhash64(source)`: the hash of every source bucket, the planner grid's and the
+    * manifest's [[graft.table.SourceZones]]. */
+  def sourceHash(source: UTF8String): Long = XxHash64Function.hash(source, StringType, 42L)
 }
 
 /** [[TopK.solve]] for runners that take only K′ (the discrete kernels apply no exclusions), so

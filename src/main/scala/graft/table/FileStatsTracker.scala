@@ -11,12 +11,13 @@ import org.apache.spark.util.sketch.BloomFilter
 
 /** The manifest stats of one written data file, built while its rows streamed to the writer.
   * `sources` holds up to [[SeqIO.MaxSourcesTracked]] + 1 of the smallest distinct sources, so
-  * an overflow stays detectable; `docBloom` is the serialized [[DocBloom]] filter. `partition`
-  * is the index of the write task that wrote the file.
+  * an overflow stays detectable; `sourceZones` are the file's [[SourceZones]] triples;
+  * `docBloom` is the serialized [[DocBloom]] filter. `partition` is the index of the write task
+  * that wrote the file.
   */
 final case class WrittenFileStats(records: Long, minNtok: Int, maxNtok: Int,
-    minDocId: String, maxDocId: String, sources: Seq[String], docBloom: Array[Byte],
-    partition: Int)
+    minDocId: String, maxDocId: String, sources: Seq[String], sourceZones: Seq[Int],
+    docBloom: Array[Byte], partition: Int)
 
 /** One write task's files, keyed by basename: task attempts write under the committer's
   * `_temporary` directory, and only the basename survives the commit unchanged.
@@ -27,7 +28,8 @@ final case class TaskFileStats(files: Map[String, WrittenFileStats]) extends Wri
   * `DeltaJobStatisticsTracker` does): each task folds the rows it hands the parquet writer into
   * per-file accumulators, and the driver receives the results with the job's commit — no second
   * scan of the written files. Ordinals locate `doc_id`, `n_tok` and `source` in the written
-  * rows. Nulls are skipped, as Spark's min/max/collect_set skip them.
+  * rows. Nulls are skipped, as Spark's min/max/collect_set skip them; a row's [[SourceZones]]
+  * bucket and n_tok fold in the same pass.
   */
 final class FileStatsTracker(docOrd: Int, ntokOrd: Int, srcOrd: Int)
     extends WriteJobStatsTracker {
@@ -58,12 +60,14 @@ final class FileStatsTracker(docOrd: Int, ntokOrd: Int, srcOrd: Int)
     private var minDoc: UTF8String = _
     private var maxDoc: UTF8String = _
     private val sources = new java.util.TreeSet[UTF8String]()
+    private val zones = new SourceZones.Acc
     private val bloom = BloomFilter.create(DocBloom.ExpectedItems, DocBloom.Fpp)
 
     def add(row: InternalRow): Unit = {
       records += 1
-      if (!row.isNullAt(ntokOrd)) {
-        val n = row.getInt(ntokOrd)
+      val hasNtok = !row.isNullAt(ntokOrd)
+      val n = if (hasNtok) row.getInt(ntokOrd) else 0
+      if (hasNtok) {
         if (n < minNtok) minNtok = n
         if (n > maxNtok) maxNtok = n
       }
@@ -75,6 +79,7 @@ final class FileStatsTracker(docOrd: Int, ntokOrd: Int, srcOrd: Int)
       }
       if (!row.isNullAt(srcOrd)) {
         val s = row.getUTF8String(srcOrd)
+        zones.add(s, n, hasNtok)
         if ((sources.size <= SeqIO.MaxSourcesTracked || s.compareTo(sources.last) < 0) &&
             !sources.contains(s)) {
           sources.add(s.clone())
@@ -88,8 +93,8 @@ final class FileStatsTracker(docOrd: Int, ntokOrd: Int, srcOrd: Int)
       bloom.writeTo(out)
       WrittenFileStats(records, minNtok, maxNtok, Option(minDoc).map(_.toString).orNull,
         Option(maxDoc).map(_.toString).orNull,
-        sources.toArray(Array.empty[UTF8String]).map(_.toString).toSeq, out.toByteArray,
-        partition)
+        sources.toArray(Array.empty[UTF8String]).map(_.toString).toSeq, zones.result,
+        out.toByteArray, partition)
     }
   }
 }

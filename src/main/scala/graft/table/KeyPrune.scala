@@ -101,6 +101,11 @@ object KeyPrune {
         rows.groupBy(_._2).iterator.map { case (s, ks) => s -> ks.map(_._1) }.toSeq)
     }
 
+    /** The pending equality-delete keys of `snap`, each at the newest sequence number that
+      * deletes it ([[sequenced]]): one aggregation of [[SeqIO.deletesDF]], one collect. */
+    def deletedIn(spark: SparkSession, table: SeqTable, snap: Snapshot): KeySet =
+      sequenced(SeqIO.deletesDF(spark, table, snap).groupBy("_del_key").agg(max("_del_seq")))
+
     private def collected(df: DataFrame, n: Int)(groups: => Seq[(Long, Array[String])]): KeySet =
       if (n > MaxKeys) new KeySet(None, df, df.count())
       else {

@@ -1,6 +1,8 @@
 package graft.table
 
 import java.nio.file.Path
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.conf.{ParquetConfiguration, PlainParquetConfiguration}
@@ -64,6 +66,8 @@ private[table] object ManifestCodec {
     private var path, minDocId, maxDocId, docBloom: String = _
     private var records, bytes, addedAt, minNtok, maxNtok, clustered = 0L
     private val sources = Vector.newBuilder[String]
+    private var zoned = false // the sourceZones list is present (an empty one too)
+    private val zones = new mutable.ArrayBuilder.ofInt
     private def str(set: String => Unit): Converter = new PrimitiveConverter {
       override def addBinary(v: Binary): Unit = set(v.toStringUsingUTF8)
     }
@@ -80,6 +84,8 @@ private[table] object ManifestCodec {
       }
     private val element = str(sources += _)
     private val list = group(_ => element)(())
+    private val zoneElement = num(v => zones += v.toInt)
+    private val zoneList = group(_ => zoneElement)(())
     private val fields = ctx.getRequestedSchema.getFields.asScala.map(_.getName match {
       case "path" => str(path = _)
       case "records" => num(records = _)
@@ -89,16 +95,19 @@ private[table] object ManifestCodec {
       case "minDocId" => str(minDocId = _)
       case "maxDocId" => str(maxDocId = _)
       case "sources" => group(_ => list)(()) // LIST → repeated list → element
+      case "sourceZones" => group(_ => zoneList) { zoned = true }
       case "addedAt" => num(addedAt = _)
       case "clustered" => num(clustered = _)
       case "docBloom" => str(docBloom = _)
     }).toArray
     private val root = group(fields(_)) {
       path = null; minDocId = null; maxDocId = null; docBloom = null; sources.clear()
+      zoned = false; zones.clear()
     }
     def getRootConverter: GroupConverter = root
     def getCurrentRecord: FileMeta = FileMeta(path, records, bytes, minNtok.toInt, maxNtok.toInt,
-      minDocId, maxDocId, sources.result(), addedAt, clustered != 0L, Option(docBloom))
+      minDocId, maxDocId, sources.result(), addedAt, clustered != 0L, Option(docBloom),
+      if (zoned) Some(ArraySeq.unsafeWrapArray(zones.result())) else None)
   }
 
   private final class WriterBuilder(file: Path)
@@ -124,6 +133,16 @@ private[table] object ManifestCodec {
       field(name, Schema.getFieldIndex(name))(body)
     private def str(name: String, s: String): Unit =
       if (s != null) top(name)(rc.addBinary(Binary.fromString(s)))
+    // LIST → repeated list → element; `add` writes one element's value (a null one writes none)
+    private def list[A](name: String, xs: Seq[A])(add: A => Unit): Unit = top(name) {
+      rc.startGroup()
+      if (xs.nonEmpty) field("list", 0)(xs.foreach { x =>
+        rc.startGroup()
+        if (x != null) field("element", 0)(add(x))
+        rc.endGroup()
+      })
+      rc.endGroup()
+    }
 
     def write(m: FileMeta): Unit = {
       rc.startMessage()
@@ -134,18 +153,11 @@ private[table] object ManifestCodec {
       top("maxNtok")(rc.addInteger(m.maxNtok))
       str("minDocId", m.minDocId)
       str("maxDocId", m.maxDocId)
-      top("sources") {
-        rc.startGroup()
-        if (m.sources.nonEmpty) field("list", 0)(m.sources.foreach { s =>
-          rc.startGroup()
-          if (s != null) field("element", 0)(rc.addBinary(Binary.fromString(s)))
-          rc.endGroup()
-        })
-        rc.endGroup()
-      }
+      list("sources", m.sources)(s => if (s != null) rc.addBinary(Binary.fromString(s)))
       top("addedAt")(rc.addLong(m.addedAt))
       top("clustered")(rc.addBoolean(m.clustered))
       m.docBloom.foreach(str("docBloom", _))
+      m.sourceZones.foreach(list("sourceZones", _)(rc.addInteger))
       rc.endMessage()
     }
   }

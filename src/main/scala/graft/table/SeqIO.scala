@@ -77,10 +77,11 @@ object SeqSchema {
 
 /** Spark-side write/read for [[SeqTable]].
   *
-  * The writer collects each file's manifest stats (records, min/max, sources, doc_id Bloom) inside
-  * the write tasks, as the rows stream to the parquet writer ([[FileStatsTracker]]) — one Spark
-  * job per write, no second scan of the files it just wrote (Delta's `DeltaJobStatisticsTracker`
-  * and Iceberg's `SparkWrite` commit messages work the same way).
+  * The writer collects each file's manifest stats (records, min/max, sources, source zones,
+  * doc_id Bloom) inside the write tasks, as the rows stream to the parquet writer
+  * ([[FileStatsTracker]]) — one Spark job per write, no second scan of the files it just wrote
+  * (Delta's `DeltaJobStatisticsTracker` and Iceberg's `SparkWrite` commit messages work the same
+  * way).
   */
 object SeqIO {
 
@@ -174,7 +175,8 @@ object SeqIO {
           sources = if (s.sources.size > MaxSourcesTracked) Nil else s.sources, // Nil = unknown
           addedAt = -1L,
           clustered = clusteredAt(s.partition),
-          docBloom = Some(DocBloom.encode(s.docBloom)))
+          docBloom = Some(DocBloom.encode(s.docBloom)),
+          sourceZones = Some(s.sourceZones))
       }
     } catch { case e: Throwable => moved.foreach(Files.deleteIfExists(_)); throw e }
     finally deleteTree(tmp) // _SUCCESS, an aborted job's remnants
@@ -947,19 +949,24 @@ object SeqIO {
 
   final case class ScanStats(filesScanned: Int, totalFiles: Int, recordsScanned: Long)
 
-  /** Stats-only file skipping on (source equality, n_tok range) — sound, never exact. */
+  /** Stats-only file skipping on (source equality, n_tok range) — sound, never exact. A file is
+    * kept when the file-wide `[minNtok, maxNtok]` overlaps the range and, for `source = s`, its
+    * source list holds `s` (or is unknown) and its [[FileMeta.sourceZones]], when recorded, hold
+    * `s`'s bucket with an n_tok range that overlaps too. */
   private[graft] def pruneMetas(live: Seq[FileMeta], source: Option[String],
       ntokMin: Option[Int], ntokMax: Option[Int]): Seq[FileMeta] =
     live.filter { f =>
-      val srcOk = source.forall(s => f.sources.isEmpty || f.sources.contains(s))
+      val srcOk = source.forall(s => (f.sources.isEmpty || f.sources.contains(s)) &&
+        f.sourceZones.forall(SourceZones.mayMatch(_, s, ntokMin, ntokMax)))
       val loOk = ntokMax.forall(hi => f.minNtok <= hi)
       val hiOk = ntokMin.forall(lo => f.maxNtok >= lo)
       srcOk && loOk && hiOk
     }
 
   /** Manifest-pruned scan: `source = ? AND n_tok BETWEEN ? AND ?`, with file skipping driven purely
-    * by manifest min/max stats — the metric the Z-order rewrite is meant to improve. The residual
-    * predicate still applies (pruning is sound, not exact).
+    * by manifest stats ([[pruneMetas]]: the file-wide n_tok range, the source list and the
+    * per-source-bucket n_tok zones) — the metric the Z-order rewrite is meant to improve. The
+    * residual predicate still applies (pruning is sound, not exact).
     *
     * The snapshot is read ONCE and pinned for both the manifest prune and the delete-aware read —
     * re-reading the head for the second step would let a commit racing between the two calls

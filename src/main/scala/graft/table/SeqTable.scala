@@ -27,7 +27,12 @@ final case class FileMeta(
     // base64 Bloom filter over the file's doc_ids (see [[DocBloom]]): key-level merge/delete
     // pruning that works on curve-clustered layouts where [minDocId, maxDocId] spans everything.
     // None = unknown (legacy manifest) → conservatively "may contain any key".
-    docBloom: Option[String] = None
+    docBloom: Option[String] = None,
+    // the joint (source bucket × n_tok) extent, sorted flattened (bucket, minNtok, maxNtok)
+    // triples (see [[SourceZones]]): a pruned scan opens the file for `source = s` only if s's
+    // bucket is present and its range overlaps the predicate's. None = not recorded (a manifest
+    // written before the field, or an entry built without it) → the source list decides alone.
+    sourceZones: Option[Seq[Int]] = None
 )
 
 /** An immutable table version. `manifests` are metadata-relative paths of parquet FileMeta
@@ -112,8 +117,11 @@ private final class ManifestCache(maxBytes: Long) {
   private var bytes = 0L
   val misses = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  // a source string and its list cell ~48 B plus its chars; zones are one unboxed int array
   private def approxBytes(metas: Seq[FileMeta]): Long =
-    metas.iterator.map(m => 200L + m.path.length + m.docBloom.map(_.length).getOrElse(0)).sum
+    metas.iterator.map(m => 200L + m.path.length + m.docBloom.map(_.length).getOrElse(0) +
+      m.sources.iterator.map(48L + _.length).sum +
+      m.sourceZones.map(16L + 4L * _.length).getOrElse(0L)).sum
 
   def get(name: String): Option[Seq[FileMeta]] = Option(byName.get(name))
 

@@ -83,6 +83,36 @@ class DmlSpec extends AnyFunSuite with TempDirs {
     assert(SeqIO.read(spark, table).filter(cond).count() === 0)
   }
 
+  test("DV DELETE and UPDATE open only the files whose source zones can match, and stay exact") {
+    // T-frag: every file holds all 20 sources, so its source list is unknown, while a small
+    // source's few rows per file rarely reach a narrow n_tok band
+    val root = tempDir("dml-zones-").toString + "/t"
+    val (table, _) = SeqGen.fragmentedTable(spark, root, 4000, 20)
+    val live = table.liveFilesNarrow(table.currentSnapshot())
+    assert(live.forall(f => f.sources.isEmpty && f.sourceZones.nonEmpty))
+    val del = col("source") === "src10" && col("n_tok").between(1500, 1700)
+    val hints = Dml.pruneHints(del)
+    assert(hints === ((Some("src10"), Some(1500), Some(1700))))
+    val zoned = SeqIO.pruneMetas(live, hints._1, hints._2, hints._3)
+    val unzoned = SeqIO.pruneMetas(live.map(_.copy(sourceZones = None)), hints._1, hints._2,
+      hints._3)
+    assert(zoned.size < unzoned.size, s"${zoned.size} of ${unzoned.size} files")
+    def read = SeqIO.read(spark, table)
+    val keep = read.filter(!del).count()
+    assert(read.filter(del).count() > 0)
+    Dml.deleteWhere(spark, table, del, cfg, 1000, dv = true)
+    assert(read.filter(del).count() === 0)
+    assert(read.count() === keep)
+
+    val upd = col("source") === "src12" && col("n_tok") <= 300
+    val matched = read.filter(upd).count()
+    assert(matched > 0)
+    Dml.updateWhere(spark, table, upd, Map("source" -> lit("src12-short")), cfg, 1000, dv = true)
+    assert(read.filter(upd).count() === 0)
+    assert(read.filter(col("source") === "src12-short").count() === matched)
+    assert(read.count() === keep)
+  }
+
   test("pruneHints extracts source equality and n_tok bounds from AND conjuncts only") {
     import org.apache.spark.sql.Column
     def hints(c: Column) = Dml.pruneHints(c)

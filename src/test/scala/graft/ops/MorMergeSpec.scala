@@ -110,4 +110,43 @@ class MorMergeSpec extends AnyFunSuite with TempDirs {
     assert(SeqIO.read(spark, t).groupBy("doc_id").count().filter(col("count") > 1).count() === 0)
     c1.unpersist(); c2.unpersist()
   }
+
+  test("dropObsolete reuses the planned delete keys until a MoR merge changes the .keys set") {
+    import graft.SparkTestSession.{inGroup, jobGroups}
+    import graft.table.KeyPrune
+    val t = SeqGen.fragmentedTable(spark, tempDir("mor-drop-").toString + "/t", 2000, 10)._1
+    MergeInto.merge(spark, t, SeqGen.changeSet(spark, 2000, changes = 40, deletes = 30), cfg,
+      1000, mor = true)
+    val planned = t.currentSnapshot()
+    val keys = KeyPrune.KeySet.deletedIn(spark, t, planned)
+    // rewrite every file an equality delete applies to: the planned keys now hit no live file
+    Rewrite.compactFiles(spark, t,
+      MaterializeDeletes.candidateFiles(spark, t, planned, Left(t.liveFiles(planned))), cfg, 1000)
+    assert(SeqIO.keyManifestsOf(t.currentSnapshot()) === SeqIO.keyManifestsOf(planned))
+
+    // unchanged `.keys` manifests: the planned set serves, and the driver route starts no job
+    val copy = SeqTable.load(cloneTable(t.root))
+    val collecting = SeqTable.load(cloneTable(copy.root))
+    val group = s"drop-${java.util.UUID.randomUUID()}"
+    var reused: Option[graft.table.Snapshot] = None
+    val groups = jobGroups {
+      reused = inGroup(group)(MaterializeDeletes.dropObsolete(spark, copy,
+        planned = Some(planned -> keys)))
+    }
+    assert(groups.count(_ == group) === 0, s"jobs: $groups")
+    assert(reused.map(_.deleteManifests) === Some(Nil))
+    assert(MaterializeDeletes.dropObsolete(spark, collecting).map(_.deleteManifests) ===
+      Some(Nil))
+
+    // a MoR merge adds a `.keys` manifest after planning: the keys are collected afresh, so its
+    // deletes (pending on files the stale set does not name) keep their manifest
+    MergeInto.merge(spark, t, SeqGen.changeSet(spark, 1500, changes = 60, deletes = 40), cfg,
+      1000, mor = true)
+    val head = t.currentSnapshot()
+    assert(SeqIO.keyManifestsOf(head).size === 2)
+    val want = SeqIO.read(spark, t).count()
+    assert(MaterializeDeletes.dropObsolete(spark, t, planned = Some(planned -> keys)).isEmpty)
+    assert(t.currentSnapshot().deleteManifests === head.deleteManifests)
+    assert(SeqIO.read(spark, t).count() === want)
+  }
 }

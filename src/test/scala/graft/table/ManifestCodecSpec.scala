@@ -19,14 +19,19 @@ class ManifestCodecSpec extends AnyFunSuite with TempDirs {
     new scala.util.Random(7).nextBytes(bytes)
     java.util.Base64.getEncoder.encodeToString(bytes)
   }
+  // source zones: not recorded (None), none at all (null sources only), and the extreme ranges
+  // (an empty one, for a bucket whose rows all have a null n_tok)
   private val edgeCases = Seq(
     FileMeta("data/empty-sources.parquet", 1L, 10L, 0, 0, "a", "a", Nil, 3L, clustered = false),
     FileMeta("data/big-bloom.parquet", 5L, 500L, 16, 4000, "doc-000", "doc-999",
-      Seq("web", "books"), 3L, clustered = true, docBloom = Some(bigBloom)),
+      Seq("web", "books"), 3L, clustered = true, docBloom = Some(bigBloom),
+      sourceZones = Some(Seq(3, 16, 400, 40, 17, 4000))),
     FileMeta("data/ünïcödé-日本.parquet", 2L, 20L, 1, 2, "dóc-Ω-日本語", "最后-😀-ß",
-      Seq("wiki-ü", "code"), 3L, clustered = false, docBloom = Some("AAAA")),
+      Seq("wiki-ü", "code"), 3L, clustered = false, docBloom = Some("AAAA"),
+      sourceZones = Some(Nil)),
     FileMeta("data/max.parquet", Long.MaxValue, Long.MaxValue, Int.MinValue, Int.MaxValue,
-      "", "zzz", Seq("s"), 3L, clustered = true))
+      "", "zzz", Seq("s"), 3L, clustered = true,
+      sourceZones = Some(Seq(0, Int.MinValue, Int.MaxValue, 63, Int.MaxValue, Int.MinValue))))
 
   test("entries round-trip exactly: driver write, driver full and narrow reads, Spark scan") {
     val t = SeqTable.create(fresh())
@@ -36,6 +41,8 @@ class ManifestCodecSpec extends AnyFunSuite with TempDirs {
     assert(cold.manifestNarrowFileReads.get() === 1L, "the narrow read must come from the file")
     assert(cold.readManifest(m) === edgeCases)
     assert(cold.manifestFileReads.get() === 1L, "the full read must come from the file")
+    assert(cold.readManifest(m).flatMap(_.sourceZones)
+      .forall(_.isInstanceOf[scala.collection.immutable.ArraySeq.ofInt]), "zones stay unboxed")
     assert(SeqIO.manifestMetaDS(spark, cold, Seq(m)).collect().toSeq.sortBy(_.path) ===
       edgeCases.sortBy(_.path))
     assert(SeqIO.manifestMetaDS(spark, cold, Seq(m), narrow = true).collect().toSeq

@@ -123,10 +123,46 @@ class WriteStatsSpec extends AnyFunSuite with TempDirs {
       val s = tracker.files(p.getFileName.toString)
       FileMeta(p.getFileName.toString, s.records, Files.size(p), s.minNtok, s.maxNtok,
         s.minDocId, s.maxDocId, if (s.sources.size > SeqIO.MaxSourcesTracked) Nil else s.sources,
-        -1L, docBloom = Some(DocBloom.encode(s.docBloom)))
+        -1L, docBloom = Some(DocBloom.encode(s.docBloom)), sourceZones = Some(s.sourceZones))
     }
     assert(parts.size === 3)
     assert(actual.sortBy(_.path) === oldStats(spark, dir.toString, parts, clustered = false))
+  }
+
+  test("source zones: a null n_tok keeps its bucket with an empty range, a null source has none") {
+    val t = fresh("zones")
+    val id = idOf(col("doc_id"))
+    // a source whose rows all have a null n_tok, in a bucket no other source of the table uses
+    val generated = (0 until 20).map(i => SourceZones.bucket(s"src$i")).toSet
+    val noLen = Iterator.from(0).map(i => s"no-len-$i")
+      .find(s => !generated(SourceZones.bucket(s))).get
+    val metas = SeqIO.writeFiles(spark, t, SeqGen.table(spark, 1200, parts = 3)
+      .withColumn("source", when(id % 11 === 0, lit(null).cast("string"))
+        .when(id % 7 === 0, lit(noLen)).otherwise(col("source")))
+      .withColumn("n_tok", when(id % 7 === 0 || id % 5 === 0, lit(null).cast("int"))
+        .otherwise(col("n_tok"))))
+    assert(metas.size === 3)
+    assertMatchesOldPass(t, metas)
+    val b = SourceZones.bucket(noLen)
+    metas.foreach { m =>
+      val zs = m.sourceZones.get.grouped(3).toSeq
+      assert(zs.map(_.head) === zs.map(_.head).sorted.distinct, "one triple per bucket, sorted")
+      assert(zs.filter(_.head == b) === Seq(Seq(b, Int.MaxValue, Int.MinValue)))
+    }
+    // kept by a source-only predicate, pruned by any n_tok bound
+    assert(SeqIO.pruneMetas(metas, Some(noLen), None, None) === metas)
+    assert(SeqIO.pruneMetas(metas, Some(noLen), Some(Int.MinValue + 1), None).isEmpty)
+    assert(SeqIO.pruneMetas(metas, Some(noLen), None, Some(Int.MaxValue - 1)).isEmpty)
+
+    // a file of null sources only: no zone, and no `source = ?` predicate selects it
+    val nulls = SeqIO.writeFiles(spark, t, SeqGen.table(spark, 50, parts = 1)
+      .withColumn("doc_id", concat(col("doc_id"), lit("-n")))
+      .withColumn("source", lit(null).cast("string")))
+    assert(nulls.map(_.sourceZones) === Seq(Some(Nil)))
+    assert(nulls.map(_.sources) === Seq(Nil), "the source list calls it unknown")
+    assert(SeqIO.pruneMetas(nulls, Some("src0"), None, None).isEmpty)
+    assert(SeqIO.pruneMetas(nulls, None, Some(0), None) === nulls)
+    assertMatchesOldPass(t, metas ++ nulls)
   }
 
   test("one writeFiles call launches exactly one Spark job") {
@@ -264,12 +300,25 @@ object WriteStatsSpec {
 
   /** The stats pass `writeFiles` used to run after writing: one `groupBy(input_file_name())`
     * job over the written files, turned into manifest entries (paths relative to `root`) the
-    * way the old writer did.
+    * way the old writer did, with each file's source zones from a second aggregation grouped by
+    * `_metadata.file_path` and `pmod(xxhash64(source), 64)`.
     */
   def oldStats(spark: SparkSession, root: String, files: Seq[Path],
       clustered: Boolean): Seq[FileMeta] = {
     val statSchema = StructType(SeqSchema.schema.filterNot(_.name == "tokens"))
     val rootP = Paths.get(root).toAbsolutePath.normalize
+    def absolute(uri: String) = Paths.get(java.net.URI.create(uri).getPath).toAbsolutePath.normalize
+    // per (file, source bucket): the n_tok extent; a bucket of null n_tok rows only is present
+    // with the empty range (Int.MaxValue, Int.MinValue)
+    val zones: Map[Path, Seq[Int]] = spark.read.schema(statSchema)
+      .parquet(files.map(_.toString): _*)
+      .where(col("source").isNotNull)
+      .groupBy(col("_metadata.file_path").as("file"),
+        pmod(xxhash64(col("source")), lit(SourceZones.Buckets.toLong)).cast("int").as("b"))
+      .agg(coalesce(min("n_tok"), lit(Int.MaxValue)), coalesce(max("n_tok"), lit(Int.MinValue)))
+      .collect().toSeq
+      .groupBy(r => absolute(r.getString(0)))
+      .map { case (f, rs) => f -> rs.sortBy(_.getInt(1)).flatMap(r => Seq(1, 2, 3).map(r.getInt)) }
     spark.read.schema(statSchema).parquet(files.map(_.toString): _*)
       .groupBy(input_file_name().as("file"))
       .agg(
@@ -279,7 +328,7 @@ object WriteStatsSpec {
         slice(sort_array(collect_set("source")), 1, SeqIO.MaxSourcesTracked + 1).as("sources"),
         oldBloom(col("doc_id")).as("doc_bloom"))
       .collect().toSeq.map { r =>
-        val abs = Paths.get(java.net.URI.create(r.getString(0)).getPath).toAbsolutePath.normalize
+        val abs = absolute(r.getString(0))
         val srcs = r.getSeq[String](6)
         FileMeta(
           path = rootP.relativize(abs).toString,
@@ -290,7 +339,8 @@ object WriteStatsSpec {
           sources = if (srcs.size > SeqIO.MaxSourcesTracked) Nil else srcs,
           addedAt = -1L,
           clustered = clustered,
-          docBloom = Option(r.getAs[Array[Byte]](7)).map(DocBloom.encode))
+          docBloom = Option(r.getAs[Array[Byte]](7)).map(DocBloom.encode),
+          sourceZones = Some(zones.getOrElse(abs, Nil)))
       }.sortBy(_.path)
   }
 }
