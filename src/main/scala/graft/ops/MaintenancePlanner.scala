@@ -22,8 +22,11 @@ final case class PlannedTask(taskId: Int, region: Region, filePaths: Seq[String]
 object MaintenancePlanner {
 
   /** Weight of the MoR delete-ratio term in [[fragScore]]: a fully-deleted file scores 2.0 on
-    * pressure alone — above the default act threshold (1.0) by itself, because outstanding
-    * deletes tax EVERY read with an anti-join until materialized, which small files don't.
+    * pressure alone, and the usefulness gate rewrites a file for its deletes once this term
+    * reaches the act threshold — at the default threshold (1.0), once half of it is deleted.
+    * Below that a file's deletes stay deletion vectors (a per-row bitmap probe on read, what a
+    * maintenance cycle converts pending equality keys to first), the Iceberg v3 / Delta policy:
+    * rewriting a whole file to drop a few rows would cost more writes than the reads it saves.
     */
   val DeleteWeight = 2.0
 
@@ -33,7 +36,7 @@ object MaintenancePlanner {
     *    it defeats manifest pruning), +1 when its source set overflowed (unknown layout)
     *  - delete pressure: [[DeleteWeight]] × the estimated fraction of rows hidden by pending MoR
     *    deletes ([[DeletePressure]]) — rewriting materializes them ([[Rewrite.compactFiles]]
-    *    reads delete-aware), restoring the no-join read fast path
+    *    reads delete-aware), dropping the file's deletion vector from the read path
     */
   def fragScore(
       f: FileMeta,
@@ -226,12 +229,13 @@ object MaintenancePlanner {
         // files the engine itself wrote curve-sorted are as tight as their size allows — only a
         // file-count win can improve them; external (unclustered) spanning files also justify a
         // splitting re-cluster when there is enough data for ≥2 output files
-        // delete-laden files are useful to rewrite regardless of layout win: the rewrite applies
-        // their pending MoR deletes (terminating — rewritten files outlive every delete sequence,
-        // so their pressure is 0 next cycle)
+        // a file whose deletes outweigh it (delete term ≥ the act threshold) is useful to
+        // rewrite regardless of layout win: the rewrite applies its pending MoR deletes
+        // (terminating — rewritten files outlive every delete sequence and no DV targets them,
+        // so their pressure is 0 next cycle); sparser deletes stay deletion vectors
         val useful = outFiles < fs.size ||
           (fs.exists(f => !f.clustered && cellsOf(f, cfg).size > 1) && total >= 2 * targetRecords) ||
-          fs.exists(f => pressure(f) > 0)
+          fs.exists(f => DeleteWeight * pressure(f) >= threshold)
         Option.when(useful)(PlannedTask(i, r, fs.map(_.path), r.score))
       }, state)
     }

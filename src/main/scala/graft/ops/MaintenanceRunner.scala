@@ -76,16 +76,24 @@ object MaintenanceRunner {
         (start.cycle, start.baseVersion, planned, loggedDone ++ snapDone, None)
       case None =>
         val cycle = checkpoint.lastCycle() + 1
-        val base = table.currentVersion()
-        // pending MoR deletes weight the planner's file scores (SURVEY §7.1 delete-ratio): laden
-        // cells rise into the top-k and their task rewrites materialize the deletes in the same
-        // clustered pass ([[Rewrite.compactFiles]] reads delete-aware) — no separate full
-        // MaterializeDeletes sweep. The pending equality-delete keys are collected once: the
-        // closing dropObsolete reuses them while no MoR merge has changed the `.keys` manifests
-        val keys =
+        // pending MoR deletes weight the planner's file scores (SURVEY §7.1 delete-ratio). First
+        // the pending equality-delete keys, collected once, become deletion vectors in one
+        // metadata-only commit, so the pressure is each file's exact deleted fraction; a task
+        // then rewrites a file for its deletes (materializing them in the same clustered pass:
+        // [[Rewrite.compactFiles]] reads delete-aware) only once they outweigh it, and sparse
+        // deletes stay vectors. When the conversion does not run (too many keys to collect, or a
+        // concurrent commit), the keys stand and the closing dropObsolete reuses them while no
+        // MoR merge has changed the `.keys` manifests
+        val collected =
           if (SeqIO.keyManifestsOf(headSnap).isEmpty) None
           else Some(timed("delete-keys")(KeyPrune.KeySet.deletedIn(spark, table, headSnap)))
-        val pressure = timed("delete-pressure")(DeletePressure.of(spark, table, headSnap, keys))
+        val converted = collected.flatMap(keys => timed("delete-vectors")(
+          MaterializeDeletes.toVectors(spark, table, headSnap, keys,
+            if (useDistributed) 0L else SeqIO.DistributedDiffMetaFiles)))
+        failpoint("delete-vectors")
+        val (snap, keys) = converted.fold((headSnap, collected))(_ -> None)
+        val base = table.currentVersion()
+        val pressure = timed("delete-pressure")(DeletePressure.of(spark, table, snap, keys))
         val (planned, plannerState) = timed("plan")(MaintenancePlanner.plan(spark, Some(table),
           if (useDistributed) Right(SeqIO.fileMetaDS(spark, table, narrow = true))
           else Left(table.liveFiles()),
@@ -99,7 +107,7 @@ object MaintenanceRunner {
             Seq(t.region.x, t.region.y, t.region.w), t.filePaths,
             Map("score" -> t.score.toString), now()))
         }
-        (cycle, base, planned, Set.empty[Int], keys.map(headSnap -> _))
+        (cycle, base, planned, Set.empty[Int], keys.map(snap -> _))
     }
     failpoint("planned")
 
@@ -159,9 +167,9 @@ object MaintenanceRunner {
 
     // ---- housekeeping ----
     // retire delete manifests the task rewrites just made obsolete (metadata-only commit once no
-    // live file can match a pending delete) — the closing half of planner-scheduled
-    // materialization; laden files below the act threshold keep their manifests (reads stay
-    // delete-aware) until a future cycle's pressure-weighted planner claims them
+    // live file can match a pending delete; a `.dv` manifest once all its targets are dead) —
+    // the closing half of planner-scheduled materialization; laden files below the act
+    // threshold keep their deletion vectors until a future cycle's planner claims them
     if (headSnap.deleteManifests.nonEmpty) {
       timed("drop-obsolete-deletes")(MaterializeDeletes.dropObsolete(spark, table,
         if (useDistributed) 0L else SeqIO.DistributedDiffMetaFiles, deleteKeys))

@@ -4,12 +4,63 @@ import org.apache.spark.sql.SparkSession
 import graft.planner.GridConfig
 import graft.table.{Dv, FileMeta, KeyPrune, SeqIO, SeqTable, Snapshot}
 
-/** Maintenance op that turns outstanding merge-on-read equality deletes back into a clean
-  * copy-on-write state: rewrite (with deletes applied) exactly the files that could still contain
-  * a deleted key — pruned by manifest doc_id ranges + sequence numbers — then drop every delete
-  * manifest in the same atomic commit. After it runs, reads take the no-join fast path again.
+/** The two ways out of pending merge-on-read equality deletes (`.keys` manifests, which tax
+  * every read with an anti-join):
+  *  - [[toVectors]], each maintenance cycle's first step: the same deletes as position deletion
+  *    vectors ([[Dv]]) in one metadata-only commit, no data file rewritten. A sparse delete set
+  *    stays sparse and costs reads a per-row bitmap probe; the planner then sees every file's
+  *    exact deleted fraction and rewrites a file for its deletes only once they outweigh it
+  *    ([[MaintenancePlanner.DeleteWeight]]).
+  *  - [[run]], the explicit full materialization back to a clean copy-on-write state: rewrite
+  *    (with deletes applied) exactly the files that could still contain a deleted row — pruned by
+  *    manifest doc_id ranges + sequence numbers, plus every DV target — then drop every delete
+  *    manifest in the same atomic commit. After it runs, reads take the no-join fast path again.
   */
 object MaterializeDeletes {
+
+  /** Convert `snap`'s pending equality deletes into deletion vectors: the live files that may
+    * hold a key ([[KeyPrune.filesMayHold]], with `keys` = `snap`'s [[KeyPrune.KeySet.deletedIn]]
+    * as collected by the caller), one scan of their `doc_id`s for the rows the keys hide and no
+    * DV hides yet ([[SeqIO.keyDeletedPositions]]), the bitmaps written as `.dv` manifests, and
+    * one commit that adds them and drops every `.keys` manifest. Row visibility is unchanged at
+    * every version, so the changelog across the commit is empty.
+    *
+    * The DVs are exact only for `snap`, so the commit is pinned to it (`expectedBase`): a
+    * concurrent MoR merge's new keys must not be dropped unconverted, and a concurrent rollback
+    * can make files live again whose restored rows these DVs would hide. On any concurrent
+    * commit the new manifests are deleted and None returned — the cycle goes on with the keys as
+    * they are. Also None when `snap` has no `.keys` or `keys` was too big to collect.
+    */
+  def toVectors(
+      spark: SparkSession,
+      table: SeqTable,
+      snap: Snapshot,
+      keys: KeyPrune.KeySet,
+      distributedMetaFiles: Long = SeqIO.DistributedDiffMetaFiles): Option[Snapshot] = {
+    val keyManifests = SeqIO.keyManifestsOf(snap)
+    if (keyManifests.isEmpty || keys.groups.isEmpty) return None
+    val candidates = KeyPrune.filesMayHold(spark, table, snap,
+      KeyPrune.liveFiles(spark, table, snap, distributedMetaFiles), keys)
+    val dvNames =
+      if (candidates.isEmpty) Nil
+      else SeqIO.writeDvManifests(spark, table,
+        SeqIO.keyDeletedPositions(spark, table, snap, candidates), snap.version + 1)
+    val headers = Dv.headers(table, dvNames)
+    try Some(table.commit("delete-vectors", Nil, Set.empty,
+      Map("delete-keys-converted" -> keys.size.toString,
+        "dv-manifests" -> dvNames.size.toString,
+        "dv-deleted-rows" -> headers.map(_._2).sum.toString,
+        "dv-files-targeted" -> headers.map(_._1).distinct.size.toString),
+      addedDeleteManifests = dvNames,
+      removedDeleteManifests = keyManifests.toSet,
+      plannedDeleteManifests = Some(snap.deleteManifests.toSet),
+      expectedBase = Some(snap.version)))
+    catch {
+      case _: table.CommitConflictException =>
+        table.dropUncommitted(Nil, dvNames)
+        None
+    }
+  }
 
   def run(
       spark: SparkSession,
@@ -84,13 +135,14 @@ object MaterializeDeletes {
   /** Planner-companion housekeeping: retire delete manifests that no live file can match anymore
     * (because pressure-weighted maintenance tasks already rewrote every laden file delete-aware)
     * with a METADATA-ONLY commit — no data moves. When candidates remain (some laden file stayed
-    * below the act threshold), the `.dv` manifests whose EVERY target basename is dead are still
-    * individually retired: a DV is file-pinned and basenames are never reused, so a dead-target
-    * DV is provably inert — the partial drop trims the read path's bitmap load while the live
-    * remainder keeps applying. Both drops pin `expectedBase`: deadness was judged against THIS
-    * snapshot, and a concurrent ROLLBACK can restore a state where the files live again (their
-    * rows hidden by exactly these manifests) — a rebase would silently resurrect them. Returns
-    * None when nothing can drop or a concurrent commit raced us (the next cycle retries).
+    * below the act threshold, as a sparsely deleted DV target does), the `.dv` manifests whose
+    * EVERY target basename is dead are still individually retired: a DV is file-pinned and
+    * basenames are never reused, so a dead-target DV is provably inert — the partial drop trims
+    * the read path's bitmap load while the live remainder keeps applying. Both drops pin
+    * `expectedBase`: deadness was judged against THIS snapshot, and a concurrent ROLLBACK can
+    * restore a state where the files live again (their rows hidden by exactly these manifests) —
+    * a rebase would silently resurrect them. Returns None when nothing can drop or a concurrent
+    * commit raced us (the next cycle retries).
     *
     * `planned` is a snapshot and its [[KeyPrune.KeySet.deletedIn]] collected earlier (the
     * maintenance cycle's planner pressure): the key set serves again while the head's `.keys`

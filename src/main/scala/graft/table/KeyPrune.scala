@@ -61,6 +61,25 @@ object KeyPrune {
       val bf = DocBloom.decode(b64)
       applying(f)(_.exists(bf.mightContainString))
     }
+
+    /** How many applying keys lie in `f`'s doc_id range; with `bloom` and a recorded Bloom,
+      * only those the Bloom admits (an over-count by its false positives, never an under-count).
+      */
+    def hits(f: FileMeta, bloom: Boolean): Long = {
+      val bf = if (bloom) f.docBloom.map(DocBloom.decode) else None
+      var n = 0L
+      var i = 0
+      while (i < seqs.length && seqs(i) > f.addedAt) {
+        val ks = keys(i)
+        val lo = lowerBound(ks, f.minDocId)
+        var hi = lowerBound(ks, f.maxDocId)
+        if (hi < ks.length && ks(hi) == f.maxDocId) hi += 1 // a group's keys are distinct
+        n += bf.fold((hi - lo).toLong)(b =>
+          (lo until hi).count(j => b.mightContainString(ks(j))))
+        i += 1
+      }
+      n
+    }
   }
 
   /** The keys of one prune: collected [[Groups]] up to [[MaxKeys]], else only `df` (`_key`,

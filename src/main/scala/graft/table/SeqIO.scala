@@ -315,16 +315,24 @@ object SeqIO {
     }
     if (snap.deleteManifests.isEmpty && !keepPos)
       return readFiles(spark, table, metas, sch, shape)
-    import spark.implicits._
     val outCols =
       (sch.fieldNames.toSeq ++ (if (keepPos) Seq("_fn", "_pos") else Nil)).map(col)
-    var df = readFiles(spark, table, metas, sch, shape)
+    val df = readPositioned(spark, table, metas, sch, shape, ages = keyManifestsOf(snap).nonEmpty)
+    applyDeletes(spark, table, snap, df, maxBroadcastBytes).select(outCols: _*)
+  }
+
+  /** `metas` read under `schema`, each row with its file's basename `_fn` and its row ordinal
+    * `_pos`, and with `ages` its file's `addedAt` as `_added` (the equality-delete test's input).
+    */
+  private def readPositioned(spark: SparkSession, table: SeqTable, metas: Seq[FileMeta],
+      schema: StructType, shape: ScanShape = ScanShape.Default, ages: Boolean): DataFrame = {
+    import spark.implicits._
+    val df = readFiles(spark, table, metas, schema, shape)
       .withColumn("_fn", element_at(split(col("_metadata.file_path"), "/"), -1))
       .withColumn("_pos", col("_metadata.row_index"))
-    if (keyManifestsOf(snap).nonEmpty) df = df.join(broadcast(
-      spark.createDataset(metas.map(m => (fileBasename(m.path), m.addedAt))).toDF("_fn", "_added")),
-      Seq("_fn"))
-    applyDeletes(spark, table, snap, df, maxBroadcastBytes).select(outCols: _*)
+    if (!ages) df
+    else df.join(broadcast(spark.createDataset(metas.map(m => (fileBasename(m.path), m.addedAt)))
+      .toDF("_fn", "_added")), Seq("_fn"))
   }
 
   /** Hide the rows of `df` that `snap` deletes: its deletion vectors (`df` carries `_fn` and
@@ -334,15 +342,36 @@ object SeqIO {
       maxBroadcastBytes: Long): DataFrame = {
     val dvMs = dvManifestsOf(snap)
     val visible = if (dvMs.isEmpty) df else applyDvFilter(spark, table, dvMs, df, maxBroadcastBytes)
-    val keyMs = keyManifestsOf(snap)
-    if (keyMs.isEmpty) visible
-    else {
-      val dels0 = deletesDF(spark, table, snap)
-      val delBytes = keyMs.map(m => Files.size(Paths.get(table.deleteManifestPath(m)))).sum
-      val dels = if (delBytes <= maxBroadcastBytes) broadcast(dels0) else dels0
-      visible.join(dels,
-        col("doc_id") === col("_del_key") && col("_del_seq") > col("_added"), "left_anti")
-    }
+    if (keyManifestsOf(snap).isEmpty) visible
+    else visible.join(deleteKeys(spark, table, snap, maxBroadcastBytes), keyDeleted, "left_anti")
+  }
+
+  /** A row of a file added at `_added` is hidden by the equality delete (`_del_key`, `_del_seq`)
+    * of a newer sequence number. */
+  private def keyDeleted = col("doc_id") === col("_del_key") && col("_del_seq") > col("_added")
+
+  /** [[deletesDF]], broadcast below `maxBroadcastBytes` of key manifest. */
+  private def deleteKeys(spark: SparkSession, table: SeqTable, snap: Snapshot,
+      maxBroadcastBytes: Long): DataFrame = {
+    val dels = deletesDF(spark, table, snap)
+    val delBytes = keyManifestsOf(snap)
+      .map(m => Files.size(Paths.get(table.deleteManifestPath(m)))).sum
+    if (delBytes <= maxBroadcastBytes) broadcast(dels) else dels
+  }
+
+  /** The rows of `metas` that `snap`'s equality deletes hide and its deletion vectors do not
+    * hide yet, as (`_fn`, `_pos`): what converting the equality deletes to deletion vectors must
+    * mark ([[writeDvManifests]]'s input). The scan reads only `doc_id`.
+    */
+  private[graft] def keyDeletedPositions(spark: SparkSession, table: SeqTable, snap: Snapshot,
+      metas: Seq[FileMeta]): DataFrame = {
+    val df = readPositioned(spark, table, metas,
+      StructType(Seq(table.schemaOf(snap)("doc_id"))), ages = true)
+    val dvMs = dvManifestsOf(snap)
+    val notYet =
+      if (dvMs.isEmpty) df else applyDvFilter(spark, table, dvMs, df, DeleteBroadcastMaxBytes)
+    notYet.join(deleteKeys(spark, table, snap, DeleteBroadcastMaxBytes), keyDeleted, "left_semi")
+      .select("_fn", "_pos")
   }
 
   /** Apply the deletion vectors in `dvManifests` to `df` (which must carry `_fn` and `_pos`).
@@ -851,15 +880,10 @@ object SeqIO {
         // addedAt attached, then visibility under EACH endpoint's full delete set — equality
         // anti-join AND that endpoint's DVs — decides which side(s) the row lands on
         import spark.implicits._
-        val ages = broadcast(spark.createDataset(
-          prunedCarried.map(m => (fileBasename(m.path), m.addedAt))).toDF("_fn", "_added"))
         val dvBnFlag = broadcast(spark.createDataset(dvDeltaBasenames.toSeq).toDF("_fn")
           .withColumn("_dvh", lit(1)))
         // deltaKeys is distinct, so the flag left-join cannot duplicate candidate rows
-        val cand = readFiles(spark, table, prunedCarried, schema)
-          .withColumn("_fn", element_at(split(col("_metadata.file_path"), "/"), -1))
-          .withColumn("_pos", col("_metadata.row_index"))
-          .join(ages, Seq("_fn"))
+        val cand = readPositioned(spark, table, prunedCarried, schema, ages = true)
           .join(deltaKeys, col("doc_id") === col("_delta_key"), "left")
           .join(dvBnFlag, Seq("_fn"), "left")
           .filter(col("_delta_key").isNotNull || col("_dvh").isNotNull)

@@ -7,7 +7,7 @@ import graft.SparkTestSession
 import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
-import graft.table.{SeqIO, SeqTable}
+import graft.table.{KeyPrune, SeqIO, SeqTable}
 
 /** End-to-end deletion-vector behavior: DV DELETE/UPDATE parity with the COW verbs, time
   * travel, multi-DV union on one file, the fallback anti-join path, the lost-update commit
@@ -180,6 +180,41 @@ class DvTableSpec extends AnyFunSuite with TempDirs {
     assert(diff.filter(col("change_type") === "I").count() == 0)
     assert(diff.filter(col("change_type") === "D").count() == expect.count())
     assert(contentHash(diff.filter(col("change_type") === "D")) == contentHash(expect))
+  }
+
+  test("converting equality deletes to DVs: one metadata-only commit with its counts, an " +
+      "empty changelog across it, history and lookups unchanged") {
+    val table = fresh("tovec", 3000, 12)
+    val gone = SeqIO.read(spark, table).select("doc_id")
+      .filter(pmod(xxhash64(col("doc_id")), lit(20)) === 0).persist()
+    MergeInto.merge(spark, table, gone.withColumn("_op", lit("D")), cfg, 1000, mor = true)
+    val snap = table.currentSnapshot()
+    val v = snap.version
+    val before = contentHash(SeqIO.readAt(spark, table, v))
+    val holders = SeqIO.readFiles(spark, table, table.liveFiles(snap))
+      .select(col("doc_id"), col("_metadata.file_path").as("f")).join(gone, Seq("doc_id"))
+      .select("f").distinct().count()
+
+    val s = MaterializeDeletes.toVectors(spark, table, snap,
+      KeyPrune.KeySet.deletedIn(spark, table, snap)).get
+    assert(s.version === v + 1 && s.operation === "delete-vectors")
+    assert(s.manifests === snap.manifests, "no data file may move")
+    assert(SeqIO.keyManifestsOf(s).isEmpty && SeqIO.dvManifestsOf(s).size === 1)
+    val n = gone.count()
+    assert(s.summary("delete-keys-converted") === n.toString)
+    assert(s.summary("dv-deleted-rows") === n.toString)
+    assert(s.summary("dv-files-targeted") === holders.toString)
+    assert(s.summary("dv-manifests") === "1")
+
+    assert(SeqIO.tableDiff(spark, table, v, v + 1).count() === 0)
+    assert(contentHash(SeqIO.readAt(spark, table, v)) === before, "history must not change")
+    assert(contentHash(SeqIO.readAt(spark, table, v + 1)) === before)
+    val keys = gone.limit(50).collect().map(_.getString(0)).toSeq
+    assert(SeqIO.lookupKeys(spark, table, keys)._1.count() === 0)
+    // nothing left to convert
+    assert(MaterializeDeletes.toVectors(spark, table, s, KeyPrune.KeySet.deletedIn(spark, table, s))
+      .isEmpty)
+    gone.unpersist()
   }
 
   test("planner delete-pressure reads DV cardinalities exactly from manifest headers") {

@@ -57,6 +57,8 @@ class IncrementalCycleSpec extends AnyFunSuite with TempDirs {
   test("the cycle materializes MoR deletes by itself: pressure-weighted planning rewrites " +
       "laden files and housekeeping retires the obsolete manifests (no caller-invoked " +
       "MaterializeDeletes)") {
+    // the pending keys become deletion vectors; a file is rewritten for its deletes only once
+    // they outweigh it, so no live file stays deleted by vector above that rule
     import org.apache.spark.sql.functions.col
     val root = tempDir("inc-mor-").toString + "/t"
     val (table, _) = SeqGen.fragmentedTable(spark, root, 3000, 12)
@@ -67,7 +69,8 @@ class IncrementalCycleSpec extends AnyFunSuite with TempDirs {
       c += 1
     assert(c < 12)
 
-    // heavy MoR delete set: manifests land, nothing is rewritten, reads go delete-aware
+    // heavy MoR delete set: manifests land, nothing is rewritten, reads go delete-aware. 2000
+    // drawn keys are ~1460 distinct, so each file is about half deleted: near the rewrite rule
     val changes = SeqGen.changeSet(spark, 3000, changes = 100, deletes = 2000).persist()
     MergeInto.merge(spark, table, changes, cfg, 500, mor = true)
     assert(table.currentSnapshot().deleteManifests.nonEmpty)
@@ -75,26 +78,75 @@ class IncrementalCycleSpec extends AnyFunSuite with TempDirs {
     val expected = logical.count()
     val delKeys = changes.filter(col("_op") === "D").select("doc_id").persist()
 
-    // the CYCLE alone must materialize: pressure routes the laden files into the top-k, the
-    // delete-aware task rewrite applies the deletes, housekeeping drops the obsolete manifests
+    // the CYCLE alone must apply them: the keys become deletion vectors, pressure routes the
+    // files they outweigh into the top-k, the delete-aware task rewrite applies them
     var c2 = 0
     var executedAny = 0
     var go = true
     while (go && c2 < 12) {
       val r = MaintenanceRunner.runCycle(spark, table, cfg, opts, ckpt)
       executedAny += r.tasksExecuted
-      go = r.tasksExecuted > 0 || table.currentSnapshot().deleteManifests.nonEmpty
+      go = r.tasksExecuted > 0
+      c2 += 1
+    }
+    assert(c2 < 12, "cycles must converge after applying the deletes")
+    assert(executedAny > 0, "the planner must have scheduled the files the deletes outweigh")
+    val snap = table.currentSnapshot()
+    assert(SeqIO.keyManifestsOf(snap).isEmpty, "every equality delete must have become a vector")
+    // what stays deleted by vector: live files below the rewrite rule; a manifest whose targets
+    // are all dead is retired by the cycle's housekeeping
+    val live = table.liveFiles().map(f => SeqIO.fileBasename(f.path) -> f).toMap
+    val headers = SeqIO.dvManifestsOf(snap).map(m => m -> graft.table.Dv.headers(table, Seq(m)))
+    headers.foreach { case (m, hs) =>
+      assert(hs.exists(h => live.contains(h._1)), s"$m targets no live file")
+    }
+    headers.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ + _).foreach { case (bn, n) =>
+      live.get(bn).foreach { f =>
+        assert(MaintenancePlanner.DeleteWeight * n / f.records < opts.threshold,
+          s"$bn keeps $n of ${f.records} rows deleted by vector, above the rewrite rule")
+      }
+    }
+    val physical = SeqIO.read(spark, table)
+    assert(physical.count() === expected)
+    assert(physical.join(delKeys, Seq("doc_id"), "left_semi").count() === 0,
+      "deleted keys must stay gone")
+    logical.unpersist(); changes.unpersist(); delKeys.unpersist()
+  }
+
+  test("MoR deletes that outweigh their files are materialized: every laden file is " +
+      "rewritten and housekeeping retires every delete manifest") {
+    import org.apache.spark.sql.functions._
+    val root = tempDir("inc-mor90-").toString + "/t"
+    val (table, _) = SeqGen.fragmentedTable(spark, root, 3000, 12)
+    val opts = MaintenanceOptions(k = 12, targetRecordsPerFile = 500, incremental = true)
+    val ckpt = new Checkpoint(s"$root/state")
+    var c = 0
+    while (MaintenanceRunner.runCycle(spark, table, cfg, opts, ckpt).tasksExecuted > 0 && c < 12)
+      c += 1
+    assert(c < 12)
+
+    // ~90 % of every file's keys, deleted merge-on-read
+    val laden = table.liveFiles().map(_.path).toSet
+    val delKeys = SeqIO.read(spark, table).select("doc_id")
+      .filter(pmod(xxhash64(col("doc_id")), lit(10)) =!= 0).persist()
+    MergeInto.merge(spark, table, delKeys.withColumn("_op", lit("D")), cfg, 500, mor = true)
+    assert(table.liveFiles().map(_.path).toSet === laden, "a MoR delete rewrites nothing")
+    val expected = SeqIO.read(spark, table).count()
+
+    var c2 = 0
+    var go = true
+    while (go && c2 < 12) {
+      go = MaintenanceRunner.runCycle(spark, table, cfg, opts, ckpt).tasksExecuted > 0
       c2 += 1
     }
     assert(c2 < 12, "cycles must converge after materializing the deletes")
-    assert(executedAny > 0, "the planner must have scheduled the delete-laden files")
+    assert(table.liveFiles().forall(f => !laden(f.path)), "every laden file must be rewritten")
     assert(table.currentSnapshot().deleteManifests.isEmpty,
       "obsolete delete manifests must be retired by the cycle's housekeeping")
     val physical = SeqIO.read(spark, table)
     assert(physical.count() === expected)
-    assert(physical.join(delKeys, Seq("doc_id"), "left_semi").count() === 0,
-      "deleted keys must stay gone after materialization")
-    logical.unpersist(); changes.unpersist(); delKeys.unpersist()
+    assert(physical.join(delKeys, Seq("doc_id"), "left_semi").count() === 0)
+    delKeys.unpersist()
   }
 
   test("the drain terminates when a clustered rewrite cannot reduce its file count") {

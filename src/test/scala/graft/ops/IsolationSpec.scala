@@ -1,13 +1,14 @@
 package graft.ops
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.TempDirs
 import graft.fixtures.SeqGen
 import graft.planner.GridConfig
-import graft.table.{SeqIO, SeqTable}
+import graft.table.{KeyPrune, SeqIO, SeqTable}
 
 /** Round-2 isolation + durability hardening:
   *  - MoR-vs-COW write skew: a COW rewrite planned BEFORE a concurrent MoR merge must not commit
@@ -15,6 +16,8 @@ import graft.table.{SeqIO, SeqTable}
   *  - exact dedup must survive hash collisions between distinct payloads
   *  - delete application falls back to a shuffle join when the key set exceeds the broadcast cap
   *  - manifest rewrite retries through version races instead of surfacing raw filesystem errors
+  *  - the conversion of equality deletes to deletion vectors commits only against the snapshot
+  *    it collected its keys from: a MoR merge or a compaction inside that window wins
   */
 class IsolationSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
@@ -51,6 +54,71 @@ class IsolationSpec extends AnyFunSuite with TempDirs {
     val expected = SeqIO.read(spark, table).count()
     Rewrite.compactFiles(spark, table, table.liveFiles(), cfg, 1000)
     assert(SeqIO.read(spark, table).count() === expected, "compaction resurrected deleted rows")
+  }
+
+  /** (doc_id, token hash, n_tok, source) rows, compared as a multiset. */
+  private def content(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(concat_ws("|", col("doc_id"), xxhash64(col("tokens")), col("n_tok"), col("source")))
+      .collect().map(_.getString(0)).sorted.toSeq
+
+  /** A change batch applied with plain DataFrames (`_op` = 'D' deletes, else upserts). */
+  private def applied(state: org.apache.spark.sql.DataFrame,
+      batch: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    state.join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
+      .unionByName(batch.filter(col("_op") =!= "D").drop("_op"))
+
+  private def dvFiles(table: SeqTable): Seq[String] = {
+    val s = Files.list(java.nio.file.Paths.get(table.root, "metadata"))
+    try s.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".dv")).toSeq
+    finally s.close()
+  }
+
+  test("a MoR merge inside the delete-vector conversion's window keeps its keys") {
+    val table = fresh(2000, 8)
+    val first = SeqGen.changeSet(spark, 2000, changes = 0, deletes = 100).persist()
+    MergeInto.merge(spark, table, first, cfg, 1000, mor = true)
+    val snap = table.currentSnapshot()
+    val keys = KeyPrune.KeySet.deletedIn(spark, table, snap)
+    // the race: a MoR merge commits after the conversion collected its keys
+    val second = SeqGen.changeSet(spark, 2000, changes = 80, deletes = 160)
+      .withColumn("doc_id", when(col("_op") === "D",
+        format_string("doc-%010d", (xxhash64(col("doc_id"), lit(7)) % 2000 + 2000) % 2000))
+        .otherwise(col("doc_id"))).dropDuplicates("doc_id").persist()
+    MergeInto.merge(spark, table, second, cfg, 1000, mor = true)
+    val raced = SeqIO.keyManifestsOf(table.currentSnapshot()).toSet -- snap.deleteManifests
+    assert(raced.nonEmpty)
+
+    assert(MaterializeDeletes.toVectors(spark, table, snap, keys).isEmpty, "must conflict")
+    assert(dvFiles(table).isEmpty, "the conflicted conversion must leave no .dv behind")
+    val model = content(applied(applied(SeqGen.table(spark, 2000), first), second))
+    assert(raced.subsetOf(table.currentSnapshot().deleteManifests.toSet))
+    assert(content(SeqIO.read(spark, table)) === model)
+
+    // the next conversion, from the new head, takes both merges' keys
+    val head = table.currentSnapshot()
+    val converted = MaterializeDeletes.toVectors(spark, table, head,
+      KeyPrune.KeySet.deletedIn(spark, table, head))
+    assert(converted.exists(s => SeqIO.keyManifestsOf(s).isEmpty))
+    assert(content(SeqIO.read(spark, table)) === model)
+    first.unpersist(); second.unpersist()
+  }
+
+  test("a compaction of a candidate file inside the conversion's window makes it conflict") {
+    val table = fresh(2000, 8)
+    val changes = SeqGen.changeSet(spark, 2000, changes = 0, deletes = 100).persist()
+    MergeInto.merge(spark, table, changes, cfg, 1000, mor = true)
+    val snap = table.currentSnapshot()
+    val keys = KeyPrune.KeySet.deletedIn(spark, table, snap)
+    val candidates = KeyPrune.filesMayHold(spark, table, snap, Left(table.liveFiles(snap)), keys)
+    assert(candidates.size >= 2)
+    // the race: two candidate files are rewritten (their deletes applied) after the collect
+    Rewrite.compactFiles(spark, table, candidates.take(2), cfg, 1000)
+
+    assert(MaterializeDeletes.toVectors(spark, table, snap, keys).isEmpty, "must conflict")
+    assert(dvFiles(table).isEmpty, "the conflicted conversion must leave no .dv behind")
+    assert(content(SeqIO.read(spark, table)) ===
+      content(applied(SeqGen.table(spark, 2000), changes)))
+    changes.unpersist()
   }
 
   test("exact dedup keeps distinct payloads that collide on the candidate hash") {

@@ -42,6 +42,22 @@ class PlannerParitySpec extends AnyFunSuite with TempDirs {
     assert(ladenScore > fragScore, s"delete-heavy $ladenScore must outrank fragmented $fragScore")
   }
 
+  test("the usefulness gate rewrites a file for its deletes only once they outweigh it") {
+    val cfg = GridConfig()
+    val target = 500L
+    // two right-sized clustered files in one cell: no layout win, so only deletes can justify it
+    val files = Seq("a", "b").map(n => graft.table.FileMeta(s"data/$n.parquet", target, 1L << 20,
+      100, 110, "doc-0000000000", "doc-0000000999", Seq("src1"), addedAt = 1, clustered = true))
+    def plan(pa: Double, pb: Double) = MaintenancePlanner.planCompaction(spark, files, cfg, 8,
+      1.0, target, f => if (f.path == files.head.path) pa else pb)
+    // the cell scores 2 × 2.0 × 0.3 = 1.2 ≥ the act threshold, but neither file's delete term
+    // (0.6) reaches it: its deletes stay deletion vectors
+    assert(plan(0.3, 0.3).isEmpty)
+    assert(plan(0.49, 0.3).isEmpty)
+    // half of one file deleted: its delete term reaches the threshold, the cell is rewritten
+    assert(plan(0.5, 0.3).map(_.filePaths.toSet) === Seq(files.map(_.path).toSet))
+  }
+
   test("DeletePressure.of estimates per-file deleted fraction from manifests + metadata only, " +
       "and pressure-weighted plans claim laden files (distributed parity holds)") {
     import org.apache.spark.sql.functions._
@@ -76,6 +92,38 @@ class PlannerParitySpec extends AnyFunSuite with TempDirs {
       spark, SeqIO.fileMetaDS(spark, table), cfg, 8, 1.0, 500, pressure)
     assert(tasks.map(_.region) === distTasks.map(_.region))
     assert(tasks.map(_.filePaths.toSet) === distTasks.map(_.filePaths.toSet))
+  }
+
+  test("DeletePressure counts equality keys through each file's Bloom: on a curve layout it " +
+      "reads the true deleted fraction plus the Bloom's false positives, not the range slice") {
+    import org.apache.spark.sql.functions._
+    val root = tempDir("presh-bloom-").toString + "/t"
+    val cfg = GridConfig()
+    val (table, _) = SeqGen.fragmentedTable(spark, root, 3000, 12)
+    // curve-clustered files: every doc_id range spans the key domain
+    Rewrite.compactFiles(spark, table, table.liveFiles(), cfg, 250)
+    // a 2 % MoR delete set
+    val delKeys = SeqIO.read(spark, table).select("doc_id")
+      .filter(pmod(xxhash64(col("doc_id")), lit(50)) === 0).persist()
+    MergeInto.merge(spark, table, delKeys.withColumn("_op", lit("D")), cfg, 250, mor = true)
+    val snap = table.currentSnapshot()
+    val live = table.liveFiles(snap)
+    assert(live.forall(_.docBloom.isDefined))
+    val deleted = SeqIO.readFiles(spark, table, live)
+      .select(element_at(split(col("_metadata.file_path"), "/"), -1).as("bn"), col("doc_id"))
+      .join(delKeys, Seq("doc_id")).groupBy("bn").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val pressure = DeletePressure.of(spark, table, snap)
+    live.foreach { f =>
+      val truth = deleted.getOrElse(SeqIO.fileBasename(f.path), 0L).toDouble / f.records
+      val p = pressure(f)
+      assert(p >= truth && p <= truth + 0.01, s"${f.path}: pressure $p, deleted $truth")
+    }
+    // narrow entries carry no Bloom: the range count, an upper bound that here spans every key
+    val narrow = table.liveFilesNarrow(snap)
+    assert(narrow.forall(f => pressure(f) >= pressure(live.find(_.path == f.path).get)))
+    assert(narrow.map(pressure).min > live.map(pressure).max)
+    delKeys.unpersist()
   }
 
   test("incremental planner with executor pre-merge FORCED (threshold 0) plans identical tasks " +

@@ -69,6 +69,26 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     assert(SeqIO.read(spark, graft.table.SeqTable.load(root)).count() === rowsAfterCrash)
   }
 
+  test("crash right after the delete-vector conversion commit → the next cycle starts cleanly") {
+    val root = freshTable(3000, 24)
+    val t0 = graft.table.SeqTable.load(root)
+    MergeInto.merge(spark, t0, SeqGen.changeSet(spark, 3000, changes = 40, deletes = 150), cfg,
+      600, mor = true)
+    val before = SeqIO.read(spark, t0).persist()
+    val rows = before.count()
+    intercept[Boom](run(root, Some("delete-vectors"), batch = true))
+    val crashed = graft.table.SeqTable.load(root).currentSnapshot()
+    assert(crashed.operation === "delete-vectors")
+    assert(SeqIO.keyManifestsOf(crashed).isEmpty && SeqIO.dvManifestsOf(crashed).nonEmpty)
+    // the crashed cycle logged no start: the rerun is a fresh cycle with nothing to skip
+    val report = run(root, None, batch = true)
+    assert(report.cycle === 1 && report.tasksSkippedOnResume === 0)
+    val after = SeqIO.read(spark, graft.table.SeqTable.load(root))
+    assert(after.count() === rows)
+    assert(after.exceptAll(before).count() === 0 && before.exceptAll(after).count() === 0)
+    before.unpersist()
+  }
+
   test("clean second cycle starts a NEW cycle id") {
     val root = freshTable(2000, 16)
     val r1 = run(root, None, batch = true)
