@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 
 /** Side benchmarks for the optimization rounds — never touches the frozen [[Bench]] contract.
   *
@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   *  - `noop <queryName> [reps]` : time a query with the noop sink (guide §1.4) — computes every
   *    column, no sink cost, prints per-rep seconds
   *  - `prune <tableDir> <source|-> <lo|-> <hi|->` : audit one pruned scan (`-` = no bound): the
-  *    live files, the files [[graft.table.SeqIO.scanPruned]] opens (and would open without the
-  *    source zones), and the files whose rows match — the floor of any per-file prune; a
+  *    live files, the files the filtered read opens (and would open without the source
+  *    zones), and the files whose rows match — the floor of any per-file prune; a
   *    matching file it does not open prints as MISSED
   */
 object BenchExtra {
@@ -329,15 +329,19 @@ object BenchExtra {
         val table = graft.table.SeqTable.load(dir)
         val snap = table.currentSnapshot()
         val live = table.liveFilesNarrow(snap)
-        val selected = SeqIO.pruneMetas(live, source, ntokMin, ntokMax).map(_.path).toSet
-        val withoutZones =
-          SeqIO.pruneMetas(live.map(_.copy(sourceZones = None)), source, ntokMin, ntokMax).size
-        // the files whose own rows match, deletes not applied: a prune reads stats, not deletes
+        val pred = Seq(source.map(col("source") === _), ntokMin.map(col("n_tok") >= _),
+          ntokMax.map(col("n_tok") <= _)).flatten.foldLeft(lit(true))(_ && _)
+        def selectedOf(metas: Seq[graft.table.FileMeta]) =
+          GraftSqlBridge.selectedFiles(SeqIO.readFiles(spark, table, metas).filter(pred))
+            .map(_.path)
+        val selected = selectedOf(live).toSet
+        val withoutZones = selectedOf(live.map(_.copy(sourceZones = None))).size
+        // the files whose own rows match, deletes not applied: a prune reads stats, not deletes;
+        // the predicate sits inside an aggregate, where no scan sees it
         val byName = live.map(f => SeqIO.fileBasename(f.path) -> f.path).toMap
         val holding = SeqIO.readFiles(spark, table, live, table.schemaOf(snap))
-          .filter(Seq(source.map(col("source") === _), ntokMin.map(col("n_tok") >= _),
-            ntokMax.map(col("n_tok") <= _)).flatten.foldLeft(lit(true))(_ && _))
-          .select(element_at(split(col("_metadata.file_path"), "/"), -1)).distinct()
+          .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1))
+          .agg(count_if(pred).as("n")).filter(col("n") > 0)
           .collect().map(r => byName(r.getString(0))).toSet
         println(s"[prune] source=$s n_tok=[$lo, $hi]: live=${live.size} " +
           s"selected=${selected.size} holding=${holding.size} " +

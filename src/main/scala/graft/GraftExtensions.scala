@@ -159,9 +159,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectTableFunction((
       FunctionIdentifier("table_scan"),
       info("table_scan",
-        "table_scan(tableDir STRING, source STRING, ntokMin INT, ntokMax INT) - manifest-pruned " +
-          "scan: files skipped by min/max + source stats before the plan is built " +
-          "(empty source / -1 bounds = unconstrained)"),
+        "table_scan(tableDir STRING, source STRING, ntokMin INT, ntokMax INT) - filtered " +
+          "read of the head: the scan opens only the files whose n_tok, source and zone stats " +
+          "can match (empty source / -1 bounds = unconstrained)"),
       (args: Seq[Expression]) => {
         require(args.size == 4, s"table_scan expects 4 arguments, got ${args.size}")
         val spark = org.apache.spark.sql.SparkSession.active

@@ -219,14 +219,6 @@ object GeoBrsKernel {
       if (emitted.isEmpty) Double.PositiveInfinity else emitted.last.score, peak)
   }
 
-  /** [[TopK.mergeTopK]] over continuous node results. */
-  def mergeTopK(perNode: Seq[GeoNodeResult], k: Int, overlapAllowed: Boolean,
-      sigma: Option[Double] = None): (Vector[GeoRegion], Boolean) =
-    TopK.mergeTopK(perNode, k, overlapAllowed, sigma = sigma)
-
-  /** [[TopK.preMerge]] over continuous node results. */
-  def preMerge(results: Iterator[GeoNodeResult], m: Int): GeoNodeResult = TopK.preMerge(results, m)
-
   /** Test oracle: enumerate the canonical anchor set and greedy-select.
     *
     * Canonical form: any square can be translated right until its left edge rests on the leftmost

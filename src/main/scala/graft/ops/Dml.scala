@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.planner.GridConfig
 import graft.table.{Dv, FileMeta, SeqIO, SeqTable}
@@ -10,9 +10,10 @@ import graft.table.{Dv, FileMeta, SeqIO, SeqTable}
   * [[MergeInto]] path so they inherit its whole machinery: manifest range + per-file Bloom
   * pruning, COW/MoR auto-routing by affected share, conflict-retry rebase, snapshot isolation.
   *
-  * The affected-row scan pushes the predicate into the parquet scan (Catalyst pushdown); the
-  * merge's own manifest pruning then bounds the rewrite to files that may hold affected keys —
-  * a sparse predicate touches only its files, a dense one auto-routes to merge-on-read.
+  * The affected-row scan is a filtered read: Spark pushes the predicate into the parquet scan,
+  * whose file index opens only the files the manifest stats admit ([[SeqIO.mayHold]]); the
+  * merge's own key prune then bounds the rewrite to files that may hold affected keys — a
+  * sparse predicate touches only its files, a dense one auto-routes to merge-on-read.
   *
   * Isolation: the predicate is evaluated against the snapshot current AT CALL TIME (snapshot
   * isolation, the Iceberg/Delta DML contract) — rows appended concurrently are not
@@ -21,56 +22,6 @@ import graft.table.{Dv, FileMeta, SeqIO, SeqTable}
   * either write.
   */
 object Dml {
-
-  /** Manifest-prune hints extracted from a DML predicate: `(source equality, n_tok lower bound,
-    * n_tok upper bound)` from the predicate's top-level AND conjuncts — exactly the two stats
-    * the clustered layout maintains per file ([[graft.table.FileMeta]] sources / minNtok /
-    * maxNtok). Anything unrecognized contributes no hint (sound: pruning only ever narrows the
-    * victim scan; the full predicate is re-applied to the pruned rows).
-    */
-  private[graft] def pruneHints(cond: Column): (Option[String], Option[Int], Option[Int]) = {
-    def int(v: Any): Option[Int] = v match {
-      case i: Int => Some(i)
-      case l: Long if l >= Int.MinValue && l <= Int.MaxValue => Some(l.toInt)
-      case s: Short => Some(s.toInt)
-      case b: Byte => Some(b.toInt)
-      case _ => None
-    }
-    var src: Option[String] = None
-    var lo: Option[Int] = None
-    var hi: Option[Int] = None
-    def tightenLo(v: Int): Unit = lo = Some(lo.fold(v)(math.max(_, v)))
-    def tightenHi(v: Int): Unit = hi = Some(hi.fold(v)(math.min(_, v)))
-    GraftSqlBridge.comparisonConjuncts(cond).foreach {
-      case GraftSqlBridge.Comparison("=", "source", s: String) => src = src.orElse(Some(s))
-      case GraftSqlBridge.Comparison(op, "n_tok", v) =>
-        int(v).foreach { i =>
-          op match {
-            case "=" => tightenLo(i); tightenHi(i)
-            case ">=" => tightenLo(i)
-            case ">" => tightenLo(i + 1)
-            case "<=" => tightenHi(i)
-            case "<" => tightenHi(i - 1)
-            case _ => ()
-          }
-        }
-      case _ => ()
-    }
-    (src, lo, hi)
-  }
-
-  /** The victim scan behind both DML verbs: manifest-pruned via [[pruneHints]] + [[SeqIO
-    * .scanPruned]] — a `DELETE WHERE source = … AND n_tok BETWEEN …` on a curve-clustered table
-    * opens only the file subset that may hold victims (the layout's advertised shape), never the
-    * whole table — with the FULL predicate re-applied as the residual. Returns the scan stats so
-    * callers (and the spec) can see the prune working.
-    */
-  private[graft] def victimScan(spark: SparkSession, table: SeqTable,
-      cond: Column): (DataFrame, SeqIO.ScanStats) = {
-    val (src, lo, hi) = pruneHints(cond)
-    val (df, stats) = SeqIO.scanPruned(spark, table, src, lo, hi)
-    (df.filter(cond), stats)
-  }
 
   /** DELETE FROM table WHERE `cond`. Returns the merge result (files rewritten / snapshot).
     * `mor` forces merge-on-read (delete manifests only, no rewrite); `dv` writes POSITION
@@ -83,7 +34,7 @@ object Dml {
     if (dv) return dvDelete(spark, table, cond)
     // keys only: a delete change set needs no payload (merge null-fills the unused columns), so
     // the victims' token arrays never enter the change-set shuffle
-    val victims = victimScan(spark, table, cond)._1
+    val victims = SeqIO.read(spark, table).filter(cond)
       .select(col("doc_id"))
       .withColumn("_op", lit("D"))
     MergeInto.merge(spark, table, victims, cfg, targetRecordsPerFile,
@@ -102,17 +53,16 @@ object Dml {
   private[graft] def dvDelete(spark: SparkSession, table: SeqTable, cond: Column,
       maxAttempts: Int = 5,
       distributedMetaFiles: Long = SeqIO.DistributedDiffMetaFiles): MergeResult = {
-    val (src, lo, hi) = pruneHints(cond)
     var attempt = 0
     while (true) {
       attempt += 1
       val snap = table.currentSnapshot()
       val useDistributed = SeqIO.routesDistributed(snap, distributedMetaFiles)
-      val selected = SeqIO.pruneMetas(table.liveFilesNarrow(snap), src, lo, hi)
-      val victims = SeqIO.readWithDeletes(spark, table, snap, selected, keepPos = true)
-        .filter(cond)
-        .select(col("_fn"), col("_pos"))
-      val dvNames = SeqIO.writeDvManifests(spark, table, victims, snap.version + 1)
+      val victims = SeqIO.readWithDeletes(spark, table, snap, table.liveFilesNarrow(snap),
+        keepPos = true).filter(cond)
+      val selected = GraftSqlBridge.selectedFiles(victims)
+      val dvNames = SeqIO.writeDvManifests(spark, table, victims.select(col("_fn"), col("_pos")),
+        snap.version + 1)
       if (dvNames.isEmpty) return MergeResult(snap, 0, attempt) // predicate matched nothing
       val (targeted, deletedRows) = dvTargets(table, dvNames, selected)
       try {
@@ -162,7 +112,7 @@ object Dml {
     require(bad.isEmpty, s"updateWhere: non-updatable columns ${bad.mkString(", ")} " +
       "(doc_id is the merge key; n_tok is derived from tokens)")
     if (dv) return dvUpdate(spark, table, cond, set, cfg, targetRecordsPerFile)
-    val upd0 = victimScan(spark, table, cond)._1
+    val upd0 = SeqIO.read(spark, table).filter(cond)
     // ONE projection for every SET clause (SQL UPDATE semantics): each right-hand side is
     // evaluated against the ORIGINAL row — a sequential withColumn fold would let a later
     // assignment read an earlier one's already-updated value, with Map iteration order deciding
@@ -188,16 +138,16 @@ object Dml {
       maxAttempts: Int = 5,
       distributedMetaFiles: Long = SeqIO.DistributedDiffMetaFiles): MergeResult = {
     val schema = table.currentSchema()
-    val (src, lo, hi) = pruneHints(cond)
     var attempt = 0
     while (true) {
       attempt += 1
       val snap = table.currentSnapshot()
       val useDistributed = SeqIO.routesDistributed(snap, distributedMetaFiles)
-      val selected = SeqIO.pruneMetas(table.liveFilesNarrow(snap), src, lo, hi)
       // one pinned scan feeds BOTH faces of the update (persisted: new rows + positions)
-      val matched = SeqIO.readWithDeletes(spark, table, snap, selected, keepPos = true)
-        .filter(cond).persist()
+      val scan = SeqIO.readWithDeletes(spark, table, snap, table.liveFilesNarrow(snap),
+        keepPos = true).filter(cond)
+      val selected = GraftSqlBridge.selectedFiles(scan)
+      val matched = scan.persist()
       try {
         val newRows = matched.withColumns(set) // each RHS sees the ORIGINAL row (SQL UPDATE)
           .withColumn("n_tok", size(col("tokens")))

@@ -46,7 +46,9 @@ object Rewrite {
 
   /** `df` laid out as [[clusteredWrite]] writes it: one partition per file of
     * ~`totalRecords / targetRecordsPerFile`, each sorted. The curve layout's byte histogram runs
-    * here, as one collect job; the shuffle runs with the write.
+    * here, as one collect job; the shuffle runs with the write. `totalRecords` may exceed `df`'s
+    * rows (a MERGE's change keys, deletes included; files read before their deletes apply): the
+    * curve layout sizes its files from the rows the histogram counts.
     *
     * Layouts:
     *  - curve (default): range-partition + sort on (curveKey, doc_id) — tight (source, n_tok)
@@ -82,7 +84,7 @@ object Rewrite {
     if (docMajorEff)
       df.repartitionByRange(nFiles, col("doc_id")).sortWithinPartitions(col("doc_id"))
     else
-      byteBalanced(spark, withCurveKey(df, cfgEff, hilbertEff), nFiles)
+      byteBalanced(spark, withCurveKey(df, cfgEff, hilbertEff), nFiles, targetRecordsPerFile)
         .sortWithinPartitions(col("_ck"), col("doc_id"))
         .drop("_ck")
   }
@@ -101,15 +103,19 @@ object Rewrite {
     * reference's fixed sqrt-grid never had. Rows are placed EXACTLY (no sampling error) on their
     * computed partition via a perfect-hash slot map: partition i is addressed by a precomputed
     * int whose Murmur3 lands in bucket i of HashPartitioning, keeping the whole path
-    * DataFrame-native and codegen'd (no RDD partitioner round-trip).
+    * DataFrame-native and codegen'd (no RDD partitioner round-trip). At most `maxParts`
+    * partitions, and at most ⌈rows / `rowsPerPart`⌉ (the histogram counts the rows).
     */
-  private[ops] def byteBalanced(spark: SparkSession, keyed: DataFrame, nParts: Int): DataFrame = {
+  private[ops] def byteBalanced(spark: SparkSession, keyed: DataFrame, maxParts: Int,
+      rowsPerPart: Long): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
     import org.apache.spark.sql.types.IntegerType
-    val hist = keyed.groupBy(col("_ck")).agg(sum(col("n_tok")).as("w")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    if (hist.isEmpty) return keyed.repartition(1)
+    val counted = keyed.groupBy(col("_ck")).agg(sum(col("n_tok")), count(lit(1))).collect()
+    if (counted.isEmpty) return keyed.repartition(1)
+    val hist = counted.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     val totalW = hist.map(_._2).sum
+    val rows = counted.map(_.getLong(2)).sum
+    val nParts = math.min(maxParts.toLong, (rows - 1) / rowsPerPart + 1).toInt
 
     // greedy pack → (curve key → (first partition id, #sub-partitions), #partitions)
     def pack(perPart: Long): (Map[Long, (Int, Int)], Int) = {

@@ -68,13 +68,3 @@ object GridConfig {
     * manifest's [[graft.table.SourceZones]]. */
   def sourceHash(source: UTF8String): Long = XxHash64Function.hash(source, StringType, 42L)
 }
-
-/** [[TopK.solve]] for runners that take only K′ (the discrete kernels apply no exclusions), so
-  * every incomplete round grows K′.
-  */
-object DistributedTopK {
-  def solve(runRound: Int => Seq[NodeResult], k: Int, overlapAllowed: Boolean,
-      sigma: Option[Double] = None): Vector[Region] =
-    TopK.solve[Region](k, overlapAllowed, sigma, math.max(k, 4), excludeFixed = false)(
-      (kPrime, _) => runRound(kPrime))
-}

@@ -86,9 +86,6 @@ object RegionKernel {
     TopK.emit(all.sorted(RegionOrdering), kPrime)
   }
 
-  /** [[TopK.preMerge]] for the discrete kernel's node results. */
-  def preMerge(results: Iterator[NodeResult], m: Int): NodeResult = TopK.preMerge(results, m)
-
   /** Single-partition brute-force oracle (test-only semantics anchor): enumerate every anchor whose
     * window is non-empty, sort, greedy-select. Mirrors the role of the reference's golden outputs
     * (`/root/reference/src/main/scala/SDL/distrib/OnestepAlgoReduce.scala:110-410`).

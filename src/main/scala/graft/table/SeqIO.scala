@@ -4,8 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BinaryComparison, Expression, In,
+  InSet, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Timing.timed
 
 object SeqSchema {
@@ -207,7 +210,8 @@ object SeqIO {
       StructField(SeqSchema.physicalName(f), f.dataType, nullable = true) +:
         SeqSchema.formerNames(f).map(n => StructField(n, f.dataType, nullable = true))
     })
-    val scan = scanParquet(spark, metas.map(m => table.absolutePath(m) -> m.bytes), physical, shape)
+    val scan = scanParquet(spark, metas.map(m => table.absolutePath(m) -> m.bytes), physical, shape,
+      metas)
     if (!mapped) scan
     else scan.select(schema.fields.map { f =>
       val chain = (SeqSchema.physicalName(f) +: SeqSchema.formerNames(f)).map(col)
@@ -231,9 +235,11 @@ object SeqIO {
 
   /** The one scan of graft's own parquet files, data files and manifests alike, from known
     * (absolute path, bytes) pairs ([[GraftSqlBridge.knownFilesParquet]]), and the one place that
-    * decides how a file set splits into tasks. The session conf is never written. */
+    * decides how a file set splits into tasks. The session conf is never written. A data-file
+    * scan passes its files' manifest entries `metas`, so it opens only the files [[mayHold]]
+    * keeps for the filters Spark pushes into it; a manifest scan passes none. */
   private def scanParquet(spark: SparkSession, files: Seq[(String, Long)], schema: StructType,
-      shape: ScanShape): DataFrame = {
+      shape: ScanShape, metas: Seq[FileMeta] = Nil): DataFrame = {
     def bytes(key: String) = JavaUtils.byteStringAsBytes(spark.conf.get(s"spark.sql.files.$key"))
     val (maxSplit, openCost) = (bytes("maxPartitionBytes"), bytes("openCostInBytes"))
     val splitConf: Map[String, String] = shape match {
@@ -247,7 +253,7 @@ object SeqIO {
         else Map("spark.sql.files.maxPartitionBytes" -> split.toString)
       case ScanShape.FilePerTask => Map("spark.sql.files.openCostInBytes" -> maxSplit.toString)
     }
-    GraftSqlBridge.knownFilesParquet(spark, files, schema, splitConf)
+    GraftSqlBridge.knownFilesParquet(spark, files, schema, splitConf, metas)
   }
 
   /** Broadcast ceiling for the delete-key side of the MoR anti-join; larger delete sets fall back
@@ -973,42 +979,76 @@ object SeqIO {
 
   final case class ScanStats(filesScanned: Int, totalFiles: Int, recordsScanned: Long)
 
-  /** Stats-only file skipping on (source equality, n_tok range) — sound, never exact. A file is
-    * kept when the file-wide `[minNtok, maxNtok]` overlaps the range and, for `source = s`, its
-    * source list holds `s` (or is unknown) and its [[FileMeta.sourceZones]], when recorded, hold
-    * `s`'s bucket with an n_tok range that overlaps too. */
-  private[graft] def pruneMetas(live: Seq[FileMeta], source: Option[String],
-      ntokMin: Option[Int], ntokMax: Option[Int]): Seq[FileMeta] =
-    live.filter { f =>
-      val srcOk = source.forall(s => (f.sources.isEmpty || f.sources.contains(s)) &&
-        f.sourceZones.forall(SourceZones.mayMatch(_, s, ntokMin, ntokMax)))
-      val loOk = ntokMax.forall(hi => f.minNtok <= hi)
-      val hiOk = ntokMin.forall(lo => f.maxNtok >= lo)
-      srcOk && loOk && hiOk
-    }
-
-  /** Manifest-pruned scan: `source = ? AND n_tok BETWEEN ? AND ?`, with file skipping driven purely
-    * by manifest stats ([[pruneMetas]]: the file-wide n_tok range, the source list and the
-    * per-source-bucket n_tok zones) — the metric the Z-order rewrite is meant to improve. The
-    * residual predicate still applies (pruning is sound, not exact).
-    *
-    * The snapshot is read ONCE and pinned for both the manifest prune and the delete-aware read —
-    * re-reading the head for the second step would let a commit racing between the two calls
-    * produce a mixed view (v's file list against v+1's delete set).
+  /** The one file prune, from a scan's resolved data filters (its conjuncts, as Spark pushes
+    * them): may a file hold a row that passes them all? Sound, never exact — a file it
+    * drops holds no such row, by its manifest stats alone:
+    *  - `source` `=`/`IN`: the file's source list holds one of the values (or is unknown) and
+    *    its [[FileMeta.sourceZones]], when recorded, hold that value's bucket with an n_tok
+    *    range that meets the n_tok bounds below;
+    *  - `n_tok` comparisons with a literal, intersected into one range that the file-wide
+    *    `[minNtok, maxNtok]` must meet;
+    *  - `doc_id` `=`/`IN`: one of the keys lies in the file's `[minDocId, maxDocId]`
+    *    ([[Utf8Order]], as the stats are).
+    * A conjunct of any other shape drops no file. Columns match by the scan's (physical) names;
+    * the base columns are never renamed.
     */
-  def scanPruned(
-      spark: SparkSession,
-      table: SeqTable,
-      source: Option[String],
-      ntokMin: Option[Int],
-      ntokMax: Option[Int]): (DataFrame, ScanStats) = {
+  def mayHold(filters: Seq[Expression]): FileMeta => Boolean = {
+    var sources, keys: Option[Set[String]] = None
+    var lo, hi: Option[Long] = None
+    def oneOf(attr: String, values: Iterable[Any]): Unit = {
+      val vs = values.collect { case u: UTF8String => u.toString }.toSet
+      if (attr == "source") sources = Some(sources.fold(vs)(_ intersect vs))
+      if (attr == "doc_id") keys = Some(keys.fold(vs)(_ intersect vs))
+    }
+    def compare(attr: String, op: String, v: Any): Unit = (op, v) match {
+      case ("=", _) if attr != "n_tok" => oneOf(attr, Seq(v))
+      case (_, i: Int) if attr == "n_tok" =>
+        val (l, h) = op match {
+          case "=" => (Some(i.toLong), Some(i.toLong))
+          case ">=" => (Some(i.toLong), None)
+          case ">" => (Some(i + 1L), None)
+          case "<=" => (None, Some(i.toLong))
+          case "<" => (None, Some(i - 1L))
+          case _ => (None, None)
+        }
+        l.foreach(v => lo = Some(lo.fold(v)(math.max(_, v))))
+        h.foreach(v => hi = Some(hi.fold(v)(math.min(_, v))))
+      case _ => ()
+    }
+    val flipped = Map(">" -> "<", ">=" -> "<=", "<" -> ">", "<=" -> ">=", "=" -> "=")
+    filters.foreach {
+      case In(a: Attribute, list) if list.forall(_.isInstanceOf[Literal]) =>
+        oneOf(a.name, list.map(_.asInstanceOf[Literal].value))
+      case InSet(a: Attribute, set) => oneOf(a.name, set)
+      case c: BinaryComparison => (c.left, c.right) match {
+        case (a: Attribute, Literal(v, _)) if v != null => compare(a.name, c.symbol, v)
+        case (Literal(v, _), a: Attribute) if v != null && flipped.contains(c.symbol) =>
+          compare(a.name, flipped(c.symbol), v)
+        case _ => ()
+      }
+      case _ => ()
+    }
+    val (l, h) = (lo.map(math.min(_, Int.MaxValue).toInt), hi.map(math.max(_, Int.MinValue).toInt))
+    val keyGroups = keys.map(ks =>
+      KeyPrune.Groups(Array(Long.MaxValue), Array(ks.toArray.sorted(Utf8Order))))
+    f => l.forall(f.maxNtok >= _) && h.forall(f.minNtok <= _) &&
+      sources.forall(_.exists(s => (f.sources.isEmpty || f.sources.contains(s)) &&
+        f.sourceZones.forall(SourceZones.mayMatch(_, s, l, h)))) &&
+      keyGroups.forall(g => f.minDocId == null || f.maxDocId == null || g.inRange(f))
+  }
+
+  /** `source = ? AND n_tok BETWEEN ? AND ?` (each part optional) over the delete-aware read of
+    * the current snapshot, pinned once so the files selected and the deletes applied are of one
+    * version — the scan the Z-order rewrite is meant to make cheap — with its [[ScanStats]] from
+    * the files it selects ([[GraftSqlBridge.selectedFiles]]). */
+  def scanPruned(spark: SparkSession, table: SeqTable, source: Option[String],
+      ntokMin: Option[Int], ntokMax: Option[Int]): (DataFrame, ScanStats) = {
     val snap = table.currentSnapshot()
     val live = table.liveFilesNarrow(snap) // stats-only pruning: bloom payloads never needed
-    val selected = pruneMetas(live, source, ntokMin, ntokMax)
-    var df = readWithDeletes(spark, table, snap, selected)
-    source.foreach(s => df = df.filter(col("source") === s))
-    ntokMin.foreach(lo => df = df.filter(col("n_tok") >= lo))
-    ntokMax.foreach(hi => df = df.filter(col("n_tok") <= hi))
+    val cond = Seq(source.map(col("source") === _), ntokMin.map(col("n_tok") >= _),
+      ntokMax.map(col("n_tok") <= _)).flatten.foldLeft(lit(true))(_ && _)
+    val df = readWithDeletes(spark, table, snap, live).filter(cond)
+    val selected = GraftSqlBridge.selectedFiles(df)
     (df, ScanStats(selected.size, live.size, selected.map(_.records).sum))
   }
 

@@ -135,9 +135,12 @@ object GraftSqlBridge {
     * scan by the conf of the relation's session only, so a non-empty `splitConf` builds the
     * relation on a clone of `spark` that only this scan reads: the caller's conf is never
     * written, and the query still runs on `spark`. `cloneSession` is `private[sql]`.
+    *
+    * `metas`, when given, are the files' manifest entries, in `files` order: the scan then opens
+    * only the files [[graft.table.SeqIO.mayHold]] keeps for its pushed filters ([[KnownFiles]]).
     */
   def knownFilesParquet(spark: SparkSession, files: Seq[(String, Long)], schema: StructType,
-      splitConf: Map[String, String]): DataFrame = {
+      splitConf: Map[String, String], metas: Seq[graft.table.FileMeta] = Nil): DataFrame = {
     val relationSession =
       if (splitConf.isEmpty) spark
       else {
@@ -147,58 +150,60 @@ object GraftSqlBridge {
       }
     val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     val known = KnownFiles(files.map { case (p, bytes) =>
-      new Path(p).makeQualified(local.getUri, local.getWorkingDirectory) -> bytes })
+      new Path(p).makeQualified(local.getUri, local.getWorkingDirectory) -> bytes })(metas)
     spark.baseRelationToDataFrame(execution.datasources.HadoopFsRelation(known, StructType(Nil),
-      schema.asNullable, None, new execution.datasources.parquet.ParquetFileFormat,
-      Map.empty)(relationSession))
+      schema.asNullable, None, new KnownFilesFormat(known), Map.empty)(relationSession))
   }
 
+  /** The manifest entries the data-file scans of `df` open: each scan's own pushed filters
+    * through [[KnownFiles]]'s rule, as its `listFiles` applies them. Plans `df`; runs nothing. */
+  def selectedFiles(df: DataFrame): Seq[graft.table.FileMeta] =
+    new execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.asInstanceOf[classic.Dataset[Row]].queryExecution.executedPlan) {
+        case s: execution.FileSourceScanExec => s.relation.location match {
+          case k: KnownFiles => k.select(s.dataFilters).flatMap(_._2)
+          case _ => Nil
+        }
+      }.flatten.distinct
+
   /** A `FileIndex` over fixed (qualified path, bytes) pairs: no listing, no stat (so the
-    * modification time reads 0). */
-  private final case class KnownFiles(files: Seq[(Path, Long)])
-      extends execution.datasources.FileIndex {
+    * modification time reads 0). With the files' manifest entries `metas` (data files), a
+    * listing keeps only the files [[graft.table.SeqIO.mayHold]] keeps for the scan's data
+    * filters; without them (manifests) it keeps every file. */
+  private final case class KnownFiles(files: Seq[(Path, Long)])(
+      metas: Seq[graft.table.FileMeta]) extends execution.datasources.FileIndex {
     import execution.datasources.{FileStatusWithMetadata, PartitionDirectory}
     private lazy val statuses = files.map { case (p, bytes) =>
       FileStatusWithMetadata(new org.apache.hadoop.fs.FileStatus(bytes, false, 1, 0L, 0L, p)) }
+    @volatile private var selected = files.size // of the latest listing, for toString
+
+    /** The kept files' statuses, each with its manifest entry (none for manifests). */
+    def select(dataFilters: Seq[Expression])
+        : Seq[(FileStatusWithMetadata, Option[graft.table.FileMeta])] = {
+      val kept =
+        if (metas.isEmpty) statuses.map(_ -> None)
+        else {
+          val mayHold = graft.table.SeqIO.mayHold(dataFilters)
+          statuses.zip(metas).collect { case (s, m) if mayHold(m) => s -> Some(m) }
+        }
+      selected = kept.size
+      kept
+    }
     def rootPaths: Seq[Path] = files.map(_._1)
     def listFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression])
-        : Seq[PartitionDirectory] = Seq(PartitionDirectory(catalyst.InternalRow.empty, statuses))
+        : Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(catalyst.InternalRow.empty, select(dataFilters).map(_._1)))
     def inputFiles: Array[String] = files.map(_._1.toString).toArray
     def refresh(): Unit = ()
     def sizeInBytes: Long = files.map(_._2).sum
     def partitionSchema: StructType = StructType(Nil)
-    override def toString: String = s"KnownFiles(${files.size} files)"
+    override def toString: String = s"KnownFiles($selected/${files.size} files)"
   }
 
-  /** One recognized comparison conjunct of a predicate: `attr <op> literal`, attribute-first
-    * (literal-first inputs arrive flipped). `op` ∈ {=, >, >=, <, <=}.
-    */
-  final case class Comparison(op: String, attr: String, value: Any)
-
-  /** The top-level AND conjuncts of a predicate Column that are simple attribute-vs-literal
-    * comparisons — the shape manifest pruning can use. Unrecognized conjuncts are dropped
-    * (sound for pruning: fewer hints only widen the scan; the caller re-applies the full
-    * predicate). Lives here because Spark 4's ColumnNode classes are `private[sql]`.
-    */
-  def comparisonConjuncts(c: Column): Seq[Comparison] = {
-    import org.apache.spark.sql.internal.{ColumnNode, Literal, UnresolvedAttribute, UnresolvedFunction}
-    def conjuncts(n: ColumnNode): Seq[ColumnNode] = n match {
-      case f: UnresolvedFunction if f.functionName.equalsIgnoreCase("and") =>
-        f.arguments.flatMap(conjuncts)
-      case other => Seq(other)
-    }
-    val flip = Map(">=" -> "<=", "<=" -> ">=", ">" -> "<", "<" -> ">", "=" -> "=")
-    conjuncts(c.node).flatMap {
-      case f: UnresolvedFunction if flip.contains(f.functionName) && f.arguments.size == 2 =>
-        (f.arguments.head, f.arguments(1)) match {
-          case (a: UnresolvedAttribute, l: Literal) =>
-            a.nameParts.lastOption.map(n => Comparison(f.functionName, n.toLowerCase, l.value))
-          case (l: Literal, a: UnresolvedAttribute) =>
-            a.nameParts.lastOption.map(n =>
-              Comparison(flip(f.functionName), n.toLowerCase, l.value))
-          case _ => None
-        }
-      case _ => None
-    }
+  /** Parquet, named in a plan's `Format` entry with its index's latest selection, so `EXPLAIN`
+    * shows how many of the known files a scan opens. */
+  private final class KnownFilesFormat(@transient index: KnownFiles)
+      extends execution.datasources.parquet.ParquetFileFormat {
+    override def toString: String = s"Parquet $index"
   }
 }

@@ -2,6 +2,7 @@ package graft.brs
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.planner.TopK
 
 class GeoBrsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -33,11 +34,11 @@ class GeoBrsSpec extends AnyFunSuite {
     var round = 0
     while (!done && round < 8) {
       val (acc, complete) =
-        GeoBrsKernel.mergeTopK(runRound(kPrime), k, overlapAllowed = !distinct, sigma = sigma)
+        TopK.mergeTopK(runRound(kPrime), k, overlapAllowed = !distinct, sigma = sigma)
       res = acc; done = complete; kPrime *= 4; round += 1
     }
     if (!done) res =
-      GeoBrsKernel.mergeTopK(runRound(Int.MaxValue), k, overlapAllowed = !distinct, sigma = sigma)._1
+      TopK.mergeTopK(runRound(Int.MaxValue), k, overlapAllowed = !distinct, sigma = sigma)._1
     res
   }
 
@@ -153,7 +154,7 @@ class GeoBrsSpec extends AnyFunSuite {
       GeoNodeResult(Vector.tabulate(8)(j => GeoRegion(i * 100.0 + j, 0, 1, 1000.0 - i - j * 0.01)),
         exhausted = i % 3 != 0, minEmitted = 1000.0 - i - 0.07)
     }
-    val partial = GeoBrsKernel.preMerge(results.iterator, m = 20)
+    val partial = TopK.preMerge(results.iterator, m = 20)
     assert(partial.candidates.size === 20)
     assert(!partial.exhausted)
     val dropped = results.flatMap(_.candidates).sorted(GeoRegionOrdering).drop(20)

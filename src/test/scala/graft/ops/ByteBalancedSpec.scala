@@ -49,7 +49,8 @@ class ByteBalancedSpec extends AnyFunSuite {
         .cast("int").as("n_tok"))
       .withColumn("_h", xxhash64(col("doc_id")))
     for (nParts <- Seq(6, 9, 16)) {
-      val out = Rewrite.byteBalanced(spark, keyed, nParts)
+      // one row per partition: 3200 rows leave the partition count to nParts
+      val out = Rewrite.byteBalanced(spark, keyed, nParts, rowsPerPart = 1L)
         .withColumn("_pid", spark_partition_id())
       val rows = out.select("_ck", "_h", "n_tok", "_pid").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).toSeq

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.TempDirs
@@ -67,14 +68,16 @@ class DmlSpec extends AnyFunSuite with TempDirs {
     // cluster the layout so (source, n_tok) manifest stats actually partition the key space
     Rewrite.compactFiles(spark, table, table.liveFiles(), cfg, 400)
     val cond = col("source") === "src1" && col("n_tok") >= 256 && col("n_tok") <= 1024
-    val (victims, stats) = Dml.victimScan(spark, table, cond)
-    assert(stats.filesScanned < stats.totalFiles,
-      s"victim scan must prune on a clustered table (${stats.filesScanned}/${stats.totalFiles})")
-    // the prune must be exactly what scanPruned does with the extracted hints
+    val victims = SeqIO.read(spark, table).filter(cond)
+    val selected = GraftSqlBridge.selectedFiles(victims)
+    val live = table.liveFilesNarrow(table.currentSnapshot())
+    assert(selected.size < live.size,
+      s"victim scan must prune on a clustered table (${selected.size}/${live.size})")
+    // the prune must be exactly what scanPruned does with the same bounds
     val (_, oracle) = graft.table.SeqIO.scanPruned(spark, table, Some("src1"), Some(256), Some(1024))
-    assert(stats.filesScanned === oracle.filesScanned)
-    // and the pruned scan finds the same victims a full scan would
-    val full = SeqIO.read(spark, table).filter(cond).count()
+    assert(SeqIO.ScanStats(selected.size, live.size, selected.map(_.records).sum) === oracle)
+    // and the pruned scan finds the same victims a full scan would (no scan sees count_if's test)
+    val full = SeqIO.read(spark, table).agg(count_if(cond)).head.getLong(0)
     assert(victims.count() === full)
     // end-to-end: the DELETE through the pruned scan removes exactly the predicate rows
     val keep = SeqIO.read(spark, table).filter(!cond).count()
@@ -91,11 +94,10 @@ class DmlSpec extends AnyFunSuite with TempDirs {
     val live = table.liveFilesNarrow(table.currentSnapshot())
     assert(live.forall(f => f.sources.isEmpty && f.sourceZones.nonEmpty))
     val del = col("source") === "src10" && col("n_tok").between(1500, 1700)
-    val hints = Dml.pruneHints(del)
-    assert(hints === ((Some("src10"), Some(1500), Some(1700))))
-    val zoned = SeqIO.pruneMetas(live, hints._1, hints._2, hints._3)
-    val unzoned = SeqIO.pruneMetas(live.map(_.copy(sourceZones = None)), hints._1, hints._2,
-      hints._3)
+    def selected(metas: Seq[graft.table.FileMeta]) =
+      GraftSqlBridge.selectedFiles(SeqIO.readFiles(spark, table, metas).filter(del))
+    val zoned = selected(live)
+    val unzoned = selected(live.map(_.copy(sourceZones = None)))
     assert(zoned.size < unzoned.size, s"${zoned.size} of ${unzoned.size} files")
     def read = SeqIO.read(spark, table)
     val keep = read.filter(!del).count()
@@ -113,21 +115,35 @@ class DmlSpec extends AnyFunSuite with TempDirs {
     assert(read.count() === keep)
   }
 
-  test("pruneHints extracts source equality and n_tok bounds from AND conjuncts only") {
-    import org.apache.spark.sql.Column
-    def hints(c: Column) = Dml.pruneHints(c)
-    assert(hints(col("source") === "src2" && col("n_tok").between(100, 200)) ===
-      ((Some("src2"), Some(100), Some(200))))
-    assert(hints(lit("src2") === col("source")) === ((Some("src2"), None, None)))
-    assert(hints(col("n_tok") > 100 && col("n_tok") < 200) === ((None, Some(101), Some(199))))
-    assert(hints(lit(100) <= col("n_tok")) === ((None, Some(100), None)))
-    assert(hints(col("n_tok") === 512) === ((None, Some(512), Some(512))))
-    // disjunctions and unrecognized shapes are conservatively hint-free
-    assert(hints(col("source") === "a" || col("n_tok") < 10) === ((None, None, None)))
-    assert(hints(length(col("doc_id")) > 3) === ((None, None, None)))
-    // a hinted conjunct under AND with an unrecognized one still contributes
-    assert(hints(col("source") === "b" && length(col("doc_id")) > 3) ===
-      ((Some("b"), None, None)))
+  test("the file index prunes on source equality and n_tok bounds in AND conjuncts only") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    val root = tempDir("dml-index-").toString + "/t"
+    val (table, _) = SeqGen.fragmentedTable(spark, root, 4000, 20)
+    Rewrite.compactFiles(spark, table, table.liveFiles(), cfg, 400)
+    val live = table.liveFilesNarrow(table.currentSnapshot()).map(_.path).sorted
+    def paths(df: DataFrame) = GraftSqlBridge.selectedFiles(df).map(_.path).sorted
+    def files(c: Column) = paths(SeqIO.read(spark, table).filter(c))
+    def scan(src: Option[String], lo: Option[Int], hi: Option[Int]) =
+      paths(SeqIO.scanPruned(spark, table, src, lo, hi)._1)
+    // each predicate selects the files of the bounds it implies
+    val table1 = Seq(
+      (col("source") === "src2" && col("n_tok").between(100, 200), Some("src2"), Some(100), Some(200)),
+      (lit("src2") === col("source"), Some("src2"), None, None),
+      (col("n_tok") > 100 && col("n_tok") < 200, None, Some(101), Some(199)),
+      (lit(100) <= col("n_tok"), None, Some(100), None),
+      (col("n_tok") === 512, None, Some(512), Some(512)),
+      // disjunctions and unrecognized shapes keep every file
+      (col("source") === "a" || col("n_tok") < 10, None, None, None),
+      (length(col("doc_id")) > 3, None, None, None),
+      // a recognized conjunct under AND with an unrecognized one still prunes
+      (col("source") === "src3" && length(col("doc_id")) > 3, Some("src3"), None, None))
+    table1.foreach { case (c, src, lo, hi) =>
+      val want = scan(src, lo, hi)
+      assert(files(c) === want, c.toString)
+      if (src.isEmpty && lo.isEmpty && hi.isEmpty) assert(want === live, c.toString)
+      else if (src.nonEmpty || hi.nonEmpty)
+        assert(want.size < live.size, s"$c must prune on a clustered table")
+    }
   }
 
   test("MoR deleteWhere leaves files untouched; changelog shows exactly the victims") {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted}
 import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.SparkTestSession.{jobProperty, withListener}
@@ -215,5 +215,65 @@ class ManifestScanSpec extends AnyFunSuite with TempDirs {
       .filter(_.startsWith(".tmp-")).toSeq.isEmpty)
     finally left.close()
     assert(table.currentSnapshot().deleteManifests.isEmpty)
+  }
+
+  /** Runs `df` and returns how many files its parquet scans opened (their `numFiles` metric);
+    * the text scan of equality-delete keys is not counted. */
+  private def filesOpened(df: DataFrame): Long = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    df.collect()
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          s.metrics("numFiles").value
+      }.sum
+  }
+
+  test("a filtered read selects scanPruned's files through equality deletes, DVs and neither") {
+    val cond = col("source") === "src1" && col("n_tok").between(256, 1024)
+    for (deletes <- Seq("none", "keys", "dv")) {
+      val (table, _) = SeqGen.fragmentedTable(spark, fresh(s"plan-$deletes"), 3000, 12)
+      // clustered, so (source, n_tok) stats split the files
+      Rewrite.compactFiles(spark, table, table.liveFiles(), cfg, 300)
+      val victims = col("n_tok") > 6000
+      if (deletes == "keys") Dml.deleteWhere(spark, table, victims, cfg, 300, mor = true)
+      if (deletes == "dv") Dml.deleteWhere(spark, table, victims, cfg, 300, dv = true)
+      val snap = table.currentSnapshot()
+      assert(SeqIO.keyManifestsOf(snap).nonEmpty === (deletes == "keys"), deletes)
+      assert(SeqIO.dvManifestsOf(snap).nonEmpty === (deletes == "dv"), deletes)
+      val live = table.liveFilesNarrow(snap)
+
+      val filtered = SeqIO.read(spark, table).filter(cond)
+      val selected = GraftSqlBridge.selectedFiles(filtered).map(_.path).sorted
+      val (pruned, stats) = SeqIO.scanPruned(spark, table, Some("src1"), Some(256), Some(1024))
+      assert(selected === GraftSqlBridge.selectedFiles(pruned).map(_.path).sorted, deletes)
+      assert(stats.filesScanned === selected.size && stats.totalFiles === live.size, deletes)
+      assert(selected.nonEmpty && selected.size < live.size, s"$deletes: ${selected.size}")
+
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(filtered.explain())
+      val explain = out.toString
+      assert(explain.contains(s"KnownFiles(${selected.size}/${live.size} files)"), explain)
+      // the filter reached the scan through the delete plan: _fn join, DV probe, key anti-join
+      if (deletes == "keys") assert(explain.contains("LeftAnti"), explain)
+      if (deletes == "dv") assert(explain.contains("dv_hidden"), explain)
+      assert(filesOpened(filtered) === selected.size, deletes)
+      assert(filtered.count() === SeqIO.readFiles(spark, table, live).filter(cond)
+        .filter(!victims).count(), deletes)
+    }
+  }
+
+  test("a filtered manifest scan opens every manifest") {
+    val table = SeqTable.create(fresh("manifest-filter"))
+    SeqIO.writeFiles(spark, table, SeqGen.table(spark, 600, parts = 6))
+      .foreach(m => table.commit("append", Seq(m), Set.empty))
+    val manifests = table.currentSnapshot().manifests.size
+    assert(manifests === 6)
+    val ds = SeqIO.fileMetaDS(spark, table, narrow = true).toDF()
+    assert(GraftSqlBridge.selectedFiles(ds).isEmpty,
+      "a manifest scan carries no entries to prune by")
+    assert(filesOpened(ds.filter(col("records") < 0)) === manifests)
+    assert(filesOpened(ds.filter(col("minNtok") > Int.MaxValue - 1)) === manifests)
   }
 }

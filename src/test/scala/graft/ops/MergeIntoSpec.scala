@@ -57,6 +57,26 @@ class MergeIntoSpec extends AnyFunSuite with TempDirs {
     assert(after.join(victims, Seq("doc_id"), "left_semi").count() === 0)
   }
 
+  test("upsert files are sized from the upserts, not from every change key (COW and MoR)") {
+    for (mor <- Seq(false, true)) {
+      val (table, _) = SeqGen.fragmentedTable(spark, fresh(), 2000, 10)
+      val before = table.liveFilesNarrow(table.currentSnapshot()).map(_.path).toSet
+      // 20 new keys and 1000 deletes at 200 rows per file: one upsert file, not ⌈1020/200⌉
+      val deletes = SeqIO.read(spark, table).select("doc_id").orderBy("doc_id").limit(1000)
+        .withColumn("tokens", typedLit(Seq.empty[Int])).withColumn("n_tok", lit(0))
+        .withColumn("source", lit("x")).withColumn("_op", lit("D"))
+      val upserts = SeqGen.table(spark, 20, parts = 4)
+        .withColumn("doc_id", concat(lit("new-"), col("doc_id"))).withColumn("_op", lit("U"))
+      MergeInto.merge(spark, table, upserts.unionByName(deletes), cfg, 200, mor = mor)
+      val added = table.liveFilesNarrow(table.currentSnapshot()).filterNot(f => before(f.path))
+      val upsertFiles = SeqIO.readFiles(spark, table, added)
+        .filter(col("doc_id").startsWith("new-"))
+        .select(col("_metadata.file_path")).distinct().count()
+      assert(upsertFiles === 1, s"mor=$mor")
+      assert(SeqIO.read(spark, table).count() === 1020)
+    }
+  }
+
   test("concurrent overlapping merges: snapshot isolation — both eventually apply, serially") {
     val root = fresh()
     val (table, _) = SeqGen.fragmentedTable(spark, root, 3000, 12)

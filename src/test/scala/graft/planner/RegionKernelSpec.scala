@@ -8,6 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RegionKernelSpec extends AnyFunSuite {
 
+  /** [[TopK.solve]] with no exclusions: every incomplete round grows K′. */
+  private def solve(runRound: Int => Seq[NodeResult], k: Int, overlapAllowed: Boolean,
+      sigma: Option[Double] = None): Vector[Region] =
+    TopK.solve[Region](k, overlapAllowed, sigma, math.max(k, 4), excludeFixed = false)(
+      (kPrime, _) => runRound(kPrime))
+
   private def randomCells(rnd: scala.util.Random, gridSize: Int, n: Int): Seq[Cell] = {
     // clustered hot spots: half the mass around a few centers, half uniform
     val centers = Seq.fill(3)((rnd.nextInt(gridSize), rnd.nextInt(gridSize)))
@@ -30,7 +36,7 @@ class RegionKernelSpec extends AnyFunSuite {
           val (ax0, ax1, ay0, ay1) = cfg.anchorBounds(node)
           RegionKernel.localTopK(cs.map(_._2), ax0, ax1, ay0, ay1, cfg.regionW, kPrime)
         }
-    DistributedTopK.solve(runRound, k, overlapAllowed)
+    solve(runRound, k, overlapAllowed)
   }
 
   test("distributed == brute force over random grids (both overlap modes)") {
@@ -62,7 +68,7 @@ class RegionKernelSpec extends AnyFunSuite {
             val (ax0, ax1, ay0, ay1) = cfg.anchorBounds(node)
             RegionKernel.localTopK(cs.map(_._2), ax0, ax1, ay0, ay1, cfg.regionW, kPrime)
           }
-      val got = DistributedTopK.solve(runRound, k, overlapAllowed = false, sigma = sigma)
+      val got = solve(runRound, k, overlapAllowed = false, sigma = sigma)
       val want = RegionKernel.bruteForceTopK(cells, w, k, overlapAllowed = false, sigma = sigma)
       assert(got === want, s"trial=$trial w=$w k=$k sigma=$sigma")
     }
@@ -87,11 +93,11 @@ class RegionKernelSpec extends AnyFunSuite {
         val m = math.min(math.max(kPrime, k), 1 << 20)
         val nParts = 1 + rnd.nextInt(4)
         perNode(kPrime).groupBy(_ => rnd.nextInt(nParts)).values.toSeq
-          .map(group => RegionKernel.preMerge(group.iterator, m))
+          .map(group => TopK.preMerge(group.iterator, m))
       }
       for (overlap <- Seq(true, false)) {
-        val direct = DistributedTopK.solve(perNode, k, overlap)
-        val folded = DistributedTopK.solve(preMerged, k, overlap)
+        val direct = solve(perNode, k, overlap)
+        val folded = solve(preMerged, k, overlap)
         val want = RegionKernel.bruteForceTopK(cells, w, k, overlap)
         assert(direct === want, s"trial=$trial w=$w k=$k overlap=$overlap (direct)")
         assert(folded === want, s"trial=$trial w=$w k=$k overlap=$overlap (pre-merged)")

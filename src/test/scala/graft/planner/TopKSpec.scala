@@ -43,10 +43,10 @@ class TopKSpec extends AnyFunSuite {
     assert(calls.map(_._1) === Vector(4, 16, 64, 256))
     assert(calls.forall(_._2.isEmpty))
     assert(got === oracle(Seq(node), 4, overlapAllowed = false, None))
-    // the discrete entry point runs the same sequence
+    // a runner that ignores the exclusions sees the same K′ sequence
     val seen = ArrayBuffer.empty[Int]
-    val viaDistributed = DistributedTopK.solve(kp => { seen += kp; Seq(emit(node, kp, Nil)) },
-      k = 4, overlapAllowed = false)
+    val viaDistributed = TopK.solve[Region](4, overlapAllowed = false, None, 4,
+      excludeFixed = false) { (kp, _) => seen += kp; Seq(emit(node, kp, Nil)) }
     assert(seen.toVector === Vector(4, 16, 64, 256) && viaDistributed === got)
   }
 

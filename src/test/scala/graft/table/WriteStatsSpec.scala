@@ -8,7 +8,7 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.{Encoder, Encoders, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, Encoder, Encoders, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -150,9 +150,12 @@ class WriteStatsSpec extends AnyFunSuite with TempDirs {
       assert(zs.filter(_.head == b) === Seq(Seq(b, Int.MaxValue, Int.MinValue)))
     }
     // kept by a source-only predicate, pruned by any n_tok bound
-    assert(SeqIO.pruneMetas(metas, Some(noLen), None, None) === metas)
-    assert(SeqIO.pruneMetas(metas, Some(noLen), Some(Int.MinValue + 1), None).isEmpty)
-    assert(SeqIO.pruneMetas(metas, Some(noLen), None, Some(Int.MaxValue - 1)).isEmpty)
+    def selected(files: Seq[FileMeta], c: Column) =
+      GraftSqlBridge.selectedFiles(SeqIO.readFiles(spark, t, files).filter(c))
+    val isNoLen = col("source") === noLen
+    assert(selected(metas, isNoLen) === metas)
+    assert(selected(metas, isNoLen && col("n_tok") >= Int.MinValue + 1).isEmpty)
+    assert(selected(metas, isNoLen && col("n_tok") <= Int.MaxValue - 1).isEmpty)
 
     // a file of null sources only: no zone, and no `source = ?` predicate selects it
     val nulls = SeqIO.writeFiles(spark, t, SeqGen.table(spark, 50, parts = 1)
@@ -160,8 +163,8 @@ class WriteStatsSpec extends AnyFunSuite with TempDirs {
       .withColumn("source", lit(null).cast("string")))
     assert(nulls.map(_.sourceZones) === Seq(Some(Nil)))
     assert(nulls.map(_.sources) === Seq(Nil), "the source list calls it unknown")
-    assert(SeqIO.pruneMetas(nulls, Some("src0"), None, None).isEmpty)
-    assert(SeqIO.pruneMetas(nulls, None, Some(0), None) === nulls)
+    assert(selected(nulls, col("source") === "src0").isEmpty)
+    assert(selected(nulls, col("n_tok") >= 0) === nulls)
     assertMatchesOldPass(t, metas ++ nulls)
   }
 
